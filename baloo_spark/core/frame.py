@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from ..plans.ordinal import ORD_COL, with_dense_ordinal
 from .ordering import order_expr, order_exprs, rev_order_exprs
 from .dtypes import np_dtype_of, spark_type_of
-from .series import _AGG_FNS, _IDX, Series, _is_numeric
+from .series import _AGG_FNS, _EWM, _IDX, Series, _is_numeric
 
 _RESERVED = {ORD_COL, "__pos__", "__pid__", "__mid__"}
 
@@ -4249,9 +4249,10 @@ class _FrameEwm:
         self._ignore_na = ignore_na
         self._adjust = adjust
 
+    # the Series face's flavor dispatch (same attributes)
+    _scan = _EWM._scan
+
     def _stat(self, stat: str, bias: bool = False) -> "DataFrame":
-        from ..plans.ordinal import (ORD_COL, with_ewm_stats_multi,
-                                     with_ewm_noadjust_stats)
         df = self._df
         cols = df._numeric_cols()
         if not cols:
@@ -4260,22 +4261,8 @@ class _FrameEwm:
         order = order_exprs(df._order or [], sdf.columns)
         if not order and ORD_COL in sdf.columns:
             order = [F.col(ORD_COL).asc()]
-        if not self._adjust:
-            if stat == "sum":
-                raise NotImplementedError(
-                    "ewm(adjust=False).sum() is not supported "
-                    "(pandas refuses it too); use adjust=True")
-            out = with_ewm_noadjust_stats(
-                sdf, {c: (F.col(c), F.col(c), (stat,))
-                      for c in cols}, self._alpha, order or None,
-                self._mp, self._ignore_na, bias=bias)
-            tmp = f"__ewmna_{stat}_%s__"
-        else:
-            out = with_ewm_stats_multi(
-                sdf, {c: F.col(c) for c in cols}, self._alpha,
-                order or None, self._mp, self._ignore_na, bias=bias,
-                stats=(stat,))
-            tmp = f"__ewm_{stat}_%s__"
+        out, tmp = self._scan(sdf, {c: (c, c) for c in cols}, stat,
+                              order or None, bias)
         cset = set(cols)
         sel = [(F.col(tmp % c).alias(c) if c in cset else F.col(c))
                for c in df._sdf.columns]
@@ -5227,7 +5214,9 @@ class _Resampler:
         # rows at the outer level.
         _CH = 1 << 20
         mn, mx = F.col("__mn__"), F.col("__mx__")
-        span = F.lit(int(us)) * _CH
+        # the product in Python: lit(us) * _CH multiplies in int32 and
+        # wraps for buckets under ~36 min
+        span = F.lit(int(us) * _CH)
         chunks = rngdf.select(
             "__mn__", "__mx__",
             F.explode(F.sequence(

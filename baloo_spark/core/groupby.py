@@ -390,8 +390,8 @@ class DataFrameGroupBy:
         for a per-row recursion that is neither a prefix sum nor a
         bounded window. State is one group per task (the same
         bounded-group contract as apply/filter); the GLOBAL
-        decayed-carry scan (plans/ordinal.py:with_ewm_mean) remains
-        the un-grouped face."""
+        decayed-carry scan (plans/ordinal.py:with_ewm_stats_multi)
+        remains the un-grouped face."""
         import math
         if times is not None:
             # TIME-decay flavor (pandas ewm(times=...)): halflife is

@@ -2380,9 +2380,9 @@ class Series:
         The EWM recurrence is NOT a prefix sum (its closed form
         overflows r^-t), so it runs as a dedicated two-pass decayed
         carry scan — partition-local pandas C kernels plus an
-        n_partitions driver carry (plans/ordinal.with_ewm_mean for
-        adjust=True's num/den pair; with_ewm_mean_noadjust for the
-        recursive streaming-EMA form, whose carry is the (y, w)
+        n_partitions driver carry (plans/ordinal.with_ewm_stats_multi
+        for adjust=True's decayed sums; with_ewm_noadjust_stats for
+        the recursive streaming-EMA form, whose carry is the kernel
         state merged through per-observation affine maps); never a
         global window, never a per-row Python loop."""
         import datetime as _dt
@@ -4139,57 +4139,45 @@ class _EWM:
         self._ignore_na = ignore_na
         self._adjust = adjust
 
-    def mean(self) -> "Series":
-        from ..plans.ordinal import (ORD_COL, with_ewm_mean,
-                                     with_ewm_mean_noadjust)
-        sr = self._sr
-        sdf = sr._sdf
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        scan = with_ewm_mean if self._adjust else with_ewm_mean_noadjust
-        out = scan(sdf, sr._colexpr, self._alpha,
-                   order or None, self._mp, self._ignore_na)
-        return Series._make(out, F.col("__ewm__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
+    def _scan(self, sdf, pairs: dict, stat: str, order: list | None,
+              bias: bool = False):
+        """One stat for every tag -> (x, y) pair through ONE fused
+        scan (DataFrame.ewm shares this): with_ewm_stats_multi
+        (adjust=True's decayed sums) or with_ewm_noadjust_stats
+        (adjust=False's kernel-state carry — the renormalizing
+        recurrence is not a fixed-weight decayed sum). Returns the
+        frame and its output-column template (``% tag``)."""
+        from ..plans.ordinal import (with_ewm_noadjust_stats,
+                                     with_ewm_stats_multi)
+        if self._adjust:
+            scan, pre = with_ewm_stats_multi, "ewm"
+        elif stat == "sum":
+            raise NotImplementedError(
+                "ewm(adjust=False).sum() is not supported "
+                "(pandas refuses it too); use adjust=True")
+        else:
+            scan, pre = with_ewm_noadjust_stats, "ewmna"
+        out = scan(sdf, {t: (x, y, (stat,)) for t, (x, y) in
+                         pairs.items()}, self._alpha, order, self._mp,
+                   self._ignore_na, bias=bias)
+        return out, f"__{pre}_{stat}_%s__"
 
     def _stat(self, stat: str, bias: bool = False) -> "Series":
-        """sum/var/std. adjust=True rides the four-decayed-sums scan
-        (plans/ordinal.with_ewm_stats); adjust=False var/std ride the
-        kernel-state perturbation carry
-        (plans/ordinal.with_ewm_noadjust_stats) — the renormalizing
-        recurrence is not a fixed-weight decayed sum. sum stays
-        adjust=True-only because pandas itself refuses
-        ewm(adjust=False).sum()."""
+        from ..plans.ordinal import ORD_COL
         sr = self._sr
         sdf = sr._sdf
         order = order_exprs(sr._order or [], sdf.columns)
-        from ..plans.ordinal import (ORD_COL, with_ewm_stats,
-                                     with_ewm_noadjust_stats)
         if not order and ORD_COL in sdf.columns:
             order = [F.col(ORD_COL).asc()]
-        if not self._adjust:
-            if stat == "sum":
-                raise NotImplementedError(
-                    "ewm(adjust=False).sum() is not supported "
-                    "(pandas refuses it too); use adjust=True")
-            out = with_ewm_noadjust_stats(
-                sdf, {"v": (sr._colexpr, sr._colexpr, (stat,))},
-                self._alpha, order or None, self._mp,
-                self._ignore_na, bias=bias)
-            # row-preserving over sdf -> adopt-eligible (r12; the
-            # mean face already tagged, var/std had been missed and
-            # every assignment paid the ~8-job positional join)
-            return Series._make(out, F.col(f"__ewmna_{stat}_v__"),
-                                sr._index_cols, sr.name,
-                                sr._order)._tag_rowpar(sdf)
-        out = with_ewm_stats(sdf, sr._colexpr, self._alpha,
-                             order or None, self._mp,
-                             self._ignore_na, bias=bias,
-                             stats=(stat,))
-        return Series._make(out, F.col(f"__ewm_{stat}__"),
-                            sr._index_cols, sr.name,
+        out, tmp = self._scan(sdf, {"v": (sr._colexpr, sr._colexpr)},
+                              stat, order or None, bias)
+        # row-preserving over sdf -> adopt-eligible
+        return Series._make(out, F.col(tmp % "v"), sr._index_cols,
+                            sr.name,
                             sr._order)._tag_rowpar(sdf)
+
+    def mean(self) -> "Series":
+        return self._stat("mean")
 
     def sum(self) -> "Series":
         return self._stat("sum")
@@ -4203,30 +4191,16 @@ class _EWM:
     def _pair(self, other: "Series", stat: str,
               bias: bool = False) -> "Series":
         """cov/corr with another Series: the standard pairwise
-        alignment, then the seven-decayed-sums scan for adjust=True
-        (plans/ordinal.with_ewm_pair_stats) or the kernel-state
-        perturbation carry for adjust=False
-        (plans/ordinal.with_ewm_noadjust_stats); observations need
-        BOTH sides non-null, like pandas."""
-        from ..plans.ordinal import (POS_COL, with_ewm_pair_stats,
-                                     with_ewm_noadjust_stats)
+        alignment, then the same scan as :meth:`_stat` over the pair;
+        observations need BOTH sides non-null, like pandas."""
+        from ..plans.ordinal import POS_COL
         sr = self._sr
         sdf, a, b = sr._pair_sdf(other)
         on = [c for c in sr._index_cols if c in other._index_cols]
         keys = on or [POS_COL]
-        if not self._adjust:
-            out = with_ewm_noadjust_stats(
-                sdf, {"p": (a, b, (stat,))}, self._alpha,
-                [F.col(k).asc() for k in keys], self._mp,
-                self._ignore_na, bias=bias)
-            return Series._make(out, F.col(f"__ewmna_{stat}_p__"),
-                                keys, sr.name,
-                                [(k, True) for k in keys])
-        out = with_ewm_pair_stats(
-            sdf, a, b, self._alpha,
-            [F.col(k).asc() for k in keys], self._mp,
-            self._ignore_na, bias=bias, stat=stat)
-        return Series._make(out, F.col("__ewmp__"), keys, sr.name,
+        out, tmp = self._scan(sdf, {"p": (a, b)}, stat,
+                              [F.col(k).asc() for k in keys], bias)
+        return Series._make(out, F.col(tmp % "p"), keys, sr.name,
                             [(k, True) for k in keys])
 
     def cov(self, other: "Series", bias: bool = False) -> "Series":

@@ -52,22 +52,6 @@ def shingles(col, n: int = 3):
                f"i -> substring({col}, i, {n}))"))
 
 
-def word_shingles(col, n: int = 3):
-    """Word n-gram shingle array (distinct). Far more discriminative
-    than char shingles on natural text — the standard choice for
-    document-level near-dup detection: unrelated documents sharing a
-    vocabulary still share almost no word trigrams.
-
-    NOTE: inlines the tokenizer into the per-shingle lambda, which is
-    O(words^2) per document — prefer :func:`_shingled` (two-step
-    projection) in operator pipelines.
-    """
-    toks = f"filter(split(trim({col}), '\\\\s+'), x -> x != '')"
-    return F.array_distinct(F.expr(
-        f"transform(sequence(0, greatest(size({toks}) - {n}, 0)), "
-        f"i -> concat_ws(' ', slice({toks}, i + 1, {n})))"))
-
-
 def _shingled(df: DataFrame, text_col: str, id_col: str, n: int,
               shingle: str, out: str = "sh") -> DataFrame:
     """(id, shingle-array) projection.
@@ -77,21 +61,25 @@ def _shingled(df: DataFrame, text_col: str, id_col: str, n: int,
     lambda would re-tokenize the text for EVERY shingle index
     (O(words^2) per doc). Slicing a bound array attribute is O(n).
 
-    r12: ``text_col`` may already BE a token array (ArrayType) — a
-    caller running several shingle widths over one corpus tokenizes
-    once, checkpoints the arrays, and each width shingles the bound
-    attribute directly (one regex-split pass over the corpus instead
-    of one per width).
+    Word shingles are distinct n-grams of the non-empty whitespace
+    tokens (more discriminative than char shingles on natural text:
+    unrelated documents sharing a vocabulary still share almost no
+    word trigrams). ``text_col`` may already BE a token array
+    (ArrayType) — a caller running several shingle widths over one
+    corpus tokenizes once, checkpoints the arrays, and each width
+    shingles the bound attribute directly (one regex-split pass over
+    the corpus instead of one per width). Empty tokens are dropped on
+    both paths, so a raw ``split(text, ' ')`` array shingles like its
+    text.
     """
     if shingle == "word":
         from pyspark.sql.types import ArrayType
         dt = {f.name: f.dataType for f in df.schema.fields}.get(text_col)
-        if isinstance(dt, ArrayType):
-            t = df.select(F.col(id_col), F.col(text_col).alias("__tok__"))
-        else:
-            toks = F.filter(F.split(F.trim(F.col(text_col)), "\\s+"),
-                            lambda x: x != F.lit(""))
-            t = df.select(F.col(id_col), toks.alias("__tok__"))
+        toks = (F.col(text_col) if isinstance(dt, ArrayType)
+                else F.split(F.trim(F.col(text_col)), "\\s+"))
+        t = df.select(F.col(id_col),
+                      F.filter(toks, lambda x: x != F.lit(""))
+                      .alias("__tok__"))
         sh = F.array_distinct(F.expr(
             f"transform(sequence(0, greatest(size(__tok__) - {n}, 0)), "
             f"i -> concat_ws(' ', slice(__tok__, i + 1, {n})))"))

@@ -1,24 +1,9 @@
 """Physical-plan shaping utilities (ordinal, skew, bucketing) and
 scale diagnostics."""
 
-import warnings
-
 
 class ScaleWarning(UserWarning):
     """An operation was invoked in a shape that collapses to a single
     partition (or otherwise won't scale) — correct on test data,
     a bottleneck on a real cluster."""
 
-
-def warn_single_partition(what: str, alternative: str):
-    """Runtime counterpart of the docstring scale notes. As of round
-    3 NO shipped operator calls this — every global ordered op
-    (shift/diff, running aggs, ranks, fills, un-keyed as-of) routes
-    through the two-pass partition-offset/prefix/carry schemes in
-    :mod:`baloo_spark.plans.ordinal`; tests assert the absence of
-    both the warning and ``Exchange SinglePartition`` plans. Kept for
-    future operators that genuinely cannot avoid a serial pass."""
-    warnings.warn(
-        f"{what} runs on a SINGLE partition — fine for small data, a "
-        f"serial bottleneck at scale. {alternative}",
-        ScaleWarning, stacklevel=3)

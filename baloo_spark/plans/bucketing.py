@@ -40,10 +40,6 @@ def write_bucketed(df: DataFrame, table: str, keys, buckets: int = 32,
     w.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
                   on, how: str = "inner") -> DataFrame:
     """Join two same-bucketed tables — planned without any Exchange

@@ -23,10 +23,34 @@ The input is eagerly local-checkpointed so the partition layout is
 identical in both passes (Spark gives no cross-job determinism
 guarantee otherwise); checkpoint blocks free on GC, unlike persist()
 entries which sit in the CacheManager until explicitly unpersisted.
+
+Recurrences that are not prefix sums — the EWM families — run on ONE
+carry-scan driver, ``_carry_scan``:
+
+1. freeze one range layout (``_range_layout``) over the input plus the
+   family's helper columns;
+2. pass 1, a ``mapInPandas``: each partition folds its non-empty
+   batches into ``fresh()`` with ``scan(batch, state, False)`` and
+   emits its end state as one row with its partition id;
+3. collect those n_partitions rows (kilobytes at thousands of
+   partitions) and fold them on the driver in partition-id (= global)
+   order, ``acc = combine(acc, end)`` from ``acc = fresh()``; the acc
+   before a partition is that partition's carry;
+4. pass 2, a ``mapInPandas``: each partition seeds its state with its
+   carry on its first batch and appends the columns that
+   ``scan(batch, state, True)`` returns; helper columns are dropped.
+
+A family supplies only ``fresh`` (a flat list of floats: the
+zero-carry state, which is also the exported end tuple), the batch
+kernel ``scan`` (mutates the state, returns {column: array}),
+``combine`` (returns a new list; may raise, before pass 2), and its
+output column names. Every call pays one layout, one ends collect and
+one emit pass, for any number of columns.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -35,6 +59,10 @@ ORD_COL = "__ord__"
 # positions after a filter — surviving rows keep their original
 # (now sparse) ordinals, which are labels, not positions
 POS_COL = "__pos__"
+
+
+def _as_col(c):
+    return F.col(c) if isinstance(c, str) else c
 
 
 def with_boundary_shift(sdf: DataFrame, value_col, periods: int,
@@ -73,8 +101,7 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
     """
     from pyspark.sql import types as T
 
-    prepared = {o: (F.col(c) if isinstance(c, str) else c)
-                for o, c in cols.items()}
+    prepared = {o: _as_col(c) for o, c in cols.items()}
     if periods == 0:
         out = sdf
         for o, c in prepared.items():
@@ -276,7 +303,7 @@ def with_prefix_aggs(sdf: DataFrame, specs: dict, order_by: list | None,
 
     prepared = {}
     for out, (col, kind) in specs.items():
-        prepared[out] = (F.col(col) if isinstance(col, str) else col, kind)
+        prepared[out] = (_as_col(col), kind)
 
     sdf = _range_layout(
         sdf.select("*", *[c.alias(f"__v_{o}__")
@@ -368,8 +395,7 @@ def with_prefix_aggs_shifted(sdf: DataFrame, specs: dict, window: int,
                 f"with_prefix_aggs_shifted supports sum/count, got "
                 f"{kind!r} (min/max do not decompose; use "
                 f"with_rolling_locals)")
-        prepared[out_name] = (F.col(col) if isinstance(col, str)
-                              else col, kind)
+        prepared[out_name] = (_as_col(col), kind)
 
     sdf = _range_layout(
         sdf.select("*", *[c.alias(f"__v_{o}__")
@@ -501,8 +527,7 @@ def with_last_non_null(sdf: DataFrame, exprs: dict,
     """
     from pyspark.sql import types as T
 
-    prepared = {o: (F.col(c) if isinstance(c, str) else c)
-                for o, c in exprs.items()}
+    prepared = {o: _as_col(c) for o, c in exprs.items()}
     sdf = _range_layout(
         sdf.select("*", *[c.alias(f"__v_{o}__")
                           for o, c in prepared.items()]),
@@ -544,951 +569,283 @@ def with_last_non_null(sdf: DataFrame, exprs: dict,
     return out.drop(*drop)
 
 
-def with_ewm_mean(sdf: DataFrame, value_col, alpha: float,
-                  order_by: list | None, min_periods: int = 0,
-                  ignore_na: bool = False,
-                  name: str = "__ewm__") -> DataFrame:
-    """Partition-safe GLOBAL exponentially-weighted mean (pandas
-    ``ewm(adjust=True).mean()`` semantics, both ``ignore_na``
-    flavors).
+def _geo(k: int, rr: float):
+    """Geometric partial sums S_t = 1 + rr + ... + rr^(t-1) and decays
+    rr^t for t = 1..k: pandas' ewm mean M0 times S is the decayed sum
+    num_t = sum_j rr^(t-j) * z_j, and an incoming carry c contributes
+    c * rr^t."""
+    t1 = np.arange(1, k + 1, dtype=np.float64)
+    S = np.ones(k) if rr == 0 else (1 - rr ** t1) / (1 - rr)
+    return S, rr ** t1
 
-    The recurrence num_t = x_t + r*num_{t-1} (r = 1-alpha) does not
-    decompose into prefix sums — the closed form needs r^{-t}, which
-    overflows within ~700 rows — so it runs as the two-pass carry
-    scheme every global scan here uses: (1) freeze a range layout,
-    (2) ONE mapInPandas pass computes each partition's END state
-    (num, den, obs-count, row-count), with num/den recovered from
-    pandas' C ewm kernel via num_t = M0_t * S_t (M0 = ewm mean of the
-    zero-filled values, S_t the geometric partial sum — exact, no
-    Python-loop recurrence), (3) the driver prefix-combines
-    n_partitions tuples with decayed merge carry' = carry*r^len +
-    end (kilobytes at thousands of partitions), (4) a second
-    mapInPandas pass merges the broadcast carry:
-    global_t = local_t + carry * r^(t+1).
 
-    ``ignore_na=True`` decays per OBSERVATION instead of per row:
-    the same scheme on the null-compacted subsequence (obs-count as
-    the carry exponent), outputs forward-filled across null
-    positions.
-    """
+def _k(z, a: float):
+    """pandas' C ewm(adjust=True) mean kernel over one array."""
+    import pandas as pd
+    return pd.Series(z).ewm(alpha=a, adjust=True,
+                            min_periods=0).mean().to_numpy()
+
+
+def _carry_scan(sdf: DataFrame, order_by: list | None, inputs: dict,
+                fresh, scan, combine, out_cols: list) -> DataFrame:
+    """The two-pass carry driver of every EWM family; the contract is
+    in the module docstring."""
     import pandas as pd
     from pyspark.sql import types as T
 
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    r = 1.0 - alpha
-
-    col = F.col(value_col) if isinstance(value_col, str) else value_col
     sdf = _range_layout(
-        sdf.select("*", col.cast("double").alias("__ev__")), order_by)
-
-    def _batch_scan(x, state):
-        """One batch's (y, cnt) arrays + updated state, where state =
-        [num_end, den_end, obs_cnt, decay_steps, y_last]. y is
-        num/den where den > 0; where den degenerates to 0 after an
-        observation (alpha == 1, or r^k underflow across a long null
-        run) pandas carries the last mean forward — replayed here
-        with a seeded forward-fill, so y_last rides the carry
-        alongside num/den."""
-        import numpy as np
-        L = len(x)
-        w = np.where(np.isnan(x), 0.0, 1.0)
-        n_in, d_in = state[0], state[1]
-
-        def _geo(k):
-            t1 = np.arange(1, k + 1, dtype=np.float64)
-            S = (np.ones(k) if r == 0
-                 else (1 - r ** t1) / (1 - r))
-            return S, r ** t1
-
-        if ignore_na:
-            # decay per OBSERVATION: run the same scheme on the
-            # null-compacted subsequence, forward-fill outputs, and
-            # count obs (not rows) as the carry-decay steps
-            idx = np.flatnonzero(w)
-            k = len(idx)
-            num = np.full(L, np.nan)
-            den = np.full(L, np.nan)
-            if k:
-                M0 = pd.Series(x[idx]).ewm(
-                    alpha=alpha, adjust=True,
-                    min_periods=0).mean().to_numpy()
-                S, e = _geo(k)
-                nc = M0 * S + n_in * e
-                dc = S + d_in * e
-                num[idx] = nc
-                den[idx] = dc
-                state[0], state[1] = nc[-1], dc[-1]
-            # null positions take the latest obs value; before the
-            # first obs, the UNDECAYED incoming carry (ignore_na:
-            # nulls neither decay nor re-weight)
-            num = pd.Series(num).ffill().fillna(n_in).to_numpy()
-            den = pd.Series(den).ffill().fillna(d_in).to_numpy()
-            cnt = state[2] + np.cumsum(w)
-            state[2] += w.sum()
-            state[3] += k
-            return _finish(num, den, cnt, state)
-
-        m = np.where(np.isnan(x), 0.0, x)
-        M0 = pd.Series(m).ewm(alpha=alpha, adjust=True,
-                              min_periods=0).mean().to_numpy()
-        W = pd.Series(w).ewm(alpha=alpha, adjust=True,
-                             min_periods=0).mean().to_numpy()
-        S, e = _geo(L)
-        num = M0 * S + n_in * e
-        den = W * S + d_in * e
-        cnt = state[2] + np.cumsum(w)
-        state[0], state[1] = num[-1], den[-1]
-        state[2] += w.sum()
-        state[3] += L
-        return _finish(num, den, cnt, state)
-
-    def _finish(num, den, cnt, state):
-        import numpy as np
-        with np.errstate(invalid="ignore", divide="ignore"):
-            y = np.where(den > 0, num / den, np.nan)
-        y = pd.concat([pd.Series([state[4]]), pd.Series(y)],
-                      ignore_index=True).ffill().to_numpy()[1:]
-        if len(y):
-            state[4] = y[-1]
-        return y, cnt
-
-    ends_schema = T.StructType([
-        T.StructField("__pid__", T.IntegerType()),
-        T.StructField("__en__", T.DoubleType()),
-        T.StructField("__ed__", T.DoubleType()),
-        T.StructField("__ec__", T.DoubleType()),
-        T.StructField("__el__", T.DoubleType()),
-        T.StructField("__ey__", T.DoubleType())])
+        sdf.select("*", *[c.alias(n) for n, c in inputs.items()]),
+        order_by)
+    ends_schema = T.StructType(
+        [T.StructField("__pid__", T.IntegerType())]
+        + [T.StructField(f"__e{j}__", T.DoubleType())
+           for j in range(len(fresh()))])
 
     def _ends(it):
-        import numpy as np
-        state, pid = [0.0, 0.0, 0.0, 0.0, np.nan], None
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            pid = int(pdf_b["__pid__"].iloc[0])
-            _batch_scan(pdf_b["__ev__"].to_numpy(dtype=np.float64),
-                        state)
+        state, pid = fresh(), None
+        for b in it:
+            if len(b):
+                pid = int(b["__pid__"].iloc[0])
+                scan(b, state, False)
         if pid is not None:
-            yield pd.DataFrame({"__pid__": [pid], "__en__": [state[0]],
-                                "__ed__": [state[1]],
-                                "__ec__": [state[2]],
-                                "__el__": [state[3]],
-                                "__ey__": [state[4]]})
+            yield pd.DataFrame([[pid, *map(float, state)]],
+                               columns=ends_schema.names)
 
-    erows = {int(rw["__pid__"]): rw for rw in
-             sdf.select("__pid__", "__ev__").mapInPandas(
-                 _ends, ends_schema).collect()}
-    import math as _math
-    carries, acc = {}, (0.0, 0.0, 0.0, float("nan"))
-    for pid in sorted(erows):
+    # Arrow ships NaN as NULL: restore it before the fold
+    nan = float("nan")
+    ends = {int(r[0]): [nan if v is None else v for v in r[1:]]
+            for r in sdf.select("__pid__", *inputs)
+            .mapInPandas(_ends, ends_schema).collect()}
+    carries, acc = {}, fresh()
+    for pid in sorted(ends):
         carries[pid] = acc
-        e = erows[pid]
-        # decay steps: rows (default) or observations (ignore_na)
-        dk = r ** e["__el__"]
-        ey = e["__ey__"]
-        acc = (acc[0] * dk + e["__en__"], acc[1] * dk + e["__ed__"],
-               acc[2] + e["__ec__"],
-               acc[3] if ey is None or _math.isnan(ey) else ey)
-    out_schema = T.StructType(list(sdf.schema.fields)
-                              + [T.StructField(name, T.DoubleType())])
-    mp = min_periods
+        acc = combine(acc, ends[pid])
 
     def _emit(it):
-        import numpy as np
-        state, init = [0.0, 0.0, 0.0, 0.0, np.nan], False
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            if not init:
-                c = carries.get(int(pdf_b["__pid__"].iloc[0]),
-                                (0.0, 0.0, 0.0, np.nan))
-                state = [c[0], c[1], c[2], 0.0, c[3]]
-                init = True
-            x = pdf_b["__ev__"].to_numpy(dtype=np.float64)
-            y, cnt = _batch_scan(x, state)
-            o = pdf_b.copy()
-            o[name] = np.where(cnt >= max(mp, 1), y, np.nan)
-            yield o
+        state = None
+        for b in it:
+            if len(b):
+                if state is None:
+                    state = list(carries.get(int(b["__pid__"].iloc[0]),
+                                             fresh()))
+                yield b.assign(**scan(b, state, True))
 
+    out_schema = T.StructType(
+        list(sdf.schema.fields)
+        + [T.StructField(c, T.DoubleType()) for c in out_cols])
     return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__", "__ev__"))
+            .drop("__pid__", "__mid__", *inputs))
 
 
-def with_ewm_stats(sdf: DataFrame, value_col, alpha: float,
-                   order_by: list | None, min_periods: int = 0,
-                   ignore_na: bool = False, bias: bool = False,
-                   stats: tuple = ("mean",)) -> DataFrame:
-    """Partition-safe GLOBAL ``ewm(adjust=True)`` moments beyond the
-    mean: any subset of ``('sum', 'mean', 'var', 'std')`` from ONE
-    scan (columns ``__ewm_<stat>__``).
+def _pair_inputs(specs: dict, ok_stats: tuple):
+    """Validate ``tag -> (x, y, stats)`` specs and name their double
+    helper columns: returns (inputs, {tag: (x_name, y_name)},
+    {tag: stats}) — plain values the executor closures can capture
+    (the specs hold Columns, which do not pickle). A tag whose x and
+    y are the same column reads one helper for both."""
+    inputs, cols, stats = {}, {}, {}
+    for t, (cx, cy, sts) in specs.items():
+        stats[t] = tuple(sts)
+        bad = [s for s in sts if s not in ok_stats]
+        if bad:
+            raise ValueError(f"unsupported ewm stats: {bad}")
+        xn = yn = f"__ex_{t}__"
+        inputs[xn] = _as_col(cx).cast("double")
+        if not (cx is cy or (isinstance(cx, str) and cx == cy)):
+            yn = f"__ey_{t}__"
+            inputs[yn] = _as_col(cy).cast("double")
+        cols[t] = (xn, yn)
+    return inputs, cols, stats
 
-    Same two-pass decayed-carry scheme as :func:`with_ewm_mean`, but
-    the carried state holds FOUR decayed sums: num = sum(w*x),
-    den = sum(w), q = sum(w*x^2), d2 = sum(w^2) — every pandas ewm
-    moment is a ratio of these (sum = num; mean = num/den; var
-    (bias=False, pandas default) = den^2/(den^2 - d2) * (q/den -
-    mean^2)). num/den/q recover from pandas' C kernel via the
-    M0*S identity; d2 rides the SQUARED decay r^2 (it is the den of
-    an ewm with alpha2 = 1 - r^2), so its carry merges with e2 =
-    (r^2)^len. adjust=False moments are not offered (pandas itself
-    refuses ewm(adjust=False).sum(); the recursive-form var needs a
-    non-geometric first weight).
+
+def _xy(b, names):
+    x = b[names[0]].to_numpy(dtype=np.float64)
+    return x, (x if names[1] == names[0]
+               else b[names[1]].to_numpy(dtype=np.float64))
+
+
+# the decayed sums an adjust=True tag can carry, in state order: the
+# weighted x, y, xy, x^2, y^2, the weight den = sum(w), and the
+# debias term d2 = sum(w^2), which decays with r^2
+_ADJ_SUMS = ("x", "y", "xy", "xx", "yy", "w", "w2")
+_ADJ_SAME = {"y": "x", "xy": "xx", "yy": "xx"}
+
+
+def with_ewm_stats_multi(sdf: DataFrame, specs: dict, alpha: float,
+                         order_by: list | None, min_periods: int = 0,
+                         ignore_na: bool = False,
+                         bias: bool = False) -> DataFrame:
+    """Partition-safe GLOBAL ``ewm(adjust=True)`` statistics for ANY
+    number of column pairs from ONE range layout.
+
+    ``specs`` maps tag -> (x_col, y_col, stats). ``sum``, ``mean``,
+    ``var`` and ``std`` describe x (pass the same column twice);
+    ``cov`` and ``corr`` pair x with y. Outputs
+    ``__ewm_<stat>_<tag>__``.
+
+    Every adjust=True moment is a ratio of fixed-weight decayed sums
+    over the tag's observations (joint null mask for pairs):
+    sum = num; mean = num/den; var (bias=False) = den^2/(den^2 - d2)
+    * (sum(w x^2)/den - mean^2); cov likewise with sum(w x y); corr is
+    the biased ratio (the debias factor cancels). A tag carries only
+    the sums its stats read, so a mean-only tag runs just the num/den
+    kernels. The recurrence num_t = x_t + r num_{t-1} (r = 1 - alpha)
+    has no prefix-sum form (the closed form needs r^-t, which
+    overflows within ~700 rows), so local sums come from pandas' C
+    kernel via num_t = M0_t * S_t (:func:`_geo`) and the carry merges
+    as carry * r^steps + end; d2 is the den of an ewm with
+    alpha2 = 1 - r^2 and decays with r^2. ``ignore_na=True`` decays
+    per observation: the kernels run on the null-compacted
+    subsequence and the sums forward-fill across nulls. Where den
+    degenerates to 0 after an observation (alpha == 1, or r^k
+    underflow over a long null run) pandas carries the last mean
+    forward, so the last mean rides the carry too.
     """
     import pandas as pd
-    from pyspark.sql import types as T
 
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    bad = [s for s in stats if s not in ("sum", "mean", "var", "std")]
-    if bad:
-        raise ValueError(f"unsupported ewm stats: {bad}")
+    inputs, cols, stats = _pair_inputs(
+        specs, ("sum", "mean", "var", "std", "cov", "corr"))
     r = 1.0 - alpha
-    r2 = r * r
-    alpha2 = 1.0 - r2
+    # per tag: the sums its stats read, and where its state starts;
+    # state = [rows] + per tag [<sums>, obs, last_mean]
+    sums, base, at = {}, {}, 1
+    for t, sts in stats.items():
+        need = {"x", "w"}
+        if {"var", "std"} & set(sts):
+            need |= {"xx", "w2"}
+        if "cov" in sts:
+            need |= {"y", "xy", "w2"}
+        if "corr" in sts:
+            need |= {"y", "xy", "xx", "yy"}
+        if bias:
+            need.discard("w2")
+        if cols[t][0] == cols[t][1]:
+            need = {_ADJ_SAME.get(c, c) for c in need}
+        sums[t] = [c for c in _ADJ_SUMS if c in need]
+        base[t] = at
+        at += len(sums[t]) + 2
 
-    col = F.col(value_col) if isinstance(value_col, str) else value_col
-    sdf = _range_layout(
-        sdf.select("*", col.cast("double").alias("__ev__")), order_by)
+    def fresh():
+        st = [0.0] * at
+        for t in stats:
+            st[base[t] + len(sums[t]) + 1] = float("nan")
+        return st
 
-    def _batch_scan(x, state):
-        """state = [num, den, q, d2, obs_cnt, steps, y_last]; returns
-        per-row (num, den, q, d2, cnt) arrays."""
-        import numpy as np
-        L = len(x)
-        w = np.where(np.isnan(x), 0.0, 1.0)
-        n_in, d_in, q_in, d2_in = state[0], state[1], state[2], state[3]
-
-        def _geo(k, rr):
-            t1 = np.arange(1, k + 1, dtype=np.float64)
-            S = (np.ones(k) if rr == 0
-                 else (1 - rr ** t1) / (1 - rr))
-            return S, rr ** t1
-
-        def _k(z, a):
-            return pd.Series(z).ewm(alpha=a, adjust=True,
-                                    min_periods=0).mean().to_numpy()
-
+    def _decayed(x, y, mask, names, inc):
+        """Per-row decayed sums ``names`` seeded with ``inc``."""
         if ignore_na:
-            idx = np.flatnonzero(w)
+            idx = np.flatnonzero(mask)
+            x, y, w = x[idx], y[idx], None
             k = len(idx)
-            num = np.full(L, np.nan)
-            den = np.full(L, np.nan)
-            q = np.full(L, np.nan)
-            d2 = np.full(L, np.nan)
-            if k:
-                xs = x[idx]
-                S, e = _geo(k, r)
-                S2, e2 = _geo(k, r2)
-                num[idx] = _k(xs, alpha) * S + n_in * e
-                den[idx] = _k(np.ones(k), alpha) * S + d_in * e
-                q[idx] = _k(xs * xs, alpha) * S + q_in * e
-                d2[idx] = _k(np.ones(k), alpha2) * S2 + d2_in * e2
-                state[0], state[1] = num[idx[-1]], den[idx[-1]]
-                state[2], state[3] = q[idx[-1]], d2[idx[-1]]
-            # nulls neither decay nor add terms: carry forward
-            num = pd.Series(num).ffill().fillna(n_in).to_numpy()
-            den = pd.Series(den).ffill().fillna(d_in).to_numpy()
-            q = pd.Series(q).ffill().fillna(q_in).to_numpy()
-            d2 = pd.Series(d2).ffill().fillna(d2_in).to_numpy()
-            cnt = state[4] + np.cumsum(w)
-            state[4] += w.sum()
-            state[5] += k
-            return num, den, q, d2, cnt
+        else:
+            w = mask.astype(np.float64)
+            x, y = np.where(mask, x, 0.0), np.where(mask, y, 0.0)
+            k = len(mask)
+        S, e = _geo(k, r)
+        pick = {"x": x, "y": y}
+        out = []
+        for c, c0 in zip(names, inc):
+            if c == "w2":
+                S2, e2 = _geo(k, r * r)
+                v = (S2 if w is None else _k(w, 1.0 - r * r) * S2) \
+                    + c0 * e2
+            elif c == "w":
+                v = (S if w is None else _k(w, alpha) * S) + c0 * e
+            else:
+                z = pick[c[0]] * pick[c[1]] if len(c) == 2 else pick[c]
+                v = _k(z, alpha) * S + c0 * e
+            if ignore_na:
+                # nulls neither decay nor add terms: forward-fill,
+                # and leading nulls keep the incoming sum
+                full = np.full(len(mask), np.nan)
+                full[idx] = v
+                v = pd.Series(full).ffill().to_numpy()
+                v[np.isnan(v)] = c0
+            out.append(v)
+        return out
 
-        m = np.where(np.isnan(x), 0.0, x)
-        S, e = _geo(L, r)
-        S2, e2 = _geo(L, r2)
-        num = _k(m, alpha) * S + n_in * e
-        den = _k(w, alpha) * S + d_in * e
-        q = _k(m * m, alpha) * S + q_in * e
-        d2 = _k(w, alpha2) * S2 + d2_in * e2
-        cnt = state[4] + np.cumsum(w)
-        state[0], state[1], state[2], state[3] = \
-            num[-1], den[-1], q[-1], d2[-1]
-        state[4] += w.sum()
-        state[5] += L
-        return num, den, q, d2, cnt
+    mp = max(min_periods, 1)
 
-    ends_schema = T.StructType([
-        T.StructField("__pid__", T.IntegerType())]
-        + [T.StructField(c, T.DoubleType())
-           for c in ("__en__", "__ed__", "__eq__", "__ed2__",
-                     "__ec__", "__el__", "__ey__")])
-
-    def _ends(it):
-        import numpy as np
-        state, pid = [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, np.nan], None
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            pid = int(pdf_b["__pid__"].iloc[0])
-            num, den, q, d2, _ = _batch_scan(
-                pdf_b["__ev__"].to_numpy(dtype=np.float64), state)
+    def scan(b, st, emit):
+        out = {}
+        for t, sts in stats.items():
+            x, y = _xy(b, cols[t])
+            mask = ~(np.isnan(x) | np.isnan(y))
+            o, names = base[t], sums[t]
+            n = len(names)
+            vals = _decayed(x, y, mask, names, st[o:o + n])
+            st[o:o + n] = [v[-1] for v in vals]
+            cnt = st[o + n] + np.cumsum(mask)
+            st[o + n] = cnt[-1]
+            v = dict(zip(names, vals))
+            if cols[t][0] == cols[t][1]:
+                v.update({a: v.get(c) for a, c in _ADJ_SAME.items()})
+            den = v["w"]
             with np.errstate(invalid="ignore", divide="ignore"):
-                y = np.where(den > 0, num / den, np.nan)
-            y = pd.Series(y).ffill().to_numpy()
-            if len(y) and not np.isnan(y[-1]):
-                state[6] = y[-1]
-        if pid is not None:
-            yield pd.DataFrame({
-                "__pid__": [pid], "__en__": [state[0]],
-                "__ed__": [state[1]], "__eq__": [state[2]],
-                "__ed2__": [state[3]], "__ec__": [state[4]],
-                "__el__": [state[5]], "__ey__": [state[6]]})
-
-    erows = {int(rw["__pid__"]): rw for rw in
-             sdf.select("__pid__", "__ev__").mapInPandas(
-                 _ends, ends_schema).collect()}
-    import math as _math
-    carries = {}
-    acc = (0.0, 0.0, 0.0, 0.0, 0.0, float("nan"))
-    for pid in sorted(erows):
-        carries[pid] = acc
-        e = erows[pid]
-        dk = r ** e["__el__"]
-        dk2 = r2 ** e["__el__"]
-        ey = e["__ey__"]
-        acc = (acc[0] * dk + e["__en__"], acc[1] * dk + e["__ed__"],
-               acc[2] * dk + e["__eq__"], acc[3] * dk2 + e["__ed2__"],
-               acc[4] + e["__ec__"],
-               acc[5] if ey is None or _math.isnan(ey) else ey)
-    out_cols = [f"__ewm_{s}__" for s in stats]
-    out_schema = T.StructType(list(sdf.schema.fields)
-                              + [T.StructField(c, T.DoubleType())
-                                 for c in out_cols])
-    mp = min_periods
-
-    def _emit(it):
-        import numpy as np
-        state, init = [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, np.nan], False
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            if not init:
-                c = carries.get(int(pdf_b["__pid__"].iloc[0]),
-                                (0.0, 0.0, 0.0, 0.0, 0.0, np.nan))
-                state = [c[0], c[1], c[2], c[3], c[4], 0.0, c[5]]
-                init = True
-            x = pdf_b["__ev__"].to_numpy(dtype=np.float64)
-            num, den, q, d2, cnt = _batch_scan(x, state)
-            o = pdf_b.copy()
-            gate = cnt >= max(mp, 1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mean = np.where(den > 0, num / den, np.nan)
-                mean = pd.concat(
-                    [pd.Series([state[6]]), pd.Series(mean)],
-                    ignore_index=True).ffill().to_numpy()[1:]
-                if len(mean) and not np.isnan(mean[-1]):
-                    state[6] = mean[-1]
-                for s in stats:
+                mx = np.where(den > 0, v["x"] / den, np.nan)
+                if "mean" in sts:
+                    mean = pd.Series(mx).ffill().to_numpy()
+                    mean[np.isnan(mean)] = st[o + n + 1]
+                    st[o + n + 1] = mean[-1]
+                if not emit:
+                    continue
+                gate = cnt >= mp
+                for s in sts:
                     if s == "sum":
-                        v = np.where(gate, num, np.nan)
+                        res = v["x"]
                     elif s == "mean":
-                        v = np.where(gate, mean, np.nan)
-                    else:
-                        biased = np.maximum(q / den - mean * mean, 0.0)
+                        res = mean
+                    elif s in ("var", "std"):
+                        res = np.maximum(v["xx"] / den - mx * mx, 0.0)
                         # sum-of-squares cancellation leaves ~1e-14
                         # relative residue on constant windows where
-                        # pandas' recurrence keeps exact 0 — clamp
-                        # residue below fp noise of E[x^2] to zero
-                        biased = np.where(
-                            biased < 1e-12 * np.abs(q / den), 0.0,
-                            biased)
-                        if bias:
-                            v = biased
-                        else:
-                            # dd is EXACTLY zero at one obs only up
-                            # to fp noise of the M0*S roundtrip — a
-                            # +2e-16 residue would turn pandas' NaN
-                            # into a huge-factor-times-clamped-zero
-                            dd = den * den - d2
-                            v = np.where(dd > 1e-12 * den * den,
-                                         den * den / dd * biased,
-                                         np.nan)
-                        v = np.where(gate & (den > 0), v, np.nan)
-                        if s == "std":
-                            v = np.sqrt(v)
-                    o[f"__ewm_{s}__"] = v
-            yield o
+                        # pandas' recurrence keeps exact 0
+                        res[res < 1e-12 * np.abs(v["xx"] / den)] = 0.0
+                    else:
+                        my = v["y"] / den
+                        res = v["xy"] / den - mx * my
+                        if s == "corr":
+                            cc = np.sqrt(
+                                np.maximum(v["xx"] / den - mx * mx, 0.0)
+                                * np.maximum(v["yy"] / den - my * my,
+                                             0.0))
+                            # zero variance on either side: NaN, never
+                            # +-inf from a cancellation residue
+                            res = np.where(cc > 0, res / cc, np.nan)
+                    if s in ("var", "std", "cov") and not bias:
+                        # relative singularity test: den^2 - d2 is
+                        # zero at one obs only up to fp noise of the
+                        # M0*S roundtrip
+                        dd = den * den - v["w2"]
+                        res = np.where(dd > 1e-12 * den * den,
+                                       den * den / dd * res, np.nan)
+                    if s == "std":
+                        res = np.sqrt(res)
+                    ok = gate if s in ("sum", "mean") else gate & (den > 0)
+                    out[f"__ewm_{s}_{t}__"] = np.where(ok, res, np.nan)
+        st[0] += len(b)
+        return out
 
-    return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__", "__ev__"))
+    def combine(acc, e):
+        out = list(acc)
+        for t in stats:
+            o, names = base[t], sums[t]
+            n = len(names)
+            # decay steps: rows, or this tag's observations (ignore_na)
+            steps = e[o + n] if ignore_na else e[0]
+            for j, c in enumerate(names):
+                out[o + j] = acc[o + j] * (
+                    r * r if c == "w2" else r) ** steps + e[o + j]
+            out[o + n] = acc[o + n] + e[o + n]
+            if not np.isnan(e[o + n + 1]):
+                out[o + n + 1] = e[o + n + 1]
+        return out
 
-
-def with_ewm_stats_multi(sdf: DataFrame, values: dict, alpha: float,
-                         order_by: list | None, min_periods: int = 0,
-                         ignore_na: bool = False, bias: bool = False,
-                         stats: tuple = ("mean",)) -> DataFrame:
-    """:func:`with_ewm_stats` for ANY number of columns from ONE
-    range layout and TWO passes (the multi-column fusion rule every
-    ordinal op follows — per-column scans would pay a
-    repartitionByRange + sort + checkpoint EACH). ``values`` maps
-    tag -> column; outputs ``__ewm_<stat>_<tag>__``. Each column
-    keeps its OWN null mask (num/den/q/d2/obs per tag — nulls in one
-    column must not decay another's sums)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    bad = [s for s in stats if s not in ("sum", "mean", "var", "std")]
-    if bad:
-        raise ValueError(f"unsupported ewm stats: {bad}")
-    r = 1.0 - alpha
-    r2 = r * r
-    alpha2 = 1.0 - r2
-    tags = list(values)
-    sdf = _range_layout(
-        sdf.select("*", *[
-            (F.col(c) if isinstance(c, str) else c)
-            .cast("double").alias(f"__ev_{t}__")
-            for t, c in values.items()]), order_by)
-
-    # per tag: [num, den, q, d2, obs, y_last]; shared: steps
-    W = 6
-
-    def _batch_scan(cols, state):
-        import numpy as np
-
-        def _geo(k, rr):
-            t1 = np.arange(1, k + 1, dtype=np.float64)
-            S = (np.ones(k) if rr == 0
-                 else (1 - rr ** t1) / (1 - rr))
-            return S, rr ** t1
-
-        def _k(z, a):
-            return pd.Series(z).ewm(alpha=a, adjust=True,
-                                    min_periods=0).mean().to_numpy()
-
-        L = len(cols[0])
-        outs = []
-        for ti, x in enumerate(cols):
-            b = ti * W
-            w = np.where(np.isnan(x), 0.0, 1.0)
-            if ignore_na:
-                idx = np.flatnonzero(w)
-                k = len(idx)
-                incoming = list(state[b:b + 4])
-                arrs = []
-                if k:
-                    S, e = _geo(k, r)
-                    S2, e2 = _geo(k, r2)
-                    xs = x[idx]
-                    kerns = [_k(xs, alpha) * S + incoming[0] * e,
-                             _k(np.ones(k), alpha) * S + incoming[1] * e,
-                             _k(xs * xs, alpha) * S + incoming[2] * e,
-                             _k(np.ones(k), alpha2) * S2
-                             + incoming[3] * e2]
-                for j in range(4):
-                    arr = np.full(L, np.nan)
-                    if k:
-                        arr[idx] = kerns[j]
-                        state[b + j] = kerns[j][-1]
-                    arr = pd.Series(arr).ffill().to_numpy()
-                    arr = np.where(np.isnan(arr), incoming[j], arr)
-                    arrs.append(arr)
-                cnt = state[b + 4] + np.cumsum(w)
-                state[b + 4] += w.sum()
-            else:
-                S, e = _geo(L, r)
-                S2, e2 = _geo(L, r2)
-                m = np.where(np.isnan(x), 0.0, x)
-                arrs = [_k(m, alpha) * S + state[b] * e,
-                        _k(w, alpha) * S + state[b + 1] * e,
-                        _k(m * m, alpha) * S + state[b + 2] * e,
-                        _k(w, alpha2) * S2 + state[b + 3] * e2]
-                for j in range(4):
-                    state[b + j] = arrs[j][-1]
-                cnt = state[b + 4] + np.cumsum(w)
-                state[b + 4] += w.sum()
-            outs.append((arrs, cnt))
-        state[-1] += (len(np.flatnonzero(~np.isnan(cols[0])))
-                      if ignore_na else L)
-        return outs
-
-    # NOTE: ignore_na decays per-COLUMN observation; the carry decay
-    # exponent must therefore be per tag. Track steps per tag: reuse
-    # obs count (state[b+4] counts observations) for ignore_na and
-    # the shared row count otherwise.
-    n_state = W * len(tags) + 1
-    ends_schema = T.StructType(
-        [T.StructField("__pid__", T.IntegerType())]
-        + [T.StructField(f"__e{j}__", T.DoubleType())
-           for j in range(n_state)])
-
-    def _ends(it):
-        import numpy as np
-        state, pid = [0.0] * n_state, None
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            pid = int(pdf_b["__pid__"].iloc[0])
-            cols = [pdf_b[f"__ev_{t}__"].to_numpy(dtype=np.float64)
-                    for t in tags]
-            outs = _batch_scan(cols, state)
-            for ti in range(len(tags)):
-                arrs, _ = outs[ti]
-                num, den = arrs[0], arrs[1]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    y = np.where(den > 0, num / den, np.nan)
-                y = pd.Series(y).ffill().to_numpy()
-                if len(y) and not np.isnan(y[-1]):
-                    state[ti * W + 5] = y[-1]
-        if pid is not None:
-            row = {"__pid__": [pid]}
-            row.update({f"__e{j}__": [state[j]]
-                        for j in range(n_state)})
-            yield pd.DataFrame(row)
-
-    erows = {int(rw["__pid__"]): rw for rw in
-             sdf.select("__pid__",
-                        *[f"__ev_{t}__" for t in tags]).mapInPandas(
-                 _ends, ends_schema).collect()}
-    import math as _math
-    carries, acc = {}, tuple([0.0] * W * len(tags))
-    for pid in sorted(erows):
-        carries[pid] = acc
-        e = erows[pid]
-        rows_l = e[f"__e{n_state - 1}__"]
-        nxt = []
-        for ti in range(len(tags)):
-            b = ti * W
-            # per-tag decay steps: rows for ignore_na=False, this
-            # tag's obs count for ignore_na=True
-            steps = (e[f"__e{b + 4}__"] if ignore_na else rows_l)
-            dk, dk2 = r ** steps, r2 ** steps
-            ey = e[f"__e{b + 5}__"]
-            nxt += [acc[b] * dk + e[f"__e{b}__"],
-                    acc[b + 1] * dk + e[f"__e{b + 1}__"],
-                    acc[b + 2] * dk + e[f"__e{b + 2}__"],
-                    acc[b + 3] * dk2 + e[f"__e{b + 3}__"],
-                    acc[b + 4] + e[f"__e{b + 4}__"],
-                    acc[b + 5] if ey is None or _math.isnan(ey)
-                    or (e[f"__e{b + 4}__"] == 0) else ey]
-        acc = tuple(nxt)
-    out_cols = [f"__ewm_{s}_{t}__" for s in stats for t in tags]
-    out_schema = T.StructType(list(sdf.schema.fields)
-                              + [T.StructField(c, T.DoubleType())
-                                 for c in out_cols])
-    mp = min_periods
-
-    def _emit(it):
-        import numpy as np
-        state, init = [0.0] * n_state, False
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            if not init:
-                c = carries.get(int(pdf_b["__pid__"].iloc[0]),
-                                tuple([0.0] * W * len(tags)))
-                state = list(c) + [0.0]
-                init = True
-            cols = [pdf_b[f"__ev_{t}__"].to_numpy(dtype=np.float64)
-                    for t in tags]
-            # snapshot BEFORE the scan mutates obs counts: the mean
-            # ffill seed is the carried value only if observations
-            # existed before this batch (else leading rows stay NaN)
-            pre = [(state[ti * W + 4], state[ti * W + 5])
-                   for ti in range(len(tags))]
-            outs = _batch_scan(cols, state)
-            o = pdf_b.copy()
-            for ti, t in enumerate(tags):
-                arrs, cnt = outs[ti]
-                num, den, q, d2 = arrs
-                gate = cnt >= max(mp, 1)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    mean = np.where(den > 0, num / den, np.nan)
-                    mean = pd.concat(
-                        [pd.Series([pre[ti][1] if pre[ti][0]
-                                    else np.nan]),
-                         pd.Series(mean)],
-                        ignore_index=True).ffill().to_numpy()[1:]
-                    if len(mean) and not np.isnan(mean[-1]):
-                        state[ti * W + 5] = mean[-1]
-                    for s in stats:
-                        if s == "sum":
-                            v = np.where(gate, num, np.nan)
-                        elif s == "mean":
-                            v = np.where(gate, mean, np.nan)
-                        else:
-                            biased = np.maximum(
-                                q / den - mean * mean, 0.0)
-                            biased = np.where(
-                                biased < 1e-12 * np.abs(q / den),
-                                0.0, biased)
-                            if bias:
-                                v = biased
-                            else:
-                                # relative singularity test — see
-                                # with_ewm_stats
-                                dd = den * den - d2
-                                v = np.where(
-                                    dd > 1e-12 * den * den,
-                                    den * den / dd * biased,
-                                    np.nan)
-                            v = np.where(gate & (den > 0), v, np.nan)
-                            if s == "std":
-                                v = np.sqrt(v)
-                        o[f"__ewm_{s}_{t}__"] = v
-            yield o
-
-    return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__",
-                  *[f"__ev_{t}__" for t in tags]))
-
-
-def with_ewm_pair_stats(sdf: DataFrame, x_col, y_col, alpha: float,
-                        order_by: list | None, min_periods: int = 0,
-                        ignore_na: bool = False, bias: bool = False,
-                        stat: str = "cov",
-                        name: str = "__ewmp__") -> DataFrame:
-    """Partition-safe GLOBAL ``ewm(adjust=True).cov/corr`` between two
-    aligned columns.
-
-    Same two-pass decayed-carry scheme as :func:`with_ewm_stats`,
-    carrying SEVEN decayed sums: wx, wy, wxy, wxx, wyy (all over the
-    JOINT-validity mask — pandas counts an observation only when BOTH
-    sides are non-null), den = sum(w), d2 = sum(w^2). cov (bias=False)
-    = den^2/(den^2 - d2) * (wxy/den - mx*my); corr is the BIASED
-    moment ratio (the debias factor cancels). Local sums recover from
-    pandas' C kernel via the M0*S identity; d2 rides the r^2 decay.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if stat not in ("cov", "corr"):
-        raise ValueError(f"stat must be cov or corr, got {stat!r}")
-    r = 1.0 - alpha
-    r2 = r * r
-    alpha2 = 1.0 - r2
-
-    cx = F.col(x_col) if isinstance(x_col, str) else x_col
-    cy = F.col(y_col) if isinstance(y_col, str) else y_col
-    sdf = _range_layout(
-        sdf.select("*", cx.cast("double").alias("__ex__"),
-                   cy.cast("double").alias("__ey__")), order_by)
-
-    NS = 7  # wx wy wxy wxx wyy den d2 (+ obs, steps appended)
-
-    def _batch_scan(x, y, state):
-        import numpy as np
-        L = len(x)
-        w = np.where(np.isnan(x) | np.isnan(y), 0.0, 1.0)
-        xs = np.where(w > 0, x, 0.0)
-        ys = np.where(w > 0, y, 0.0)
-        comps = (xs, ys, xs * ys, xs * xs, ys * ys, w)
-
-        def _geo(k, rr):
-            t1 = np.arange(1, k + 1, dtype=np.float64)
-            S = (np.ones(k) if rr == 0
-                 else (1 - rr ** t1) / (1 - rr))
-            return S, rr ** t1
-
-        def _k(z, a):
-            return pd.Series(z).ewm(alpha=a, adjust=True,
-                                    min_periods=0).mean().to_numpy()
-
-        out = []
-        if ignore_na:
-            # joint-null rows neither decay nor add terms: run the
-            # scheme on the compacted subsequence, forward-fill, and
-            # seed leading positions with the INCOMING sums
-            idx = np.flatnonzero(w)
-            k = len(idx)
-            incoming = list(state[:NS])
-            if k:
-                S, e = _geo(k, r)
-                S2, e2 = _geo(k, r2)
-            kerns = ([_k(z[idx], alpha) * S + incoming[j] * e
-                      for j, z in enumerate(comps)]
-                     + [_k(np.ones(k), alpha2) * S2
-                        + incoming[6] * e2]) if k else None
-            for j in range(NS):
-                arr = np.full(L, np.nan)
-                if k:
-                    arr[idx] = kerns[j]
-                    state[j] = kerns[j][-1]
-                arr = pd.Series(arr).ffill().to_numpy()
-                arr = np.where(np.isnan(arr), incoming[j], arr)
-                out.append(arr)
-            cnt = state[7] + np.cumsum(w)
-            state[7] += w.sum()
-            state[8] += k
-            return out, cnt
-
-        S, e = _geo(L, r)
-        S2, e2 = _geo(L, r2)
-        for j, z in enumerate(comps):
-            arr = _k(z, alpha) * S + state[j] * e
-            state[j] = arr[-1]
-            out.append(arr)
-        arr = _k(w, alpha2) * S2 + state[6] * e2
-        state[6] = arr[-1]
-        out.append(arr)
-        cnt = state[7] + np.cumsum(w)
-        state[7] += w.sum()
-        state[8] += L
-        return out, cnt
-
-    ends_schema = T.StructType(
-        [T.StructField("__pid__", T.IntegerType())]
-        + [T.StructField(f"__e{j}__", T.DoubleType())
-           for j in range(NS + 2)])
-
-    def _ends(it):
-        import numpy as np
-        state, pid = [0.0] * (NS + 2), None
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            pid = int(pdf_b["__pid__"].iloc[0])
-            _batch_scan(pdf_b["__ex__"].to_numpy(dtype=np.float64),
-                        pdf_b["__ey__"].to_numpy(dtype=np.float64),
-                        state)
-        if pid is not None:
-            row = {"__pid__": [pid]}
-            row.update({f"__e{j}__": [state[j]]
-                        for j in range(NS + 2)})
-            yield pd.DataFrame(row)
-
-    erows = {int(rw["__pid__"]): rw for rw in
-             sdf.select("__pid__", "__ex__", "__ey__").mapInPandas(
-                 _ends, ends_schema).collect()}
-    carries, acc = {}, tuple([0.0] * (NS + 1))
-    for pid in sorted(erows):
-        carries[pid] = acc
-        e = erows[pid]
-        steps = e[f"__e{NS + 1}__"]
-        dk, dk2 = r ** steps, r2 ** steps
-        acc = tuple(
-            [acc[j] * dk + e[f"__e{j}__"] for j in range(6)]
-            + [acc[6] * dk2 + e["__e6__"],
-               acc[7] + e["__e7__"]])
-    out_schema = T.StructType(list(sdf.schema.fields)
-                              + [T.StructField(name, T.DoubleType())])
-    mp = min_periods
-
-    def _emit(it):
-        import numpy as np
-        state, init = [0.0] * (NS + 2), False
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            if not init:
-                c = carries.get(int(pdf_b["__pid__"].iloc[0]),
-                                tuple([0.0] * (NS + 1)))
-                state = list(c) + [0.0]
-                init = True
-            comps, cnt = _batch_scan(
-                pdf_b["__ex__"].to_numpy(dtype=np.float64),
-                pdf_b["__ey__"].to_numpy(dtype=np.float64), state)
-            wx, wy, wxy, wxx, wyy, den, d2 = comps
-            o = pdf_b.copy()
-            gate = (cnt >= max(mp, 1)) & (den > 0)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mx, my = wx / den, wy / den
-                cxy = wxy / den - mx * my
-                if stat == "corr":
-                    cxx = np.maximum(wxx / den - mx * mx, 0.0)
-                    cyy = np.maximum(wyy / den - my * my, 0.0)
-                    denom = np.sqrt(cxx * cyy)
-                    # zero variance on either side: pandas NaN, never
-                    # +-inf from a cancellation-residue numerator
-                    v = np.where(denom > 0, cxy / denom, np.nan)
-                elif bias:
-                    v = cxy
-                else:
-                    # relative singularity test — see with_ewm_stats
-                    dd = den * den - d2
-                    v = np.where(dd > 1e-12 * den * den,
-                                 den * den / dd * cxy, np.nan)
-            o[name] = np.where(gate, v, np.nan)
-            yield o
-
-    return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__", "__ex__", "__ey__"))
-
-
-def with_ewm_mean_noadjust(sdf: DataFrame, value_col, alpha: float,
-                           order_by: list | None, min_periods: int = 0,
-                           ignore_na: bool = False,
-                           name: str = "__ewm__") -> DataFrame:
-    """Partition-safe GLOBAL ``ewm(adjust=False).mean()`` (the
-    recursive/streaming EMA form y_t = (1-a)*y_{t-1} + a*x_t, both
-    ``ignore_na`` flavors).
-
-    Same two-pass decayed-carry shape as the adjust=True scan, but
-    the carried state is (y, w) — the running mean plus pandas'
-    ``old_wt`` (reset to 1 at each observation, decayed by r=1-a per
-    row / per observation) — instead of a num/den pair. The carry
-    does NOT merge linearly: each observation applies the affine map
-    y -> p*y + q with p = w/(w+a), so a partition's effect on an
-    incoming carry is (first-obs Moebius merge) then (local affine
-    map). Pass 1 therefore exports per partition the zero-carry end
-    value y0 PLUS the map coefficients: pre-first-obs decay steps,
-    the first obs value x1, and ln(prod p_i) over the observations
-    after the first — the driver prefix-combines n_partitions of
-    those tuples (kilobytes), and pass 2 replays each batch against
-    the broadcast carry with the identical merge. Local zero-carry
-    values come from pandas' C ewm kernel, never a Python row loop.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    r = 1.0 - alpha
-
-    col = F.col(value_col) if isinstance(value_col, str) else value_col
-    sdf = _range_layout(
-        sdf.select("*", col.cast("double").alias("__ev__")), order_by)
-
-    def _batch_scan(x, state):
-        """Advance state = [y, w, obs_cnt, lnPi, pre_steps, x1,
-        has_obs, no_obs_steps] across one batch; returns (y_t, cnt)
-        arrays. The summary fields (lnPi/pre_steps/x1/no_obs_steps)
-        only matter for the zero-carry ends pass; the emit pass
-        reads just (y, w, obs_cnt)."""
-        import numpy as np
-        L = len(x)
-        mask = ~np.isnan(x)
-        obs = np.flatnonzero(mask)
-        k = len(obs)
-        cnt = state[2] + np.cumsum(mask)
-        if k == 0:
-            out = np.full(L, state[0])
-            if not ignore_na:
-                state[1] *= r ** L
-                if not state[6]:
-                    state[4] += L
-                    state[7] += L
-            return out, cnt
-        # per-obs decay exponents: rows since the previous obs
-        # (inclusive of the obs row) for ignore_na=False, 1 per obs
-        # for ignore_na=True
-        if ignore_na:
-            d = np.ones(k)
-        else:
-            d = np.empty(k)
-            d[0] = obs[0] + 1.0
-            d[1:] = np.diff(obs).astype(np.float64)
-        # zero-carry local outputs straight from pandas' C kernel
-        y0 = pd.Series(x).ewm(alpha=alpha, adjust=False,
-                              ignore_na=ignore_na,
-                              min_periods=0).mean().to_numpy()
-        # merge the incoming carry at this batch's first obs:
-        # w decays r^{d0}; the obs folds in with weight alpha
-        with np.errstate(divide="ignore"):
-            lp = np.log(r ** d / (r ** d + alpha))
-        if np.isnan(state[0]):
-            # no prior observation anywhere: zero-carry IS the answer
-            y_first, delta = x[obs[0]], 0.0
-            if not state[6]:
-                state[4] += (obs[0] + 1.0) if not ignore_na else 1.0
-                state[5] = x[obs[0]]
-            first_lp = None
-        else:
-            A = r ** (d[0] if not ignore_na else 1.0) * state[1]
-            y_first = (A * state[0] + alpha * x[obs[0]]) / (A + alpha)
-            delta = y_first - x[obs[0]]
-            # for the partition summary, this obs applies
-            # p = A/(A+alpha) to the PARTITION-level carry chain
-            first_lp = np.log(A / (A + alpha)) if A > 0 else -np.inf
-        state[6] = True
-        # Pi_t: product of p_i over obs after this batch's first,
-        # up to row t (1 before the second obs) — carry influence
-        lnp = np.zeros(L)
-        lnp[obs[1:]] = lp[1:]
-        Pi = np.exp(np.cumsum(lnp))
-        out = y0 + Pi * delta
-        out[:obs[0]] = state[0]
-        state[0] = out[-1]
-        trailing = L - 1 - obs[-1]
-        state[1] = r ** trailing if not ignore_na else 1.0
-        state[2] += k
-        if first_lp is not None:
-            state[3] += first_lp
-        state[3] += float(np.sum(lp[1:]))
-        return out, cnt
-
-    ends_schema = T.StructType([
-        T.StructField("__pid__", T.IntegerType()),
-        T.StructField("__ey__", T.DoubleType()),
-        T.StructField("__ew__", T.DoubleType()),
-        T.StructField("__ec__", T.DoubleType()),
-        T.StructField("__elp__", T.DoubleType()),
-        T.StructField("__eps__", T.DoubleType()),
-        T.StructField("__ex1__", T.DoubleType()),
-        T.StructField("__eh__", T.BooleanType()),
-        T.StructField("__ens__", T.DoubleType())])
-
-    def _ends(it):
-        import numpy as np
-        state = [np.nan, 1.0, 0.0, 0.0, 0.0, np.nan, False, 0.0]
-        pid = None
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            pid = int(pdf_b["__pid__"].iloc[0])
-            _batch_scan(pdf_b["__ev__"].to_numpy(dtype=np.float64),
-                        state)
-        if pid is not None:
-            yield pd.DataFrame({
-                "__pid__": [pid], "__ey__": [state[0]],
-                "__ew__": [state[1]], "__ec__": [state[2]],
-                "__elp__": [state[3]], "__eps__": [state[4]],
-                "__ex1__": [state[5]], "__eh__": [bool(state[6])],
-                "__ens__": [state[7]]})
-
-    erows = {int(rw["__pid__"]): rw for rw in
-             sdf.select("__pid__", "__ev__").mapInPandas(
-                 _ends, ends_schema).collect()}
-    import math as _math
-    carries, acc = {}, (float("nan"), 1.0, 0.0)  # (y, w, obs)
-    for pid in sorted(erows):
-        carries[pid] = acc
-        e = erows[pid]
-        if not e["__eh__"]:
-            if not ignore_na:
-                acc = (acc[0], acc[1] * r ** e["__ens__"], acc[2])
-            continue
-        if _math.isnan(acc[0]):
-            y_end = e["__ey__"]
-        else:
-            A = r ** e["__eps__"] * acc[1]
-            x1 = e["__ex1__"]
-            y_first = (A * acc[0] + alpha * x1) / (A + alpha)
-            y_end = e["__ey__"] + _math.exp(e["__elp__"]) \
-                * (y_first - x1)
-        acc = (y_end, e["__ew__"], acc[2] + e["__ec__"])
-    out_schema = T.StructType(list(sdf.schema.fields)
-                              + [T.StructField(name, T.DoubleType())])
-    mp = min_periods
-
-    def _emit(it):
-        import numpy as np
-        state, init = [np.nan, 1.0, 0.0, 0.0, 0.0, np.nan, False, 0.0], False
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            if not init:
-                c = carries.get(int(pdf_b["__pid__"].iloc[0]),
-                                (np.nan, 1.0, 0.0))
-                state[0], state[1], state[2] = c[0], c[1], c[2]
-                state[6] = not np.isnan(c[0])
-                init = True
-            x = pdf_b["__ev__"].to_numpy(dtype=np.float64)
-            y, cnt = _batch_scan(x, state)
-            o = pdf_b.copy()
-            o[name] = np.where(cnt >= max(mp, 1), y, np.nan)
-            yield o
-
-    return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__", "__ev__"))
+    return _carry_scan(sdf, order_by, inputs, fresh, scan, combine,
+                       [f"__ewm_{s}_{t}__" for t, sts in stats.items()
+                        for s in sts])
 
 
 def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
@@ -1496,26 +853,27 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
                             min_periods: int = 0,
                             ignore_na: bool = False,
                             bias: bool = False) -> DataFrame:
-    """Partition-safe GLOBAL ``ewm(adjust=False)`` second moments —
-    ``var``/``std``/``cov``/``corr`` (and ``mean``) — for ANY number
-    of column pairs from ONE range layout and TWO passes.
+    """Partition-safe GLOBAL ``ewm(adjust=False)`` statistics —
+    ``mean``/``var``/``std``/``cov``/``corr`` — for ANY number of
+    column pairs from ONE range layout.
 
-    ``specs`` maps tag -> (x_col, y_col, stats tuple); var/std pass
-    the same column twice. Outputs ``__ewmna_<stat>_<tag>__``.
+    ``specs`` maps tag -> (x_col, y_col, stats tuple); mean/var/std
+    pass the same column twice. Outputs ``__ewmna_<stat>_<tag>__``.
 
-    adjust=False renormalizes at every observation (pandas' ewmcov
-    kernel resets old_wt to 1), so unlike adjust=True these moments
-    are NOT fixed-weight decayed sums and the four/seven-sums carry
-    algebra of :func:`with_ewm_stats` does not apply. Instead this
-    generalizes :func:`with_ewm_mean_noadjust`'s perturbation carry
-    to the kernel's full state (mean_x, mean_y, cov, sum_wt2):
+    adjust=False is pandas' recursive form y_t = (1-a)*y_{t-1} + a*x_t
+    and renormalizes at every observation (the ewmcov kernel resets
+    old_wt to 1), so unlike adjust=True these moments are NOT
+    fixed-weight decayed sums. The carry is instead the kernel's full
+    state (mean_x, mean_y, cov, sum_wt2, old_wt) and each observation
+    applies a contraction:
 
     - zero-carry per-batch values come from pandas' C kernel
-      (``ewm(adjust=False).cov/var(bias=True)``); the zero-carry
+      (``ewm(adjust=False).mean/cov/var(bias=True)``); the zero-carry
       debias track v = sum_wt2/sum_wt^2 comes from the bias=True /
       bias=False ratio of a synthetic strictly-increasing series
       with the same null pattern (the ratio depends only on the gap
-      structure, and the kernel's recurrence form keeps it exact);
+      structure, and the kernel's recurrence form keeps it exact).
+      A mean-only tag runs just the mean kernel;
     - an incoming carry (m_x, m_y, c.., v, w) folds in at the batch's
       first observation (Moebius merge A = r^gap * w), producing
       perturbations delta_m = p*(m_in - x1), gamma (cov merge), and
@@ -1524,10 +882,13 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
       m_t = m0_t + P_t*delta, v_t = v0_t + P_t^2*nu, and
       c_t = c0_t + P_t*(gamma + dx*SY_t + dy*SX_t + dx*dy*SP_t),
       where P_t = prod(rho_i) over observations after the first
-      (rho_i = r^gap/(r^gap+alpha), the same contraction the mean
-      carry uses) and SX/SY/SP are bounded cumulative sums — the
-      position weights cancel analytically (X_i/P_i collapses to
-      (1-rho_i)*(m0_{i-1} - x_i)), so nothing overflows;
+      (rho_i = r^gap/(r^gap+alpha)) and SX/SY/SP are bounded
+      cumulative sums — the position weights cancel analytically
+      (X_i/P_i collapses to (1-rho_i)*(m0_{i-1} - x_i)), so nothing
+      overflows. Pass 1 exports, per partition, the zero-carry end
+      state plus the map coefficients (pre-first-obs steps, first
+      observation, ln P, SX/SY/SP), which is all the driver needs to
+      fold partitions;
     - the merge formulas are FACTORED so a constant history yields
       exact zeros (dx = p*(m_in-x1), gamma = A*c_in/w +
       Dx*Dy*(A*s^2+alpha*p^2)/w): constant windows keep pandas'
@@ -1541,43 +902,31 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
     true moment is 1.4e-52); the factored carry here computes the
     exact tiny moment instead, so corr at such singular points can
     disagree with pandas' artifact. Reference: the reference engine
-    has no ewm at all (pandas-parity extension; see
-    with_ewm_mean_noadjust for the mean-only face this generalizes).
+    has no ewm at all (pandas-parity extension).
     """
+    import math as _math
     import pandas as pd
-    from pyspark.sql import types as T
 
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    ok_stats = ("mean", "var", "std", "cov", "corr")
-    for t, (_, _, sts) in specs.items():
-        bad = [s for s in sts if s not in ok_stats]
-        if bad:
-            raise ValueError(f"unsupported ewm stats: {bad}")
+    inputs, cols, stats = _pair_inputs(
+        specs, ("mean", "var", "std", "cov", "corr"))
     r = 1.0 - alpha
-    tags = list(specs)
-    sel, same_col = [], {}
-    for t, (cx, cy, _) in specs.items():
-        ex = F.col(cx) if isinstance(cx, str) else cx
-        sel.append(ex.cast("double").alias(f"__ex_{t}__"))
-        same = (isinstance(cx, str) and isinstance(cy, str)
-                and cx == cy) or cx is cy
-        same_col[t] = same
-        if not same:
-            ey = F.col(cy) if isinstance(cy, str) else cy
-            sel.append(ey.cast("double").alias(f"__ey_{t}__"))
-    sdf = _range_layout(sdf.select("*", *sel), order_by)
+    tags = list(stats)
+    moments = {t: any(s != "mean" for s in sts)
+               for t, sts in stats.items()}
 
     # per-tag state layout:
     # 0 mx, 1 my, 2 cxy, 3 cxx, 4 cyy, 5 v, 6 w, 7 cnt, 8 has_obs,
     # 9 pre_steps, 10 x1, 11 y1, 12 lnPi, 13 SX, 14 SY, 15 SP,
-    # 16 no_obs_steps
+    # 16 no_obs_steps; the driver carry is fields 0-8
     W = 17
+    nan = float("nan")
+    _FRESH = [nan, nan, 0.0, 0.0, 0.0, 1.0, 1.0, 0.0, 0.0,
+              0.0, nan, nan, 0.0, 0.0, 0.0, 0.0, 0.0]
 
-    def _fresh():
-        import numpy as np
-        return [np.nan, np.nan, 0.0, 0.0, 0.0, 1.0, 1.0, 0.0, 0.0,
-                0.0, np.nan, np.nan, 0.0, 0.0, 0.0, 0.0, 0.0]
+    def fresh():
+        return _FRESH * len(tags)
 
     def _m_merge(st, x1v, y1v, A):
         """Fold incoming (m, c, v, w) into the first observation;
@@ -1593,10 +942,9 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
         nu = (st[5] * A * A + alpha * alpha) / (w_ * w_) - 1.0
         return dx, dy, gxy, gxx, gyy, nu, p_
 
-    def _tag_scan(x, y, st, summarize):
+    def _tag_scan(x, y, st, summarize, moments):
         """Advance one tag's state across one batch; returns per-row
         (mx, my, cxy, cxx, cyy, v, cnt)."""
-        import numpy as np
         L = len(x)
         mask = ~(np.isnan(x) | np.isnan(y))
         obs = np.flatnonzero(mask)
@@ -1621,28 +969,35 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
                   min_periods=0)
         sxm = pd.Series(xm)
         mx0 = sxm.ewm(**kw).mean().to_numpy()
-        cxx0 = sxm.ewm(**kw).var(bias=True).to_numpy()
         if y is x:
-            my0, cyy0, cxy0 = mx0, cxx0, cxx0.copy()
+            my0 = mx0
         else:
-            ym = np.where(mask, y, np.nan)
-            sym = pd.Series(ym)
+            sym = pd.Series(np.where(mask, y, np.nan))
             my0 = sym.ewm(**kw).mean().to_numpy()
-            cyy0 = sym.ewm(**kw).var(bias=True).to_numpy()
-            cxy0 = sxm.ewm(**kw).cov(sym, bias=True).to_numpy()
-        # bias=True cov is 0.0 from the first obs (kernel cov state);
-        # pandas surfaces NaN pre-min_periods — normalize to the state
-        seen = np.cumsum(mask) > 0
-        for c0 in ((cxy0, cxx0) if y is x else (cxy0, cxx0, cyy0)):
-            c0[seen & np.isnan(c0)] = 0.0
-        s_syn = np.where(mask, np.arange(L, dtype=np.float64), np.nan)
-        ssy = pd.Series(s_syn)
-        vb = ssy.ewm(**kw).var(bias=True).to_numpy()
-        vu = ssy.ewm(**kw).var(bias=False).to_numpy()
-        with np.errstate(invalid="ignore", divide="ignore"):
-            v0 = 1.0 - vb / vu
-        v0[obs[0]] = 1.0
-        v0 = pd.Series(v0).ffill().to_numpy()
+        if not moments:
+            # mean only: the moment tracks ride along unread
+            cxy0 = cxx0 = cyy0 = np.zeros(L)
+            v0 = np.ones(L)
+        else:
+            cxx0 = sxm.ewm(**kw).var(bias=True).to_numpy()
+            if y is x:
+                cyy0, cxy0 = cxx0, cxx0.copy()
+            else:
+                cyy0 = sym.ewm(**kw).var(bias=True).to_numpy()
+                cxy0 = sxm.ewm(**kw).cov(sym, bias=True).to_numpy()
+            # bias=True cov is 0.0 from the first obs (kernel cov
+            # state); pandas surfaces NaN pre-min_periods — normalize
+            seen = np.cumsum(mask) > 0
+            for c0 in ((cxy0, cxx0) if y is x else (cxy0, cxx0, cyy0)):
+                c0[seen & np.isnan(c0)] = 0.0
+            ssy = pd.Series(np.where(mask, np.arange(L, dtype=np.float64),
+                                     np.nan))
+            vb = ssy.ewm(**kw).var(bias=True).to_numpy()
+            vu = ssy.ewm(**kw).var(bias=False).to_numpy()
+            with np.errstate(invalid="ignore", divide="ignore"):
+                v0 = 1.0 - vb / vu
+            v0[obs[0]] = 1.0
+            v0 = pd.Series(v0).ffill().to_numpy()
         with np.errstate(divide="ignore"):
             rho = r ** d / (r ** d + alpha)
         i0 = obs[0]
@@ -1693,8 +1048,8 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
             arr[:i0] = st[j]
         if summarize:
             # partition-level correction sums: one term per obs after
-            # the partition's first, on the zero-state trajectory this
-            # _ends run computes; P_{i-1} is the PARTITION product
+            # the partition's first, on the zero-state trajectory the
+            # ends pass computes; P_{i-1} is the PARTITION product
             if first_lp is not None and had_prior:
                 rho_f = np.exp(first_lp)
                 st[13] += (1.0 - rho_f) * (pre_mx - x[i0])
@@ -1721,134 +1076,246 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
         st[7] += k
         return mx_t, my_t, cxy_t, cxx_t, cyy_t, v_t, cnt
 
-    def _cols_of(pdf_b):
-        import numpy as np
-        out = []
-        for t in tags:
-            x = pdf_b[f"__ex_{t}__"].to_numpy(dtype=np.float64)
-            out.append((x, x if same_col[t]
-                        else pdf_b[f"__ey_{t}__"].to_numpy(
-                            dtype=np.float64)))
+    mp = max(min_periods, 1)
+
+    def scan(b, state, emit):
+        out = {}
+        for ti, (t, sts) in enumerate(stats.items()):
+            x, y = _xy(b, cols[t])
+            st = state[ti * W:(ti + 1) * W]
+            mx, my, cxy, cxx, cyy, v, cnt = _tag_scan(
+                x, y, st, not emit, moments[t])
+            state[ti * W:(ti + 1) * W] = st
+            if not emit:
+                continue
+            gate = cnt >= mp
+            with np.errstate(invalid="ignore", divide="ignore"):
+                D = 1.0 - v
+                for s in sts:
+                    if s == "mean":
+                        val = mx
+                    elif s == "corr":
+                        den = np.sqrt(np.maximum(cxx, 0.0)
+                                      * np.maximum(cyy, 0.0))
+                        val = np.where(den > 0, cxy / den, np.nan)
+                    else:
+                        val = (np.maximum(cxx, 0.0) if s != "cov"
+                               else cxy)
+                        if not bias:
+                            val = np.where(D > 0, val / D, np.nan)
+                        if s == "std":
+                            val = np.sqrt(val)
+                    out[f"__ewmna_{s}_{t}__"] = np.where(gate, val,
+                                                         np.nan)
         return out
 
-    n_state = W * len(tags)
-    ends_schema = T.StructType(
-        [T.StructField("__pid__", T.IntegerType())]
-        + [T.StructField(f"__e{j}__", T.DoubleType())
-           for j in range(n_state)])
-    ev_cols = [f"__ex_{t}__" for t in tags] + [
-        f"__ey_{t}__" for t in tags if not same_col[t]]
-
-    def _ends(it):
-        states, pid = [_fresh() for _ in tags], None
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            pid = int(pdf_b["__pid__"].iloc[0])
-            for ti, (x, y) in enumerate(_cols_of(pdf_b)):
-                _tag_scan(x, y, states[ti], summarize=True)
-        if pid is not None:
-            row = {"__pid__": [pid]}
-            flat = [v for st in states for v in st]
-            row.update({f"__e{j}__": [float(flat[j])]
-                        for j in range(n_state)})
-            yield pd.DataFrame(row)
-
-    erows = {int(rw["__pid__"]): rw for rw in
-             sdf.select("__pid__", *ev_cols).mapInPandas(
-                 _ends, ends_schema).collect()}
-    import math as _math
-
     def _combine(acc, ends):
-        """Driver-side per-tag carry merge: acc = (mx, my, cxy, cxx,
-        cyy, v, w, cnt); ends = the 17 exported fields."""
+        """Per-tag carry merge: acc = the (mx, my, cxy, cxx, cyy, v,
+        w, cnt) carry; ends = one partition's 17 exported fields."""
         if not ends[8]:
             if not ignore_na:
-                return acc[:6] + (acc[6] * r ** ends[16], acc[7])
+                return acc[:6] + [acc[6] * r ** ends[16], acc[7]]
             return acc
         if _math.isnan(acc[0]):
-            return tuple(ends[:8])
-        st = list(acc[:7])
+            return ends[:8]
         A = (r ** ends[9]) * acc[6]
-        dx, dy, gxy, gxx, gyy, nu, _p = _m_merge(st, ends[10],
+        dx, dy, gxy, gxx, gyy, nu, _p = _m_merge(acc, ends[10],
                                                  ends[11], A)
         P = _math.exp(ends[12])
         SX, SY, SP = ends[13], ends[14], ends[15]
-        return (ends[0] + P * dx,
+        return [ends[0] + P * dx,
                 ends[1] + P * dy,
-                ends[2] + P * (gxy + dx * SY + dy * SX
-                               + dx * dy * SP),
+                ends[2] + P * (gxy + dx * SY + dy * SX + dx * dy * SP),
                 ends[3] + P * (gxx + 2 * dx * SX + dx * dx * SP),
                 ends[4] + P * (gyy + 2 * dy * SY + dy * dy * SP),
                 ends[5] + P * P * nu,
-                ends[6], acc[7] + ends[7])
+                ends[6], acc[7] + ends[7]]
 
-    carries = {}
-    nan = float("nan")
-    acc = [(nan, nan, 0.0, 0.0, 0.0, 1.0, 1.0, 0.0) for _ in tags]
-    for pid in sorted(erows):
-        carries[pid] = tuple(acc)
-        e = erows[pid]
-        acc = [_combine(acc[ti],
-                        [e[f"__e{ti * W + j}__"] for j in range(W)])
-               for ti in range(len(tags))]
-    stats_by_tag = {t: tuple(sts) for t, (_, _, sts) in specs.items()}
-    out_cols = [f"__ewmna_{s}_{t}__"
-                for t, sts in stats_by_tag.items() for s in sts]
-    out_schema = T.StructType(list(sdf.schema.fields)
-                              + [T.StructField(c, T.DoubleType())
-                                 for c in out_cols])
-    mp = min_periods
+    def combine(acc, e):
+        out = []
+        for ti in range(len(tags)):
+            c = _combine(acc[ti * W:ti * W + 8], e[ti * W:(ti + 1) * W])
+            out += c + [0.0 if _math.isnan(c[0]) else 1.0] + _FRESH[9:]
+        return out
 
-    def _emit(it):
-        import numpy as np
-        states, init = None, False
-        for pdf_b in it:
-            if len(pdf_b) == 0:
-                continue
-            if not init:
-                c = carries.get(int(pdf_b["__pid__"].iloc[0]),
-                                tuple((nan, nan, 0.0, 0.0, 0.0, 1.0,
-                                       1.0, 0.0) for _ in tags))
-                states = []
-                for ti in range(len(tags)):
-                    st = _fresh()
-                    st[:8] = list(c[ti])
-                    st[8] = 0.0 if np.isnan(c[ti][0]) else 1.0
-                    states.append(st)
-                init = True
-            o = pdf_b.copy()
-            for ti, (x, y) in enumerate(_cols_of(pdf_b)):
-                t = tags[ti]
-                mx, my, cxy, cxx, cyy, v, cnt = _tag_scan(
-                    x, y, states[ti], summarize=False)
-                gate = cnt >= max(mp, 1)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    D = 1.0 - v
-                    for s in stats_by_tag[t]:
-                        if s == "mean":
-                            o[f"__ewmna_{s}_{t}__"] = np.where(
-                                gate, mx, np.nan)
-                            continue
-                        if s == "corr":
-                            den = np.sqrt(np.maximum(cxx, 0.0)
-                                          * np.maximum(cyy, 0.0))
-                            val = np.where(den > 0, cxy / den, np.nan)
-                        elif s in ("var", "std"):
-                            cc = np.maximum(cxx, 0.0)
-                            val = cc if bias else np.where(
-                                D > 0, cc / D, np.nan)
-                            if s == "std":
-                                val = np.sqrt(val)
-                        else:  # cov
-                            val = cxy if bias else np.where(
-                                D > 0, cxy / D, np.nan)
-                        o[f"__ewmna_{s}_{t}__"] = np.where(
-                            gate, val, np.nan)
-            yield o
+    return _carry_scan(sdf, order_by, inputs, fresh, scan, combine,
+                       [f"__ewmna_{s}_{t}__" for t, sts in stats.items()
+                        for s in sts])
 
-    return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__", *ev_cols))
+
+def with_ewm_mean_times(sdf: DataFrame, value_col, time_col,
+                        halflife_us: float,
+                        order_by: list | None, min_periods: int = 0,
+                        name: str = "__ewm__") -> DataFrame:
+    """Single-column face of :func:`with_ewm_mean_times_multi`."""
+    out = with_ewm_mean_times_multi(
+        sdf, {"v": value_col}, time_col, halflife_us, order_by,
+        min_periods)
+    return out.withColumnRenamed("__ewmt_v__", name)
+
+
+def with_ewm_mean_times_multi(sdf: DataFrame, values: dict,
+                              time_col, halflife_us: float,
+                              order_by: list | None,
+                              min_periods: int = 0) -> DataFrame:
+    """Partition-safe GLOBAL time-decay EWM mean (pandas
+    ``ewm(halflife=Timedelta, times=...).mean()``) for ANY number of
+    value columns over ONE layout: the weight of an observation
+    decays with its actual STAMP distance, 0.5^(dt/hl), not its row
+    distance. ``values`` maps tag -> Column; outputs
+    ``__ewmt_<tag>__``.
+
+    ROW-ORDER semantics, like pandas: decay deltas follow the
+    ``order_by`` row sequence, and times need NOT be monotonic in
+    it (a past-dated row simply carries weight > 1 relative to its
+    predecessor — the signed analytic fold is the same algebra).
+    Null stamps raise ValueError (pandas raises for NaT too); pass 1
+    counts them and the driver fold raises before pass 2.
+
+    The decayed sums are computed with a SEGMENTED anchor trick
+    instead of pandas' fixed-alpha kernel: within a segment whose time
+    span is < 50 halflives, num0_i = u_i * cumsum(x_j/u_j) with
+    u = 2^(-(t-anchor)/hl) is exact to double precision (terms
+    beyond 50 bits are below the accumulator's resolution — the
+    same loss the sequential kernel has); segments chain through
+    the ANALYTIC time-decay fold num_i += 2^(-(t_i-t_in)/hl)*num_in,
+    which is also how the driver folds the partition end states and
+    how partition carries merge in pass 2 — three scalars per tag per
+    partition at any timestamp irregularity. NaN rows keep their
+    weightless pandas semantics; a row whose total weight decays into
+    the DENORMAL range forward-fills the last mean (the ratio num/den
+    is invariant under pure decay, and a ~1e-322 denominator keeps
+    two mantissa bits — observed emitting -5/7 for -0.706 before the
+    guard), mirroring the adjust=True scan's last-mean carry.
+    """
+    import pandas as pd
+
+    if halflife_us <= 0:
+        raise ValueError(
+            f"halflife must be positive, got {halflife_us}")
+    hl = float(halflife_us)
+    tags = list(values)
+    inputs = {f"__ev_{t}__": _as_col(c).cast("double")
+              for t, c in values.items()}
+    inputs["__et__"] = F.unix_micros(
+        _as_col(time_col).cast("timestamp")).cast("double")
+
+    NEG = -1.0e300
+
+    def fresh():
+        # [t_last, null stamps] + per tag [num, den, cnt, last_mean]
+        return [NEG, 0.0] + [0.0, 0.0, 0.0, float("nan")] * len(tags)
+
+    span = 50.0 * hl
+
+    def _segments(t):
+        """Cut [0, L) into runs whose STAMP RANGE stays under 50
+        halflives — the precision bound of the anchor trick. Rows
+        arrive in ROW order (pandas computes decay deltas in row
+        order, times need not be monotonic), so the general cut
+        rule is the running max-min span; sorted stamps take the
+        one-searchsorted-per-segment fast path. The chunked
+        accumulates keep the general scan ~O(L) for locally
+        near-monotonic data."""
+        L = len(t)
+        segs = []
+        i = 0
+        if L and bool(np.all(t[1:] >= t[:-1])):
+            while i < L:
+                j = max(int(np.searchsorted(t, t[i] + span,
+                                            side="left")), i + 1)
+                segs.append((i, j))
+                i = j
+            return segs
+        CH = 4096
+        while i < L:
+            j, mx, mn = i, -np.inf, np.inf
+            while j < L:
+                k = min(j + CH, L)
+                rm = np.maximum.accumulate(t[j:k])
+                rn = np.minimum.accumulate(t[j:k])
+                if mx > -np.inf:
+                    rm = np.maximum(rm, mx)
+                    rn = np.minimum(rn, mn)
+                over = np.nonzero(rm - rn > span)[0]
+                if len(over):
+                    j += int(over[0])
+                    break
+                mx, mn = float(rm[-1]), float(rn[-1])
+                j = k
+            j = max(j, i + 1)
+            segs.append((i, j))
+            i = j
+        return segs
+
+    mp = max(min_periods, 1)
+
+    def scan(b, st, emit):
+        t = b["__et__"].to_numpy(dtype=np.float64)
+        st[1] += float(np.isnan(t).sum())
+        segs = _segments(t)
+        out = {}
+        for ti, tg in enumerate(tags):
+            o = 2 + 4 * ti
+            x = b[f"__ev_{tg}__"].to_numpy(dtype=np.float64)
+            w = np.where(np.isnan(x), 0.0, 1.0)
+            m = np.where(np.isnan(x), 0.0, x)
+            num = np.empty(len(t))
+            den = np.empty(len(t))
+            n_in, d_in, t_in = st[o], st[o + 1], st[0]
+            for (i, j) in segs:
+                seg = slice(i, j)
+                bb = (t[seg] - t[i]) / hl
+                u = np.exp2(-bb)
+                inv = np.exp2(bb)
+                dk = (np.exp2(-(t[seg] - t_in) / hl)
+                      if t_in > NEG else np.zeros(j - i))
+                num[seg] = u * np.cumsum(m[seg] * inv) + dk * n_in
+                den[seg] = u * np.cumsum(w[seg] * inv) + dk * d_in
+                n_in, d_in, t_in = num[j - 1], den[j - 1], t[j - 1]
+            cnt = st[o + 2] + np.cumsum(w)
+            st[o], st[o + 1], st[o + 2] = n_in, d_in, cnt[-1]
+            with np.errstate(invalid="ignore", divide="ignore"):
+                # a row with an observation has den >= 1; den below
+                # that only happens on NaN rows, where the true
+                # output IS the previous mean (the ratio is
+                # invariant under pure decay). Denormal-range dens
+                # corrupt the ratio, so below 1e-250 forward-fill.
+                y = np.where((den > 1e-250) & (cnt > 0), num / den,
+                             np.nan)
+            y = pd.Series(y).ffill().to_numpy()
+            y[np.isnan(y)] = st[o + 3]
+            st[o + 3] = y[-1]
+            if emit:
+                out[f"__ewmt_{tg}__"] = np.where(cnt >= mp, y, np.nan)
+        st[0] = t[-1]
+        return out
+
+    def combine(acc, e):
+        if e[1]:
+            # pandas raises for NaT stamps too ("Cannot convert NaT
+            # values to integer"); a NaN stamp would silently poison
+            # the segment scan
+            raise ValueError(
+                "ewm(times=...): the times column has null stamp(s); "
+                "pandas raises for NaT times too — drop or fill them "
+                "first")
+        t_end, acc_t = e[0], acc[0]
+        # np.exp2, not 2.0**: times may run BACKWARD across a
+        # partition boundary (row-order semantics), and a large
+        # positive exponent must saturate to inf like the kernel
+        # does, not raise OverflowError
+        dk = (float(np.exp2(-(t_end - acc_t) / hl))
+              if acc_t > NEG and t_end > NEG else 0.0)
+        out = [t_end if t_end > NEG else acc_t, 0.0]
+        for o in range(2, len(acc), 4):
+            out += [e[o] + dk * acc[o], e[o + 1] + dk * acc[o + 1],
+                    acc[o + 2] + e[o + 2],
+                    acc[o + 3] if np.isnan(e[o + 3]) else e[o + 3]]
+        return out
+
+    return _carry_scan(sdf, order_by, inputs, fresh, scan, combine,
+                       [f"__ewmt_{tg}__" for tg in tags])
 
 
 def with_interp_neighbors(sdf: DataFrame, value_col, order_by,
@@ -2055,7 +1522,7 @@ def with_rolling_locals(sdf: DataFrame, cols: dict, window: int,
     mp = window if min_periods is None else min_periods
     outs = list(cols)
     vnames = {o: f"__rl_{i}__" for i, o in enumerate(outs)}
-    sel = [(F.col(c) if isinstance(c, str) else c).cast("double")
+    sel = [_as_col(c).cast("double")
            .alias(vnames[o]) for o, c in cols.items()]
     lay = _range_layout(sdf.select("*", *sel), order_by)
 
@@ -2183,268 +1650,3 @@ def with_rolling_locals(sdf: DataFrame, cols: dict, window: int,
     out = lay.mapInPandas(gen_center if center else gen_trailing,
                           out_schema)
     return out.drop("__mid__", "__pid__", *vlist)
-
-
-def with_ewm_mean_times(sdf: DataFrame, value_col, time_col,
-                        halflife_us: float,
-                        order_by: list | None, min_periods: int = 0,
-                        name: str = "__ewm__") -> DataFrame:
-    """Single-column face of :func:`with_ewm_mean_times_multi`."""
-    out = with_ewm_mean_times_multi(
-        sdf, {"v": value_col}, time_col, halflife_us, order_by,
-        min_periods)
-    return out.withColumnRenamed("__ewmt_v__", name)
-
-
-def with_ewm_mean_times_multi(sdf: DataFrame, values: dict,
-                              time_col, halflife_us: float,
-                              order_by: list | None,
-                              min_periods: int = 0) -> DataFrame:
-    """Partition-safe GLOBAL time-decay EWM mean (pandas
-    ``ewm(halflife=Timedelta, times=...).mean()``) for ANY number of
-    value columns over ONE layout: the weight of an observation
-    decays with its actual STAMP distance, 0.5^(dt/hl), not its row
-    distance. ``values`` maps tag -> Column; outputs
-    ``__ewmt_<tag>__``.
-
-    ROW-ORDER semantics, like pandas: decay deltas follow the
-    ``order_by`` row sequence, and times need NOT be monotonic in
-    it (a past-dated row simply carries weight > 1 relative to its
-    predecessor — the signed analytic fold is the same algebra).
-    Null stamps raise ValueError (pandas raises for NaT too),
-    gated on a count the pass-1 ends scan already produces.
-
-    Same two-pass carry shape as :func:`with_ewm_mean`, but the
-    decayed sums are computed with a SEGMENTED anchor trick instead
-    of pandas' fixed-alpha kernel: within a segment whose time span
-    is < 50 halflives, num0_i = u_i * cumsum(x_j/u_j) with
-    u = 2^(-(t-anchor)/hl) is exact to double precision (terms
-    beyond 50 bits are below the accumulator's resolution — the
-    same loss the sequential kernel has); segments chain through
-    the ANALYTIC time-decay fold num_i += 2^(-(t_i-t_in)/hl)*num_in,
-    which is also how the driver prefix-combines the n_partitions
-    end states and how partition carries merge in pass 2 — three
-    scalars per tag per partition at any timestamp irregularity.
-    NaN rows keep their weightless pandas semantics; a row whose
-    total weight decays into the DENORMAL range forward-fills the
-    last mean (the ratio num/den is invariant under pure decay, and
-    a ~1e-322 denominator keeps two mantissa bits — observed
-    emitting -5/7 for -0.706 before the guard), mirroring
-    with_ewm_mean's y_last carry. Every tag shares the layout, the
-    segment boundaries, and both passes.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if halflife_us <= 0:
-        raise ValueError(
-            f"halflife must be positive, got {halflife_us}")
-    hl = float(halflife_us)
-    tags = list(values)
-    tcol = F.col(time_col) if isinstance(time_col, str) else time_col
-    sel = [(F.col(c) if isinstance(c, str) else c).cast("double")
-           .alias(f"__ev_{t}__") for t, c in values.items()]
-    sdf = _range_layout(
-        sdf.select("*", *sel,
-                   F.unix_micros(tcol.cast("timestamp"))
-                   .cast("double").alias("__et__")), order_by)
-
-    NEG = -1.0e300
-
-    def _fresh():
-        # per tag: [num, den, t_last, cnt, y_last]
-        return {tg: [0.0, 0.0, NEG, 0.0, np.nan] for tg in tags}
-
-    span = 50.0 * hl
-
-    def _segments(t):
-        """Cut [0, L) into runs whose STAMP RANGE stays under 50
-        halflives — the precision bound of the anchor trick. Rows
-        arrive in ROW order (pandas computes decay deltas in row
-        order, times need not be monotonic), so the general cut
-        rule is the running max-min span; sorted stamps take the
-        one-searchsorted-per-segment fast path. The chunked
-        accumulates keep the general scan ~O(L) for locally
-        near-monotonic data."""
-        L = len(t)
-        segs = []
-        i = 0
-        if L and bool(np.all(t[1:] >= t[:-1])):
-            while i < L:
-                j = max(int(np.searchsorted(t, t[i] + span,
-                                            side="left")), i + 1)
-                segs.append((i, j))
-                i = j
-            return segs
-        CH = 4096
-        while i < L:
-            j, mx, mn = i, -np.inf, np.inf
-            while j < L:
-                k = min(j + CH, L)
-                rm = np.maximum.accumulate(t[j:k])
-                rn = np.minimum.accumulate(t[j:k])
-                if mx > -np.inf:
-                    rm = np.maximum(rm, mx)
-                    rn = np.minimum(rn, mn)
-                over = np.nonzero(rm - rn > span)[0]
-                if len(over):
-                    j += int(over[0])
-                    break
-                mx, mn = float(rm[-1]), float(rn[-1])
-                j = k
-            j = max(j, i + 1)
-            segs.append((i, j))
-            i = j
-        return segs
-
-    def _batch_scan(xs: dict, t, states: dict):
-        """xs maps tag -> value array; returns {tag: (y, cnt)}."""
-        L = len(t)
-        segs = _segments(t)
-        outs = {}
-        for tg in tags:
-            x = xs[tg]
-            st = states[tg]
-            w = np.where(np.isnan(x), 0.0, 1.0)
-            m = np.where(np.isnan(x), 0.0, x)
-            num = np.empty(L)
-            den = np.empty(L)
-            n_in, d_in, t_in = st[0], st[1], st[2]
-            for (i, j) in segs:
-                seg = slice(i, j)
-                b = (t[seg] - t[i]) / hl
-                u = np.exp2(-b)
-                inv = np.exp2(b)
-                num0 = u * np.cumsum(m[seg] * inv)
-                den0 = u * np.cumsum(w[seg] * inv)
-                dk = (np.exp2(-(t[seg] - t_in) / hl)
-                      if t_in > NEG else np.zeros(j - i))
-                num[seg] = num0 + dk * n_in
-                den[seg] = den0 + dk * d_in
-                n_in, d_in, t_in = num[j - 1], den[j - 1], t[j - 1]
-            cnt = st[3] + np.cumsum(w)
-            st[0], st[1], st[2] = n_in, d_in, t_in
-            st[3] = cnt[-1] if L else st[3]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                # a row with an observation has den >= 1; den below
-                # that only happens on NaN rows, where the true
-                # output IS the previous mean (the ratio is
-                # invariant under pure decay). Denormal-range dens
-                # corrupt the ratio, so below 1e-250 forward-fill.
-                y = np.where(den > 1e-250, num / den, np.nan)
-            y = pd.concat([pd.Series([st[4]]), pd.Series(
-                np.where(cnt > 0, y, np.nan))],
-                ignore_index=True).ffill().to_numpy()[1:]
-            if L:
-                st[4] = y[-1]
-            outs[tg] = (y, cnt)
-        return outs
-
-    ef = [T.StructField("__pid__", T.IntegerType()),
-          T.StructField("__et0__", T.DoubleType()),
-          T.StructField("__enul__", T.LongType())]
-    for tg in tags:
-        ef += [T.StructField(f"__en_{tg}__", T.DoubleType()),
-               T.StructField(f"__ed_{tg}__", T.DoubleType()),
-               T.StructField(f"__ec_{tg}__", T.DoubleType()),
-               T.StructField(f"__ey_{tg}__", T.DoubleType())]
-    ends_schema = T.StructType(ef)
-
-    def _ends(it):
-        states, pid, t_last, nul = _fresh(), None, NEG, 0
-        for b in it:
-            if not len(b):
-                continue
-            pid = int(b["__pid__"].iloc[0])
-            t = b["__et__"].to_numpy(dtype=np.float64)
-            nul += int(np.isnan(t).sum())
-            _batch_scan({tg: b[f"__ev_{tg}__"]
-                         .to_numpy(dtype=np.float64)
-                         for tg in tags}, t, states)
-            t_last = states[tags[0]][2]
-        if pid is not None:
-            row = {"__pid__": [pid], "__et0__": [t_last],
-                   "__enul__": [nul]}
-            for tg in tags:
-                st = states[tg]
-                row[f"__en_{tg}__"] = [st[0]]
-                row[f"__ed_{tg}__"] = [st[1]]
-                row[f"__ec_{tg}__"] = [st[3]]
-                row[f"__ey_{tg}__"] = [st[4]]
-            yield pd.DataFrame(row)
-
-    _rows = (sdf.select("__pid__", "__et__",
-                        *[f"__ev_{tg}__" for tg in tags])
-             .mapInPandas(_ends, ends_schema).collect())
-    nulls = sum(int(r["__enul__"]) for r in _rows)
-    if nulls:
-        # pandas raises for NaT stamps too ("Cannot convert NaT
-        # values to integer") — a NaN __et__ would silently poison
-        # the segment scan, so gate on the pass-1 count (free: the
-        # ends pass already scanned the column)
-        raise ValueError(
-            f"ewm(times=...): the times column has {nulls} null "
-            "stamp(s); pandas raises for NaT times too — drop or "
-            "fill them first")
-    erows = {int(r["__pid__"]): r for r in _rows}
-    import math as _math
-    carries = {}
-    acc = {tg: (0.0, 0.0, 0.0, float("nan")) for tg in tags}
-    acc_t = NEG
-    for pid in sorted(erows):
-        carries[pid] = (acc_t, dict(acc))
-        e = erows[pid]
-        t_end = e["__et0__"]
-        # np.exp2, not 2.0**: times may run BACKWARD across a
-        # partition boundary (row-order semantics), and a large
-        # positive exponent must saturate to inf like the kernel
-        # does, not raise OverflowError
-        dk = (float(np.exp2(-(t_end - acc_t) / hl))
-              if acc_t > NEG and t_end > NEG else 0.0)
-        nxt = {}
-        for tg in tags:
-            a = acc[tg]
-            ey = e[f"__ey_{tg}__"]
-            nxt[tg] = (e[f"__en_{tg}__"] + dk * a[0],
-                       e[f"__ed_{tg}__"] + dk * a[1],
-                       a[2] + e[f"__ec_{tg}__"],
-                       a[3] if ey is None or _math.isnan(ey)
-                       else ey)
-        acc = nxt
-        if t_end > NEG:
-            acc_t = t_end
-    out_schema = T.StructType(
-        list(sdf.schema.fields)
-        + [T.StructField(f"__ewmt_{tg}__", T.DoubleType())
-           for tg in tags])
-    mp = min_periods
-
-    def _emit(it):
-        states, init = _fresh(), False
-        for b in it:
-            if not len(b):
-                continue
-            if not init:
-                ct, cmap = carries.get(
-                    int(b["__pid__"].iloc[0]),
-                    (NEG, {tg: (0.0, 0.0, 0.0, np.nan)
-                           for tg in tags}))
-                for tg in tags:
-                    c = cmap[tg]
-                    states[tg] = [c[0], c[1], ct, c[2], c[3]]
-                init = True
-            t = b["__et__"].to_numpy(dtype=np.float64)
-            outs = _batch_scan({tg: b[f"__ev_{tg}__"]
-                                .to_numpy(dtype=np.float64)
-                                for tg in tags}, t, states)
-            o = b.copy()
-            for tg in tags:
-                y, cnt = outs[tg]
-                o[f"__ewmt_{tg}__"] = np.where(
-                    cnt >= max(mp, 1), y, np.nan)
-            yield o
-
-    return (sdf.mapInPandas(_emit, out_schema)
-            .drop("__pid__", "__mid__", "__et__",
-                  *[f"__ev_{tg}__" for tg in tags]))

@@ -210,6 +210,20 @@ def test_resample_matches_pandas(bl):
                 got[c].fillna(-9e9).to_numpy(dtype=float),
                 want[c].fillna(-9e9).to_numpy(dtype=float),
                 err_msg=f"{agg} {c}")
+    # sub-hour buckets over a long gappy span: the gap grid's chunk
+    # width (bucket * 2^20 us) must be computed as a long — an int32
+    # product wraps below ~36 min buckets and drops grid rows
+    rng = np.random.default_rng(7)
+    mins = np.unique(np.r_[0, rng.choice(np.arange(1, 4499), 1500,
+                                         replace=False), 4499])
+    t3 = pd.Timestamp("2024-03-01") + pd.to_timedelta(mins, unit="min")
+    p3 = pd.DataFrame({"t": t3, "v": np.arange(len(mins), dtype=float)})
+    d3 = bl.DataFrame({"t": t3.to_numpy(), "v": p3["v"].to_numpy()})
+    got = d3.resample("1min", on="t").sum().to_pandas().reset_index()
+    want = p3.resample("1min", on="t").sum().reset_index()
+    assert len(want) == 4500
+    assert got["t"].tolist() == want["t"].tolist()
+    assert got["v"].tolist() == want["v"].tolist()
     # calendar buckets: date_trunc month/year + add_months gap grid,
     # pandas period-end/-start labels
     ts2 = pd.to_datetime(["2024-01-05", "2024-03-02", "2024-12-30",

@@ -64,6 +64,27 @@ def test_exact_duplicates(spark):
     assert out == {1: 2, 3: 1}
 
 
+def test_word_shingles_token_array_drops_empty_tokens(spark):
+    """A raw split(text, ' ') array keeps an empty token at every
+    doubled space; the ArrayType path must shingle it exactly like
+    the text itself (empty tokens dropped on both paths)."""
+    from pyspark.sql import functions as F
+    from baloo_spark.operators.dedup import _shingled
+    df = spark.createDataFrame(
+        [(1, "the  quick brown   fox jumps"), (2, " a b  c d ")],
+        "doc_id LONG, text STRING")
+    arr = df.select("doc_id", F.split("text", " ").alias("toks"))
+
+    def sh(frame, col):
+        return {r["doc_id"]: sorted(r["sh"]) for r in
+                _shingled(frame, col, "doc_id", 3, "word").collect()}
+
+    want = sh(df, "text")
+    assert want[1] == ["brown fox jumps", "quick brown fox",
+                       "the quick brown"]
+    assert sh(arr, "toks") == want
+
+
 def test_minhash_approximates_jaccard(spark):
     from baloo_spark.operators.dedup import (minhash_lsh_pairs,
                                              ngram_jaccard_pairs)

@@ -301,6 +301,22 @@ def test_frame_ewm_single_range_layout(spark, bl, monkeypatch):
         p = plan_of(sdf)
         assert "Exchange SinglePartition" not in p
         assert sdf.rdd.getNumPartitions() >= 1
+    # the Series faces run the same fused scans: one layout each
+    ser = three["l_extendedprice"]
+    for label, build in (
+            ("ewm().mean", lambda: ser.ewm(alpha=0.4).mean()),
+            ("ewm().var", lambda: ser.ewm(alpha=0.4).var()),
+            ("ewm(adjust=False).mean",
+             lambda: ser.ewm(alpha=0.4, adjust=False).mean())):
+        calls["n"] = 0
+        monkeypatch.setattr(ordinal, "_range_layout", counting)
+        try:
+            sdf = build().to_spark()
+        finally:
+            monkeypatch.setattr(ordinal, "_range_layout", real)
+        assert calls["n"] == 1, \
+            f"Series.{label} built {calls['n']} range layouts"
+        assert "Exchange SinglePartition" not in plan_of(sdf)
     # scale-adaptivity: with AQE coalescing off, the SAME build must
     # honor spark.sql.shuffle.partitions (no hard-coded count)
     key = "spark.sql.adaptive.coalescePartitions.enabled"

@@ -158,7 +158,7 @@ def main():
     # checkpoint + ends pass + driver carry), so the operator is
     # rebuilt inside the timing loop — a fixed-DF re-save would only
     # re-run the final emit pass and mismeasure
-    from baloo_spark.plans.ordinal import with_ewm_mean
+    from baloo_spark.plans.ordinal import with_ewm_stats_multi
     lines += ["## ewm mean (decayed-carry scan, alpha=0.1)", ""]
     for mult in (1, 4, 16):
         base = replicate(li.select("l_orderkey", "l_extendedprice"),
@@ -166,8 +166,10 @@ def main():
         dt = float("inf")
         for _ in range(3):
             t0 = time.perf_counter()
-            out = with_ewm_mean(base, "l_extendedprice", 0.1,
-                                [F.col("l_orderkey").asc()])
+            out = with_ewm_stats_multi(
+                base, {"v": ("l_extendedprice", "l_extendedprice",
+                             ("mean",))}, 0.1,
+                [F.col("l_orderkey").asc()])
             out.write.format("noop").mode("overwrite").save()
             dt = min(dt, time.perf_counter() - t0)
         lines.append(f"- {mult}x: {dt:.2f}s (full operator incl. "
@@ -232,28 +234,28 @@ def main():
     # the adjust=False kernel-state perturbation scan (17 doubles per
     # tag: means, three covs, sum_wt2, correction sums) get the same
     # 1x/4x/16x evidence.
-    from baloo_spark.plans.ordinal import (with_ewm_mean_noadjust,
-                                           with_ewm_noadjust_stats,
-                                           with_ewm_pair_stats,
-                                           with_ewm_stats)
+    from baloo_spark.plans.ordinal import (with_ewm_noadjust_stats,
+                                           with_ewm_stats_multi)
+    px = ("l_extendedprice", "l_extendedprice")
     for title, fn, note in (
         ("ewm mean adjust=False (affine-map carry)",
-         lambda b: with_ewm_mean_noadjust(
-             b, "l_extendedprice", 0.1, [F.col("l_orderkey").asc()]),
+         lambda b: with_ewm_noadjust_stats(
+             b, {"v": (*px, ("mean",))}, 0.1,
+             [F.col("l_orderkey").asc()]),
          "_same two passes; the carry adds three scalars per "
          "partition (pre-first-obs decay, first obs value, ln prod "
          "p_i) — still kilobytes at thousands of partitions_"),
         ("ewm var (four-decayed-sums scan)",
-         lambda b: with_ewm_stats(
-             b, "l_extendedprice", 0.1, [F.col("l_orderkey").asc()],
-             stats=("var",)),
+         lambda b: with_ewm_stats_multi(
+             b, {"v": (*px, ("var",))}, 0.1,
+             [F.col("l_orderkey").asc()]),
          "_same two passes; num/den/q/d2 are four doubles per "
          "partition in the carry, and the per-row work is four "
          "pandas C-kernel calls per batch instead of two_"),
         ("ewm cov (seven-sums pairwise scan)",
-         lambda b: with_ewm_pair_stats(
-             b, "l_extendedprice", "l_quantity", 0.1,
-             [F.col("l_orderkey").asc()], stat="cov"),
+         lambda b: with_ewm_stats_multi(
+             b, {"p": ("l_extendedprice", "l_quantity", ("cov",))},
+             0.1, [F.col("l_orderkey").asc()]),
          "_same two passes over ONE layout carrying both columns; "
          "the carry is seven doubles + counts per partition and the "
          "per-row work is seven C-kernel calls over the joint "
