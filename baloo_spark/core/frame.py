@@ -647,9 +647,10 @@ class DataFrame:
                     f"materialized index column (got {idx!r}); "
                     "set_index first")
             k = idx[0]
-            spark = out_sdf.sparkSession
+            from ..plans.ordinal import local_table
             ktype = out_sdf.schema[k].dataType
-            lab = spark.createDataFrame(
+            lab = local_table(
+                out_sdf.sparkSession,
                 [(int(i), l) for i, l in enumerate(index)],
                 T.StructType([T.StructField("__rpos__", T.LongType()),
                               T.StructField(k, ktype)]))
@@ -5890,7 +5891,7 @@ class _FrameILoc:
         self._df = df
 
     def __getitem__(self, key):
-        from ..plans.ordinal import POS_COL
+        from ..plans.ordinal import POS_COL, local_table
         from .series import _norm_pos
         if isinstance(key, (int, np.integer)):
             key = int(key)
@@ -5907,8 +5908,8 @@ class _FrameILoc:
                 n = len(self._df)
                 key = [_norm_pos(int(i), n) for i in key]
             sdf = self._df._ordered_sdf()
-            spark = sdf.sparkSession
-            want = spark.createDataFrame(
+            want = local_table(
+                sdf.sparkSession,
                 [(int(i), int(p)) for p, i in enumerate(key)],
                 f"{POS_COL} LONG, __gather__ LONG")
             if ORD_COL in sdf.columns:

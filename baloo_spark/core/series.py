@@ -4541,7 +4541,7 @@ class _SeriesILoc:
         self._sr = sr
 
     def __getitem__(self, key):
-        from ..plans.ordinal import POS_COL
+        from ..plans.ordinal import POS_COL, local_table
         if isinstance(key, (int, np.integer)):
             key = int(key)
             if key < 0:
@@ -4560,8 +4560,8 @@ class _SeriesILoc:
                 key = [_norm_pos(int(i), n) for i in key]
             # gather by ordinal list via broadcast join (weld_ops.py:333-367)
             sdf, alias = self._sr._ordered_sdf()
-            spark = sdf.sparkSession
-            want = spark.createDataFrame(
+            want = local_table(
+                sdf.sparkSession,
                 [(int(i), int(p)) for p, i in enumerate(key)],
                 f"{POS_COL} LONG, __gather__ LONG")
             sdf = sdf.drop(ORD_COL) if ORD_COL in sdf.columns else sdf

@@ -72,6 +72,8 @@ def spark_df_from_pandas(spark, pdf):
         return spark.createDataFrame(pdf)
     from pyspark.sql import types as T
 
+    from ..plans.ordinal import local_table
+
     def _t(dt):
         if dt.kind == "f":
             return T.FloatType() if dt.itemsize <= 4 else T.DoubleType()
@@ -85,7 +87,7 @@ def spark_df_from_pandas(spark, pdf):
 
     fields = [T.StructField(str(c), _t(pdf[c].to_numpy().dtype))
               for c in pdf.columns]
-    return spark.createDataFrame([], T.StructType(fields))
+    return local_table(spark, [], T.StructType(fields))
 
 
 def nan_safe_lit(v):

@@ -35,6 +35,7 @@ MAX_LITERAL_VALUES = 16384
 
 
 from ..plans.layout import spread
+from ..plans.ordinal import local_table
 
 
 def dot_expr(a: str, b: str):
@@ -252,7 +253,8 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16,
             members = X[best == i]
             if len(members):                    # empty cells keep theirs
                 cents[i] = members.mean(axis=0)
-    return corpus.sparkSession.createDataFrame(
+    return local_table(
+        corpus.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cent_id INT, cent ARRAY<DOUBLE>")
 

@@ -24,6 +24,13 @@ identical in both passes (Spark gives no cross-job determinism
 guarantee otherwise); checkpoint blocks free on GC, unlike persist()
 entries which sit in the CacheManager until explicitly unpersisted.
 
+Every table built on the driver between the passes (partition
+offsets, boundary carries, prefix carries, the iloc gather list) goes
+to Spark through ``local_table``: one Arrow table that plans as a
+``LocalRelation``, never through a Python worker. The row-list
+``createDataFrame`` would run ``parallelize`` plus a pickled
+PythonRDD stage for a table of a few rows.
+
 Recurrences that are not prefix sums — the EWM families — run on ONE
 carry-scan driver, ``_carry_scan``:
 
@@ -65,6 +72,31 @@ def _as_col(c):
     return F.col(c) if isinstance(c, str) else c
 
 
+def local_table(spark, rows, schema) -> DataFrame:
+    """A Spark DataFrame holding driver-built ``rows`` (tuples in
+    ``schema`` order; ``schema`` is a StructType or a DDL string),
+    shipped as one Arrow table: a ``LocalRelation`` in the plan (a
+    JVM-side Arrow RDD above
+    ``spark.sql.execution.arrow.localRelationThreshold``), never a
+    Python-worker job. Every value goes through
+    ``schema.toInternal`` first, so a naive ``TimestampType`` datetime
+    is read in the driver's local zone exactly as the row-list
+    ``createDataFrame`` reads it, nested timestamps included."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = (list(zip(*(schema.toInternal(r) for r in rows)))
+            or [()] * len(schema.fields))
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema=schema)
+
+
 def with_boundary_shift(sdf: DataFrame, value_col, periods: int,
                         order_by: list | None = None,
                         name: str = "__shift__") -> DataFrame:
@@ -89,8 +121,9 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
     value from a *carry list* collected on the driver: every
     partition's |periods| edge rows — n_partitions x |periods| rows by
     construction, kilobytes even at thousands of partitions — then
-    broadcast back. Two jobs, no data-sized shuffle beyond the
-    (optional) range layout, identical results to the global window.
+    shipped back as a ``local_table`` and broadcast-joined. Two jobs,
+    no data-sized shuffle beyond the (optional) range layout, no
+    Python worker, identical results to the global window.
     All columns share the layout, the donor collect, and the carry
     join — callers shifting N columns (e.g. the global rolling
     window's prefix pair) pay ONE pass, not N.
@@ -172,7 +205,7 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
          T.StructField("__ern__", T.IntegerType())]
         + [T.StructField(f"__cv_{o}__", sdf.schema[f"__sv_{o}__"].dataType)
            for o in prepared])
-    carry_df = sdf.sparkSession.createDataFrame(carry_rows, carry_schema)
+    carry_df = local_table(sdf.sparkSession, carry_rows, carry_schema)
 
     out = (sdf.withColumn("__ern__", edge_rn)
            .join(F.broadcast(carry_df), ["__pid__", "__ern__"], "left"))
@@ -220,12 +253,12 @@ def with_dense_ordinal(sdf: DataFrame, order_by: list | None = None,
         offsets[pid] = acc
         acc += counts[pid]
 
-    spark = sdf.sparkSession
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "__pid__ INT, __off__ LONG"
-    )
+    off_df = local_table(
+        sdf.sparkSession, [(int(p), int(o)) for p, o in offsets.items()],
+        "__pid__ INT, __off__ LONG")
 
-    # Pass 2: broadcast-join the offsets; position within partition via
+    # Pass 2: broadcast-join the offsets (a local_table: an Arrow
+    # LocalRelation, no Python worker); position within partition via
     # a pid-local window ordered by the monotonic id (mid order == row
     # order within a partition).
     w = Window.partitionBy("__pid__").orderBy("__mid__")
@@ -296,7 +329,9 @@ def with_prefix_aggs(sdf: DataFrame, specs: dict, order_by: list | None,
     aggregates via a pid-partitioned window, (2) per-partition TOTALS
     (one row per partition) collected and prefix-combined on the
     driver — n_partitions scalars, kilobytes at thousands of
-    partitions — (3) broadcast back and merged into the local scans.
+    partitions — (3) shipped back as a ``local_table`` (an Arrow
+    LocalRelation, no Python worker), broadcast-joined and merged
+    into the local scans.
     Identical results, no data-sized single-partition stage.
     """
     from pyspark.sql import types as T
@@ -333,8 +368,8 @@ def with_prefix_aggs(sdf: DataFrame, specs: dict, order_by: list | None,
         dt = (T.LongType() if kind == "count"
               else sdf.schema[f"__v_{o}__"].dataType)
         fields.append(T.StructField(f"__p_{o}__", dt))
-    pre_df = sdf.sparkSession.createDataFrame(prefix_rows,
-                                              T.StructType(fields))
+    pre_df = local_table(sdf.sparkSession, prefix_rows,
+                         T.StructType(fields))
 
     out = sdf.join(F.broadcast(pre_df), "__pid__")
     for o, (_, kind) in prepared.items():
@@ -469,14 +504,15 @@ def with_prefix_aggs_shifted(sdf: DataFrame, specs: dict, window: int,
         return (T.LongType() if prepared[o][1] == "count"
                 else sdf.schema[f"__v_{o}__"].dataType)
 
-    off_df = sdf.sparkSession.createDataFrame(
+    off_df = local_table(
+        sdf.sparkSession,
         [(int(p), *[v[o] for o in prepared])
          for p, v in offsets.items()],
         T.StructType([T.StructField("__pid__", T.IntegerType())]
                      + [T.StructField(f"__p_{o}__", _dt(o))
                         for o in prepared]))
-    carry_df = sdf.sparkSession.createDataFrame(
-        carry_rows,
+    carry_df = local_table(
+        sdf.sparkSession, carry_rows,
         T.StructType([T.StructField("__pid__", T.IntegerType()),
                       T.StructField("__ern__", T.IntegerType())]
                      + [T.StructField(f"__cv_{o}__", _dt(o))
@@ -522,8 +558,9 @@ def with_last_non_null(sdf: DataFrame, exprs: dict,
 
     Scheme: partition-local ``last(..., ignorenulls)`` windows, plus a
     per-partition "last non-null in this partition" table (one row per
-    partition) prefix-carried on the driver and broadcast back for
-    rows whose partition holds no earlier non-null.
+    partition) prefix-carried on the driver and broadcast back as a
+    ``local_table`` for rows whose partition holds no earlier
+    non-null.
     """
     from pyspark.sql import types as T
 
@@ -557,8 +594,8 @@ def with_last_non_null(sdf: DataFrame, exprs: dict,
     for o in prepared:
         fields.append(T.StructField(
             f"__p_{o}__", sdf.schema[f"__v_{o}__"].dataType))
-    pre_df = sdf.sparkSession.createDataFrame(prefix_rows,
-                                              T.StructType(fields))
+    pre_df = local_table(sdf.sparkSession, prefix_rows,
+                         T.StructType(fields))
 
     out = sdf.join(F.broadcast(pre_df), "__pid__")
     for o in prepared:
@@ -1420,7 +1457,7 @@ def with_interp_neighbors_multi(sdf: DataFrame, values: dict,
     for t in tags:
         schema += [f"__pp_{t}__ LONG", f"__pv_{t}__ DOUBLE",
                    f"__np_{t}__ LONG", f"__nv_{t}__ DOUBLE"]
-    fill = spark.createDataFrame(rows, ", ".join(schema))
+    fill = local_table(spark, rows, ", ".join(schema))
     out = lay.join(F.broadcast(fill), "__pid__")
 
     def glob(local, fill_p, fill_v):

@@ -35,3 +35,128 @@ def test_no_single_partition_window(spark):
     out = with_dense_ordinal(df, order_by=[F.col("id").asc()])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+
+
+# one row per value kind the carry tables can hold; row 2 is all
+# NULL except its double, which is NaN (NULL and NaN share a column)
+_LOCAL_TABLE_SQL = """
+select * from values
+ (1, 10L, cast(null as double), 'a', true, X'0102', date'2020-01-02',
+  timestamp'2021-03-04 21:30:00', timestamp_ntz'2021-03-04 21:30:00',
+  cast('1.000000000000000001' as decimal(38,18)),
+  array(1.0, null, double('NaN')),
+  named_struct('x', 1, 't', timestamp'2020-05-05 01:02:03',
+               'ts', array(timestamp'2020-01-01 00:00:00')),
+  interval '1 02:03:04.5' day to second),
+ (null, null, double('NaN'), null, null, null, null, null, null, null,
+  null, null, null),
+ (3, 30L, 2.5, 'c', false, X'', date'1969-12-31',
+  timestamp'1960-01-01 00:00:00.000001',
+  timestamp_ntz'1960-01-01 00:00:00',
+  cast('-12345678901234567890.123456789012345678' as decimal(38,18)),
+  array(), named_struct('x', null, 't', null, 'ts', null),
+  interval '-0 00:00:01' day to second)
+ as t(i, l, d, s, b, bin, dte, ts, tsn, dec, arr, st, iv)
+"""
+
+
+def _check_local_table(spark):
+    from baloo_spark.plans.ordinal import local_table
+    src = spark.sql(_LOCAL_TABLE_SQL)
+    rows = src.collect()
+    got = local_table(spark, rows, src.schema)
+    want = spark.createDataFrame(rows, src.schema)
+    assert got.schema == want.schema == src.schema
+    assert "LocalTableScan" in \
+        got._jdf.queryExecution().executedPlan().toString()
+    # repr: NaN != NaN under ==, and repr keeps None and nan apart
+    assert repr(got.collect()) == repr(want.collect())
+    empty = local_table(spark, [], src.schema)
+    assert empty.schema == src.schema
+    assert empty.collect() == []
+
+
+def test_local_table_matches_row_list_path(spark):
+    """local_table (the Arrow LocalRelation every driver-built carry
+    table goes through) returns exactly what the row-list
+    createDataFrame returns, for every type and in any driver time
+    zone: collected TIMESTAMP values are naive LOCAL wall-clock
+    datetimes, so a build that handed them to Arrow as-is would read
+    them as UTC (21:30 -> 16:30 under New York)."""
+    import os
+    import time
+    _check_local_table(spark)
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        _check_local_table(spark)
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def test_carry_tables_never_take_the_row_list_path(bl, spark,
+                                                   monkeypatch):
+    """Every driver-built table of the ordinal schemes and the iloc
+    gather goes through local_table: with the row-list
+    createDataFrame (a Python-worker job) made to raise, the ops
+    still match pandas."""
+    import numpy.testing as npt
+    import pandas as pd
+    from pyspark.sql import SparkSession
+
+    from baloo_spark.plans import ordinal
+
+    rng = np.random.RandomState(5)
+    n = 300
+    pdf = pd.DataFrame({
+        "t": rng.permutation(n),
+        "v": np.where(rng.rand(n) < 0.3, np.nan, rng.randn(n)),
+    })
+    df = bl.DataFrame({c: pdf[c].to_numpy() for c in pdf})
+    one = bl.DataFrame({"v": np.array([2.0])})
+    exp = pdf.sort_values("t").reset_index(drop=True)
+    srt = df.sort_values("t")
+
+    real = SparkSession.createDataFrame
+
+    def no_row_lists(self, data, *a, **kw):
+        if isinstance(data, (list, tuple)):
+            raise AssertionError("row-list createDataFrame")
+        return real(self, data, *a, **kw)
+
+    calls = []
+    real_local = ordinal.local_table
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real_local(*a, **kw)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_row_lists)
+    monkeypatch.setattr(ordinal, "local_table", counting)
+
+    def vals(x):
+        return np.asarray(x.to_pandas(), dtype=float).ravel()
+
+    cases = [
+        (lambda: srt["v"].cumsum(), exp["v"].cumsum()),
+        (lambda: srt["v"].shift(3), exp["v"].shift(3)),
+        (lambda: srt["v"].shift(-2), exp["v"].shift(-2)),
+        (lambda: srt["v"].rolling(5).std(), exp["v"].rolling(5).std()),
+        (lambda: srt.ffill()["v"], exp["v"].ffill()),
+        (lambda: srt["v"].interpolate(), exp["v"].interpolate()),
+        (lambda: srt["v"].iloc[[7, 0, 250, 7]],
+         exp["v"].iloc[[7, 0, 250, 7]]),
+        (lambda: srt.iloc[[3, 299, 1]]["v"], exp["v"].iloc[[3, 299, 1]]),
+        (lambda: one.shift(1)["v"], pd.Series([np.nan])),
+    ]
+    for make, want in cases:
+        calls.clear()
+        got = vals(make())
+        assert calls, "no driver table went through local_table"
+        npt.assert_allclose(got, want.to_numpy(dtype=float),
+                            rtol=1e-9, equal_nan=True)
