@@ -1859,7 +1859,7 @@ def _running_totals(spark, sf):
     o2["roll5_med"] = o2["o_totalprice"].rolling(5).median()
     o2["roll5_min"] = o2["o_totalprice"].rolling(5, min_periods=2).min()
     # r9: GLOBAL expanding median — the budgeted single-partition
-    # pandas pass (core/series._Expanding._order_stat), replayed by
+    # pandas pass (core/window.Rolling._pandas_pass), replayed by
     # DuckDB's median() over ROWS UNBOUNDED PRECEDING. Both sides
     # round 2*median: an even-count median of 2-decimal prices is
     # the average of two of them — exactly X.XX5 — and round(.., 2)
@@ -2286,7 +2286,7 @@ def _events_window(spark, sf):
 
     # r8 'time_roll_2h' leg: the time-OFFSET rolling window
     # (Series.rolling('2h') — one prefix pass + one as-of join,
-    # core/series._TimeRolling) over the per-distinct-stamp totals.
+    # core/window._time_roll_multi) over the per-distinct-stamp totals.
     # Pre-aggregating to distinct stamps makes the pandas positional
     # tie rule and DuckDB's RANGE-peers rule coincide, so DuckDB
     # replays it with a RANGE BETWEEN INTERVAL frame (the interval
@@ -2318,7 +2318,7 @@ def _events_window(spark, sf):
         .set_index("ts")
     # r10: the sums AND the new pairwise corr share ONE prefix pass
     # + ONE as-of lookup via the fused engine extension
-    # (_FrameTimeRolling.agg_pairs) — a second pandas-shaped
+    # (core/window.Rolling.agg_pairs) — a second pandas-shaped
     # .corr() call would pay the whole two-pass scheme again (~13
     # scheduling-bound driver jobs at sf0.1, measured). The corr
     # (per-stamp global mean vs the 1-in-20-user sums) rides

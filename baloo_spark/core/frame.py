@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from ..plans.ordinal import ORD_COL, with_dense_ordinal
 from .ordering import order_expr, order_exprs, rev_order_exprs
 from .dtypes import np_dtype_of, spark_type_of
-from .series import _AGG_FNS, _EWM, _IDX, Series, _is_numeric
+from .series import _AGG_FNS, _IDX, Series, _is_numeric
 
 _RESERVED = {ORD_COL, "__pos__", "__pid__", "__mid__"}
 
@@ -2890,11 +2890,12 @@ class DataFrame:
         group, all state local. With NO partition keys the naive plan
         is a single-partition global window; instead sum/count/mean
         COMPOSE from the partition-safe prefix machinery —
-        ``rolling(i) = prefix(i) - prefix(i - window)`` via
-        :func:`~baloo_spark.plans.ordinal.with_prefix_aggs` +
-        :func:`~baloo_spark.plans.ordinal.with_boundary_shift` — so
-        nothing collapses. Global rolling min/max do not decompose
-        into prefixes; pass partition keys for those (ValueError
+        ``rolling(i) = prefix(i) - prefix(i - window)`` through the
+        window engine's fixed-window prefix source
+        (core/window._fixed_source: the prefixes and their window-ago
+        twins from one range layout and one collect) — so nothing
+        collapses. Global rolling min/max do not decompose into
+        prefixes; pass partition keys for those (ValueError
         otherwise, with the alternative named).
         """
         from pyspark.sql import Window
@@ -2920,19 +2921,13 @@ class DataFrame:
                 f"global rolling '{agg}' does not decompose into "
                 f"prefix scans; use partition_by=... (per-group "
                 f"frames) for rolling {agg}")
-        from ..plans.ordinal import with_prefix_aggs_shifted
-        v = F.col(col).cast("double")
-        # r12: prefixes AND their window-ago twins from ONE fused
-        # layout + collect (the two-op composition paid a second
-        # repartitionByRange + checkpoint + collect for the shift)
-        sdf = with_prefix_aggs_shifted(self._sdf,
-                                       {"__ps__": (v, "sum"),
-                                        "__pc__": (F.col(col), "count")},
-                                       window, order_by)
-        rsum = F.col("__ps__") - F.coalesce(F.col("__psw__"), F.lit(0.0))
-        rcnt = F.col("__pc__") - F.coalesce(F.col("__pcw__"), F.lit(0))
-        expr = {"sum": rsum, "count": rcnt,
-                "mean": rsum / rcnt}[agg]
+        from .window import _MOMENTS, _fixed_source
+        sdf, S = _fixed_source(
+            self._sdf, {"__ps__": (F.col(col).cast("double"), "sum"),
+                        "__pc__": (F.col(col), "count")},
+            window, order_by)
+        rcnt = S("__pc__", 0)
+        expr = _MOMENTS[agg][0](S("__ps__"), rcnt, None, 1)
         out = (sdf.withColumn(name, F.when(rcnt >= mp, expr))
                .drop("__ps__", "__pc__", "__psw__", "__pcw__"))
         return DataFrame._make(out, self._index_cols,
@@ -2952,40 +2947,30 @@ class DataFrame:
     def rolling(self, window, min_periods: int | None = None,
                 center: bool = False):
         """Fixed-size windows over EVERY numeric column (pandas
-        ``DataFrame.rolling``). Trailing ``.sum() .mean() .count()
-        .var() .std()`` share ONE prefix-scan pass and ONE
-        boundary-carry shift (the same two jobs a single column
-        costs) — never a global window, never one pass per column.
-        Order statistics (``min max median quantile``) and every
-        ``center=True`` window share one bounded local-carry Arrow
-        pass instead (plans/ordinal.with_rolling_locals). A
+        ``DataFrame.rolling``), on the window engine (core/window.py).
+        Trailing ``.sum() .mean() .count() .var() .std()`` share ONE
+        prefix pass whose prefixes and window-ago twins come from one
+        range layout and one collect — the same jobs a single column
+        costs; never a global window, never one pass per column.
+        Order statistics (``min max median quantile skew kurt sem
+        rank apply``) and every ``center=True`` window share one
+        bounded local-carry Arrow pass instead
+        (plans/ordinal.with_rolling_locals). A
         str/timedelta ``window`` ('2h') rolls a TIME offset over the
         datetime index — every numeric column shares ONE prefix pass
-        and ONE as-of join (core/series._time_roll_multi)."""
-        import datetime as _dt
-        if isinstance(window, str) or isinstance(
-                window, _dt.timedelta) or type(window).__name__ in (
-                "Timedelta",):
-            if center:
-                raise ValueError("offset windows have no center=")
-            if isinstance(window, str):
-                from .datetimes import freq_to_us
-                us = freq_to_us(window)
-            else:
-                us = int(window.total_seconds() * 1_000_000)
-            if us <= 0:
-                raise ValueError(
-                    f"window offset must be positive, got {window!r}")
-            return _FrameTimeRolling(
-                self, us, 1 if min_periods is None else min_periods)
-        return _FrameRolling(self, window, min_periods, center)
+        and ONE as-of join (core/window._time_roll_multi)."""
+        from .window import Rolling
+        return Rolling(self, self._numeric_cols(), window, min_periods,
+                       center)
 
     def expanding(self, min_periods: int = 1):
         """Growing windows over every numeric column (pandas
         ``DataFrame.expanding``): ``.sum() .mean() .count() .min()
-        .max() .var() .std()`` — one shared prefix-scan pass, no
-        shift needed, min/max included (prefix-decomposable here)."""
-        return _FrameRolling(self, None, min_periods)
+        .max() .var() .std() .sem() .skew() .kurt()`` — one shared
+        prefix-scan pass, no shift needed, min/max included
+        (prefix-decomposable here); see core/window.py."""
+        from .window import Rolling
+        return Rolling(self, self._numeric_cols(), None, min_periods)
 
     def ewm(self, com=None, span=None, halflife=None, alpha=None,
             min_periods: int = 0, adjust: bool = True,
@@ -2993,65 +2978,20 @@ class DataFrame:
         """Exponentially weighted windows over every numeric column
         (pandas ``DataFrame.ewm``): ``.mean() .sum() .var() .std()``,
         both ``adjust`` flavors (``sum`` is adjust=True-only — pandas
-        refuses the combination too). ALL columns share ONE range
-        layout and TWO mapInPandas passes
-        (plans/ordinal.with_ewm_stats_multi for adjust=True,
-        with_ewm_noadjust_stats for adjust=False — each column keeps
+        refuses the combination too), and the time-decay ``.mean()``
+        with ``times=``. ALL columns share ONE range layout and TWO
+        mapInPandas passes (core/window.Ewm over
+        plans/ordinal.with_ewm_stats_multi for adjust=True,
+        with_ewm_noadjust_stats for adjust=False,
+        with_ewm_mean_times_multi for time decay — each column keeps
         its own null mask and carry); a per-column loop would pay a
         repartitionByRange + sort + checkpoint EACH. Non-numeric data
         columns are excluded from the result's data columns, like
         :meth:`rolling` (pandas raises DataError instead)."""
-        import math
-        import datetime as _dt
-
-        import pandas as pd
-        timeish = isinstance(halflife, (str, _dt.timedelta,
-                                        pd.Timedelta))
-        if isinstance(times, Series):
-            # the natural pandas spelling ewm(times=df["t"]): a
-            # SAME-FRAME Series resolves to its backing column;
-            # foreign Series -> name the string spelling (same
-            # contract as Series.ewm)
-            nm = times.name
-            if ((times._sdf is self._sdf
-                 or id(times._sdf) in self._lineage)
-                    and isinstance(nm, str)
-                    and nm in self._sdf.columns):
-                times = nm
-            else:
-                raise TypeError(
-                    "ewm(times=...) takes a column NAME (or a Series "
-                    "selected from this same frame); pass "
-                    f"times={nm!r} as a string" if isinstance(nm, str)
-                    else "ewm(times=...) takes a column NAME or a "
-                    "Series selected from this same frame")
-        if times is not None or timeish:
-            # TIME-decay flavor (pandas ewm(times=...)): every
-            # numeric column shares the ONE segmented-anchor scan
-            # (plans/ordinal.with_ewm_mean_times_multi)
-            if halflife is None or any(
-                    v is not None for v in (com, span, alpha)):
-                raise ValueError(
-                    "ewm(times=...) takes halflife (a Timedelta or "
-                    "offset string) and no other decay spelling")
-            if not adjust:
-                raise NotImplementedError(
-                    "ewm(times=..., adjust=False) is not supported "
-                    "(pandas refuses it too)")
-            hl_us = pd.Timedelta(halflife).value / 1000.0
-            return _FrameTimeEwm(self, hl_us, times, min_periods)
-        if sum(v is not None
-               for v in (com, span, halflife, alpha)) != 1:
-            raise ValueError(
-                "pass exactly one of com, span, halflife, alpha")
-        if com is not None:
-            alpha = 1.0 / (1.0 + com)
-        elif span is not None:
-            alpha = 2.0 / (span + 1.0)
-        elif halflife is not None:
-            alpha = 1.0 - math.exp(-math.log(2.0) / halflife)
-        return _FrameEwm(self, float(alpha), min_periods, ignore_na,
-                         adjust=bool(adjust))
+        from .window import Ewm, _times_column
+        return Ewm(self, self._numeric_cols(), com, span, halflife, alpha,
+                   min_periods, adjust, ignore_na,
+                   _times_column(times, self._sdf, self._lineage))
 
     def shift(self, periods: int = 1) -> "DataFrame":
         """All data columns moved by ``periods`` along the logical
@@ -4237,797 +4177,6 @@ class DataFrame:
         return self.to_pandas().to_numpy()
 
 
-class _FrameEwm:
-    """Frame-wide EWM face (see :meth:`DataFrame.ewm`): one fused
-    multi-column decayed-carry scan per stat call."""
-
-    def __init__(self, df: "DataFrame", alpha: float,
-                 min_periods: int, ignore_na: bool,
-                 adjust: bool = True):
-        self._df = df
-        self._alpha = alpha
-        self._mp = min_periods
-        self._ignore_na = ignore_na
-        self._adjust = adjust
-
-    # the Series face's flavor dispatch (same attributes)
-    _scan = _EWM._scan
-
-    def _stat(self, stat: str, bias: bool = False) -> "DataFrame":
-        df = self._df
-        cols = df._numeric_cols()
-        if not cols:
-            raise ValueError("ewm needs at least one numeric column")
-        sdf = df._sdf
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        out, tmp = self._scan(sdf, {c: (c, c) for c in cols}, stat,
-                              order or None, bias)
-        cset = set(cols)
-        sel = [(F.col(tmp % c).alias(c) if c in cset else F.col(c))
-               for c in df._sdf.columns]
-        # non-numeric data columns drop from the result's data set
-        # (mirrors _FrameRolling; pandas raises DataError instead)
-        return DataFrame._make(out.select(*sel), df._index_cols,
-                               cols, df._order)
-
-    def mean(self) -> "DataFrame":
-        return self._stat("mean")
-
-    def sum(self) -> "DataFrame":
-        return self._stat("sum")
-
-    def var(self, bias: bool = False) -> "DataFrame":
-        return self._stat("var", bias=bias)
-
-    def std(self, bias: bool = False) -> "DataFrame":
-        return self._stat("std", bias=bias)
-
-
-class _FrameRolling:
-    """Shared face of DataFrame.rolling (fixed window) and
-    DataFrame.expanding (window=None): every numeric column's
-    statistic composes from the SAME prefix-scan pass (sum, sum²,
-    count are prefix sums) and, for the fixed window, one shared
-    boundary-carry shift — 2 jobs total regardless of column count.
-    pandas min_periods gating: count() on rows present, the rest on
-    non-null observations; expanding min_periods defaults to 1,
-    rolling to the window size."""
-
-    def __init__(self, df: DataFrame, window: int | None,
-                 min_periods: int | None, center: bool = False):
-        if window is not None and window <= 0:
-            raise ValueError(f"window must be positive, got {window}")
-        if center and window is None:
-            raise ValueError("expanding windows have no center=")
-        self._df = df
-        self._window = window
-        self._center = bool(center)
-        if min_periods is None:
-            min_periods = 1 if window is None else window
-        self._mp = min_periods
-
-    def _emit(self, builder, mp: int, need_sq: bool = False,
-              gate_on_rows: bool = False, minmax: str | None = None):
-        from ..plans.ordinal import (ORD_COL, with_boundary_shifts,
-                                     with_prefix_aggs)
-        df = self._df
-        num = df._numeric_cols()
-        sdf = df._sdf
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        specs = {}
-        for c in num:
-            v = F.col(c).cast("double")
-            specs[f"__pc_{c}__"] = (F.col(c), "count")
-            if minmax:
-                specs[f"__pm_{c}__"] = (F.col(c), minmax)
-            else:
-                specs[f"__ps_{c}__"] = (v, "sum")
-                if need_sq:
-                    specs[f"__pq_{c}__"] = (v * v, "sum")
-        if gate_on_rows:
-            specs["__pr__"] = (F.lit(1), "count")
-        out = with_prefix_aggs(sdf, specs, order or None)
-        helpers = list(specs)
-        if self._window is not None:
-            shifts = {o[:-2] + "w__": F.col(o) for o in specs}
-            out = with_boundary_shifts(out, shifts, self._window,
-                                       order_by=order or None)
-            helpers += list(shifts)
-
-            def S(o, zero=0.0):
-                return F.col(o) - F.coalesce(F.col(o[:-2] + "w__"),
-                                             F.lit(zero))
-        else:
-            def S(o, zero=0.0):
-                return F.col(o)
-        exprs = {}
-        for c in num:
-            rcnt = S(f"__pc_{c}__", 0).cast("long")
-            if minmax:
-                stat = F.col(f"__pm_{c}__")
-            else:
-                stat = None
-            rsum = None if minmax else S(f"__ps_{c}__")
-            rsq = S(f"__pq_{c}__") if need_sq else None
-            gate = (S("__pr__", 0).cast("long") if gate_on_rows
-                    else rcnt)
-            val = builder(stat if minmax else rsum, rcnt, rsq)
-            exprs[c] = (F.when(gate >= mp, val) if mp > 0
-                        else val).cast("double")
-        nset = set(num)
-        sel = [(exprs[cc].alias(cc) if cc in nset else F.col(cc))
-               for cc in out.columns if cc not in set(helpers)]
-        return DataFrame._make(out.select(*sel), df._index_cols, num,
-                               df._order)
-
-    def sum(self) -> DataFrame:
-        if self._window is None:
-            return self._emit(lambda s, c, q: F.coalesce(s, F.lit(0.0)),
-                              self._mp)
-        if self._center:
-            return self._local("sum")
-        return self._emit(lambda s, c, q: s, self._mp)
-
-    def mean(self) -> DataFrame:
-        if self._center:
-            return self._local("mean")
-        return self._emit(lambda s, c, q: s / c, max(self._mp, 1))
-
-    def count(self) -> DataFrame:
-        if self._center:
-            return self._local("count")
-        return self._emit(lambda s, c, q: c, self._mp,
-                          gate_on_rows=True)
-
-    def agg_pairs(self, specs: dict, ddof: int = 1) -> DataFrame:
-        """ENGINE EXTENSION (r11) — the fixed-window/expanding face
-        of :meth:`_FrameTimeRolling.agg_pairs`: every requested
-        per-column sum/mean/count AND pairwise cov/corr from ONE
-        prefix pass (+ ONE shared boundary shift for the fixed
-        window) — 2 layout jobs total regardless of statistic
-        count, the same fusion the time face ships. Pair statistics
-        use pandas' pairwise-complete masking and the zero-variance
-        NaN pin. No center= face (the trailing decomposition is the
-        point). Completes the agg_pairs family: time/fixed/
-        expanding on the frame, all three grouped frames; the
-        Series face deliberately gates to here (pairs need column
-        NAMES).
-
-        ``specs``: {out_name: ('sum'|'mean'|'count', col)
-                    | ('cov'|'corr', xcol, ycol)}."""
-        from ..plans.ordinal import (ORD_COL, with_boundary_shifts,
-                                     with_prefix_aggs)
-        if self._center:
-            raise ValueError("agg_pairs has no center= face")
-        df = self._df
-        sdf = df._sdf
-        num = set(df._numeric_cols())
-        vals, plans = {}, []
-        need_rows = False
-        for name, spec in specs.items():
-            if name in df._index_cols:
-                raise ValueError(
-                    f"output {name!r} collides with an index level")
-            kind = spec[0]
-            if kind in ("sum", "mean", "count"):
-                c = spec[1]
-                df._check_cols([c])
-                v = F.col(c).cast("double")
-                vals.setdefault(f"__ps_c_{c}__", (v, "sum"))
-                vals.setdefault(f"__pc_c_{c}__", (F.col(c), "count"))
-                if kind == "count":
-                    need_rows = True
-                plans.append((name, kind, f"c_{c}"))
-            elif kind in ("cov", "corr"):
-                x, y = spec[1], spec[2]
-                df._check_cols([x, y])
-                t = f"p_{x}_{y}"
-                if f"__pc_{t}x__" not in vals:
-                    both = (F.col(x).isNotNull()
-                            & F.col(y).isNotNull())
-                    mx = F.when(both, F.col(x).cast("double"))
-                    my = F.when(both, F.col(y).cast("double"))
-                    vals[f"__pc_{t}x__"] = (mx, "count")
-                    vals[f"__ps_{t}x__"] = (mx, "sum")
-                    vals[f"__ps_{t}y__"] = (my, "sum")
-                    vals[f"__ps_{t}xy__"] = (mx * my, "sum")
-                    vals[f"__pq_{t}x__"] = (mx * mx, "sum")
-                    vals[f"__pq_{t}y__"] = (my * my, "sum")
-                plans.append((name, kind, t))
-            else:
-                raise ValueError(
-                    f"unknown statistic {kind!r}; pass "
-                    "'sum'/'mean'/'count' or 'cov'/'corr'")
-        if need_rows:
-            vals["__pr__"] = (F.lit(1), "count")
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        out_sdf = with_prefix_aggs(sdf, vals, order or None)
-        helpers = list(vals)
-        if self._window is not None:
-            shifts = {o[:-2] + "w__": F.col(o) for o in vals}
-            out_sdf = with_boundary_shifts(out_sdf, shifts,
-                                           self._window,
-                                           order_by=order or None)
-            helpers += list(shifts)
-
-            def S(o, zero=0.0):
-                return F.col(o) - F.coalesce(
-                    F.col(o[:-2] + "w__"), F.lit(zero))
-        else:
-            def S(o, zero=0.0):
-                return F.col(o)
-        mp = self._mp
-        outs = []
-        for name, kind, tag in plans:
-            if kind in ("sum", "mean", "count"):
-                s = S(f"__ps_{tag}__")
-                c = S(f"__pc_{tag}__", 0).cast("long")
-                gate = (S("__pr__", 0).cast("long")
-                        if kind == "count" else c)
-                if kind == "sum":
-                    e = s
-                elif kind == "mean":
-                    e = s / c
-                else:
-                    e = c.cast("double")
-                e = F.when(gate >= mp, e) if mp > 0 else e
-            else:
-                n = S(f"__pc_{tag}x__", 0).cast("double")
-                sx, sy = S(f"__ps_{tag}x__"), S(f"__ps_{tag}y__")
-                sxy = S(f"__ps_{tag}xy__")
-                if kind == "cov":
-                    e = F.when(n > ddof,
-                               (sxy - sx * sy / n) / (n - ddof))
-                else:
-                    vx = S(f"__pq_{tag}x__") - sx * sx / n
-                    vy = S(f"__pq_{tag}y__") - sy * sy / n
-                    e = F.when((n > 1) & (vx > 0) & (vy > 0),
-                               (sxy - sx * sy / n)
-                               / F.sqrt(vx * vy))
-                e = F.when(n >= max(mp, 1), e)
-            outs.append(e.cast("double").alias(name))
-        keep = [cc for cc in out_sdf.columns
-                if cc not in helpers and cc not in num
-                and cc not in specs]
-        kept_data = [c for c in df._data_cols if c not in num]
-        return DataFrame._make(out_sdf.select(*keep, *outs),
-                               df._index_cols,
-                               kept_data + list(specs), df._order)
-
-    def _local(self, stat: str, **kw) -> DataFrame:
-        """Fixed-window order statistics (min/max/median/quantile)
-        do not decompose into prefix scans; every numeric column
-        rides ONE plans/ordinal.with_rolling_locals pass — one
-        frozen range layout, a bounded carry, pandas' C kernels."""
-        from ..plans.ordinal import ORD_COL, with_rolling_locals
-        df = self._df
-        num = df._numeric_cols()
-        sdf = df._sdf
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        outs = {f"__ro_{c}__": F.col(c) for c in num}
-        out = with_rolling_locals(sdf, outs, self._window, stat,
-                                  order or None, self._mp,
-                                  center=self._center, **kw)
-        nset = set(num)
-        sel = [(F.col(f"__ro_{cc}__").alias(cc) if cc in nset
-                else F.col(cc)) for cc in sdf.columns]
-        return DataFrame._make(out.select(*sel), df._index_cols, num,
-                               df._order)
-
-    def min(self) -> DataFrame:
-        if self._window is not None:
-            return self._local("min")
-        return self._emit(lambda s, c, q: s, max(self._mp, 1),
-                          minmax="min")
-
-    def max(self) -> DataFrame:
-        if self._window is not None:
-            return self._local("max")
-        return self._emit(lambda s, c, q: s, max(self._mp, 1),
-                          minmax="max")
-
-    def median(self, max_rows: int | None = None) -> DataFrame:
-        if self._window is None:
-            return self._expanding_order_stat("median", max_rows)
-        return self._local("median")
-
-    def quantile(self, q: float = 0.5,
-                 interpolation: str = "linear",
-                 max_rows: int | None = None) -> DataFrame:
-        if self._window is None:
-            return self._expanding_order_stat(
-                "quantile", max_rows, q=q,
-                interpolation=interpolation)
-        return self._local("quantile", q=q, interpolation=interpolation)
-
-    def _expanding_order_stat(self, stat: str, max_rows: int | None,
-                              **kw) -> DataFrame:
-        """Global expanding order statistic over every numeric
-        column: row i needs its FULL history (no bounded carry), so
-        this is the same EXPLICITLY BUDGETED single-partition pandas
-        pass as the Series face (core/series.py
-        _Expanding._order_stat) — one count job gates the budget,
-        one ordered partition runs pandas' expanding C kernel once
-        for ALL columns."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        from .series import _EXPANDING_STAT_MAX_ROWS
-        df = self._df
-        sdf = df._sdf
-        num = df._numeric_cols()
-        budget = (int(max_rows) if max_rows is not None
-                  else _EXPANDING_STAT_MAX_ROWS)
-        n = sdf.count()
-        if n * max(len(num), 1) > budget:
-            raise ValueError(
-                f"global expanding {stat} needs the full history "
-                f"per row (no bounded carry exists), so this face "
-                f"is a budgeted single-partition pandas pass: "
-                f"{n} rows x {len(num)} columns exceed "
-                f"max_rows={budget}. Raise max_rows=, use a fixed "
-                f"rolling window, or "
-                f"groupby(...).expanding().{stat}()")
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        lay = sdf.repartition(1)
-        if order:
-            lay = lay.sortWithinPartitions(*order)
-        mp = self._mp
-        nset = set(num)
-        out_schema = T.StructType([
-            T.StructField(f.name, T.DoubleType() if f.name in nset
-                          else f.dataType, True)
-            for f in sdf.schema.fields])
-
-        def gen(batches):
-            chunks = [b for b in batches if len(b)]
-            if not chunks:
-                return
-            allb = pd.concat(chunks, ignore_index=True)
-            exp = getattr(allb[num].astype("float64").expanding(mp),
-                          stat)(**kw)
-            allb[num] = exp.to_numpy()
-            yield allb
-
-        out = lay.mapInPandas(gen, out_schema)
-        return DataFrame._make(out, df._index_cols, num, df._order)
-
-    def var(self, ddof: int = 1) -> DataFrame:
-        if self._center and self._window is not None:
-            return self._local("var", ddof=ddof)
-
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, num / (c - ddof))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def std(self, ddof: int = 1) -> DataFrame:
-        if self._center and self._window is not None:
-            return self._local("std", ddof=ddof)
-
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, F.sqrt(num / (c - ddof)))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def sem(self, ddof: int = 1) -> DataFrame:
-        """r10: pandas' window sem = SAMPLE-std / sqrt(n - ddof)
-        (the numerator stays ddof=1 regardless — probed); rides the
-        shared prefix pass on both the rolling and expanding
-        faces. At n == ddof pandas divides a finite sample std by
-        sqrt(0): +inf when the window varies, NaN when constant
-        (r11 fix — old gate c > ddof suppressed the inf row)."""
-        if self._center and self._window is not None:
-            return self._local("sem", ddof=ddof)
-
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return (F.when((c > 1) & (c > ddof),
-                           F.sqrt(num / (c - 1)) / F.sqrt(c - ddof))
-                     .when((c > 1) & (c == ddof) & (num > 0),
-                           F.lit(float("inf"))))
-        return self._emit(build, max(self._mp, 2), need_sq=True)
-
-    def skew(self, max_rows: int | None = None) -> DataFrame:
-        if self._window is None:
-            return self._expanding_order_stat("skew", max_rows)
-        return self._local("skew")
-
-    def kurt(self, max_rows: int | None = None) -> DataFrame:
-        if self._window is None:
-            return self._expanding_order_stat("kurt", max_rows)
-        return self._local("kurt")
-
-    kurtosis = kurt
-
-    def rank(self, method: str = "average", pct: bool = False,
-             max_rows: int | None = None) -> DataFrame:
-        if self._window is None:
-            return self._expanding_order_stat("rank", max_rows,
-                                              method=method, pct=pct)
-        if self._center:
-            # shifted trailing rank + carried RAW rank per tail row,
-            # min_periods-gated on the TRUNCATED window's valid
-            # count and pct-renormalized by it (r11 fix — see the
-            # Series face / _center_rank_tail). Per-column tails +
-            # validity fetched in two bounded jobs (≤ w rows,
-            # skipped when mp ≥ w — covers the default mp = window,
-            # where every truncated row is NaN).
-            from .series import _center_rank_tail, _tail_fill_expr
-            h2 = (self._window - 1) // 2
-            base = _FrameRolling(self._df, self._window, self._mp,
-                                 center=False).rank(method=method,
-                                                    pct=pct)
-            if not h2:
-                return base
-            shifted = base.shift(-h2)
-            from ..plans.ordinal import POS_COL
-            n = len(self._df)
-            w, mp = self._window, self._mp
-            zone_lo = max(0, n - h2)
-            if not n or mp > w - 1:
-                col_vals = {c: [None] * (n - zone_lo)
-                            for c in shifted._data_cols}
-            else:
-                src_tail = self._df.tail(min(w, n)).to_pandas()
-                tails = base.tail(1).to_pandas().iloc[0].to_dict()
-                col_vals = {}
-                for c in shifted._data_cols:
-                    valid = src_tail[c].notna().to_numpy()
-                    tv = tails.get(c)
-                    raw = (None if tv is None or tv != tv
-                           else (round(float(tv) * int(valid.sum())
-                                       * 2) / 2 if pct
-                                 else float(tv)))
-                    col_vals[c] = _center_rank_tail(
-                        n, w, mp, valid, raw, pct)
-            sdf = shifted._ordered_sdf()
-            for c in shifted._data_cols:
-                fill = _tail_fill_expr(col_vals[c], zone_lo)
-                sdf = sdf.withColumn(
-                    c, F.when(F.col(POS_COL) >= F.lit(zone_lo),
-                              fill).otherwise(F.col(c)))
-            return DataFrame._make(sdf, shifted._index_cols,
-                                   shifted._data_cols,
-                                   [(POS_COL, True)])
-        return self._local("rank", method=method, pct=pct)
-
-    def apply(self, func, raw: bool = False,
-              max_rows: int | None = None) -> DataFrame:
-        if self._window is None:
-            return self._expanding_order_stat("apply", max_rows,
-                                              func=func, raw=raw)
-        return self._local("apply", func=func, raw=raw)
-
-
-class _FrameTimeEwm:
-    """Frame face of the time-decay EWM mean: every numeric column
-    shares ONE segmented-anchor scan
-    (plans/ordinal.with_ewm_mean_times_multi) — the same layout and
-    two passes a single column costs."""
-
-    def __init__(self, df: DataFrame, halflife_us: float, times,
-                 min_periods: int):
-        self._df = df
-        self._us = float(halflife_us)
-        self._times = times
-        self._mp = min_periods
-
-    def mean(self) -> DataFrame:
-        from ..plans.ordinal import (ORD_COL,
-                                     with_ewm_mean_times_multi)
-        from .series import _dt_index_col
-        df = self._df
-        sdf = df._sdf
-        times = self._times
-        if times is None or times is True:
-            times = _dt_index_col(df._index_cols, sdf)
-            if times is None:
-                raise TypeError(
-                    "ewm(times=...) needs a times column name or a "
-                    "datetime index level")
-        elif times not in sdf.columns:
-            raise KeyError(times)
-        num = [c for c in df._numeric_cols() if c != times]
-        # ROW order, not times order — pandas' decay deltas follow
-        # row sequence (see the Series face in core/series.py)
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        out = with_ewm_mean_times_multi(
-            sdf, {c: F.col(c) for c in num}, times, self._us,
-            order, self._mp)
-        nset = set(num)
-        sel = [(F.col(f"__ewmt_{cc}__").alias(cc) if cc in nset
-                else F.col(cc)) for cc in sdf.columns]
-        return DataFrame._make(out.select(*sel), df._index_cols,
-                               num, df._order)
-
-
-class _FrameTimeRolling:
-    """Frame face of the time-offset rolling window: every numeric
-    column shares ONE prefix pass and ONE as-of join
-    (core/series._time_roll_multi) — the same two jobs a single
-    column costs. See :class:`baloo_spark.core.series._TimeRolling`
-    for the semantics (pandas closed='right' with the positional
-    duplicate-stamp rule)."""
-
-    def __init__(self, df: DataFrame, window_us: int,
-                 min_periods: int):
-        self._df = df
-        self._us = int(window_us)
-        self._mp = min_periods
-
-    def _emit(self, builder, mp: int, need_sq: bool = False,
-              gate_on_rows: bool = False) -> DataFrame:
-        from ..plans.ordinal import ORD_COL
-        from .series import _dt_index_col, _time_roll_multi
-        df = self._df
-        sdf = df._sdf
-        tcol = _dt_index_col(df._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(df._index_cols)!r}")
-        num = df._numeric_cols()
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        j, exprs, helpers = _time_roll_multi(
-            sdf, tcol, order, {c: F.col(c) for c in num}, self._us,
-            builder, mp, need_sq, gate_on_rows)
-        nset = set(num)
-        sel = [(exprs[cc].alias(cc) if cc in nset else F.col(cc))
-               for cc in sdf.columns]
-        return DataFrame._make(j.select(*sel), df._index_cols, num,
-                               df._order)
-
-    def sum(self) -> DataFrame:
-        return self._emit(lambda s, c, q: s, self._mp)
-
-    def mean(self) -> DataFrame:
-        return self._emit(lambda s, c, q: s / c, max(self._mp, 1))
-
-    def count(self) -> DataFrame:
-        return self._emit(lambda s, c, q: c, self._mp,
-                          gate_on_rows=True)
-
-    def var(self, ddof: int = 1) -> DataFrame:
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, num / (c - ddof))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def std(self, ddof: int = 1) -> DataFrame:
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, F.sqrt(num / (c - ddof)))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def agg_pairs(self, specs: dict, ddof: int = 1) -> DataFrame:
-        """ENGINE EXTENSION (no pandas equivalent): every requested
-        statistic — per-column sum/mean/count AND pairwise cov/corr
-        — in ONE shared prefix pass + ONE as-of lookup. pandas (and
-        this engine's pandas-shaped faces) pay one full two-pass
-        scheme per call; at small inputs each call is
-        driver-job-latency-bound (~13 scheduling jobs measured at
-        sf0.1), and at scale each is a full extra scan — fusing is
-        the Spark-native shape.
-
-        ``specs``: {out_name: ('sum'|'mean'|'count', col)
-                    | ('cov'|'corr', xcol, ycol)}.
-        Result: the datetime index plus one column per spec, source
-        row order kept. Pair stats use pandas' pairwise-complete
-        masking and the same zero-variance NaN pin as
-        :meth:`Series.rolling(...).corr`."""
-        from ..plans.ordinal import ORD_COL
-        from .series import _dt_index_col, _time_roll_multi
-        df = self._df
-        sdf = df._sdf
-        tcol = _dt_index_col(df._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(df._index_cols)!r}")
-        vals, plans = {}, []
-        for out, spec in specs.items():
-            if out in df._index_cols:
-                raise ValueError(
-                    f"output {out!r} collides with an index level")
-            kind = spec[0]
-            if kind in ("sum", "mean", "count"):
-                c = spec[1]
-                df._check_cols([c])
-                vals.setdefault(f"c_{c}", F.col(c))
-                plans.append((out, kind, f"c_{c}"))
-            elif kind in ("cov", "corr"):
-                x, y = spec[1], spec[2]
-                df._check_cols([x, y])
-                ptag = f"p_{x}_{y}"
-                if f"{ptag}x" not in vals:
-                    a, b = F.col(x), F.col(y)
-                    both = a.isNotNull() & b.isNotNull()
-                    vals[f"{ptag}x"] = F.when(both, a.cast("double"))
-                    vals[f"{ptag}y"] = F.when(both, b.cast("double"))
-                    vals[f"{ptag}xy"] = (vals[f"{ptag}x"]
-                                         * vals[f"{ptag}y"])
-                plans.append((out, kind, ptag))
-            else:
-                raise ValueError(
-                    f"unknown statistic {kind!r}; pass "
-                    "'sum'/'mean'/'count' or 'cov'/'corr'")
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        j, _, helpers = _time_roll_multi(
-            sdf, tcol, order, vals, self._us,
-            lambda s, c, q: s, 0, True, False)
-
-        def D(k, zero=0.0):
-            return F.col(k) - F.coalesce(F.col(f"{k}_right"),
-                                         F.lit(zero))
-
-        mp = self._mp
-        outs = []
-        for out, kind, tag in plans:
-            if kind in ("sum", "mean", "count"):
-                s = D(f"__ps_{tag}__")
-                c = D(f"__pc_{tag}__", 0).cast("long")
-                gate = (D("__pr__", 0) if kind == "count" else c)
-                if kind == "sum":
-                    e = s
-                elif kind == "mean":
-                    e = s / c
-                else:
-                    e = c
-                e = F.when(gate >= mp if mp > 0 else F.lit(True), e)
-            else:
-                n = D(f"__pc_{tag}x__", 0).cast("double")
-                sx = D(f"__ps_{tag}x__")
-                sy = D(f"__ps_{tag}y__")
-                sxy = D(f"__ps_{tag}xy__")
-                if kind == "cov":
-                    e = F.when(n > ddof,
-                               (sxy - sx * sy / n) / (n - ddof))
-                else:
-                    vx = D(f"__pq_{tag}x__") - sx * sx / n
-                    vy = D(f"__pq_{tag}y__") - sy * sy / n
-                    e = F.when((n > 1) & (vx > 0) & (vy > 0),
-                               (sxy - sx * sy / n)
-                               / F.sqrt(vx * vy))
-                e = F.when(n >= max(mp, 1), e)
-            outs.append(e.cast("double").alias(out))
-        keep = [c for c in j.columns
-                if c not in helpers
-                and (c in df._index_cols
-                     or c in [o for o, _ in (df._order or [])])
-                and c not in specs]
-        return DataFrame._make(j.select(*keep, *outs),
-                               df._index_cols, list(specs),
-                               df._order)
-
-    def sem(self, ddof: int = 1) -> DataFrame:
-        """pandas' window sem = sample-std / sqrt(n - ddof) (the
-        numerator stays ddof=1 — see the Series face), so it rides
-        the shared prefix pass, no budget. n == ddof boundary:
-        +inf when the window varies, NaN when constant (r11)."""
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return (F.when((c > 1) & (c > ddof),
-                           F.sqrt(num / (c - 1)) / F.sqrt(c - ddof))
-                     .when((c > 1) & (c == ddof) & (num > 0),
-                           F.lit(float("inf"))))
-        return self._emit(build, max(self._mp, 2), need_sq=True)
-
-    def min(self, max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("min", max_rows)
-
-    def max(self, max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("max", max_rows)
-
-    def median(self, max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("median", max_rows)
-
-    def quantile(self, q: float = 0.5,
-                 interpolation: str = "linear",
-                 max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("quantile", max_rows, q=q,
-                                interpolation=interpolation)
-
-    def rank(self, method: str = "average", ascending: bool = True,
-             pct: bool = False,
-             max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("rank", max_rows, method=method,
-                                ascending=ascending, pct=pct)
-
-    def skew(self, max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("skew", max_rows)
-
-    def kurt(self, max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("kurt", max_rows)
-
-    kurtosis = kurt
-
-    def apply(self, func, raw: bool = False,
-              max_rows: int | None = None) -> DataFrame:
-        return self._order_stat("apply", max_rows, func=func,
-                                raw=raw)
-
-    def _order_stat(self, stat: str, max_rows: int | None,
-                    **kw) -> DataFrame:
-        """Time-window order statistics over every numeric column —
-        the same EXPLICITLY BUDGETED single-partition pandas pass as
-        the Series face (core/series._TimeRolling._order_stat), one
-        kernel call shared across all columns."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        from .series import _EXPANDING_STAT_MAX_ROWS, _dt_index_col
-        df = self._df
-        sdf = df._sdf
-        tcol = _dt_index_col(df._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(df._index_cols)!r}")
-        num = [c for c in df._numeric_cols() if c != tcol]
-        budget = (int(max_rows) if max_rows is not None
-                  else _EXPANDING_STAT_MAX_ROWS)
-        n = sdf.count()
-        if n * max(len(num), 1) > budget:
-            raise ValueError(
-                f"time-offset rolling {stat} does not decompose "
-                f"into prefix + as-of, so this face is a budgeted "
-                f"single-partition pandas pass: {n} rows x "
-                f"{len(num)} columns exceed max_rows={budget}. "
-                f"Raise max_rows=, use "
-                f"groupby(...).rolling('2h').{stat}() or resample")
-        order = order_exprs(df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        lay = sdf.repartition(1).sortWithinPartitions(*order)
-        mp = max(self._mp, 1)
-        us = self._us
-        nset = set(num)
-        out_schema = T.StructType([
-            T.StructField(f.name, T.DoubleType() if f.name in nset
-                          else f.dataType, True)
-            for f in sdf.schema.fields])
-
-        def gen(batches):
-            chunks = [b for b in batches if len(b)]
-            if not chunks:
-                return
-            allb = pd.concat(chunks, ignore_index=True)
-            sub = pd.DataFrame(
-                allb[num].astype("float64").to_numpy(),
-                index=pd.DatetimeIndex(pd.to_datetime(allb[tcol])),
-                columns=num)
-            res = getattr(
-                sub.rolling(pd.Timedelta(us, unit="us"),
-                            min_periods=mp), stat)(**kw)
-            allb[num] = res.to_numpy()
-            yield allb
-
-        out = lay.mapInPandas(gen, out_schema)
-        return DataFrame._make(out, df._index_cols, num, df._order)
-
-
 class _Resampler:
     """Time-bucket aggregation face (see :meth:`DataFrame.resample`).
     ``.sum/mean/count/min/max/var/std`` aggregate every numeric
@@ -6019,70 +5168,3 @@ class _FrameILoc:
                 raise TypeError(
                     f"unsupported iloc row key: {type(rows)}")
         _finish_cond_set(df, work, sdf, cond, helpers, cols)
-
-
-def _bind_positional(pairs):
-    """Column-bind (name, Series) outputs POSITIONALLY — fresh
-    dense positions on each output's own order, joined on position.
-    Window outputs of one frame share source row order by
-    construction; binding by index label (the previous shape)
-    silently mis-aligned and deduped on duplicate-label indexes
-    (probe r10)."""
-    from ..plans.ordinal import POS_COL
-    if not pairs:
-        raise ValueError("no results")       # pandas' empty-agg error
-    if len({str(n) for n, _ in pairs}) < len(pairs):
-        raise ValueError(
-            "duplicate output names in .agg; engine columns are "
-            "uniquely named — use a dict to alias each statistic")
-    name0, s0 = pairs[0]
-    out, _ = s0._ordered_sdf(str(name0))
-    for name, sr in pairs[1:]:
-        r, _ = sr._ordered_sdf("__wa_tmp__")
-        out = out.join(
-            r.select(POS_COL, F.col("__wa_tmp__").alias(str(name))),
-            POS_COL, "left")
-    idx = [c for c in s0._index_cols if c in out.columns]
-    return DataFrame._make(out, idx, [str(n) for n, _ in pairs],
-                           [(POS_COL, True)])
-
-
-def _frame_window_agg(self, func):
-    """pandas ``.agg`` on a FRAME window object (probe wave 20
-    found the face missing): a str delegates to the named statistic
-    over every column; a dict {col: stat} column-binds one
-    statistic per named column (str values only — list values would
-    need MultiIndex columns); a list of statistics emits pandas'
-    (col, stat) MultiIndex columns flattened to their string
-    spelling ``str((col, stat))``, col-major, the same convention
-    as the multi-column unstack. Each DISTINCT statistic is one
-    frame-wide pass (the convenience face, not a fused plan); the
-    bind is positional (:func:`_bind_positional`)."""
-    if isinstance(func, str):
-        return getattr(self, func)()
-    if isinstance(func, dict):
-        items = list(func.items())
-        for c, st in items:
-            if not isinstance(st, str):
-                raise ValueError(
-                    "frame window .agg dict values must be single "
-                    "statistic names (a list per column would need "
-                    "MultiIndex columns); got "
-                    f"{st!r} for {c!r}")
-        stats = {}
-        for _, st in items:
-            if st not in stats:
-                stats[st] = getattr(self, st)()
-        return _bind_positional(
-            [(c, stats[st][c]) for c, st in items])
-    results = [(st, getattr(self, st)()) for st in func]
-    cols = list(results[0][1]._data_cols)
-    return _bind_positional(
-        [(str((c, st)), res[c])
-         for c in cols for st, res in results])
-
-
-_FrameRolling.agg = _FrameRolling.aggregate = _frame_window_agg
-_FrameEwm.agg = _FrameEwm.aggregate = _frame_window_agg
-_FrameTimeEwm.agg = _FrameTimeEwm.aggregate = _frame_window_agg
-_FrameTimeRolling.agg = _FrameTimeRolling.aggregate = _frame_window_agg

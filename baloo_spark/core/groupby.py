@@ -1243,27 +1243,19 @@ class _GroupRolling:
 
     def _jvm_expr(self, name: str, c: str, w):
         """One statistic of one column over the shared Window spec —
-        the building block of both the single-stat faces and the
-        fused ``.agg``."""
+        the building block of the single-stat faces, the fused
+        ``.agg`` and ``agg_pairs``. The moment family is the window
+        engine's (core/window._MOMENTS) over windowed sums."""
+        from .window import _MOMENTS, _gated
         v = F.col(c).cast("double")
-        if name == "count":
-            base = F.count(F.col(c)).over(w).cast("double")
-            gate = F.count(F.lit(1)).over(w)
-        elif name in ("var", "std"):
-            n = F.count(F.col(c)).over(w)
-            s = F.sum(v).over(w)
-            q = F.sum(v * v).over(w)
-            num = F.greatest(q - s * s / n, F.lit(0.0))
-            base = F.when(n > 1, num / (n - 1))
-            if name == "std":
-                base = F.sqrt(base)
-            gate = n
-        else:
-            base = _AGG_FNS[name](v).over(w)
-            gate = F.count(F.col(c)).over(w)
-        mp = max(self._mp, 2) if name in ("var", "std") else self._mp
-        return (F.when(gate >= mp, base) if mp > 0
-                else base).cast("double")
+        n = F.count(F.col(c)).over(w)
+        if name in _MOMENTS:
+            build, floor, gate = _MOMENTS[name]
+            base = build(F.sum(v).over(w), n, F.sum(v * v).over(w), 1)
+            rows = F.count(F.lit(1)).over(w) if gate == "rows" else n
+            return _gated(base, rows, floor(self._mp, 1)).cast("double")
+        return _gated(_AGG_FNS[name](v).over(w), n,
+                      self._mp).cast("double")
 
     def _agg(self, name: str):
         from .frame import DataFrame
@@ -1545,8 +1537,8 @@ class _GroupRolling:
                                kept_data + names, gb._df._order)
 
     def agg_pairs(self, specs: dict, ddof: int = 1):
-        """ENGINE EXTENSION — the GROUPED face of
-        :meth:`_FrameTimeRolling.agg_pairs` (r11): every requested
+        """ENGINE EXTENSION — the GROUPED face of the window engine's
+        ``agg_pairs`` (core/window.Rolling.agg_pairs, r11): every requested
         per-column sum/mean/count AND pairwise cov/corr over the
         per-group window in ONE select over ONE shared Window spec.
         A single Window node = one group-key shuffle + one sort
@@ -1561,51 +1553,32 @@ class _GroupRolling:
         ``specs``: {out_name: ('sum'|'mean'|'count', col)
                     | ('cov'|'corr', xcol, ycol)}."""
         from .frame import DataFrame
+        from .window import _gated, _pair_expr
         gb = self._gb
         df = gb._df
         sdf = df._sdf
         if self._center:
             raise ValueError("agg_pairs has no center= face")
         w = self._wspec()
-        mp = self._mp
-        used, outs = set(), []
+        outs = []
         for out, spec in specs.items():
             kind = spec[0]
             if kind in ("sum", "mean", "count"):
-                c = spec[1]
-                df._check_cols([c])
-                used.add(c)
-                v = F.col(c).cast("double")
-                cnt = F.count(F.col(c)).over(w)
-                if kind == "sum":
-                    e, gate = F.sum(v).over(w), cnt
-                elif kind == "mean":
-                    e, gate = F.sum(v).over(w) / cnt, cnt
-                else:
-                    e, gate = (cnt.cast("double"),
-                               F.count(F.lit(1)).over(w))
-                e = F.when(gate >= mp, e) if mp > 0 else e
+                df._check_cols([spec[1]])
+                e = self._jvm_expr(kind, spec[1], w)
             elif kind in ("cov", "corr"):
                 x, y = spec[1], spec[2]
                 df._check_cols([x, y])
-                used.update((x, y))
                 both = (F.col(x).isNotNull()
                         & F.col(y).isNotNull())
                 mx = F.when(both, F.col(x).cast("double"))
                 my = F.when(both, F.col(y).cast("double"))
                 n = F.count(mx).over(w).cast("double")
-                sx, sy = F.sum(mx).over(w), F.sum(my).over(w)
-                sxy = F.sum(mx * my).over(w)
-                if kind == "cov":
-                    e = F.when(n > ddof,
-                               (sxy - sx * sy / n) / (n - ddof))
-                else:
-                    vx = F.sum(mx * mx).over(w) - sx * sx / n
-                    vy = F.sum(my * my).over(w) - sy * sy / n
-                    e = F.when((n > 1) & (vx > 0) & (vy > 0),
-                               (sxy - sx * sy / n)
-                               / F.sqrt(vx * vy))
-                e = F.when(n >= max(mp, 1), e)
+                e = _pair_expr(
+                    n, F.sum(mx).over(w), F.sum(my).over(w),
+                    F.sum(mx * my).over(w), F.sum(mx * mx).over(w),
+                    F.sum(my * my).over(w), kind, ddof)
+                e = _gated(e, n, max(self._mp, 1))
             else:
                 raise ValueError(
                     f"unknown statistic {kind!r}; pass "

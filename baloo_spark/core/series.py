@@ -27,9 +27,11 @@ _VAL = "__val__"
 _IDX = "__index__"
 # isin value-list budget: literal IN-set below, broadcast-join above
 _ISIN_LITERAL_MAX = 1024
-# budget for the global expanding order-stat face (a single-
-# partition pandas pass: ~80 MB of doubles at the default)
-_EXPANDING_STAT_MAX_ROWS = 10_000_000
+# small-side gate of the time-offset rolling window's as-of lookup
+# (core/window._time_roll_multi reads it at call time): below this many
+# rows the per-distinct-stamp prefix table broadcasts (a few doubles
+# per stamp — ~10 MB at the cap)
+_TR_BROADCAST_MAX_ROWS = 200_000
 
 # aggregations: reference casts numeric aggs to f64 (weld_aggs.py:3,42-49)
 _AGG_FNS = {
@@ -2337,117 +2339,62 @@ class Series:
     def rolling(self, window, min_periods: int | None = None,
                 center: bool = False):
         """Fixed-size window aggregations along the logical order
-        (pandas ``Series.rolling``). Trailing ``.sum() .mean()
-        .count() .var() .std()`` compose from partition-safe prefix
-        scans (``rolling(i) = prefix(i) - prefix(i - window)``) plus
-        ONE shared boundary-carry shift — never a global
-        single-partition window. Order statistics (``min max median
-        quantile skew kurt sem rank apply``) and every ``center=True``
-        window ride the bounded local-carry pass
-        (plans/ordinal.with_rolling_locals): one frozen layout, a
-        two-sided donor carry, pandas' C kernels in one Arrow pass.
+        (pandas ``Series.rolling``) — the one-column face of the window
+        engine (core/window.py). Trailing ``.sum() .mean() .count()
+        .var() .std()`` compose from partition-safe prefix scans
+        (``rolling(i) = prefix(i) - prefix(i - window)``): the prefixes
+        and their window-ago twins come from ONE range layout and ONE
+        collect — never a global single-partition window. Order
+        statistics (``min max median quantile skew kurt sem rank
+        apply``) and every ``center=True`` window ride the bounded
+        local-carry pass (plans/ordinal.with_rolling_locals): one
+        frozen layout, a two-sided donor carry, pandas' C kernels in
+        one Arrow pass.
         A str/timedelta ``window`` ('2h', '30min') rolls a TIME
         offset over the datetime index instead — one prefix pass +
-        one as-of join (see :class:`_TimeRolling`)."""
-        import datetime as _dt
-        if isinstance(window, str) or isinstance(
-                window, _dt.timedelta) or type(window).__name__ in (
-                "Timedelta",):
-            if center:
-                raise ValueError("offset windows have no center=")
-            if isinstance(window, str):
-                from .datetimes import freq_to_us
-                us = freq_to_us(window)
-            else:
-                us = int(window.total_seconds() * 1_000_000)
-            if us <= 0:
-                raise ValueError(f"window offset must be positive, "
-                                 f"got {window!r}")
-            return _TimeRolling(self, us,
-                                1 if min_periods is None
-                                else min_periods)
-        return _Rolling(self, window, min_periods, center)
+        one as-of join (core/window._time_roll_multi)."""
+        from .window import Rolling, SeriesWindow
+        return SeriesWindow(self, Rolling, window=window,
+                            min_periods=min_periods, center=center)
 
     def ewm(self, com=None, span=None, halflife=None, alpha=None,
             min_periods: int = 0, adjust: bool = True,
             ignore_na: bool = False, times=None):
         """Exponentially weighted windows (pandas ``Series.ewm``,
-        both ``adjust`` flavors): ``.mean()``. Exactly one of
-        com/span/halflife/alpha selects the decay (pandas
-        conversions: alpha = 1/(1+com) = 2/(span+1) =
-        1-exp(-ln2/halflife)).
+        both ``adjust`` flavors): ``.mean() .sum() .var() .std()
+        .cov() .corr()``. Exactly one of com/span/halflife/alpha
+        selects the decay (pandas conversions: alpha = 1/(1+com) =
+        2/(span+1) = 1-exp(-ln2/halflife)); ``times=`` with a
+        Timedelta halflife selects the time-decay mean.
 
         The EWM recurrence is NOT a prefix sum (its closed form
         overflows r^-t), so it runs as a dedicated two-pass decayed
         carry scan — partition-local pandas C kernels plus an
-        n_partitions driver carry (plans/ordinal.with_ewm_stats_multi
-        for adjust=True's decayed sums; with_ewm_noadjust_stats for
-        the recursive streaming-EMA form, whose carry is the kernel
-        state merged through per-observation affine maps); never a
-        global window, never a per-row Python loop."""
-        import datetime as _dt
-        import pandas as pd
-        timeish_hl = isinstance(
-            halflife, (str, _dt.timedelta, pd.Timedelta))
-        if isinstance(times, Series):
-            # the natural pandas spelling ewm(times=df["t"]): a
-            # SAME-FRAME Series resolves to its backing column (the
-            # stamp values ARE that column, row for row); a foreign
-            # Series would need a positional re-alignment join whose
-            # cost hides badly inside a decay scan — name the string
-            # spelling instead
-            nm = times.name
-            if (times._sdf is self._sdf and isinstance(nm, str)
-                    and nm in self._sdf.columns):
-                times = nm
-            else:
-                raise TypeError(
-                    "ewm(times=...) takes a column NAME (or a Series "
-                    "selected from this same frame); pass "
-                    f"times={nm!r} as a string" if isinstance(nm, str)
-                    else "ewm(times=...) takes a column NAME or a "
-                    "Series selected from this same frame")
-        if times is not None or timeish_hl:
-            # TIME-decay flavor (pandas ewm(times=...)): halflife is
-            # a Timedelta/offset string; weights follow actual stamp
-            # distances (times=None falls back to the datetime index
-            # level). pandas only defines adjust=True mean here.
-            if halflife is None or any(
-                    v is not None for v in (com, span, alpha)):
-                raise ValueError(
-                    "ewm(times=...) takes halflife (a Timedelta or "
-                    "offset string) and no other decay spelling")
-            if not adjust:
-                raise NotImplementedError(
-                    "ewm(times=..., adjust=False) is not supported "
-                    "(pandas refuses it too)")
-            hl_us = pd.Timedelta(halflife).value / 1000.0
-            return _TimeEWM(self, hl_us, times, min_periods)
-        given = sum(v is not None
-                    for v in (com, span, halflife, alpha))
-        if given != 1:
-            raise ValueError(
-                "pass exactly one of com, span, halflife, alpha")
-        import math
-        if alpha is None:
-            if com is not None:
-                alpha = 1.0 / (1.0 + com)
-            elif span is not None:
-                alpha = 2.0 / (span + 1.0)
-            else:
-                alpha = 1.0 - math.exp(-math.log(2.0) / halflife)
-        return _EWM(self, float(alpha), min_periods, ignore_na,
-                    adjust=bool(adjust))
+        n_partitions driver carry (core/window.Ewm over
+        plans/ordinal.with_ewm_stats_multi for adjust=True's decayed
+        sums; with_ewm_noadjust_stats for the recursive streaming-EMA
+        form, whose carry is the kernel state merged through
+        per-observation affine maps); never a global window, never a
+        per-row Python loop."""
+        from .window import Ewm, SeriesWindow, _times_column
+        return SeriesWindow(self, Ewm, com=com, span=span,
+                            halflife=halflife, alpha=alpha,
+                            min_periods=min_periods, adjust=adjust,
+                            ignore_na=ignore_na,
+                            times=_times_column(times, self._sdf))
 
     def expanding(self, min_periods: int = 1):
         """Growing-window aggregations from the first row (pandas
         ``Series.expanding``): ``.sum() .mean() .count() .min()
-        .max() .var() .std()``. Every stat composes from
-        partition-safe prefix scans (plans/ordinal.with_prefix_aggs)
-        — and unlike the fixed rolling window, min/max ARE
-        prefix-decomposable here, so every agg is ONE scan pass with
-        a kilobyte driver carry, never a global window."""
-        return _Expanding(self, min_periods)
+        .max() .var() .std() .sem() .skew() .kurt()``. Every one
+        composes from partition-safe prefix scans
+        (plans/ordinal.with_prefix_aggs) — unlike the fixed rolling
+        window, min/max ARE prefix-decomposable here, so each is ONE
+        scan pass with a kilobyte driver carry, never a global
+        window (core/window.py)."""
+        from .window import Rolling, SeriesWindow
+        return SeriesWindow(self, Rolling, window=None,
+                            min_periods=min_periods)
 
     def rank(self, method: str = "average", ascending: bool = True,
              pct: bool = False) -> "Series":
@@ -3012,1507 +2959,6 @@ class Series:
         return s
 
 
-def _window_agg(self, func):
-    """pandas ``.agg`` on a window object: a str delegates to the
-    named statistic; a list/dict builds a DataFrame column-binding
-    one statistic per output column (each statistic is its own pass
-    — the convenience face, not a fused plan). The bind is
-    POSITIONAL — fresh dense positions on each output's own order
-    (every output of one window shares the source row order by
-    construction); binding by index label, the previous shape,
-    silently mis-aligned and deduped on duplicate-label indexes
-    (probe r10 — the time-rolling face hit it first)."""
-    if isinstance(func, str):
-        return getattr(self, func)()
-    items = (list(func.items()) if isinstance(func, dict)
-             else [(f, f) for f in func])
-    if not items:
-        raise ValueError("no results")       # pandas' empty-agg error
-    if len({str(n) for n, _ in items}) < len(items):
-        raise ValueError(
-            "duplicate output names in .agg; engine columns are "
-            "uniquely named — use a dict to alias each statistic")
-    from ..plans.ordinal import POS_COL
-    from .frame import DataFrame
-    name0, stat0 = items[0]
-    s0 = getattr(self, stat0)()
-    out, _ = s0._ordered_sdf(str(name0))
-    for name, stat in items[1:]:
-        r, _ = getattr(self, stat)()._ordered_sdf("__wa_tmp__")
-        out = out.join(
-            r.select(POS_COL,
-                     F.col("__wa_tmp__").alias(str(name))),
-            POS_COL, "left")
-    idx = [c for c in s0._index_cols if c in out.columns]
-    return DataFrame._make(out, idx, [str(n) for n, _ in items],
-                           [(POS_COL, True)])
-
-
-def _center_rank_tail(n, w, mp, valid_tail, raw, pct):
-    """Per-position carried-tail values for center-rank (r11).
-
-    pandas' center-rank kernel carries the last trailing RAW rank
-    once the source exhausts; each carried row ``i`` is re-gated on
-    the truncated window ``[i + h2 - w + 1, n-1]``'s valid count vs
-    ``min_periods`` (NaN below it — note the even-window origin is
-    one LEFT of the odd form's ``i - h2``), and under ``pct=True``
-    re-normalized by that shrinking count (values may exceed 1.0 —
-    pandas parity). Fuzz-verified 2000/2000 vs pandas in r11 across
-    (n, w, mp, method, pct, NaN density).
-
-    ``valid_tail``: validity flags of the last ``min(w, n)`` source
-    rows. ``raw``: the carried raw (non-pct) trailing rank at
-    ``n-1``, or None/NaN. Returns values (float or None) for
-    positions ``max(0, n - h2) .. n-1``.
-    """
-    h2 = (w - 1) // 2
-    k = len(valid_tail)
-    sfx = np.concatenate(
-        [np.cumsum(np.asarray(valid_tail,
-                              dtype=np.int64)[::-1])[::-1], [0]])
-    raw_nan = raw is None or raw != raw
-    vals = []
-    for i in range(max(0, n - h2), n):
-        lo = max(i + h2 - w + 1, 0)
-        cnt = int(sfx[max(lo - (n - k), 0)])
-        if cnt < mp or cnt == 0 or raw_nan:
-            vals.append(None)
-        else:
-            vals.append(raw / cnt if pct else raw)
-    return vals
-
-
-def _tail_fill_expr(vals, zone_lo):
-    """Column expression filling tail positions ``zone_lo + j`` with
-    ``vals[j]`` — a single literal when the values are uniform, an
-    array-literal ``element_at`` gather otherwise (≤ h2 entries,
-    bounded by the window size)."""
-    from ..plans.ordinal import POS_COL
-    if len(set(vals)) <= 1:
-        v0 = vals[0] if vals else None
-        return (F.lit(None).cast("double") if v0 is None
-                else F.lit(float(v0)))
-    arr = F.array(*[F.lit(None).cast("double") if v is None
-                    else F.lit(float(v)) for v in vals])
-    return F.element_at(
-        arr, (F.col(POS_COL) - F.lit(zone_lo) + 1).cast("int"))
-
-
-class _Rolling:
-    """Fixed-size trailing-window aggregations (see
-    :meth:`Series.rolling`). NaN rows occupy window POSITIONS but are
-    skipped by the aggregates, and ``min_periods`` counts non-null
-    rows — pandas semantics (default ``window`` for every agg,
-    count included)."""
-
-    def __init__(self, sr: "Series", window: int,
-                 min_periods: int | None, center: bool = False):
-        if window <= 0:
-            raise ValueError(f"window must be positive, got {window}")
-        self._sr = sr
-        self._window = window
-        self._mp = window if min_periods is None else min_periods
-        self._center = bool(center)
-
-    def _compute(self, need_sq: bool, need_rows: bool):
-        from ..plans.ordinal import ORD_COL, with_prefix_aggs_shifted
-        sr = self._sr
-        sdf = sr._sdf
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        v = sr._colexpr.cast("double")
-        specs = {"__ps__": (v, "sum"), "__pc__": (sr._colexpr, "count")}
-        if need_sq:
-            specs["__pq__"] = (v * v, "sum")
-        if need_rows:
-            specs["__pr__"] = (F.lit(1), "count")
-        # r12: prefixes AND their window-ago twins from ONE fused
-        # layout + collect (the with_prefix_aggs +
-        # with_boundary_shifts composition paid a second
-        # repartitionByRange + checkpoint + collect for the shift)
-        shifts = {f"{o[:-2]}w__": F.col(o) for o in specs}
-        out = with_prefix_aggs_shifted(sdf, specs, self._window,
-                                       order or None)
-        rsum = F.col("__ps__") - F.coalesce(F.col("__psw__"), F.lit(0.0))
-        rcnt = (F.col("__pc__")
-                - F.coalesce(F.col("__pcw__"), F.lit(0))).cast("long")
-        rsq = (F.col("__pq__") - F.coalesce(F.col("__pqw__"), F.lit(0.0))
-               if need_sq else None)
-        rrows = ((F.col("__pr__")
-                  - F.coalesce(F.col("__prw__"), F.lit(0))).cast("long")
-                 if need_rows else None)
-        helpers = list(specs) + list(shifts)
-        return out, rsum, rcnt, rsq, rrows, helpers
-
-    def _emit(self, builder, mp: int, need_sq: bool = False,
-              gate_on_rows: bool = False):
-        out, rsum, rcnt, rsq, rrows, helpers = \
-            self._compute(need_sq, gate_on_rows)
-        # min_periods counts non-null observations — except count(),
-        # which pandas gates on window FULLNESS (rows present)
-        gate = rrows if gate_on_rows else rcnt
-        expr = F.when(gate >= mp if mp > 0 else F.lit(True),
-                      builder(rsum, rcnt, rsq))
-        out = out.withColumn("__roll__", expr.cast("double")) \
-            .drop(*helpers)
-        sr = self._sr
-        return Series._make(out, F.col("__roll__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sr._sdf)
-
-    def sum(self) -> "Series":
-        if self._center:
-            return self._local("sum")
-        return self._emit(lambda s, c, q: s, self._mp)
-
-    def mean(self) -> "Series":
-        if self._center:
-            return self._local("mean")
-        return self._emit(lambda s, c, q: s / c, max(self._mp, 1))
-
-    def count(self) -> "Series":
-        if self._center:
-            return self._local("count")
-        return self._emit(lambda s, c, q: c, self._mp,
-                          gate_on_rows=True)
-
-    def var(self, ddof: int = 1) -> "Series":
-        if self._center:
-            return self._local("var", ddof=ddof)
-
-        def build(s, c, q):
-            # sum-of-squares identity; tiny negative residue from fp
-            # cancellation clamps to 0 (a constant window is var 0)
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, num / (c - ddof))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def std(self, ddof: int = 1) -> "Series":
-        if self._center:
-            return self._local("std", ddof=ddof)
-
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, F.sqrt(num / (c - ddof)))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def _local(self, stat: str, **kw) -> "Series":
-        """Order-statistic / shape stats (min/max/median/quantile/
-        skew/kurt/sem/rank) do not decompose into prefix scans;
-        they ride plans/ordinal.with_rolling_locals — one frozen
-        range layout, a bounded (window-1)-rows-per-partition carry,
-        one Arrow pass over pandas' C rolling kernels."""
-        from ..plans.ordinal import ORD_COL, with_rolling_locals
-        sr = self._sr
-        sdf = sr._sdf
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        out = with_rolling_locals(sdf, {"__roll__": sr._colexpr},
-                                  self._window, stat, order or None,
-                                  self._mp, center=self._center, **kw)
-        return Series._make(out, F.col("__roll__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
-
-    def min(self) -> "Series":
-        return self._local("min")
-
-    def max(self) -> "Series":
-        return self._local("max")
-
-    def median(self) -> "Series":
-        return self._local("median")
-
-    def quantile(self, q: float = 0.5,
-                 interpolation: str = "linear") -> "Series":
-        return self._local("quantile", q=q, interpolation=interpolation)
-
-    def skew(self) -> "Series":
-        return self._local("skew")
-
-    def kurt(self) -> "Series":
-        return self._local("kurt")
-
-    def sem(self, ddof: int = 1) -> "Series":
-        return self._local("sem", ddof=ddof)
-
-    def rank(self, method: str = "average",
-             pct: bool = False) -> "Series":
-        if self._center:
-            # pandas' center "rank" IS the shifted trailing rank:
-            # center only moves the window bounds (output[i] =
-            # trailing_rank[i + h2]); once the source exhausts the
-            # kernel CARRIES its last RAW rank — but each carried
-            # tail row is re-gated on the TRUNCATED window
-            # [i + h2 - w + 1, n-1]'s valid count vs min_periods
-            # (r11 fix — with the default mp = window every
-            # truncated row is NaN), and under pct=True
-            # re-NORMALIZED by that shrinking count (values may
-            # exceed 1.0 — pandas parity). One bounded source-tail
-            # validity fetch (≤ w rows, skipped when mp ≥ w) + one
-            # bounded tail-rank fetch feed the ≤ h2 literals.
-            # Fuzz-verified 2000/2000 vs pandas (r11) across
-            # (n, w, mp, method, pct, NaN density).
-            h2 = (self._window - 1) // 2
-            base = _Rolling(self._sr, self._window, self._mp,
-                            center=False).rank(method=method,
-                                               pct=pct)
-            if not h2:
-                return base
-            shifted = base.shift(-h2)
-            from ..plans.ordinal import POS_COL
-            n = len(self._sr)
-            w, mp = self._window, self._mp
-            zone_lo = max(0, n - h2)
-            if not n or mp > w - 1:
-                vals = [None] * (n - zone_lo)
-            else:
-                valid = (self._sr.tail(min(w, n)).to_pandas()
-                         .notna().to_numpy())
-                tail = base.iloc[-1]
-                raw = (None if tail is None or tail != tail
-                       else (round(float(tail) * int(valid.sum())
-                                   * 2) / 2 if pct
-                             else float(tail)))
-                vals = _center_rank_tail(n, w, mp, valid, raw, pct)
-            sdf, a = shifted._ordered_sdf("__cr__")
-            fill = _tail_fill_expr(vals, zone_lo)
-            out = sdf.withColumn(
-                a, F.when(F.col(POS_COL) >= F.lit(zone_lo),
-                          fill).otherwise(F.col(a)))
-            return Series._make(out, F.col(a),
-                                shifted._index_cols, shifted.name,
-                                [(POS_COL, True)])
-        return self._local("rank", method=method, pct=pct)
-
-    def apply(self, func, raw: bool = False, args=(),
-              kwargs=None) -> "Series":
-        """Arbitrary per-window callable (pandas ``Rolling.apply``)
-        — rides the same local-carry pass; the closure ships to the
-        executors, pandas evaluates the windows. The honest slow
-        path: prefer the named statistics (JVM or C kernels)."""
-        return self._local("apply", func=func, raw=raw, args=args,
-                           kwargs=kwargs or {})
-
-    def _pair_stat(self, other: "Series", stat: str,
-                   ddof: int = 1) -> "Series":
-        """Rolling cov/corr with another Series: the windowed second
-        moments DECOMPOSE into prefix sums over jointly-valid pairs
-        (sum x, sum y, sum xy, joint count, + sum x², sum y² for
-        corr), so this stays JVM-side — one prefix pass, one shared
-        boundary shift, no Python. Same-frame pairs share the plan;
-        cross-frame pairs align positionally (the engine's
-        default-RangeIndex contract) and the fresh position becomes
-        the window order."""
-        if not isinstance(other, Series):
-            raise TypeError(
-                f"expected Series, got {type(other).__name__}")
-        from ..plans.ordinal import (ORD_COL, POS_COL,
-                                     with_boundary_shifts,
-                                     with_prefix_aggs)
-        sr = self._sr
-        if other._sdf is sr._sdf:
-            sdf, a, b = sr._sdf, sr._colexpr, other._colexpr
-            order = order_exprs(sr._order or [], sdf.columns)
-            if not order and ORD_COL in sdf.columns:
-                order = [F.col(ORD_COL).asc()]
-            idx = sr._index_cols
-        else:
-            lo, la = sr._ordered_sdf("__pa__")
-            ro, rb = other._ordered_sdf("__pb__")
-            sdf = lo.join(ro.select(POS_COL, rb), POS_COL, "inner")
-            a, b = F.col("__pa__"), F.col("__pb__")
-            order = [F.col(POS_COL).asc()]
-            idx = [c for c in sr._index_cols if c in sdf.columns]
-        both = a.isNotNull() & b.isNotNull()
-        ax = F.when(both, a.cast("double"))
-        by = F.when(both, b.cast("double"))
-        if self._center:
-            # centered pair windows: the SAME windowed sums, computed
-            # as one centered "sum" local pass over the masked
-            # product columns (one layout, one two-sided carry)
-            from ..plans.ordinal import with_rolling_locals
-            cols = {"__px__": ax, "__py__": by, "__pxy__": ax * by,
-                    "__pn__": F.when(both, F.lit(1.0))}
-            if stat == "corr":
-                cols["__pxx__"] = ax * ax
-                cols["__pyy__"] = by * by
-            out = with_rolling_locals(sdf, cols, self._window, "sum",
-                                      order or None, 0, center=True)
-            helpers = list(cols)
-
-            def C(o):
-                return F.coalesce(F.col(o), F.lit(0.0))
-
-            n = C("__pn__")
-            sx, sy, sxy = C("__px__"), C("__py__"), C("__pxy__")
-            sxx, syy = (C("__pxx__"), C("__pyy__")) \
-                if stat == "corr" else (None, None)
-        else:
-            specs = {"__px__": (ax, "sum"), "__py__": (by, "sum"),
-                     "__pxy__": (ax * by, "sum"),
-                     "__pn__": (ax, "count")}
-            if stat == "corr":
-                specs["__pxx__"] = (ax * ax, "sum")
-                specs["__pyy__"] = (by * by, "sum")
-            out = with_prefix_aggs(sdf, specs, order or None)
-            shifts = {o[:-2] + "w__": F.col(o) for o in specs}
-            out = with_boundary_shifts(out, shifts, self._window,
-                                       order_by=order or None)
-
-            def S(o, zero=0.0):
-                return F.col(o) - F.coalesce(F.col(o[:-2] + "w__"),
-                                             F.lit(zero))
-
-            n = S("__pn__", 0).cast("double")
-            sx, sy, sxy = S("__px__"), S("__py__"), S("__pxy__")
-            sxx, syy = (S("__pxx__"), S("__pyy__")) \
-                if stat == "corr" else (None, None)
-            helpers = list(specs) + list(shifts)
-        if stat == "cov":
-            val = F.when(n > ddof, (sxy - sx * sy / n) / (n - ddof))
-        else:
-            vx = sxx - sx * sx / n
-            vy = syy - sy * sy / n
-            val = F.when((n > 1) & (vx > 0) & (vy > 0),
-                         (sxy - sx * sy / n) / F.sqrt(vx * vy))
-        mp = max(self._mp, 1)
-        expr = F.when(n >= mp, val).cast("double")
-        out = out.withColumn("__roll__", expr).drop(*helpers)
-        return Series._make(out, F.col("__roll__"), idx, sr.name,
-                            sr._order)
-
-    def cov(self, other: "Series", ddof: int = 1) -> "Series":
-        return self._pair_stat(other, "cov", ddof=ddof)
-
-    def corr(self, other: "Series") -> "Series":
-        return self._pair_stat(other, "corr")
-
-
-# small-side gate for the time-roll subtrahend lookup: below this
-# many rows the per-distinct-stamp prefix table broadcasts (a few
-# doubles per stamp — ~10 MB at the cap); the row count comes free
-# from the prefix pass's totals, so the gate costs no job
-_TR_BROADCAST_MAX_ROWS = 200_000
-
-
-def _tr_driver_prefix_face(sdf, tcol, vals: dict, window_us: int,
-                           need_sq: bool):
-    """ONE-JOB fast face of :func:`_time_roll_multi` for bounded
-    DISTINCT-STAMP inputs: collect (t, values) once (bounded by
-    ``_TR_BROADCAST_MAX_ROWS`` via limit), compute every prefix
-    column AND its as-of ``_right`` twin with numpy on the driver
-    (sequential float64 cumsum — the same accumulation order as the
-    single-slice running window), broadcast the per-stamp arrays,
-    and attach them in one mapInPandas keyed by the stamp.
-
-    Replaces the general scheme's ~8 scheduling-bound driver jobs
-    (range-layout sampling + checkpoint + totals collect + prefix
-    window + broadcast-lookup collect) with ONE bounded collect —
-    measured 2.5s -> sub-second on the events_window per-stamp legs
-    at sf0.1. Returns the joined-equivalent frame (same helper
-    column names/types as the general path: ``__pr__``/``__pc_*__``
-    LONG, ``__ps_*__``/``__pq_*__`` nullable DOUBLE, all ``_right``
-    twins nullable DOUBLE) or ``None`` when a precondition fails —
-    more rows than the budget, a NULL stamp, or duplicate stamps
-    (whose positional tie rule needs the general scheme). The input
-    plan is evaluated twice (bounded collect + the exec pass); the
-    callers feed pre-aggregated, checkpoint-backed tables where
-    that re-evaluation is a cheap cached read."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    budget = _TR_BROADCAST_MAX_ROWS
-    # free probe at scale (r12): when the plan carries a row-count
-    # hint (stamped by faces that already counted, e.g. __len__) and
-    # it exceeds the budget, skip the bounded collect entirely — on
-    # an over-budget input the probe is one wasted job per call
-    hint = getattr(sdf, "_baloo_nrows", None)
-    if hint is not None and hint > budget:
-        return None
-    micros = F.unix_micros(F.col(tcol).cast("timestamp"))
-    sel = [micros.alias("__t__")] + [
-        c.cast("double").alias(f"__v_{t}__") for t, c in vals.items()]
-    rows = sdf.select(sel).limit(budget + 1).collect()
-    n = len(rows)
-    if n == 0 or n > budget:
-        return None
-    t_list = [r["__t__"] for r in rows]
-    if any(t is None for t in t_list):
-        return None
-    t_arr = np.array(t_list, dtype=np.int64)
-    order = np.argsort(t_arr, kind="stable")
-    t_sorted = t_arr[order]
-    if n > 1 and bool(np.any(t_sorted[1:] <= t_sorted[:-1])):
-        return None  # duplicate stamps: positional tie rule
-    # doubles carry (values, null_mask) so genuine NaN data stays NaN
-    # (F.sum PROPAGATES NaN but SKIPS NULL — r12 aligns the numpy
-    # replay with the JVM aggregates: null rows add 0 and don't
-    # count, NaN rows poison the running sum and DO count, and the
-    # pre-first-observation head is NULL, not NaN)
-    prefixes: dict = {"__pr__": (np.arange(1, n + 1, dtype=np.int64),
-                                 None)}
-    for t in vals:
-        raw = [r[f"__v_{t}__"] for r in rows]
-        isnull = np.array([x is None for x in raw])[order]
-        v = np.array([0.0 if x is None else x for x in raw],
-                     dtype=np.float64)[order]
-        valid = ~isnull
-        pc = np.cumsum(valid).astype(np.int64)
-        ps = np.cumsum(np.where(valid, v, 0.0))
-        prefixes[f"__ps_{t}__"] = (ps, pc == 0)
-        prefixes[f"__pc_{t}__"] = (pc, None)
-        if need_sq:
-            pq = np.cumsum(np.where(valid, v * v, 0.0))
-            prefixes[f"__pq_{t}__"] = (pq, pc == 0)
-    # as-of subtrahend: last stamp <= t - offset (window open-left)
-    ix = np.searchsorted(t_sorted, t_sorted - int(window_us),
-                         side="right") - 1
-    miss = ix < 0
-    safe = np.clip(ix, 0, None)
-    rights = {}
-    for k, (arr, msk) in prefixes.items():
-        rv = arr[safe].astype(np.float64)
-        rmask = miss.copy() if msk is None else (miss | msk[safe])
-        rights[f"{k}_right"] = (rv, rmask)
-    bcast = sdf.sparkSession.sparkContext.broadcast(
-        (t_sorted, prefixes, rights))
-    left = sdf.withColumn("__t__", micros)
-    fields = list(left.schema.fields)
-    for k, (_, msk) in prefixes.items():
-        fields.append(T.StructField(
-            k, T.DoubleType() if msk is not None else T.LongType()))
-    for k in rights:
-        fields.append(T.StructField(k, T.DoubleType()))
-    out_schema = T.StructType(fields)
-
-    def gen(batches):
-        b_t, b_p, b_r = bcast.value
-        nn = len(b_t)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            probe = pdf["__t__"].to_numpy(dtype=np.int64)
-            pos = np.searchsorted(b_t, probe)
-            # the exec pass re-evaluates the input plan; a stamp the
-            # bounded collect never saw (non-deterministic source)
-            # would silently read an adjacent row's prefix — validate
-            # instead of corrupting (r12, clip guards pos == n too)
-            pos = np.clip(pos, 0, nn - 1)
-            if not bool(np.all(b_t[pos] == probe)):
-                raise RuntimeError(
-                    "time-roll driver face: executor saw a stamp the "
-                    "bounded collect did not — non-deterministic "
-                    "input plan; use a checkpointed source")
-            for k, (arr, msk) in b_p.items():
-                col = arr[pos]
-                if msk is None:
-                    pdf[k] = col
-                else:
-                    pdf[k] = pd.arrays.FloatingArray(
-                        col.astype(np.float64), msk[pos])
-            for k, (rv, rmask) in b_r.items():
-                pdf[k] = pd.arrays.FloatingArray(rv[pos].copy(),
-                                                 rmask[pos])
-            yield pdf
-
-    return left.mapInPandas(gen, out_schema)
-
-
-def _tr_broadcast_lookup(left, out, micros, keys: list):
-    """Broadcast face of the time-roll as-of subtrahend (see
-    :func:`_time_roll_multi`): collect the positionally-last prefix
-    per distinct stamp (one job), broadcast the sorted arrays, and
-    resolve every probe with numpy searchsorted inside one
-    mapInPandas — appends ``<k>_right`` DOUBLE columns, NULL when
-    the probe precedes every stamp (same contract as the
-    union-carry asof path)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rows = (out.groupBy(micros.alias("__tw__"))
-            .agg(F.max_by(F.struct(*[F.col(k) for k in keys]),
-                          F.col("__pr__")).alias("__s__"))
-            .select("__tw__", *[F.col(f"__s__.{k}").alias(k)
-                                for k in keys])
-            .collect())
-    rows.sort(key=lambda r: r["__tw__"])
-    rt = np.array([r["__tw__"] for r in rows], dtype=np.int64)
-    rv = {k: np.array([np.nan if r[k] is None else float(r[k])
-                       for r in rows], dtype=np.float64)
-          for k in keys}
-    bcast = left.sparkSession.sparkContext.broadcast((rt, rv))
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(f"{k}_right", T.DoubleType())
-           for k in keys])
-
-    def gen(batches):
-        b_rt, b_rv = bcast.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            probes = pdf["__tw__"].to_numpy(dtype=np.int64)
-            ix = np.searchsorted(b_rt, probes, side="right") - 1
-            miss = ix < 0
-            safe = np.clip(ix, 0, None)
-            for k in keys:
-                v = b_rv[k][safe]
-                # Float64 masked array: misses AND null prefixes
-                # (NaN-coded) both surface as SQL NULL, matching
-                # the join path's unmatched/NULL semantics
-                arr = pd.array(v, dtype="Float64")
-                arr[miss] = pd.NA
-                pdf[f"{k}_right"] = arr
-            yield pdf
-
-    return left.mapInPandas(gen, out_schema)
-
-
-def _time_roll_multi(sdf, tcol, order, vals: dict, window_us: int,
-                     builder, mp: int, need_sq: bool,
-                     gate_on_rows: bool):
-    """Shared core of the time-offset rolling faces: per-tag prefix
-    sums over ONE pass + ONE as-of lookup for every tag at once.
-    ``vals`` maps tag -> value Column. Returns (sdf, {tag: expr}).
-    window_agg(i) = prefix(i) - prefix(as-of t_i - offset); the
-    strictly-increasing row prefix (__pr__) picks the positionally
-    LAST duplicate stamp, reproducing pandas' j <= i tie rule.
-
-    The subtrahend lookup has two faces, chosen by the row count
-    the prefix pass's own totals already produced (free, no extra
-    job): under ``_TR_BROADCAST_MAX_ROWS`` the per-distinct-stamp
-    prefix table collects to the driver and broadcasts, and each
-    partition resolves its probes with one numpy searchsorted —
-    no union re-layout, no second two-pass scheme (the general
-    as-of path paid ~9 scheduling-bound driver jobs on tiny
-    inputs); above it the partition-safe union-carry
-    :func:`~baloo_spark.operators.joins.asof_join` runs, the 100 TB
-    shape."""
-    from ..operators.joins import asof_join
-    from ..plans.ordinal import with_prefix_aggs
-    specs = {"__pr__": (F.lit(1), "count")}
-    for t, col in vals.items():
-        v = col.cast("double")
-        specs[f"__ps_{t}__"] = (v, "sum")
-        specs[f"__pc_{t}__"] = (col, "count")
-        if need_sq:
-            specs[f"__pq_{t}__"] = (v * v, "sum")
-    # r11 driver fast face: bounded distinct-stamp inputs skip the
-    # whole distributed prefix scheme (one bounded collect instead
-    # of ~8 layout/collect jobs) — see _tr_driver_prefix_face; a
-    # None return (too many rows / duplicate stamps / null stamps)
-    # falls through to the partition-safe general machinery below.
-    j = _tr_driver_prefix_face(sdf, tcol, vals, window_us, need_sq)
-    if j is None:
-        out, totals = with_prefix_aggs(sdf, specs, order,
-                                       return_stats=True)
-        n_rows = int(totals.get("__pr__") or 0)
-        micros = F.unix_micros(F.col(tcol).cast("timestamp"))
-        left = out.withColumn("__tw__",
-                              micros - F.lit(int(window_us)))
-        if n_rows <= _TR_BROADCAST_MAX_ROWS:
-            j = _tr_broadcast_lookup(left, out, micros, list(specs))
-        else:
-            right = (out.groupBy(micros.alias("__tw__"))
-                     .agg(F.max_by(F.struct(*[F.col(k)
-                                              for k in specs]),
-                                   F.col("__pr__")).alias("__s__"))
-                     .select("__tw__",
-                             *[F.col(f"__s__.{k}").alias(k)
-                               for k in specs]))
-            j = asof_join(left, right, on="__tw__",
-                          right_cols=list(specs))
-
-    def S(o, zero=0.0):
-        return F.col(o) - F.coalesce(F.col(f"{o}_right"), F.lit(zero))
-
-    rrows = S("__pr__", 0).cast("long")
-    exprs = {}
-    for t in vals:
-        rsum = S(f"__ps_{t}__")
-        rcnt = S(f"__pc_{t}__", 0).cast("long")
-        rsq = S(f"__pq_{t}__") if need_sq else None
-        gate = rrows if gate_on_rows else rcnt
-        exprs[t] = F.when(gate >= mp if mp > 0 else F.lit(True),
-                          builder(rsum, rcnt, rsq)).cast("double")
-    helpers = (["__tw__", "matched___tw__", "__t__"] + list(specs)
-               + [f"{k}_right" for k in specs])
-    return j, exprs, helpers
-
-
-def _dt_index_col(index_cols, sdf):
-    return next(
-        (c for c in reversed(list(index_cols))
-         if c in sdf.columns
-         and sdf.schema[c].dataType.typeName()
-         in ("timestamp", "timestamp_ntz", "date")), None)
-
-
-class _TimeRolling:
-    """Time-offset trailing windows (pandas ``Series.rolling('2h')``
-    over a datetime index): for row i the window is rows j <= i with
-    t_j in (t_i - offset, t_i] — pandas' closed='right' semantics
-    INCLUDING the positional tie rule for duplicate stamps.
-
-    sum/mean/count/var/std decompose: window_agg(i) = prefix(i) -
-    prefix(last row with t <= t_i - offset). The subtrahend is an
-    AS-OF lookup, so the whole operator is one prefix pass plus one
-    as-of join — both partition-safe two-pass schemes
-    (plans/ordinal.py, operators/joins.py) — with no range
-    self-join, no per-row Python, and no single-partition window.
-    Time-window ORDER statistics do not decompose; use
-    ``groupby(...).rolling('2h')`` (a per-group RANGE frame where
-    min/max work) or ``resample``.
-
-    Like pandas, the series must already be time-sorted (pandas
-    raises on a non-monotonic index; here the prefix order is
-    (t, row-order), which equals the row order for monotonic input).
-    """
-
-    def __init__(self, sr: "Series", window_us: int,
-                 min_periods: int):
-        self._sr = sr
-        self._us = int(window_us)
-        self._mp = min_periods
-
-    def _emit(self, builder, mp: int, need_sq: bool = False,
-              gate_on_rows: bool = False) -> "Series":
-        from ..plans.ordinal import ORD_COL
-        sr = self._sr
-        sdf = sr._sdf
-        tcol = _dt_index_col(sr._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(sr._index_cols)!r}")
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        j, exprs, helpers = _time_roll_multi(
-            sdf, tcol, order, {"v": sr._colexpr}, self._us,
-            builder, mp, need_sq, gate_on_rows)
-        keep = [c for c in j.columns if c not in helpers]
-        out = j.withColumn("__roll__", exprs["v"]) \
-            .select(*keep, "__roll__")
-        # one output row per input row (per-stamp lookup attach) ->
-        # adopt-eligible (r12)
-        return Series._make(out, F.col("__roll__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
-
-    def sum(self) -> "Series":
-        return self._emit(lambda s, c, q: s, self._mp)
-
-    def mean(self) -> "Series":
-        return self._emit(lambda s, c, q: s / c, max(self._mp, 1))
-
-    def count(self) -> "Series":
-        return self._emit(lambda s, c, q: c, self._mp,
-                          gate_on_rows=True)
-
-    def var(self, ddof: int = 1) -> "Series":
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, num / (c - ddof))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def std(self, ddof: int = 1) -> "Series":
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, F.sqrt(num / (c - ddof)))
-        return self._emit(build, max(self._mp, ddof + 1), need_sq=True)
-
-    def agg_pairs(self, specs=None, ddof: int = 1):
-        """Deliberate gate (r11): pair statistics need TWO columns,
-        which a single Series cannot name — use the frame face
-        (``df.rolling('2h').agg_pairs({...: ('corr', x, y)})``) or
-        the grouped face (``df.groupby(k).rolling('2h')
-        .agg_pairs``); single-column moment fusion is ``.agg``."""
-        raise NotImplementedError(
-            "agg_pairs needs column NAMES for its pair statistics; "
-            "use the frame face df.rolling(offset).agg_pairs({...}) "
-            "or df.groupby(k).rolling(...).agg_pairs({...}) — for "
-            "single-column moment fusion use .agg(['sum','mean',...])"
-        )
-
-    def sem(self, ddof: int = 1) -> "Series":
-        """pandas' WINDOW sem is sample-std / sqrt(n - ddof) — the
-        numerator stays ddof=1 regardless (probe:
-        rolling('2h').sem(ddof=0) == std(ddof=1)/sqrt(n)), so it
-        decomposes into the same prefix + as-of pass as std. At the
-        n == ddof boundary pandas divides a finite sample std by
-        sqrt(0): +inf when the window varies, NaN when constant
-        (r11 probe — [1,2] ddof=2 -> inf, [5,5] ddof=2 -> NaN)."""
-        def build(s, c, q):
-            num = F.greatest(q - s * s / c, F.lit(0.0))
-            return (F.when((c > 1) & (c > ddof),
-                           F.sqrt(num / (c - 1)) / F.sqrt(c - ddof))
-                     .when((c > 1) & (c == ddof) & (num > 0),
-                           F.lit(float("inf"))))
-        return self._emit(build, max(self._mp, 2), need_sq=True)
-
-    def min(self, max_rows: int | None = None) -> "Series":
-        return self._order_stat("min", max_rows)
-
-    def max(self, max_rows: int | None = None) -> "Series":
-        return self._order_stat("max", max_rows)
-
-    def median(self, max_rows: int | None = None) -> "Series":
-        return self._order_stat("median", max_rows)
-
-    def quantile(self, q: float = 0.5,
-                 interpolation: str = "linear",
-                 max_rows: int | None = None) -> "Series":
-        return self._order_stat("quantile", max_rows, q=q,
-                                interpolation=interpolation)
-
-    def rank(self, method: str = "average", ascending: bool = True,
-             pct: bool = False,
-             max_rows: int | None = None) -> "Series":
-        return self._order_stat("rank", max_rows, method=method,
-                                ascending=ascending, pct=pct)
-
-    def skew(self, max_rows: int | None = None) -> "Series":
-        # pandas' kernel owns the exact-zero-variance special case
-        # (constant window -> 0.0, near-zero -> NaN), so skew/kurt
-        # ride the budgeted pandas pass, not a power-sum prefix
-        return self._order_stat("skew", max_rows)
-
-    def kurt(self, max_rows: int | None = None) -> "Series":
-        return self._order_stat("kurt", max_rows)
-
-    kurtosis = kurt
-
-    def apply(self, func, raw: bool = False,
-              max_rows: int | None = None) -> "Series":
-        return self._order_stat("apply", max_rows, func=func,
-                                raw=raw)
-
-    def _pair(self, other: "Series", stat: str,
-              ddof: int = 1) -> "Series":
-        """Time-offset rolling cov/corr with another Series: the
-        expanding pair recipe (prefix sums over JOINTLY valid
-        pairs, _Expanding._pair) windowed by the shared
-        prefix-difference + as-of pass (:func:`_time_roll_multi`) —
-        Σx, Σy, Σxy, Σx², Σy², pair-n all decompose, so the pair
-        stat costs the same ONE prefix pass + ONE lookup as sum.
-        Same-frame pairs share the plan; cross-frame pairs align
-        positionally (the engine's pinned alignment)."""
-        if not isinstance(other, Series):
-            raise TypeError(
-                f"expected Series, got {type(other).__name__}")
-        from ..plans.ordinal import ORD_COL, POS_COL
-        sr = self._sr
-        if other._sdf is sr._sdf:
-            sdf, a, b = sr._sdf, sr._colexpr, other._colexpr
-            order = order_exprs(sr._order or [], sdf.columns)
-            if not order and ORD_COL in sdf.columns:
-                order = [F.col(ORD_COL).asc()]
-            idx = sr._index_cols
-        else:
-            lo, _ = sr._ordered_sdf("__pa__")
-            ro, rb = other._ordered_sdf("__pb__")
-            sdf = lo.join(ro.select(POS_COL, rb), POS_COL, "inner")
-            a, b = F.col("__pa__"), F.col("__pb__")
-            order = [F.col(POS_COL).asc()]
-            idx = [c for c in sr._index_cols if c in sdf.columns]
-        tcol = _dt_index_col(idx, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(idx)!r}")
-        order = [F.col(tcol).asc()] + list(order or [])
-        both = a.isNotNull() & b.isNotNull()
-        ax = F.when(both, a.cast("double"))
-        by = F.when(both, b.cast("double"))
-        vals = {"x": ax, "y": by, "xy": ax * by}
-        j, _, helpers = _time_roll_multi(
-            sdf, tcol, order, vals, self._us,
-            lambda s, c, q: s, 0, True, False)
-
-        def D(k, zero=0.0):
-            return F.col(k) - F.coalesce(F.col(f"{k}_right"),
-                                         F.lit(zero))
-
-        n = D("__pc_x__", 0).cast("double")
-        sx, sy, sxy = D("__ps_x__"), D("__ps_y__"), D("__ps_xy__")
-        if stat == "cov":
-            val = F.when(n > ddof, (sxy - sx * sy / n) / (n - ddof))
-        else:
-            # PINNED divergence (COVERAGE.md r10): a zero-variance
-            # side yields NaN. pandas' kernel there divides its own
-            # roundoff (Σxy - ΣxΣy/n, exactly 0 in real arithmetic)
-            # by the zero std and emits a NOISE-SIGNED ±inf — found
-            # live on events.parquet (constant user_id window, ±inf
-            # vs NaN); the sign is unreproducible by construction
-            vx = D("__pq_x__") - sx * sx / n
-            vy = D("__pq_y__") - sy * sy / n
-            val = F.when((n > 1) & (vx > 0) & (vy > 0),
-                         (sxy - sx * sy / n) / F.sqrt(vx * vy))
-        mp = max(self._mp, 1)
-        expr = F.when(n >= mp, val).cast("double")
-        keep = [c for c in j.columns if c not in helpers]
-        out = j.withColumn("__roll__", expr).select(*keep, "__roll__")
-        return Series._make(out, F.col("__roll__"), idx, sr.name,
-                            sr._order)
-
-    def cov(self, other: "Series", ddof: int = 1) -> "Series":
-        return self._pair(other, "cov", ddof=ddof)
-
-    def corr(self, other: "Series") -> "Series":
-        return self._pair(other, "corr")
-
-    _MOMENT_STATS = ("sum", "mean", "count", "var", "std", "sem")
-
-    def agg(self, func):
-        """pandas ``.agg``. When EVERY requested statistic is in the
-        moment family (sum/mean/count/var/std/sem — all derived from
-        the same Σv, Σv², n, rows prefix columns), the whole request
-        runs as ONE prefix pass + ONE as-of lookup instead of one
-        full two-pass scheme per statistic (each call costs ~13
-        scheduling-bound driver jobs at small inputs and a full
-        extra scan at scale — the r10 fusion lesson). Order
-        statistics fall back to the per-statistic dispatch."""
-        if isinstance(func, str):
-            return getattr(self, func)()
-        try:
-            items = (list(func.items()) if isinstance(func, dict)
-                     else [(f, f) for f in func])
-        except AttributeError:
-            return _window_agg(self, func)
-        if not items:
-            raise ValueError("no results")
-        if len({str(n) for n, _ in items}) < len(items):
-            raise ValueError(
-                "duplicate output names in .agg; engine columns "
-                "are uniquely named — use a dict to alias each "
-                "statistic")
-        if not all(isinstance(st, str) and st in self._MOMENT_STATS
-                   for _, st in items):
-            # a requested ORDER statistic: ONE budgeted
-            # single-partition pandas pass computes EVERY requested
-            # column (pandas' own .agg aligns per ROW — the
-            # one-column-bind-per-stat shape _window_agg uses joins
-            # by index label, which mis-aligns and dedupes on
-            # duplicate stamps; found by probe r10)
-            return self._agg_order(items)
-        from ..plans.ordinal import ORD_COL
-        sr = self._sr
-        sdf = sr._sdf
-        tcol = _dt_index_col(sr._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(sr._index_cols)!r}")
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        j, _, helpers = _time_roll_multi(
-            sdf, tcol, order, {"v": sr._colexpr}, self._us,
-            lambda s, c, q: s, 0, True, False)
-
-        def D(k, zero=0.0):
-            return F.col(k) - F.coalesce(F.col(f"{k}_right"),
-                                         F.lit(zero))
-
-        s = D("__ps_v__")
-        c = D("__pc_v__", 0).cast("long")
-        q = D("__pq_v__")
-        rows = D("__pr__", 0).cast("long")
-        mp = self._mp
-        num = F.greatest(q - s * s / c, F.lit(0.0))
-        builders = {
-            "sum": (s, mp, c),
-            "mean": (s / c, max(mp, 1), c),
-            "count": (c, mp, rows),
-            "var": (F.when(c > 1, num / (c - 1)), max(mp, 2), c),
-            "std": (F.when(c > 1, F.sqrt(num / (c - 1))),
-                    max(mp, 2), c),
-            "sem": (F.when(c > 1, F.sqrt(num / (c - 1))
-                           / F.sqrt(c - 1)), max(mp, 2), c),
-        }
-        outs = []
-        for name, st in items:
-            e, m, gate = builders[st]
-            e = F.when(gate >= m if m > 0 else F.lit(True), e)
-            outs.append(e.cast("double").alias(str(name)))
-        keep = [cc for cc in j.columns
-                if cc not in helpers
-                and (cc in sr._index_cols
-                     or cc in [o for o, _ in (sr._order or [])])
-                and cc not in {str(n) for n, _ in items}]
-        from .frame import DataFrame
-        return DataFrame._make(j.select(*keep, *outs),
-                               list(sr._index_cols),
-                               [str(n) for n, _ in items],
-                               sr._order)
-
-    aggregate = agg
-
-    def _agg_order(self, items, max_rows: int | None = None):
-        """Mixed/order-stat ``.agg``: the budgeted single-partition
-        pandas pass (same gate as :meth:`_order_stat`) emitting ONE
-        column per requested statistic from one kernel call —
-        pandas' own ``rolling.agg`` supplies per-row alignment, so
-        duplicate stamps bind correctly."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        sr = self._sr
-        sdf = sr._sdf
-        tcol = _dt_index_col(sr._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(sr._index_cols)!r}")
-        for _, st in items:
-            if not isinstance(st, str):
-                raise TypeError(
-                    f".agg statistics must be names, got {st!r}")
-        budget = (int(max_rows) if max_rows is not None
-                  else _EXPANDING_STAT_MAX_ROWS)
-        n = sdf.count()
-        if n > budget:
-            raise ValueError(
-                f"time-offset rolling agg with order statistics "
-                f"runs as a budgeted single-partition pandas pass: "
-                f"{n} rows exceed max_rows={budget}. Raise "
-                f"max_rows=, request only "
-                f"{'/'.join(self._MOMENT_STATS)} (the fused "
-                "prefix-pass family), or use "
-                "groupby(...).rolling(...)")
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        lay = (sdf.select("*", sr._colexpr.cast("double")
-                          .alias("__ev__"))
-               .repartition(1).sortWithinPartitions(*order))
-        mp = max(self._mp, 1)
-        us = self._us
-        names = [str(nm) for nm, _ in items]
-        stats = [st for _, st in items]
-        keep_cols = [c for c in lay.columns
-                     if c != "__ev__" and c not in names]
-        out_schema = T.StructType(
-            [f for f in lay.schema.fields
-             if f.name in keep_cols]
-            + [T.StructField(nm, T.DoubleType()) for nm in names])
-
-        def gen(batches):
-            chunks = [b for b in batches if len(b)]
-            if not chunks:
-                return
-            allb = pd.concat(chunks, ignore_index=True)
-            s = pd.Series(
-                allb["__ev__"].to_numpy(),
-                index=pd.DatetimeIndex(pd.to_datetime(allb[tcol])))
-            r = s.rolling(pd.Timedelta(us, unit="us"),
-                          min_periods=mp)
-            res = allb[keep_cols].copy()
-            for nm, st in zip(names, stats):
-                res[nm] = getattr(r, st)().to_numpy()
-            yield res
-
-        out = lay.mapInPandas(gen, out_schema)
-        from .frame import DataFrame
-        return DataFrame._make(out, list(sr._index_cols), names,
-                               sr._order)
-
-    def _order_stat(self, stat: str, max_rows: int | None, **kw):
-        """Time-window order statistics do NOT decompose into
-        prefix + as-of (unlike sum/mean/var, window_agg(i) is not a
-        difference of prefixes), so this face is the same
-        EXPLICITLY BUDGETED single-partition pandas pass as the
-        global expanding order stats (:meth:`_Expanding._order_stat`
-        — one count job gates max_rows, default 10M; above it the
-        error names the per-group RANGE-frame and resample
-        alternatives). pandas' own time-rolling kernel supplies the
-        duplicate-stamp positional tie rule."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        sr = self._sr
-        sdf = sr._sdf
-        tcol = _dt_index_col(sr._index_cols, sdf)
-        if tcol is None:
-            raise TypeError(
-                "rolling with a time offset needs a datetime index "
-                f"level; index levels are {list(sr._index_cols)!r}")
-        budget = (int(max_rows) if max_rows is not None
-                  else _EXPANDING_STAT_MAX_ROWS)
-        n = sdf.count()
-        if n > budget:
-            raise ValueError(
-                f"time-offset rolling {stat} does not decompose "
-                f"into prefix + as-of, so this face is a budgeted "
-                f"single-partition pandas pass: {n} rows exceed "
-                f"max_rows={budget}. Raise max_rows=, use "
-                f"groupby(...).rolling('2h').{stat}() (a per-group "
-                "RANGE frame) or resample")
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        order = [F.col(tcol).asc()] + order
-        lay = (sdf.select("*", sr._colexpr.cast("double")
-                          .alias("__ev__"))
-               .repartition(1).sortWithinPartitions(*order))
-        mp = max(self._mp, 1)
-        us = self._us
-        out_schema = T.StructType(
-            list(lay.schema.fields)
-            + [T.StructField("__roll__", T.DoubleType())])
-
-        def gen(batches):
-            chunks = [b for b in batches if len(b)]
-            if not chunks:
-                return
-            allb = pd.concat(chunks, ignore_index=True)
-            s = pd.Series(
-                allb["__ev__"].to_numpy(),
-                index=pd.DatetimeIndex(pd.to_datetime(allb[tcol])))
-            allb["__roll__"] = getattr(
-                s.rolling(pd.Timedelta(us, unit="us"),
-                          min_periods=mp), stat)(**kw).to_numpy()
-            yield allb
-
-        out = lay.mapInPandas(gen, out_schema).drop("__ev__")
-        # row-preserving over sdf -> adopt-eligible (r12)
-        return Series._make(out, F.col("__roll__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
-
-
-class _TimeEWM:
-    """Time-decay EWM mean (see :meth:`Series.ewm` with ``times=``):
-    weights follow actual stamp distances, 0.5^(dt/halflife). Rides
-    plans/ordinal.with_ewm_mean_times — the segmented-anchor
-    two-pass carry scan. ``times`` is a column name, or None for the
-    series' datetime index level."""
-
-    def __init__(self, sr: "Series", halflife_us: float,
-                 times, min_periods: int):
-        self._sr = sr
-        self._us = float(halflife_us)
-        self._times = times
-        self._mp = min_periods
-
-    def mean(self) -> "Series":
-        from ..plans.ordinal import ORD_COL, with_ewm_mean_times
-        sr = self._sr
-        sdf = sr._sdf
-        times = self._times
-        if times is None or times is True:
-            times = _dt_index_col(sr._index_cols, sdf)
-            if times is None:
-                raise TypeError(
-                    "ewm(times=...) needs a times column name or a "
-                    "datetime index level")
-        elif times not in sdf.columns:
-            raise KeyError(times)
-        # ROW order, not times order: pandas computes decay deltas
-        # in row sequence even when times run backward (probe:
-        # times=[Jan1, Jan3, Jan2] -> [1.0, 1.8, 2.142857]); the
-        # scan's signed analytic fold handles non-monotonic stamps
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        out = with_ewm_mean_times(sdf, sr._colexpr, times, self._us,
-                                  order, self._mp)
-        return Series._make(out, F.col("__ewm__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
-
-
-class _EWM:
-    """Exponentially weighted mean (see :meth:`Series.ewm`)."""
-
-    def __init__(self, sr: "Series", alpha: float, min_periods: int,
-                 ignore_na: bool, adjust: bool = True):
-        self._sr = sr
-        self._alpha = alpha
-        self._mp = min_periods
-        self._ignore_na = ignore_na
-        self._adjust = adjust
-
-    def _scan(self, sdf, pairs: dict, stat: str, order: list | None,
-              bias: bool = False):
-        """One stat for every tag -> (x, y) pair through ONE fused
-        scan (DataFrame.ewm shares this): with_ewm_stats_multi
-        (adjust=True's decayed sums) or with_ewm_noadjust_stats
-        (adjust=False's kernel-state carry — the renormalizing
-        recurrence is not a fixed-weight decayed sum). Returns the
-        frame and its output-column template (``% tag``)."""
-        from ..plans.ordinal import (with_ewm_noadjust_stats,
-                                     with_ewm_stats_multi)
-        if self._adjust:
-            scan, pre = with_ewm_stats_multi, "ewm"
-        elif stat == "sum":
-            raise NotImplementedError(
-                "ewm(adjust=False).sum() is not supported "
-                "(pandas refuses it too); use adjust=True")
-        else:
-            scan, pre = with_ewm_noadjust_stats, "ewmna"
-        out = scan(sdf, {t: (x, y, (stat,)) for t, (x, y) in
-                         pairs.items()}, self._alpha, order, self._mp,
-                   self._ignore_na, bias=bias)
-        return out, f"__{pre}_{stat}_%s__"
-
-    def _stat(self, stat: str, bias: bool = False) -> "Series":
-        from ..plans.ordinal import ORD_COL
-        sr = self._sr
-        sdf = sr._sdf
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        out, tmp = self._scan(sdf, {"v": (sr._colexpr, sr._colexpr)},
-                              stat, order or None, bias)
-        # row-preserving over sdf -> adopt-eligible
-        return Series._make(out, F.col(tmp % "v"), sr._index_cols,
-                            sr.name,
-                            sr._order)._tag_rowpar(sdf)
-
-    def mean(self) -> "Series":
-        return self._stat("mean")
-
-    def sum(self) -> "Series":
-        return self._stat("sum")
-
-    def var(self, bias: bool = False) -> "Series":
-        return self._stat("var", bias=bias)
-
-    def std(self, bias: bool = False) -> "Series":
-        return self._stat("std", bias=bias)
-
-    def _pair(self, other: "Series", stat: str,
-              bias: bool = False) -> "Series":
-        """cov/corr with another Series: the standard pairwise
-        alignment, then the same scan as :meth:`_stat` over the pair;
-        observations need BOTH sides non-null, like pandas."""
-        from ..plans.ordinal import POS_COL
-        sr = self._sr
-        sdf, a, b = sr._pair_sdf(other)
-        on = [c for c in sr._index_cols if c in other._index_cols]
-        keys = on or [POS_COL]
-        out, tmp = self._scan(sdf, {"p": (a, b)}, stat,
-                              [F.col(k).asc() for k in keys], bias)
-        return Series._make(out, F.col(tmp % "p"), keys, sr.name,
-                            [(k, True) for k in keys])
-
-    def cov(self, other: "Series", bias: bool = False) -> "Series":
-        return self._pair(other, "cov", bias=bias)
-
-    def corr(self, other: "Series") -> "Series":
-        return self._pair(other, "corr")
-
-
-class _Expanding:
-    """Growing-window aggregations (see :meth:`Series.expanding`).
-    NaN rows occupy positions but are skipped by the aggregates;
-    ``min_periods`` counts non-null observations, except ``count()``
-    which pandas gates on rows present — mirroring _Rolling."""
-
-    def __init__(self, sr: "Series", min_periods: int = 1):
-        if min_periods < 0:
-            raise ValueError(
-                f"min_periods must be >= 0, got {min_periods}")
-        self._sr = sr
-        self._mp = min_periods
-
-    def _emit(self, extra_specs: dict, builder, mp: int,
-              gate_on_rows: bool = False):
-        from ..plans.ordinal import ORD_COL, with_prefix_aggs
-        sr = self._sr
-        sdf = sr._sdf
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        specs = {"__pc__": (sr._colexpr, "count")}
-        if gate_on_rows:
-            specs["__pr__"] = (F.lit(1), "count")
-        specs.update(extra_specs)
-        out = with_prefix_aggs(sdf, specs, order or None)
-        gate = F.col("__pr__") if gate_on_rows else F.col("__pc__")
-        expr = F.when(gate >= mp if mp > 0 else F.lit(True), builder())
-        out = out.withColumn("__exp__", expr.cast("double")) \
-            .drop(*specs)
-        return Series._make(out, F.col("__exp__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
-
-    def _v(self):
-        return self._sr._colexpr.cast("double")
-
-    def sum(self) -> "Series":
-        return self._emit({"__ps__": (self._v(), "sum")},
-                          lambda: F.coalesce(F.col("__ps__"),
-                                             F.lit(0.0)), self._mp)
-
-    def mean(self) -> "Series":
-        return self._emit({"__ps__": (self._v(), "sum")},
-                          lambda: F.col("__ps__") / F.col("__pc__"),
-                          max(self._mp, 1))
-
-    def count(self) -> "Series":
-        return self._emit({}, lambda: F.col("__pc__"), self._mp,
-                          gate_on_rows=True)
-
-    def min(self) -> "Series":
-        return self._emit({"__pm__": (self._sr._colexpr, "min")},
-                          lambda: F.col("__pm__"), max(self._mp, 1))
-
-    def max(self) -> "Series":
-        return self._emit({"__pm__": (self._sr._colexpr, "max")},
-                          lambda: F.col("__pm__"), max(self._mp, 1))
-
-    def median(self, max_rows: int | None = None):
-        """Global expanding median — see :meth:`_order_stat` for the
-        budget contract."""
-        return self._order_stat("median", max_rows)
-
-    def quantile(self, q: float = 0.5,
-                 interpolation: str = "linear",
-                 max_rows: int | None = None):
-        """Global expanding quantile — see :meth:`_order_stat`."""
-        return self._order_stat("quantile", max_rows, q=q,
-                                interpolation=interpolation)
-
-    def rank(self, method: str = "average", ascending: bool = True,
-             pct: bool = False, max_rows: int | None = None):
-        """Global expanding rank — full history per row, so it
-        rides the budgeted pass (see :meth:`_order_stat`)."""
-        return self._order_stat("rank", max_rows, method=method,
-                                ascending=ascending, pct=pct)
-
-    def apply(self, func, raw: bool = False, args=(), kwargs=None,
-              max_rows: int | None = None):
-        """Global expanding apply (arbitrary per-window callable) —
-        the honest slow path, on the budgeted pass."""
-        return self._order_stat("apply", max_rows, func=func,
-                                raw=raw, args=args,
-                                kwargs=kwargs or {})
-
-    def _order_stat(self, stat: str, max_rows: int | None, **kw):
-        """Global expanding order statistic. Row i needs its FULL
-        history (no bounded carry exists — unlike the fixed-window
-        order stats, which carry w-1 donor rows), so this face is an
-        EXPLICITLY BUDGETED single-partition pandas pass, the same
-        honest-gate pattern as tokenize/lm: one count job checks the
-        budget (default ``_EXPANDING_STAT_MAX_ROWS``), then one
-        ordered partition runs pandas' expanding C kernel once.
-        Above the budget it raises naming the distributed
-        alternatives (fixed rolling window / grouped expanding,
-        where groups are local)."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        sr = self._sr
-        sdf = sr._sdf
-        budget = (int(max_rows) if max_rows is not None
-                  else _EXPANDING_STAT_MAX_ROWS)
-        n = sdf.count()
-        if n > budget:
-            raise ValueError(
-                f"global expanding {stat} needs the full history "
-                f"per row (no bounded carry exists), so this face "
-                f"is a budgeted single-partition pandas pass: "
-                f"{n} rows exceed max_rows={budget}. Raise "
-                f"max_rows=, use a fixed rolling window, or "
-                f"groupby(...).expanding().{stat}() (groups are "
-                "local)")
-        order = order_exprs(sr._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        lay = sdf.select("*", sr._colexpr.cast("double")
-                         .alias("__ev__")).repartition(1)
-        if order:
-            lay = lay.sortWithinPartitions(*order)
-        mp = self._mp
-        out_schema = T.StructType(
-            list(lay.schema.fields)
-            + [T.StructField("__exp__", T.DoubleType())])
-
-        def gen(batches):
-            chunks = [b for b in batches if len(b)]
-            if not chunks:
-                return
-            allb = pd.concat(chunks, ignore_index=True)
-            allb["__exp__"] = getattr(
-                allb["__ev__"].expanding(mp), stat)(**kw).to_numpy()
-            yield allb
-
-        out = lay.mapInPandas(gen, out_schema).drop("__ev__")
-        # row-preserving over sdf -> adopt-eligible (r12)
-        return Series._make(out, F.col("__exp__"), sr._index_cols,
-                            sr.name, sr._order)._tag_rowpar(sdf)
-
-    def var(self, ddof: int = 1) -> "Series":
-        def build():
-            s, c = F.col("__ps__"), F.col("__pc__")
-            num = F.greatest(F.col("__pq__") - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, num / (c - ddof))
-        v = self._v()
-        return self._emit({"__ps__": (v, "sum"),
-                           "__pq__": (v * v, "sum")},
-                          build, max(self._mp, ddof + 1))
-
-    def std(self, ddof: int = 1) -> "Series":
-        def build():
-            s, c = F.col("__ps__"), F.col("__pc__")
-            num = F.greatest(F.col("__pq__") - s * s / c, F.lit(0.0))
-            return F.when(c > ddof, F.sqrt(num / (c - ddof)))
-        v = self._v()
-        return self._emit({"__ps__": (v, "sum"),
-                           "__pq__": (v * v, "sum")},
-                          build, max(self._mp, ddof + 1))
-
-    def sem(self, ddof: int = 1) -> "Series":
-        """Standard error over the growing window — same prefix
-        sums. pandas' WINDOW sem is SAMPLE-std / sqrt(n - ddof):
-        the numerator stays ddof=1 regardless of the ddof argument
-        (probed r10 on expanding AND rolling — the old
-        std(ddof)/sqrt(n-ddof) form diverged for ddof=0; unlike the
-        scalar Series.sem, which is std/sqrt(n))."""
-        def build():
-            s, c = F.col("__ps__"), F.col("__pc__")
-            num = F.greatest(F.col("__pq__") - s * s / c, F.lit(0.0))
-            # n == ddof boundary: pandas emits +inf (finite std /
-            # sqrt(0)) unless the window is constant (0/0 -> NaN)
-            return (F.when((c > 1) & (c > ddof),
-                           F.sqrt(num / (c - 1))
-                           / F.sqrt(c - ddof))
-                     .when((c > 1) & (c == ddof) & (num > 0),
-                           F.lit(float("inf"))))
-        v = self._v()
-        return self._emit({"__ps__": (v, "sum"),
-                           "__pq__": (v * v, "sum")},
-                          build, max(self._mp, 2))
-
-    def _center(self):
-        """Global mean of the series (one tiny agg job): skew/kurt
-        are SHIFT-INVARIANT, so prefix sums of (x - mu)^k keep the
-        third/fourth powers near zero instead of ~mean^4 — without
-        this the sum-of-powers identities cancel catastrophically on
-        large-mean data (prices ~1e5 -> x^4 ~ 1e20 per row)."""
-        row = self._sr._sdf.agg(
-            F.avg(self._v()).alias("m")).first()
-        return float(row["m"]) if row["m"] is not None else 0.0
-
-    def skew(self) -> "Series":
-        """Bias-corrected sample skewness over the growing window
-        (pandas ``Expanding.skew``): prefix sums of the centered
-        first three powers, Fisher-Pearson adjustment, NaN below 3
-        observations — one prefix pass + one scalar pre-agg."""
-        mu = self._center()
-
-        def build():
-            c = F.col("__pc__").cast("double")
-            s1, s2, s3 = F.col("__ps__"), F.col("__pq__"), F.col("__p3__")
-            m = s1 / c
-            m2 = F.greatest(s2 / c - m * m, F.lit(0.0))
-            m3 = s3 / c - 3 * m * s2 / c + 2 * m * m * m
-            g1 = m3 / F.pow(m2, 1.5)
-            adj = F.sqrt(c * (c - 1)) / (c - 2)
-            # pandas' window kernels special-case EXACT zero
-            # variance (a constant window) as skew 0.0 — near-zero
-            # variance stays NaN (their eps threshold)
-            return F.when(c >= 3,
-                          F.when(m2 > 0, g1 * adj)
-                          .otherwise(F.when(m2 == 0, F.lit(0.0))))
-        y = self._v() - F.lit(mu)
-        return self._emit({"__ps__": (y, "sum"),
-                           "__pq__": (y * y, "sum"),
-                           "__p3__": (y * y * y, "sum")},
-                          build, max(self._mp, 3))
-
-    def kurt(self) -> "Series":
-        """Bias-corrected excess kurtosis over the growing window
-        (pandas ``Expanding.kurt``): centered prefix sums up to the
-        fourth power, the (n+1)g2+6 correction, NaN below 4 obs."""
-        mu = self._center()
-
-        def build():
-            c = F.col("__pc__").cast("double")
-            s1, s2 = F.col("__ps__"), F.col("__pq__")
-            s3, s4 = F.col("__p3__"), F.col("__p4__")
-            m = s1 / c
-            m2 = F.greatest(s2 / c - m * m, F.lit(0.0))
-            m4 = (s4 / c - 4 * m * s3 / c + 6 * m * m * s2 / c
-                  - 3 * m * m * m * m)
-            g2 = m4 / (m2 * m2) - 3
-            corr = ((c + 1) * g2 + 6) * (c - 1) / ((c - 2) * (c - 3))
-            # pandas' window kernels emit -3.0 (the raw excess of a
-            # point mass, uncorrected) for EXACT zero variance
-            return F.when(c >= 4,
-                          F.when(m2 > 0, corr)
-                          .otherwise(F.when(m2 == 0, F.lit(-3.0))))
-        y = self._v() - F.lit(mu)
-        return self._emit({"__ps__": (y, "sum"),
-                           "__pq__": (y * y, "sum"),
-                           "__p3__": (y * y * y, "sum"),
-                           "__p4__": (y * y * y * y, "sum")},
-                          build, max(self._mp, 4))
-
-    def _pair(self, other: "Series", stat: str,
-              ddof: int = 1) -> "Series":
-        """Expanding cov/corr with another Series: prefix sums over
-        the JOINTLY valid pairs — the rolling pair scan without the
-        boundary shift. Same-frame pairs share the plan; cross-frame
-        pairs align positionally."""
-        if not isinstance(other, Series):
-            raise TypeError(
-                f"expected Series, got {type(other).__name__}")
-        from ..plans.ordinal import (ORD_COL, POS_COL,
-                                     with_prefix_aggs)
-        sr = self._sr
-        if other._sdf is sr._sdf:
-            sdf, a, b = sr._sdf, sr._colexpr, other._colexpr
-            order = order_exprs(sr._order or [], sdf.columns)
-            if not order and ORD_COL in sdf.columns:
-                order = [F.col(ORD_COL).asc()]
-            idx = sr._index_cols
-        else:
-            lo, la = sr._ordered_sdf("__pa__")
-            ro, rb = other._ordered_sdf("__pb__")
-            sdf = lo.join(ro.select(POS_COL, rb), POS_COL, "inner")
-            a, b = F.col("__pa__"), F.col("__pb__")
-            order = [F.col(POS_COL).asc()]
-            idx = [c for c in sr._index_cols if c in sdf.columns]
-        both = a.isNotNull() & b.isNotNull()
-        ax = F.when(both, a.cast("double"))
-        by = F.when(both, b.cast("double"))
-        specs = {"__px__": (ax, "sum"), "__py__": (by, "sum"),
-                 "__pxy__": (ax * by, "sum"), "__pn__": (ax, "count")}
-        if stat == "corr":
-            specs["__pxx__"] = (ax * ax, "sum")
-            specs["__pyy__"] = (by * by, "sum")
-        out = with_prefix_aggs(sdf, specs, order or None)
-        n = F.col("__pn__").cast("double")
-        sx, sy, sxy = F.col("__px__"), F.col("__py__"), F.col("__pxy__")
-        if stat == "cov":
-            val = F.when(n > ddof, (sxy - sx * sy / n) / (n - ddof))
-        else:
-            vx = F.col("__pxx__") - sx * sx / n
-            vy = F.col("__pyy__") - sy * sy / n
-            val = F.when((n > 1) & (vx > 0) & (vy > 0),
-                         (sxy - sx * sy / n) / F.sqrt(vx * vy))
-        mp = max(self._mp, 1)
-        expr = F.when(n >= mp, val).cast("double")
-        out = out.withColumn("__exp__", expr).drop(*specs)
-        return Series._make(out, F.col("__exp__"), idx, sr.name,
-                            sr._order)
-
-    def cov(self, other: "Series", ddof: int = 1) -> "Series":
-        return self._pair(other, "cov", ddof=ddof)
-
-    def corr(self, other: "Series") -> "Series":
-        return self._pair(other, "corr")
-
-
 def _norm_pos(i: int, n: int) -> int:
     """pandas negative position -> absolute (IndexError past front)."""
     if i < 0:
@@ -4688,91 +3134,3 @@ class _SeriesLoc:
         fr = sr._to_frame_ordered()
         fr.loc[key, vname] = value
         sr._swap_in(fr[vname])
-
-
-_Rolling.agg = _Rolling.aggregate = _window_agg
-
-
-def _expanding_agg(self, func):
-    """pandas ``.agg`` on an expanding window. The moment family —
-    sum/mean/count/min/max/var/std/sem, ALL prefix-decomposable for
-    growing windows — fuses into ONE with_prefix_aggs pass (the
-    r10 fusion lesson: each separate call pays its own
-    layout+carry scheme). Order statistics fall back to the
-    positional per-stat binder."""
-    _MOMENT = ("sum", "mean", "count", "min", "max", "var", "std",
-               "sem")
-    if isinstance(func, str):
-        return getattr(self, func)()
-    try:
-        items = (list(func.items()) if isinstance(func, dict)
-                 else [(f, f) for f in func])
-    except AttributeError:
-        return _window_agg(self, func)
-    if not items:
-        raise ValueError("no results")
-    if len({str(n) for n, _ in items}) < len(items):
-        raise ValueError(
-            "duplicate output names in .agg; engine columns are "
-            "uniquely named — use a dict to alias each statistic")
-    if not all(isinstance(st, str) and st in _MOMENT
-               for _, st in items):
-        return _window_agg(self, func)
-    from ..plans.ordinal import ORD_COL, with_prefix_aggs
-    from .frame import DataFrame
-    sr = self._sr
-    sdf = sr._sdf
-    order = order_exprs(sr._order or [], sdf.columns)
-    if not order and ORD_COL in sdf.columns:
-        order = [F.col(ORD_COL).asc()]
-    stats = {st for _, st in items}
-    v = sr._colexpr.cast("double")
-    specs = {"__pc__": (sr._colexpr, "count"),
-             "__pr__": (F.lit(1), "count")}
-    if stats & {"sum", "mean", "var", "std", "sem"}:
-        specs["__ps__"] = (v, "sum")
-    if stats & {"var", "std", "sem"}:
-        specs["__pq__"] = (v * v, "sum")
-    if "min" in stats:
-        specs["__pmin__"] = (sr._colexpr, "min")
-    if "max" in stats:
-        specs["__pmax__"] = (sr._colexpr, "max")
-    out = with_prefix_aggs(sdf, specs, order or None)
-    s, c = F.col("__ps__"), F.col("__pc__")
-    num = F.greatest(F.col("__pq__") - s * s / c, F.lit(0.0))
-    mp = self._mp
-
-    def gated(e, m, rows_gate=False):
-        gate = F.col("__pr__") if rows_gate else c
-        return (F.when(gate >= m, e) if m > 0 else e)
-
-    builders = {
-        "sum": lambda: gated(F.coalesce(s, F.lit(0.0)), mp),
-        "mean": lambda: gated(s / c, max(mp, 1)),
-        "count": lambda: gated(c, mp, rows_gate=True),
-        "min": lambda: gated(F.col("__pmin__"), max(mp, 1)),
-        "max": lambda: gated(F.col("__pmax__"), max(mp, 1)),
-        "var": lambda: gated(F.when(c > 1, num / (c - 1)),
-                             max(mp, 2)),
-        "std": lambda: gated(F.when(c > 1, F.sqrt(num / (c - 1))),
-                             max(mp, 2)),
-        "sem": lambda: gated(F.when(c > 1, F.sqrt(num / (c - 1))
-                                    / F.sqrt(c - 1)), max(mp, 2)),
-    }
-    outs = [builders[st]().cast("double").alias(str(nm))
-            for nm, st in items]
-    keep = [cc for cc in out.columns
-            if cc not in specs
-            and (cc in sr._index_cols
-                 or cc in [o for o, _ in (sr._order or [])]
-                 or cc == ORD_COL)
-            and cc not in {str(nm) for nm, _ in items}]
-    return DataFrame._make(out.select(*keep, *outs),
-                           list(sr._index_cols),
-                           [str(nm) for nm, _ in items], sr._order)
-
-
-_Expanding.agg = _Expanding.aggregate = _expanding_agg
-# _TimeRolling defines its own fused agg (moment family in one
-# prefix pass); _window_agg remains its order-stat fallback inside
-_EWM.agg = _EWM.aggregate = _window_agg

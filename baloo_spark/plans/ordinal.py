@@ -141,24 +141,9 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
             out = out.withColumn(o, c)
         return out
     k = abs(periods)
-    if order_by:
-        # no explicit partition count (r11): REPARTITION_BY_COL is
-        # AQE-coalescible, so a kilobyte-sized input lands in one
-        # partition (one task per two-pass job instead of 32) while
-        # large inputs keep spark.sql.shuffle.partitions — the
-        # scale-adaptive layout; an explicit n is exempt from AQE
-        # coalescing and pinned 32 tasks on every tiny window table.
-        sdf = (sdf.repartitionByRange(*order_by)
-               .sortWithinPartitions(*order_by))
-    # eager=False (r12): the donor collect below is always the first
-    # consumer, so the checkpoint materializes inside that job —
-    # same frozen layout for both passes, one fewer eager job and
-    # one fewer full pass per shift
-    sdf = (sdf.select("*", *[c.alias(f"__sv_{o}__")
-                             for o, c in prepared.items()])
-           .withColumn("__mid__", F.monotonically_increasing_id())
-           .withColumn("__pid__", F.spark_partition_id())
-           .localCheckpoint(eager=False))
+    sdf = _range_layout(sdf.select("*", *[c.alias(f"__sv_{o}__")
+                                          for o, c in prepared.items()]),
+                        order_by)
 
     fwd = periods > 0
     w_in = Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
@@ -228,7 +213,7 @@ def with_dense_ordinal(sdf: DataFrame, order_by: list | None = None,
     the global order; None = current ingest/partition order.
     """
     if order_by:
-        # AQE-coalescible range layout (see with_boundary_shifts)
+        # AQE-coalescible range layout (see _range_layout)
         sdf = sdf.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
 
     sdf = sdf.withColumn("__mid__", F.monotonically_increasing_id())
@@ -278,7 +263,12 @@ def _range_layout(sdf: DataFrame, order_by: list | None) -> DataFrame:
     see identical partitioning; see with_dense_ordinal's note on
     checkpoint-vs-persist)."""
     if order_by:
-        # AQE-coalescible range layout (see with_boundary_shifts)
+        # no explicit partition count (r11): REPARTITION_BY_COL is
+        # AQE-coalescible, so a kilobyte-sized input lands in one
+        # partition (one task per two-pass job instead of 32) while
+        # large inputs keep spark.sql.shuffle.partitions — the
+        # scale-adaptive layout; an explicit n is exempt from AQE
+        # coalescing and pinned 32 tasks on every tiny window table.
         sdf = (sdf.repartitionByRange(*order_by)
                .sortWithinPartitions(*order_by))
     # eager=False (r12): every caller's pass 1 (totals/donors/ends

@@ -327,3 +327,82 @@ def test_frame_ewm_single_range_layout(spark, bl, monkeypatch):
         assert sdf.rdd.getNumPartitions() > 1
     finally:
         spark.conf.set(key, old)
+
+
+def test_fixed_window_fused_single_layout(spark, bl, monkeypatch):
+    """Every fixed-window moment, ``agg_pairs`` and the Series pair
+    statistics build exactly ONE range layout: the window engine's
+    fused prefix source (core/window._fixed_source: prefixes and
+    their window-ago twins from one layout and one collect; sem takes
+    the local-carry pass, also one layout) — never the old
+    with_prefix_aggs + with_boundary_shifts composition, which paid a
+    second layout. Two columns with nulls on both sides of the
+    partition boundaries (AQE coalescing off, so the layout keeps
+    spark.sql.shuffle.partitions), checked against pandas."""
+    import numpy as np
+    import pandas as pd
+
+    from baloo_spark.plans import ordinal
+
+    real = ordinal._range_layout
+    calls = {"n": 0}
+
+    def counting(sdf, order_by):
+        calls["n"] += 1
+        return real(sdf, order_by)
+
+    def no_shift(*a, **k):
+        raise AssertionError("fixed window took with_boundary_shifts")
+
+    rng = np.random.default_rng(23)
+    n = 150
+    x = rng.normal(size=n)
+    y = 0.5 * x + rng.normal(size=n)
+    x[rng.random(n) < 0.15] = np.nan
+    y[rng.random(n) < 0.15] = np.nan
+    x[40:47] = np.nan                      # a null run over a boundary
+    key = np.array([f"k{i:04d}" for i in rng.permutation(n)])
+    pdf = pd.DataFrame({"k": key, "x": x, "y": y}).sort_values("k") \
+        .reset_index(drop=True)
+    df = bl.DataFrame({"k": key, "x": x, "y": y}).sort_values("k")
+    p5 = pdf[["x", "y"]].rolling(5, min_periods=2)
+    cases = [(f"rolling(5, min_periods=2).{st}",
+              lambda st=st: getattr(df.rolling(5, min_periods=2), st)()
+              .to_pandas()[["x", "y"]],
+              getattr(p5, st)()[["x", "y"]])
+             for st in ("sum", "mean", "count", "var", "std", "sem")]
+    r5 = pdf["x"].rolling(5)
+    cases += [
+        ("rolling(5).agg_pairs",
+         lambda: df.rolling(5).agg_pairs(
+             {"s": ("sum", "x"), "c": ("cov", "x", "y"),
+              "r": ("corr", "x", "y")}).to_pandas()[["s", "c", "r"]],
+         pd.DataFrame({"s": r5.sum(), "c": r5.cov(pdf["y"]),
+                       "r": r5.corr(pdf["y"])})),
+        ("Series.rolling(5).cov",
+         lambda: df["x"].rolling(5).cov(df["y"]).to_pandas(),
+         r5.cov(pdf["y"])),
+        ("Series.rolling(5).corr",
+         lambda: df["x"].rolling(5).corr(df["y"]).to_pandas(),
+         r5.corr(pdf["y"])),
+    ]
+    aqe = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        for label, run, want in cases:
+            calls["n"] = 0
+            monkeypatch.setattr(ordinal, "_range_layout", counting)
+            monkeypatch.setattr(ordinal, "with_boundary_shifts", no_shift)
+            try:
+                got = run()
+            finally:
+                monkeypatch.undo()
+            assert calls["n"] == 1, \
+                f"{label} built {calls['n']} range layouts, expected 1"
+            np.testing.assert_allclose(
+                np.asarray(got, dtype=float),
+                np.asarray(want, dtype=float), rtol=1e-9, atol=1e-9,
+                equal_nan=True, err_msg=label)
+    finally:
+        spark.conf.set(aqe, old)

@@ -915,6 +915,36 @@ def test_series_expanding_moments_match_pandas(bl):
                                np.nan_to_num(want, nan=-9), atol=1e-6)
 
 
+
+def test_frame_expanding_skew_kurt_match_pandas(bl):
+    """DataFrame.expanding skew/kurt take the same centered prefix
+    sums as the Series face (core/window.Rolling._centered_powers:
+    one scalar pre-agg of every column's mean, one prefix pass, no
+    row budget) — on the mean-5e4 data that makes uncentered power
+    sums cancel, column for column equal to the Series face."""
+    import numpy as np
+    import pandas as pd
+    rng = np.random.default_rng(21)
+    n = 250
+    x = rng.normal(loc=5e4, scale=100, size=n)
+    y = 0.4 * x + rng.normal(size=n) * 50
+    x[rng.random(n) < 0.12] = np.nan
+    y[rng.random(n) < 0.1] = np.nan
+    pdf = pd.DataFrame({"x": x, "y": y})
+    d = bl.DataFrame({"x": x, "y": y})
+    for stat in ("skew", "kurt"):
+        got = getattr(d.expanding(2), stat)().to_pandas()
+        want = getattr(pdf.expanding(2), stat)()
+        for c in ("x", "y"):
+            np.testing.assert_allclose(
+                np.nan_to_num(got[c].to_numpy(), nan=-9),
+                np.nan_to_num(want[c].to_numpy(), nan=-9),
+                atol=1e-6, rtol=1e-6, err_msg=f"frame expanding {stat}")
+            ser = getattr(d[c].expanding(2), stat)().to_pandas()
+            np.testing.assert_allclose(
+                got[c].to_numpy(), ser.to_numpy(), rtol=1e-12,
+                equal_nan=True, err_msg=f"{stat} {c} vs Series face")
+
 def test_rolling_center_matches_pandas(bl):
     """center=True across all faces. pandas' split is LEFT-heavy for
     even windows — [i - w//2, i + (w-1)//2] — pinned here with even
