@@ -3045,8 +3045,9 @@ WHERE a.doc_id < b.doc_id
 def _dedup_cluster_survivors(spark, sf):
     """Transitive near-dup dedup end-to-end (operators/dedup.py:
     dedup_clusters + drop_near_duplicates): exact jaccard pairs ->
-    connected components (min-label propagation, localCheckpointed
-    rounds) -> keep the min-id representative per cluster. Inside the
+    connected components (one driver pass over the frozen edge table
+    within its edge budget, min-label propagation beyond it) -> keep
+    the min-id representative per cluster. Inside the
     driver's 50-slot gate window since the r3 consolidation
     (tests/test_entry_contract.py pins the window boundary); the
     DuckDB oracle replays the clustering with a recursive CTE."""

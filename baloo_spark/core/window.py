@@ -127,11 +127,16 @@ def _replaced(df, out, exprs: dict):
     """``df``'s columns read from ``out`` (one row per source row), each
     key of ``exprs`` replaced by its Column; the data columns become
     the keys. Dropping every other column of ``out`` drops the
-    source's helpers."""
+    source's helpers. An order column that ``exprs`` overwrites keeps
+    its source values under a reserved name and the order points
+    there, so the rows stay in the source's order."""
+    keep = {c: f"__ord_{c}__" for c, _ in df._order or () if c in exprs}
     sel = [exprs[c].alias(c) if c in exprs else F.col(c)
            for c in df._sdf.columns]
+    sel += [F.col(c).alias(k) for c, k in keep.items()]
+    order = df._order and [(keep.get(c, c), a) for c, a in df._order]
     return DataFrame._make(out.select(*sel), df._index_cols, list(exprs),
-                           df._order)
+                           order)
 
 
 def _dt_index_col(index_cols, sdf):

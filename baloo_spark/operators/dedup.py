@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 
 # deterministic permutation parameters for MinHash (fixed seeds)
 _MERSENNE = (1 << 61) - 1
+# dedup_clusters solves a pair graph of up to this many edges on the
+# driver (16 MB of Arrow longs); a larger one takes the Spark loop
+_CC_DRIVER_MAX_EDGES = 1_000_000
 
 
 def _perm_params(k: int):
@@ -154,18 +157,6 @@ def incremental_dedup(new_docs: DataFrame, seen: DataFrame | None,
     return survivors, seen_out
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 64,
-                       n: int = 3, shingle: str = "word") -> DataFrame:
-    """k-permutation MinHash signature per document.
-
-    sig_j = min over shingles s of (a_j * h(s) + b_j) mod M61, with
-    h = xxhash64. Entirely array expressions — one narrow map stage.
-    """
-    shdf = _shingled(_parallelize(df), text_col, id_col, n, shingle)
-    return _minhash_sigs_from_shingles(shdf, id_col, k)
-
-
 def _minhash_sigs_from_shingles(shdf: DataFrame, id_col: str,
                                 k: int) -> DataFrame:
     """Signature fold over an existing (id, shingle-array) table —
@@ -290,7 +281,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # AQE). localCheckpoint materializes it once to executor-local
     # blocks; at 100 TB that is one write of the narrow (id, shingles)
     # projection vs re-running the tokenize+explode pipeline 4x —
-    # the same trade dedup_clusters already makes per iteration.
+    # the same trade dedup_clusters makes for its edge table.
     sh = sh.localCheckpoint(eager=False)
     if block_col:
         sh = sh.join(df.select(F.col(id_col), F.col(block_col)), id_col)
@@ -546,24 +537,68 @@ def embedding_near_pairs(df: DataFrame, vec_col: str = "embedding",
             .where(F.col("cosine") >= threshold))
 
 
-def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iters: int = 20) -> DataFrame:
-    """Connected components over a near-duplicate pair graph:
-    (node, cluster) where cluster = the MIN doc id in the node's
-    component. Transitive closure — (1,2) and (2,3) put 1,2,3 in one
-    cluster even though (1,3) was never emitted as a pair.
+def _min_roots(u, v, n: int):
+    """Component root of each of ``n`` nodes under the edges
+    ``(u[i], v[i])``: the smallest node index of its component.
+    Each round hooks the larger root of every edge that still joins
+    two trees under the smaller one, then pointer-jumps until every
+    node points straight at its root. Parents only ever decrease, so
+    no cycle forms, and a component's minimum is never hooked."""
+    import numpy as np
 
-    Min-label propagation: each round every node takes the smallest
-    label among itself and its neighbors; a component's diameter
-    bounds the rounds, and near-dup components are shallow (stars/
-    short chains), so convergence is a handful of equi-join rounds.
-    Each iteration localCheckpoints the labels — iterative Spark jobs
-    otherwise stack lineage until planning dominates. The convergence
-    probe is one count per round (driver scalar, standard loop shape).
-    """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    parent = np.arange(n)
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            return parent
+        ru, rv = ru[cross], rv[cross]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _driver_clusters(spark, edges, schema) -> DataFrame:
+    """``(node, cluster)`` of the Arrow edge table ``edges`` (integer
+    ``src``, ``dst``) solved in numpy and shipped back as one Arrow
+    ``LocalRelation``, the route ``plans.ordinal.local_table`` takes.
+    The rows are the distributed loop's: a NULL endpoint joins
+    nothing, so an edge with one adds its other endpoint as a node
+    of its own plus a single ``(NULL, NULL)`` row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    src, dst = edges.column("src"), edges.column("dst")
+    whole = pc.and_(pc.is_valid(src), pc.is_valid(dst))
+    lone = pc.invert(whole)
+    u, v = (pc.filter(c, whole).to_numpy() for c in (src, dst))
+    ids, inv = np.unique(np.concatenate(
+        [u, v] + [pc.drop_null(pc.filter(c, lone)).to_numpy()
+                  for c in (src, dst)]), return_inverse=True)
+    m = len(u)
+    cluster = ids[_min_roots(inv[:m], inv[m:2 * m], len(ids))]
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array(a, type=f.type) for a, f in zip((ids, cluster), arrow)]
+    if m < len(src):
+        cols = [pa.concat_arrays([c, pa.nulls(1, c.type)]) for c in cols]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow),
+                                 schema=schema)
+
+
+def _loop_clusters(frozen: DataFrame, max_iters: int) -> DataFrame:
+    """Min-label propagation over the frozen ``(src, dst)`` table: each
+    round every node takes the smallest label among itself and its
+    neighbours, and a component's diameter bounds the rounds. Each
+    round localCheckpoints the labels (iterative Spark jobs otherwise
+    stack lineage until planning dominates) and counts the labels it
+    lowered; a last round that still lowered one raises."""
+    edges = frozen.union(
+        frozen.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint()
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node")).localCheckpoint())
@@ -584,8 +619,47 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
                    .where(F.col("n.label") < F.col("o.label")).count())
         labels = new_labels
         if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("cluster"))
+            return labels.select("node", F.col("label").alias("cluster"))
+    raise RuntimeError(
+        f"dedup_clusters: labels still changed in round max_iters="
+        f"{max_iters}; a component's diameter exceeds the cap")
+
+
+def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
+                   id_b: str = "id_b", max_iters: int = 20) -> DataFrame:
+    """Connected components over a near-duplicate pair graph:
+    (node, cluster) where cluster = the MIN doc id in the node's
+    component. Transitive closure — (1,2) and (2,3) put 1,2,3 in one
+    cluster even though (1,3) was never emitted as a pair.
+
+    The ``(src, dst)`` projection of ``pairs`` is frozen once with
+    localCheckpoint, so neither path below re-runs the pair pipeline.
+    Two paths, same rows:
+
+    - **driver** (integer ids, at most ``_CC_DRIVER_MAX_EDGES`` pairs):
+      one Arrow pull of the edges, components in numpy (hook and
+      pointer-jump until no edge joins two trees), the result shipped
+      back as one Arrow LocalRelation: the freeze and one pull,
+      whatever the component diameter.
+    - **distributed** (larger graphs, other id types): min-label
+      propagation, two jobs per round; ``max_iters`` caps the rounds
+      and a graph still changing at the cap raises ``RuntimeError``
+      rather than return unconverged labels.
+    """
+    from pyspark.sql import types as T
+
+    frozen = pairs.select(F.col(id_a).alias("src"),
+                          F.col(id_b).alias("dst")).localCheckpoint()
+    # the loop's node type: the union of both endpoint columns
+    dtype = (frozen.select("src").union(frozen.select("dst"))
+             .schema["src"].dataType)
+    if isinstance(dtype, T.IntegralType):
+        edges = frozen.limit(_CC_DRIVER_MAX_EDGES + 1).toArrow()
+        if edges.num_rows <= _CC_DRIVER_MAX_EDGES:
+            schema = T.StructType([T.StructField("node", dtype),
+                                   T.StructField("cluster", dtype)])
+            return _driver_clusters(frozen.sparkSession, edges, schema)
+    return _loop_clusters(frozen, max_iters)
 
 
 def drop_near_duplicates(df: DataFrame, pairs: DataFrame,

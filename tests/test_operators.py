@@ -388,6 +388,74 @@ def test_dedup_clusters_long_chain(spark):
     assert set(got.values()) == {0}
 
 
+def _cc_graph(seed):
+    """Seeded pair graph mixing every shape dedup_clusters meets:
+    stars, chains of diameter <= 15, cycles, self-loops, duplicate
+    and reversed edges and NULL endpoints, over shuffled ids."""
+    rng = np.random.default_rng(seed)
+    ids = iter(rng.permutation(10_000).tolist())
+    edges = []
+    for _ in range(4):                                   # stars
+        c = next(ids)
+        for _ in range(int(rng.integers(1, 7))):
+            e = (c, next(ids))
+            edges.append(e if rng.random() < 0.5 else e[::-1])
+    for _ in range(4):                                   # chains
+        path = [next(ids) for _ in range(int(rng.integers(2, 16)))]
+        edges += list(zip(path, path[1:]))
+    for _ in range(3):                                   # cycles
+        ring = [next(ids) for _ in range(int(rng.integers(3, 9)))]
+        edges += list(zip(ring, ring[1:] + ring[:1]))
+    x = next(ids)
+    edges += [(x, x), (edges[0][0], edges[0][0])]        # self-loops
+    for k in rng.choice(len(edges), 6, replace=False):   # dup + reversed
+        edges += [edges[k], edges[k][::-1]]
+    edges += [(next(ids), None), (None, edges[1][1])]    # NULL endpoints
+    return [edges[k] for k in rng.permutation(len(edges))]
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_dedup_clusters_driver_and_loop_agree(spark, monkeypatch, seed):
+    """The driver pass and the distributed loop return the same rows
+    (exceptAll both ways), NULL endpoints and an empty graph included.
+    A budget of -1 edges forces the loop even for the empty graph."""
+    import baloo_spark.operators.dedup as D
+    graphs = [_cc_graph(seed)] + ([[]] if seed == 0 else [])
+    for edges in graphs:
+        pairs = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
+        fast = D.dedup_clusters(pairs)
+        with monkeypatch.context() as m:
+            m.setattr(D, "_CC_DRIVER_MAX_EDGES", -1)
+            slow = D.dedup_clusters(pairs)
+        assert fast.schema == slow.schema
+        assert fast.exceptAll(slow).count() == 0
+        assert slow.exceptAll(fast).count() == 0
+
+
+def test_drop_near_duplicates_deep_chain(spark):
+    """A 31-node chain deeper than max_iters=20, ids out of path order:
+    the driver pass still keeps only the component minimum."""
+    from baloo_spark.operators.dedup import drop_near_duplicates
+    docs = spark.createDataFrame([(i,) for i in range(31)], "doc_id LONG")
+    path = [0] + list(range(30, 0, -1))
+    pairs = spark.createDataFrame(list(zip(path, path[1:])),
+                                  "id_a LONG, id_b LONG")
+    got = sorted(r["doc_id"] for r in
+                 drop_near_duplicates(docs, pairs).collect())
+    assert got == [0]
+
+
+def test_dedup_clusters_loop_raises_unconverged(spark, monkeypatch):
+    """The distributed loop must not return labels that were still
+    changing in its last round: a 31-node chain needs 30 rounds."""
+    import baloo_spark.operators.dedup as D
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(30)],
+                                  "id_a LONG, id_b LONG")
+    with pytest.raises(RuntimeError, match="max_iters=20"):
+        D.dedup_clusters(pairs, max_iters=20)
+
+
 def test_sessionize_stream_matches_batch(spark, tmp_path):
     # native session_window streaming face == lag+cumsum batch face
     # (complete output mode so open sessions emit too)
@@ -780,6 +848,27 @@ def test_drop_near_duplicates_high_dup_rate(spark):
     assert "UnresolvedHint" not in analyzed
     got = sorted(r["doc_id"] for r in out.collect())
     assert got == [5 * k for k in range(10)]
+
+
+def test_drop_near_duplicates_build_jobs(spark):
+    """The 10-star graph above is solved on the driver: building the
+    result takes at most 4 Spark jobs (min-label propagation took 28)."""
+    from baloo_spark.operators.dedup import drop_near_duplicates
+    docs = spark.createDataFrame([(i,) for i in range(50)], "doc_id LONG")
+    pairs = spark.createDataFrame(
+        [(5 * k, 5 * k + j) for k in range(10) for j in range(1, 5)],
+        "id_a LONG, id_b LONG")
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-build-jobs", "drop_near_duplicates build")
+    try:
+        out = drop_near_duplicates(docs, pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup-build-jobs")
+    assert len(jobs) <= 4, jobs
+    assert sorted(r["doc_id"] for r in out.collect()) == \
+        [5 * k for k in range(10)]
 
 
 def test_ivf_cell_faces_agree(spark, emb, monkeypatch):

@@ -295,6 +295,24 @@ def test_series_pct_change_and_rank(spark):
         df["x"].rank(method="median")
 
 
+@pytest.mark.parametrize("op", [
+    lambda d: d.rolling(5, min_periods=2).sum(),
+    lambda d: d.expanding(2).sum(),
+    lambda d: d.ewm(alpha=0.5, min_periods=2).mean(),
+], ids=["rolling", "expanding", "ewm"])
+def test_frame_window_keeps_sort_column_order(bl, op):
+    """A frame window overwrites the column the frame is sorted by with
+    its windowed value; the rows must stay in the source order (the
+    NaN head first), not move to the windowed values' order."""
+    rng = np.random.default_rng(5)
+    pdf = pd.DataFrame({"k": rng.permutation(12).astype(np.int64),
+                        "x": rng.random(12)})
+    got = op(bl.DataFrame.from_pandas(pdf).sort_values("k")).to_pandas()
+    want = op(pdf.sort_values("k")).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got.reset_index(drop=True), want,
+                                  check_dtype=False)
+
+
 def test_series_rolling_pandas_parity(bl):
     """Series.rolling facade: sum/mean/count/var/std over the prefix
     machinery match pandas, incl. NaN-in-window, min_periods (count

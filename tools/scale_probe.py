@@ -3,8 +3,7 @@ operator families at 1x/4x/16x data to show how wall-clock grows.
 Evidence for the 100 TB design questions: does the partial agg carry
 the shuffle? does the join scale with its inputs, not its output
 skew? does top-k prune map-side? does the partition-safe shift avoid
-the single-partition collapse? does the minhash fold stay a narrow
-map? Output rewrites SCALING.md.
+the single-partition collapse? Output rewrites SCALING.md.
 
 Usage: python tools/scale_probe.py [sf_dir]
 """
@@ -30,7 +29,6 @@ def main():
     from pyspark.sql import functions as F
 
     from baloo_spark.plans.ordinal import with_boundary_shift
-    from baloo_spark.operators.dedup import minhash_signatures
     from baloo_spark.session import get_session
     spark = get_session("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -69,9 +67,6 @@ def main():
         w = replicate(li.select("l_orderkey", "l_extendedprice"), m)
         return with_boundary_shift(w, "l_extendedprice", 1,
                                    order_by=None)
-
-    def minhash(m):
-        return minhash_signatures(replicate(docs, m), k=64)
 
     def prefix_sum(m):
         # global running sum through the parallel prefix scan — the
@@ -114,9 +109,6 @@ def main():
         ("global shift (boundary-carry)", shift,
          "per-partition lag + kilobyte edge-row carry; no "
          "single-partition collapse at any multiple"),
-        ("minhash signatures k=64", minhash,
-         "one narrow map stage (shingle fold), no shuffle at all - "
-         "scales with pure scan+CPU"),
         ("global running sum (prefix scan)", prefix_sum,
          "partition-local scans + per-partition totals combined on "
          "the driver; contrast with the naive global window below"),
