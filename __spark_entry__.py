@@ -1731,7 +1731,7 @@ def _missing_ops(spark, sf):
     limit_direction='forward') over the value column with NULLs
     fabricated at click rows, global order (ts, event_id) — the
     boundary-carried-neighbors scan (plans/ordinal.
-    with_interp_neighbors), replayed by DuckDB with ignore-nulls
+    with_interp_neighbors_multi), replayed by DuckDB with ignore-nulls
     window lookups of the nearest neighbors and the same line
     formula. Rounded to 4 on both sides (fp noise guard)."""
     from baloo_spark.streaming.events import load_events

@@ -23,6 +23,14 @@ from .dtypes import np_dtype_of, spark_type_of
 from .series import _AGG_FNS, _IDX, Series, _is_numeric
 
 _RESERVED = {ORD_COL, "__pos__", "__pid__", "__mid__"}
+# how DataFrame._shift_combine joins a column's current value with its
+# shifted one
+_SHIFT_COMBINE = {
+    "shift": lambda cur, prev: prev,
+    "diff": lambda cur, prev: cur.cast("double") - prev.cast("double"),
+    "pct_change": lambda cur, prev: Series._ieee_div(
+        cur.cast("double"), prev.cast("double")) - 1,
+}
 
 
 def _eval_to_sql(src: str, local_dict=None, columns=None,
@@ -676,7 +684,15 @@ class DataFrame:
         layout pass (plans/ordinal.py:with_interp_neighbors_multi):
         one range layout, one Window stage, one per-partition stats
         collect, one broadcast join, regardless of column count.
-        Same pandas edge semantics as :meth:`Series.interpolate`."""
+        Each missing position gets the value on the line between its
+        nearest non-null neighbors; a missing edge extends its one
+        neighbor, gated by ``limit_direction`` like pandas (default
+        'forward'); ``limit`` bounds how many consecutive NULLs fill,
+        counted from the donor side per direction."""
+        return self._interpolate(self._numeric_cols(), method, limit,
+                                 limit_direction)
+
+    def _interpolate(self, cols, method, limit, limit_direction):
         if method != "linear":
             raise ValueError(
                 f"only method='linear' is supported, got {method!r}")
@@ -685,22 +701,20 @@ class DataFrame:
             raise ValueError(
                 "limit_direction must be 'forward', 'backward' or "
                 f"'both', got {limit_direction!r}")
-        from ..plans.ordinal import with_interp_neighbors_multi
-        num = self._numeric_cols()
-        if not num:
+        if limit is not None and limit < 1:
+            raise ValueError("limit must be >= 1")
+        if not cols:
             return self
+        from ..plans.ordinal import with_interp_neighbors_multi
         pairs = [(c, a) for c, a in (self._order or [])
                  if c in self._sdf.columns]
         tags = {str(i): F.col(c).cast("double")
-                for i, c in enumerate(num)}
+                for i, c in enumerate(cols)}
         sdf = with_interp_neighbors_multi(
             self._sdf, tags, order_exprs(pairs) or None)
         fp = F.col("__ip__")
-        sel = []
-        for c in self._sdf.columns:
-            if c not in num:
-                sel.append(F.col(c))
-        for i, c in enumerate(num):
+        res = {}
+        for i, c in enumerate(cols):
             t = str(i)
             v = F.col(f"__v_{t}__")
             p, n = F.col(f"__iprev_{t}__"), F.col(f"__inext_{t}__")
@@ -714,9 +728,10 @@ class DataFrame:
                    else n.isNotNull() & ((n["p"] - fp) <= limit))
             elig = {"forward": fwd, "backward": bwd,
                     "both": fwd | bwd}[limit_direction]
-            sel.append(F.when(v.isNotNull(), v)
-                       .otherwise(F.when(elig, cand)).alias(c))
-        return self._replace_sdf(sdf.select(*sel))
+            res[c] = F.when(v.isNotNull(), v).otherwise(F.when(elig, cand))
+        return self._replace_sdf(sdf.select(*[
+            res[c].alias(c) if c in res else F.col(c)
+            for c in self._sdf.columns]))
 
     def corrwith(self, other: "DataFrame") -> Series:
         """Column-wise Pearson correlation with ``other``'s matching
@@ -1216,65 +1231,75 @@ class DataFrame:
         every column rides ONE shared boundary-carry pass (same
         machinery as :meth:`shift`, never a global window); string
         columns dropped."""
-        return self._shift_combine(
-            periods,
-            lambda cur, prev: cur.cast("double") - prev.cast("double"))
+        return self._shift_combine(self._numeric_cols(), periods, "diff")
 
     def pct_change(self, periods: int = 1) -> "DataFrame":
-        """Fractional change vs ``periods`` rows back (x/x_prev - 1),
-        one shared boundary-carry pass across all numeric columns."""
-        return self._shift_combine(
-            periods,
-            lambda cur, prev: cur.cast("double")
-            / prev.cast("double") - 1)
+        """Fractional change vs ``periods`` rows back (x/x_prev - 1,
+        IEEE division: a zero divisor gives ±inf like pandas), one
+        shared boundary-carry pass across all numeric columns."""
+        return self._shift_combine(self._numeric_cols(), periods,
+                                   "pct_change")
 
-    def _shift_combine(self, periods: int, combine) -> "DataFrame":
+    def _shift_combine(self, cols, periods: int, how: str,
+                       fill_value=None) -> "DataFrame":
+        """``cols`` shifted by ``periods`` along the logical order and
+        combined with their current value by ``_SHIFT_COMBINE[how]``,
+        all in ONE boundary-carry pass (plans/ordinal.
+        with_boundary_shifts): one layout, one donor collect, never a
+        global window, never one pass per column. ``fill_value``
+        fills only the positions the shift introduced, never NULLs
+        already in the data: a constant marker column rides the same
+        carry to tell the two apart."""
         from ..plans.ordinal import with_boundary_shifts
-        num = self._numeric_cols()
-        sdf = self._sdf
-        order = order_exprs(self._order or [], sdf.columns)
-        out = with_boundary_shifts(
-            sdf, {f"__sh_{c}__": F.col(c) for c in num}, periods,
-            order_by=order or None)
-        for c in num:
-            out = out.withColumn(
-                c, combine(F.col(c), F.col(f"__sh_{c}__"))) \
-                .drop(f"__sh_{c}__")
-        return DataFrame._make(out, self._index_cols, num, self._order)
+        order = order_exprs(self._order or [], self._sdf.columns)
+        shifts = {f"__sh_{c}__": F.col(c) for c in cols}
+        if fill_value is not None:
+            shifts["__smk__"] = F.lit(1)
+        out = with_boundary_shifts(self._sdf, shifts, periods,
+                                   order_by=order or None)
+        combine = _SHIFT_COMBINE[how]
+        res = {}
+        for c in cols:
+            prev = F.col(f"__sh_{c}__")
+            if fill_value is not None:
+                prev = F.when(F.col("__smk__").isNull(),
+                              F.lit(fill_value)).otherwise(prev)
+            res[c] = combine(F.col(c), prev)
+        out = out.withColumns(res).drop(*shifts)
+        return DataFrame._make(out, self._index_cols, list(cols),
+                               self._order)
 
-    def _cumulative(self, kind: str) -> "DataFrame":
-        """All numeric columns in ONE prefix-scan pass (shared
-        layout, donor collect, and carry merge — never one pass per
-        column, never a global window); per-column pandas NaN gating
-        (missing positions stay missing, the accumulator skips
-        them)."""
+    def _cumulative(self, cols, kind: str) -> "DataFrame":
+        """``cols`` in ONE prefix-scan pass (shared layout, donor
+        collect, and carry merge — never one pass per column, never a
+        global window); per-column pandas NaN gating: a missing
+        position stays missing while the accumulator skips it
+        ([1, nan, 2].cumsum() -> [1, nan, 3])."""
         from ..plans.ordinal import with_prefix_aggs
-        num = self._numeric_cols()
         order = order_exprs(self._order or [], self._sdf.columns)
         specs = {f"__cum_{c}__":
                  ((F.col(c).cast("double") if kind in ("sum", "prod")
-                   else F.col(c)), kind) for c in num}
+                   else F.col(c)), kind) for c in cols}
         out = with_prefix_aggs(self._sdf, specs, order or None)
-        for c in num:
-            out = out.withColumn(
-                c, F.when(F.col(c).isNull(), F.lit(None))
-                .otherwise(F.col(f"__cum_{c}__"))) \
-                .drop(f"__cum_{c}__")
-        return DataFrame._make(out, self._index_cols, num, self._order)
+        out = out.withColumns({
+            c: F.when(F.col(c).isNotNull(), F.col(f"__cum_{c}__"))
+            for c in cols}).drop(*specs)
+        return DataFrame._make(out, self._index_cols, list(cols),
+                               self._order)
 
     def cumsum(self) -> "DataFrame":
         """Cumulative sum of every numeric column — one shared
         prefix-scan pass (pandas ``DataFrame.cumsum``)."""
-        return self._cumulative("sum")
+        return self._cumulative(self._numeric_cols(), "sum")
 
     def cumprod(self) -> "DataFrame":
-        return self._cumulative("prod")
+        return self._cumulative(self._numeric_cols(), "prod")
 
     def cummin(self) -> "DataFrame":
-        return self._cumulative("min")
+        return self._cumulative(self._numeric_cols(), "min")
 
     def cummax(self) -> "DataFrame":
-        return self._cumulative("max")
+        return self._cumulative(self._numeric_cols(), "max")
 
     def _truthy(self, c):
         from pyspark.sql import types as T
@@ -2993,43 +3018,33 @@ class DataFrame:
                    min_periods, adjust, ignore_na,
                    _times_column(times, self._sdf, self._lineage))
 
-    def shift(self, periods: int = 1) -> "DataFrame":
+    def shift(self, periods: int = 1, fill_value=None) -> "DataFrame":
         """All data columns moved by ``periods`` along the logical
-        order, NULLs at the edge (pandas ``DataFrame.shift``; the
-        index stays put, like pandas). Every column rides ONE shared
-        boundary-carry pass (plans/ordinal.with_boundary_shifts) —
-        one layout, one donor collect, never a global window, and
-        never one pass per column."""
-        from ..plans.ordinal import with_boundary_shifts
-        sdf = self._sdf
-        order = order_exprs(self._order or [], sdf.columns)
-        cols = {f"__sh_{c}__": F.col(c) for c in self._data_cols}
-        out = with_boundary_shifts(sdf, cols, periods,
-                                   order_by=order or None)
-        for c in self._data_cols:
-            out = out.withColumn(c, F.col(f"__sh_{c}__")) \
-                .drop(f"__sh_{c}__")
-        return DataFrame._make(out, self._index_cols, self._data_cols,
-                               self._order)
+        order, NULLs (or ``fill_value``) at the edge (pandas
+        ``DataFrame.shift``; the index stays put, like pandas). Every
+        column rides ONE shared boundary-carry pass
+        (:meth:`_shift_combine`)."""
+        return self._shift_combine(self._data_cols, periods, "shift",
+                                   fill_value)
 
     def with_lag(self, col: str, order_by, partition_by=None, offset: int = 1,
                  name: str | None = None, diff: bool = False) -> "DataFrame":
         """Previous-row value (lag) or difference vs previous row over
         an explicit order, optionally per partition group. With no
         partition keys the lag runs through the boundary-carry scheme
-        (:func:`~baloo_spark.plans.ordinal.with_boundary_shift`, same
-        machinery as Series.shift) instead of a global window."""
+        (:func:`~baloo_spark.plans.ordinal.with_boundary_shifts`, same
+        machinery as :meth:`shift`) instead of a global window."""
         from pyspark.sql import Window
         order_by = [order_by] if isinstance(order_by, str) else list(order_by)
         partition_by = ([partition_by] if isinstance(partition_by, str)
                         else list(partition_by or []))
         name = name or (f"{col}_diff" if diff else f"{col}_lag")
         if not partition_by:
-            from ..plans.ordinal import with_boundary_shift
+            from ..plans.ordinal import with_boundary_shifts
             ob = [F.col(c).asc() if isinstance(c, str) else c
                   for c in order_by]
-            out = with_boundary_shift(self._sdf, F.col(col), offset,
-                                      order_by=ob, name=name)
+            out = with_boundary_shifts(self._sdf, {name: F.col(col)},
+                                       offset, order_by=ob)
             if diff:
                 out = out.withColumn(name, F.col(col) - F.col(name))
             return DataFrame._make(out, self._index_cols,
@@ -3199,69 +3214,82 @@ class DataFrame:
 
     def rank(self, method: str = "average", ascending: bool = True,
              pct: bool = False) -> "DataFrame":
-        """Per-column global rank (pandas ``DataFrame.rank``): every
-        numeric column runs the same partition-safe scheme as
-        ``Series.rank`` — one ordered two-pass dense-ordinal layout
-        per column (the cost pandas pays as one argsort per column),
-        value-partitioned tie windows, never an unpartitioned
-        window. All columns ride ONE chained lazy plan (the whole
-        frame flows through each layout); NULLs stay unranked, and
-        pct divides by per-column non-null counts gathered in one
+        """Per-column global rank (pandas ``DataFrame.rank``, float64):
+        every numeric column runs the same partition-safe scheme, all
+        in ONE chained lazy plan (the whole frame flows through each
+        layout); never an unpartitioned window.
+
+        - 'min'/'max'/'average': a dense ordinal over the values
+          (nulls last), then that statistic of the tie group's
+          consecutive ordinals in a window partitioned BY the value.
+        - 'first': the dense ordinal breaks ties by LOGICAL position
+          (a dense position over the frame order, or the row labels
+          when there is none), never by the physical layout.
+        - 'dense': the ordinal among the DISTINCT values (NULL
+          last), equi-joined back on the value.
+
+        NULLs stay unranked (na_option='keep'); ``pct`` divides by the
+        per-column non-null (dense: distinct) counts, gathered in one
         broadcast aggregate."""
+        return self._rank(self._numeric_cols(), method, ascending, pct)
+
+    def _rank(self, cols, method, ascending, pct) -> "DataFrame":
         from pyspark.sql import Window
 
         from ..plans.ordinal import with_dense_ordinal
         if method not in ("average", "min", "max", "first", "dense"):
-            raise ValueError(f"unknown rank method {method!r}")
-        num = self._numeric_cols()
-        if not num:
+            raise ValueError(
+                f"unsupported rank method: {method!r} (supported: "
+                f"'average', 'min', 'max', 'first', 'dense')")
+        if not cols:
             return self
         sdf = self._sdf
-        order = order_exprs(self._order or [], sdf.columns)
-        sdf = with_dense_ordinal(sdf, order or None, name="__rkp__")
-        from functools import reduce
-        for c in num:
+        tie = []
+        if method == "first":
+            order = order_exprs(self._order or [], sdf.columns)
+            if not order and ORD_COL in sdf.columns:
+                order = [F.col(ORD_COL).asc()]
+            sdf = with_dense_ordinal(sdf, order or None, name="__rkp__")
+            tie = [F.col("__rkp__").asc()]
+        for c in cols:
             vo = (F.col(c).asc_nulls_last() if ascending
                   else F.col(c).desc_nulls_last())
             if method == "dense":
-                dv = sdf.select(F.col(c).alias("__dv__")) \
-                    .filter(F.col("__dv__").isNotNull()).distinct()
+                # NULL is one more distinct value, ordered last: every
+                # row finds its key in the inner join
                 keyed = with_dense_ordinal(
-                    dv, [F.col("__dv__").asc() if ascending
-                         else F.col("__dv__").desc()], name="__dr__")
-                sdf = sdf.join(keyed,
-                               F.col(c).eqNullSafe(F.col("__dv__")),
-                               "left")
+                    sdf.select(c).distinct(), [vo], name="__dr__") \
+                    .withColumnRenamed(c, "__dv__")
+                sdf = sdf.join(keyed, F.col(c).eqNullSafe(F.col("__dv__")))
                 r = (F.col("__dr__") + 1).cast("double")
                 sdf = sdf.withColumn(f"__rk_{c}__", F.when(
                     F.col(c).isNotNull(), r)).drop("__dv__", "__dr__")
                 continue
-            sdf = with_dense_ordinal(
-                sdf, [vo, F.col("__rkp__").asc()], name="__rn__")
+            sdf = with_dense_ordinal(sdf, [vo, *tie], name="__rn__")
             w = Window.partitionBy(F.col(c))
-            if method == "first":
-                r = (F.col("__rn__") + 1).cast("double")
-            elif method == "min":
-                r = (F.min("__rn__").over(w) + 1).cast("double")
-            elif method == "max":
-                r = (F.max("__rn__").over(w) + 1).cast("double")
-            else:
-                r = (F.avg("__rn__").over(w) + 1).cast("double")
+            # ranks within a tie group are consecutive ordinals, so
+            # min/max/average of the group's ordinals give the three
+            # pandas tie policies from the same window
+            r = {"first": F.col("__rn__"),
+                 "min": F.min("__rn__").over(w),
+                 "max": F.max("__rn__").over(w),
+                 "average": F.avg("__rn__").over(w)}[method]
             sdf = sdf.withColumn(f"__rk_{c}__", F.when(
-                F.col(c).isNotNull(), r)).drop("__rn__")
+                F.col(c).isNotNull(), (r + 1).cast("double"))) \
+                .drop("__rn__")
         if pct:
             dens = sdf.agg(*[
                 (F.count_distinct(F.col(c)) if method == "dense"
                  else F.count(F.col(c))).cast("double")
-                .alias(f"__den_{c}__") for c in num])
+                .alias(f"__den_{c}__") for c in cols])
             sdf = sdf.crossJoin(F.broadcast(dens))
-            for c in num:
+            for c in cols:
                 sdf = sdf.withColumn(
                     f"__rk_{c}__",
                     F.col(f"__rk_{c}__") / F.col(f"__den_{c}__")) \
                     .drop(f"__den_{c}__")
-        nset = set(num)
-        sel = [(F.col(f"__rk_{cc}__").alias(cc) if cc in nset
+        ranked = set(cols)
+        sel = [(F.col(f"__rk_{cc}__").alias(cc) if cc in ranked
                 else F.col(cc)) for cc in self._sdf.columns]
         return DataFrame._make(sdf.select(*sel), self._index_cols,
                                self._data_cols, self._order)

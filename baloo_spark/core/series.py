@@ -20,11 +20,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.ordinal import ORD_COL, with_dense_ordinal
-from .ordering import order_expr, order_exprs, rev_order_exprs
+from .ordering import order_expr, order_exprs
 from .dtypes import np_dtype_of, spark_type_of
 
 _VAL = "__val__"
 _IDX = "__index__"
+# the value column of a Series lifted into a one-column DataFrame
+# (Series._as_frame): the frame faces' ordered transforms and windows
+# run over it, and Series._unwrap reads the result back out of it
+_LIFT = "__lift__"
 # isin value-list budget: literal IN-set below, broadcast-join above
 _ISIN_LITERAL_MAX = 1024
 # small-side gate of the time-offset rolling window's as-of lookup
@@ -181,6 +185,24 @@ class Series:
         self._colexpr = new._colexpr
         self._index_cols = list(new._index_cols)
         self._order = new._order
+
+    def _as_frame(self):
+        """This Series as a one-column DataFrame, by projection only:
+        ``_sdf.withColumn(_LIFT, _colexpr)`` with the Series' index and
+        order — no dense ordinal, no job. Every source column survives
+        next to the value column."""
+        from .frame import DataFrame
+        return DataFrame._make(self._sdf.withColumn(_LIFT, self._colexpr),
+                               self._index_cols, [_LIFT], self._order)
+
+    def _unwrap(self, res) -> "Series":
+        """The ``_LIFT`` column of the frame result ``res`` as a Series
+        named like this one, tagged for the DataFrame.__setitem__ adopt
+        fast path when ``res`` kept this Series' order."""
+        out = Series._make(res._sdf, F.col(_LIFT), res._index_cols,
+                           self.name, res._order)
+        return (out._tag_rowpar(self._sdf) if res._order == self._order
+                else out)
 
     def _select(self, alias=None):
         """Project index cols + the value expression as a Spark DF."""
@@ -1738,20 +1760,18 @@ class Series:
                             [("__cnt__", ascending)])
 
     def ffill(self, limit: int | None = None) -> "Series":
-        """Forward-fill (pandas ``Series.ffill``) — the frame's
-        partition-safe carry machinery on this one column."""
-        return self._fill(forward=True, limit=limit)
+        """Forward-fill (pandas ``Series.ffill``; ``pad`` is its
+        alias) — the frame's partition-safe carry machinery on this
+        one column."""
+        return self._unwrap(self._as_frame()._directional_fill(
+            [_LIFT], None, True, limit))
 
     def bfill(self, limit: int | None = None) -> "Series":
-        return self._fill(forward=False, limit=limit)
+        return self._unwrap(self._as_frame()._directional_fill(
+            [_LIFT], None, False, limit))
 
-    def pad(self, limit: int | None = None) -> "Series":
-        """pandas alias of :meth:`ffill`."""
-        return self.ffill(limit=limit)
-
-    def backfill(self, limit: int | None = None) -> "Series":
-        """pandas alias of :meth:`bfill`."""
-        return self.bfill(limit=limit)
+    pad = ffill
+    backfill = bfill
 
     def items(self):
         """Iterate (label, value) pairs (pandas ``Series.items``) —
@@ -1858,69 +1878,14 @@ class Series:
         return Series._make(out, F.col(alias), [_IDX],
                             self.name, [(POS_COL, True)])
 
-    def _fill(self, forward: bool, limit):
-        from .frame import DataFrame
-        sdf = self._sdf.withColumn("__fv__", self._colexpr)
-        tmp = DataFrame._make(sdf, self._index_cols, ["__fv__"],
-                              self._order)
-        out = tmp._directional_fill(["__fv__"], None, forward, limit)
-        return Series._make(out._sdf, F.col("__fv__"),
-                            self._index_cols, self.name, self._order)
-
     def interpolate(self, method: str = "linear", limit: int | None = None,
                     limit_direction: str | None = None) -> "Series":
         """Linear interpolation of NULL runs (pandas
-        ``Series.interpolate``): each missing position gets the value
-        on the line between its nearest non-null neighbors; a missing
-        edge (only one neighbor) extends that neighbor's value, gated
-        by ``limit_direction`` exactly like pandas (default
-        'forward': leading NULLs stay NULL, trailing ones extend).
-        ``limit`` bounds how many consecutive NULLs fill, counted
-        from the donor side per direction.
-
-        Partition-safe at scale: ONE fused pass
-        (plans/ordinal.py:with_interp_neighbors) builds the dense
-        position plus both (position, value) neighbor donors from a
-        single range layout — one Window stage, one per-partition
-        stats collect, one broadcast join; driver state is
-        n_partitions rows. (The naive dense-ordinal + two ffill
-        carries paid three layouts — measured 30s vs this at 16x
-        sf0.1.)
-        """
-        if method != "linear":
-            raise ValueError(
-                f"only method='linear' is supported, got {method!r}")
-        limit_direction = limit_direction or "forward"
-        if limit_direction not in ("forward", "backward", "both"):
-            raise ValueError(
-                "limit_direction must be 'forward', 'backward' or "
-                f"'both', got {limit_direction!r}")
-        if limit is not None and limit < 1:
-            raise ValueError("limit must be >= 1")
-        from ..plans.ordinal import with_interp_neighbors
-        pairs = [(c, a) for c, a in (self._order or [])
-                 if c in self._sdf.columns]
-        sdf = with_interp_neighbors(
-            self._sdf, self._colexpr.cast("double"),
-            order_exprs(pairs) if pairs else None)
-        sdf = sdf.withColumnRenamed("__v__", "__iv__")
-        p, n, fp = F.col("__iprev__"), F.col("__inext__"), F.col("__ip__")
-        interp = (p["v"] + (n["v"] - p["v"]) * (fp - p["p"])
-                  / (n["p"] - p["p"]))
-        cand = F.when(p.isNotNull() & n.isNotNull(), interp) \
-            .otherwise(F.coalesce(p["v"], n["v"]))
-        fwd = (p.isNotNull() if limit is None
-               else p.isNotNull() & ((fp - p["p"]) <= limit))
-        bwd = (n.isNotNull() if limit is None
-               else n.isNotNull() & ((n["p"] - fp) <= limit))
-        elig = {"forward": fwd, "backward": bwd,
-                "both": fwd | bwd}[limit_direction]
-        res = F.when(F.col("__iv__").isNotNull(), F.col("__iv__")) \
-            .otherwise(F.when(elig, cand))
-        sdf = sdf.withColumn("__ires__", res) \
-            .drop("__iv__", "__iprev__", "__inext__", "__ip__")
-        return Series._make(sdf, F.col("__ires__"), self._index_cols,
-                            self.name, self._order)
+        ``Series.interpolate``) — the one-column face of
+        :meth:`DataFrame.interpolate`, with its pandas edge, ``limit``
+        and ``limit_direction`` semantics (one fused layout pass)."""
+        return self._unwrap(self._as_frame()._interpolate(
+            [_LIFT], method, limit, limit_direction))
 
     def repeat(self, repeats: int) -> "Series":
         """Each value repeated ``repeats`` times consecutively
@@ -2002,9 +1967,7 @@ class Series:
         limit(1) violation probe — never a global window."""
         if self.hasnans:
             return False
-        sh = self.shift(1)
-        cur = Series._make(sh._sdf, self._colexpr, self._index_cols,
-                           self.name, sh._order)
+        cur, sh = self._and_shifted(1)
         bad = (cur < sh) if increasing else (cur > sh)
         sdf, a = bad._select()
         # the head row's shifted neighbor is NULL -> comparison NULL
@@ -2167,10 +2130,18 @@ class Series:
         output keeps the source column, so both sides share one sdf
         and the stat is a single aggregate after the one-pass
         boundary-carry shift."""
-        sh = self.shift(lag)
-        orig = Series._make(sh._sdf, self._colexpr, self._index_cols,
-                            self.name, sh._order)
+        orig, sh = self._and_shifted(lag)
         return orig._pairwise(sh, F.corr)
+
+    def _and_shifted(self, periods: int):
+        """This Series and its shift by ``periods`` over ONE plan (the
+        shift keeps every source column). The value is pinned under
+        its own column first: the shift rewrites the lifted column,
+        which this Series' expression may itself read."""
+        sh = Series._make(self._sdf.withColumn("__cur__", self._colexpr),
+                          F.col("__cur__"), self._index_cols, self.name,
+                          self._order).shift(periods)
+        return sh._with_col(F.col("__cur__")), sh
 
     def nunique(self, dropna: bool = True, approx: bool = False):
         """Distinct-value count (eager scalar, pandas flavor).
@@ -2251,63 +2222,24 @@ class Series:
     def shift(self, periods: int = 1, fill_value=None) -> "Series":
         """Values moved by ``periods`` along the logical order, NULLs
         (or ``fill_value``) at the edge (pandas flavor; engine
-        extension).
-
-        Partition-safe at any scale: within-partition lag/lead plus a
-        driver-side boundary carry of n_partitions x |periods| edge
-        values (plans/ordinal.py:with_boundary_shift) — never a global
+        extension). The one-column face of :meth:`DataFrame.shift`:
+        one partition-safe boundary-carry pass, never a global
         single-partition window. Supply a meaningful sort
         (sort_values/sort_index) upstream; an unordered scan shifts in
-        the current layout order. ``fill_value`` fills only the
-        positions the shift introduced, never nulls that were already
-        in the data — a constant marker column rides the same
-        one-pass carry to tell the two apart."""
-        sdf = self._sdf
-        order = order_exprs(self._order or [], sdf.columns)
-        if fill_value is None:
-            from ..plans.ordinal import with_boundary_shift
-            out = with_boundary_shift(sdf, self._colexpr, periods,
-                                      order_by=order or None)
-        else:
-            from ..plans.ordinal import with_boundary_shifts
-            out = with_boundary_shifts(
-                sdf, {"__shift__": self._colexpr, "__smk__": F.lit(1)},
-                periods, order_by=order or None)
-            out = out.withColumn(
-                "__shift__",
-                F.when(F.col("__smk__").isNull(), F.lit(fill_value))
-                .otherwise(F.col("__shift__"))).drop("__smk__")
-        return Series._make(out, F.col("__shift__"), self._index_cols,
-                            self.name, self._order)._tag_rowpar(sdf)
+        the current layout order."""
+        return self._unwrap(self._as_frame()._shift_combine(
+            [_LIFT], periods, "shift", fill_value))
 
     def diff(self, periods: int = 1) -> "Series":
-        """self - self.shift(periods) in one window pass."""
-        shifted = self.shift(periods)
-        return shifted._with_col(
-            self._colexpr.cast("double")
-            - F.col("__shift__").cast("double"))
-
-    def _cumulative(self, kind: str) -> "Series":
-        sdf = self._sdf
-        order = order_exprs(self._order or [], sdf.columns)
-        from ..plans.ordinal import with_prefix_aggs
-        v = (self._colexpr.cast("double") if kind in ("sum", "prod")
-             else self._colexpr)
-        out = with_prefix_aggs(sdf, {"__cum__": (v, kind)},
-                               order or None)
-        # pandas emits NaN AT a missing position while still skipping
-        # it in the running accumulation ([1, nan, 2].cumsum() ->
-        # [1, nan, 3]) — gate the output, not the accumulator (r5)
-        cum = F.when(self._colexpr.isNull(), F.lit(None)) \
-            .otherwise(F.col("__cum__"))
-        return Series._make(out, cum, self._index_cols,
-                            self.name, self._order)._tag_rowpar(sdf)
+        """self - self.shift(periods) in one boundary-carry pass."""
+        return self._unwrap(self._as_frame()._shift_combine(
+            [_LIFT], periods, "diff"))
 
     def cumsum(self) -> "Series":
         """Cumulative sum along the logical order (pandas flavor;
-        engine extension). Partition-safe at any scale: a parallel
-        prefix scan (plans/ordinal.with_prefix_aggs), never a global
-        single-partition window — same machinery as :meth:`shift`.
+        engine extension). Partition-safe at any scale: the frame
+        face's parallel prefix scan (plans/ordinal.with_prefix_aggs),
+        never a global single-partition window.
 
         Examples
         --------
@@ -2316,43 +2248,33 @@ class Series:
         >>> df.sort_values("k")["x"].cumsum().to_pandas().tolist()
         [1.0, 3.0, 6.0]
         """
-        return self._cumulative("sum")
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "sum"))
 
     def cumprod(self) -> "Series":
-        return self._cumulative("prod")
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "prod"))
 
     def cummin(self) -> "Series":
-        return self._cumulative("min")
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "min"))
 
     def cummax(self) -> "Series":
-        return self._cumulative("max")
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "max"))
 
     def pct_change(self, periods: int = 1) -> "Series":
         """Fractional change vs the value ``periods`` back along the
-        logical order: x/x.shift(periods) - 1 in one boundary-carry
-        window pass (pandas flavor; engine extension)."""
-        shifted = self.shift(periods)
-        return shifted._with_col(
-            self._colexpr.cast("double")
-            / F.col("__shift__").cast("double") - 1)
+        logical order, x/x.shift(periods) - 1 with IEEE division
+        (x/0 -> ±inf), in one boundary-carry pass (pandas flavor;
+        engine extension)."""
+        return self._unwrap(self._as_frame()._shift_combine(
+            [_LIFT], periods, "pct_change"))
 
     def rolling(self, window, min_periods: int | None = None,
                 center: bool = False):
         """Fixed-size window aggregations along the logical order
-        (pandas ``Series.rolling``) — the one-column face of the window
-        engine (core/window.py). Trailing ``.sum() .mean() .count()
-        .var() .std()`` compose from partition-safe prefix scans
-        (``rolling(i) = prefix(i) - prefix(i - window)``): the prefixes
-        and their window-ago twins come from ONE range layout and ONE
-        collect — never a global single-partition window. Order
-        statistics (``min max median quantile skew kurt sem rank
-        apply``) and every ``center=True`` window ride the bounded
-        local-carry pass (plans/ordinal.with_rolling_locals): one
-        frozen layout, a two-sided donor carry, pandas' C kernels in
-        one Arrow pass.
-        A str/timedelta ``window`` ('2h', '30min') rolls a TIME
-        offset over the datetime index instead — one prefix pass +
-        one as-of join (core/window._time_roll_multi)."""
+        (pandas ``Series.rolling``) — the one-column face of
+        :meth:`DataFrame.rolling` on the window engine (core/window.py):
+        trailing moments from one prefix pass, order statistics and
+        ``center=True`` from one bounded local-carry pass, a
+        str/timedelta ``window`` ('2h') over the datetime index."""
         from .window import Rolling, SeriesWindow
         return SeriesWindow(self, Rolling, window=window,
                             min_periods=min_periods, center=center)
@@ -2365,17 +2287,10 @@ class Series:
         .cov() .corr()``. Exactly one of com/span/halflife/alpha
         selects the decay (pandas conversions: alpha = 1/(1+com) =
         2/(span+1) = 1-exp(-ln2/halflife)); ``times=`` with a
-        Timedelta halflife selects the time-decay mean.
-
-        The EWM recurrence is NOT a prefix sum (its closed form
-        overflows r^-t), so it runs as a dedicated two-pass decayed
-        carry scan — partition-local pandas C kernels plus an
-        n_partitions driver carry (core/window.Ewm over
-        plans/ordinal.with_ewm_stats_multi for adjust=True's decayed
-        sums; with_ewm_noadjust_stats for the recursive streaming-EMA
-        form, whose carry is the kernel state merged through
-        per-observation affine maps); never a global window, never a
-        per-row Python loop."""
+        Timedelta halflife selects the time-decay mean. The
+        one-column face of :meth:`DataFrame.ewm`: a two-pass decayed
+        carry scan, never a global window, never a per-row Python
+        loop."""
         from .window import Ewm, SeriesWindow, _times_column
         return SeriesWindow(self, Ewm, com=com, span=span,
                             halflife=halflife, alpha=alpha,
@@ -2386,97 +2301,20 @@ class Series:
     def expanding(self, min_periods: int = 1):
         """Growing-window aggregations from the first row (pandas
         ``Series.expanding``): ``.sum() .mean() .count() .min()
-        .max() .var() .std() .sem() .skew() .kurt()``. Every one
-        composes from partition-safe prefix scans
-        (plans/ordinal.with_prefix_aggs) — unlike the fixed rolling
-        window, min/max ARE prefix-decomposable here, so each is ONE
-        scan pass with a kilobyte driver carry, never a global
-        window (core/window.py)."""
+        .max() .var() .std() .sem() .skew() .kurt()`` — the one-column
+        face of :meth:`DataFrame.expanding`, one prefix-scan pass."""
         from .window import Rolling, SeriesWindow
         return SeriesWindow(self, Rolling, window=None,
                             min_periods=min_periods)
 
     def rank(self, method: str = "average", ascending: bool = True,
              pct: bool = False) -> "Series":
-        """Global value rank (pandas flavor, 1-based; default method
-        'average' like pandas). Methods map to
-        the partition-safe schemes of ``DataFrame.with_rank``:
-        'first' -> dense ordinal + 1 (row_number), 'min'/'max'/
-        'average' (pandas' default; float ranks) -> that statistic of
-        the tie group's consecutive ordinals, 'dense' -> ordinal
-        among distinct values.
-
-        NULLs are left unranked (NULL rank — pandas na_option='keep'):
-        values sort nulls-LAST so non-null ranks are 1..n_non_null
-        regardless of direction. 'first' breaks ties by LOGICAL
-        position (a fresh dense positional column over the series
-        order), not physical partition layout — the ordinal alone is
-        layout-dependent under ties, so ranks would differ across
-        repartitions of the same frame."""
-        from pyspark.sql import Window
-
-        from ..plans.ordinal import POS_COL, with_dense_ordinal
-
-        def _val_order(alias):
-            return (F.col(alias).asc_nulls_last() if ascending
-                    else F.col(alias).desc_nulls_last())
-
-        if method == "first":
-            sdf, alias = self._ordered_sdf("__rv__")
-            ob = [_val_order(alias), F.col(POS_COL).asc()]
-            out = with_dense_ordinal(sdf, ob, name="__rank__")
-            out = out.withColumn(
-                "__rank__",
-                F.when(F.col(alias).isNotNull(),
-                       (F.col("__rank__") + 1).cast("long"))) \
-                .drop(POS_COL)
-        elif method in ("min", "average", "max"):
-            sdf, alias = self._select("__rv__")
-            out = with_dense_ordinal(sdf, [_val_order(alias)],
-                                     name="__rn__")
-            w = Window.partitionBy(F.col(alias))
-            # ranks within a tie group are consecutive ordinals, so
-            # min/max/average of the group's ordinals give the three
-            # pandas tie policies from the same window
-            if method == "min":
-                agg = (F.min("__rn__").over(w) + 1).cast("long")
-            elif method == "max":
-                agg = (F.max("__rn__").over(w) + 1).cast("long")
-            else:       # pandas' default: mean rank of the tie group
-                agg = (F.avg("__rn__").over(w) + 1).cast("double")
-            out = (out.withColumn(
-                "__rank__", F.when(F.col(alias).isNotNull(), agg))
-                   .drop("__rn__"))
-        elif method == "dense":
-            sdf, alias = self._select("__rv__")
-            distinct = sdf.select(alias).distinct()
-            keyed = with_dense_ordinal(distinct, [_val_order(alias)],
-                                       name="__dr__")
-            cond = sdf[alias].eqNullSafe(keyed[alias])
-            out = sdf.join(keyed, cond).drop(keyed[alias])
-            out = (out.withColumn(
-                "__rank__",
-                F.when(F.col(alias).isNotNull(),
-                       (F.col("__dr__") + 1).cast("long")))
-                   .drop("__dr__"))
-        else:
-            raise ValueError(
-                f"unsupported rank method: {method!r} (supported: "
-                f"'average', 'min', 'max', 'first', 'dense')")
-        if pct:
-            # pandas pct=True: rank / #non-null (dense: / #distinct
-            # non-null). A one-row aggregate broadcast-cross-joined in
-            # — lazy and scale-safe, never a global window partition.
-            denom = (F.count_distinct(F.col(alias)) if method == "dense"
-                     else F.count(F.col(alias)))
-            cnt = out.agg(denom.cast("double").alias("__nn__"))
-            out = out.crossJoin(F.broadcast(cnt))
-            out = out.withColumn(
-                "__rank__",
-                (F.col("__rank__") / F.col("__nn__")).cast("double")) \
-                .drop("__nn__")
-        return Series._make(out, F.col("__rank__"), self._index_cols,
-                            self.name, self._order)._tag_rowpar(self._sdf)
+        """Global value rank (pandas flavor, 1-based float64; default
+        method 'average' like pandas) — the one-column face of
+        :meth:`DataFrame.rank`. NULLs are left unranked
+        (na_option='keep'); 'first' breaks ties by logical position."""
+        return self._unwrap(self._as_frame()._rank(
+            [_LIFT], method, ascending, pct))
 
     def quantile(self, q, approx: bool = False,
                  accuracy: int = 10000,

@@ -42,14 +42,13 @@ from ..plans.ordinal import (ORD_COL, POS_COL, _as_col, with_prefix_aggs,
 from . import series as _series
 from .frame import DataFrame
 from .ordering import order_exprs
-from .series import Series
+from .series import _LIFT, Series
 
 # budget of the single-partition pandas pass (global expanding and
 # time-offset order statistics): rows x columns per call
 _PANDAS_PASS_MAX_ROWS = 10_000_000
-# the lifted Series' value column, and the second column of a pair
-_TMP = "__win__"
-_TMP_Y = "__win_y__"
+# the second column of a lifted Series pair (the first is _LIFT)
+_LIFT_Y = "__lift_y__"
 
 
 def _gated(e, gate, mp: int):
@@ -1176,32 +1175,22 @@ def _times_column(times, sdf, lineage=()):
 
 class SeriesWindow:
     """Series face of every window: the Series is lifted into a
-    one-column frame by projection only
-    (``sr._sdf.withColumn(_TMP, sr._colexpr)`` with the Series' index
-    and order — no dense ordinal, no job), the engine runs over that
-    column, and each frame result unwraps to a Series named like
-    ``sr``. Every source column survives, so a result in the source
-    order is tagged as a row-preserving derivation of ``sr._sdf``
-    (the DataFrame.__setitem__ adopt fast path)."""
+    one-column frame by projection only (:meth:`Series._as_frame` —
+    no dense ordinal, no job), the engine runs over that column, and
+    each frame result unwraps to a Series named like ``sr``
+    (:meth:`Series._unwrap`, which tags a result in the source order
+    for the DataFrame.__setitem__ adopt fast path)."""
 
     def __init__(self, sr, engine, **params):
         self._sr = sr
         self._engine = lambda frame, cols: engine(frame, cols, **params)
-        lifted = DataFrame._make(sr._sdf.withColumn(_TMP, sr._colexpr),
-                                 sr._index_cols, [_TMP], sr._order)
-        self._win = self._engine(lifted, [_TMP])
-
-    def _unwrap(self, res):
-        sr = self._sr
-        out = Series._make(res._sdf, F.col(_TMP), res._index_cols,
-                           sr.name, res._order)
-        return out._tag_rowpar(sr._sdf) if res._order == sr._order else out
+        self._win = self._engine(sr._as_frame(), [_LIFT])
 
     def __getattr__(self, name):
         if name.startswith("_"):
             raise AttributeError(name)
         stat = getattr(self._win, name)
-        return lambda *args, **kw: self._unwrap(stat(*args, **kw))
+        return lambda *args, **kw: self._sr._unwrap(stat(*args, **kw))
 
     def agg(self, func):
         """pandas ``.agg``: a str delegates to the named statistic; a
@@ -1267,10 +1256,10 @@ class SeriesWindow:
             a, b = F.col("__pa__"), F.col("__pb__")
             idx = [c for c in sr._index_cols if c in sdf.columns]
             order, res_order = [(POS_COL, True)], sr._order
-        pair = DataFrame._make(sdf.withColumns({_TMP: a, _TMP_Y: b}), idx,
-                               [_TMP, _TMP_Y], order)
-        res = self._engine(pair, [_TMP, _TMP_Y])._pair(stat, **kw)
-        return Series._make(res._sdf, F.col(_TMP), idx, sr.name,
+        pair = DataFrame._make(sdf.withColumns({_LIFT: a, _LIFT_Y: b}), idx,
+                               [_LIFT, _LIFT_Y], order)
+        res = self._engine(pair, [_LIFT, _LIFT_Y])._pair(stat, **kw)
+        return Series._make(res._sdf, F.col(_LIFT), idx, sr.name,
                             res_order)
 
     def cov(self, other, **kw):

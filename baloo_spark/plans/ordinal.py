@@ -97,18 +97,6 @@ def local_table(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema=schema)
 
 
-def with_boundary_shift(sdf: DataFrame, value_col, periods: int,
-                        order_by: list | None = None,
-                        name: str = "__shift__") -> DataFrame:
-    """Partition-safe global shift (lag/lead by ``periods``): adds
-    ``name`` holding the value ``periods`` rows earlier (positive) or
-    later (negative) in the global order, NULL past the edge. See
-    :func:`with_boundary_shifts` (this is its single-column face).
-    """
-    return with_boundary_shifts(sdf, {name: value_col}, periods,
-                                order_by)
-
-
 def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
                          order_by: list | None = None) -> DataFrame:
     """Partition-safe global shift of SEVERAL columns by the same
@@ -1345,25 +1333,11 @@ def with_ewm_mean_times_multi(sdf: DataFrame, values: dict,
                        [f"__ewmt_{tg}__" for tg in tags])
 
 
-def with_interp_neighbors(sdf: DataFrame, value_col, order_by,
-                          pos: str = "__ip__", prev: str = "__iprev__",
-                          nxt: str = "__inext__") -> DataFrame:
-    """Single-column face of :func:`with_interp_neighbors_multi`
-    (kept for the Series surface). See the multi variant for the
-    design and measurements."""
-    out = with_interp_neighbors_multi(sdf, {"0": value_col},
-                                      order_by, pos=pos)
-    return (out.withColumnRenamed("__v_0__", "__v__")
-            .withColumnRenamed("__iprev_0__", prev)
-            .withColumnRenamed("__inext_0__", nxt))
-
-
 def with_interp_neighbors_multi(sdf: DataFrame, values: dict,
-                                order_by,
-                                pos: str = "__ip__") -> DataFrame:
+                                order_by) -> DataFrame:
     """Everything linear interpolation needs from ONE range layout,
     for ANY number of columns at once: a dense global position
-    ``pos`` plus per-tag ``__v_{t}__`` (the value),
+    ``__ip__`` plus per-tag ``__v_{t}__`` (the value),
     ``__iprev_{t}__`` / ``__inext_{t}__`` (nearest previous/next
     non-null (position, value) structs).
 
@@ -1461,7 +1435,7 @@ def with_interp_neighbors_multi(sdf: DataFrame, values: dict,
                 F.struct(F.col(fill_p).alias("p"),
                          F.col(fill_v).alias("v"))))
 
-    out = out.withColumn(pos, F.col("__off__") + F.col("__rn__") - 1)
+    out = out.withColumn("__ip__", F.col("__off__") + F.col("__rn__") - 1)
     drop = ["__off__", "__rn__", "__mid__", "__pid__"]
     for t in tags:
         out = (out

@@ -800,6 +800,41 @@ def test_frame_shift_all_columns_one_pass(bl):
             w = [None if not isinstance(v, str) and v != v else v
                  for v in want[c].tolist()]
             assert g == w, (p_, c, g, w)
+    # fill_value fills only the positions the shift introduced, never a
+    # NULL that was already in the data
+    d = {"a": np.array([1., np.nan, 3., 4.])}
+    for p_ in (2, -1):
+        got = bl.DataFrame(d).shift(p_, fill_value=0.0).to_pandas()["a"]
+        want = pd.DataFrame(d).shift(p_, fill_value=0.0)["a"]
+        np.testing.assert_array_equal(got.to_numpy(dtype=float),
+                                      want.to_numpy(), err_msg=str(p_))
+
+
+def test_frame_rank_builds_like_series_face(bl, spark):
+    """DataFrame.rank builds no more Spark jobs than Series.rank on the
+    same frame: only method='first' needs the logical-position
+    layout that breaks its ties."""
+    import numpy as np
+    n = 200
+    rng = np.random.RandomState(5)
+    df = bl.DataFrame({"k": rng.permutation(n).astype(np.int64),
+                       "y": np.round(rng.randn(n), 1)}).sort_values("k")
+    sc = spark.sparkContext
+
+    def build_jobs(op, group):
+        sc.setJobGroup(group, group)
+        try:
+            op()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for m in ("average", "min", "max", "first", "dense"):
+        series = build_jobs(lambda: df["y"].rank(method=m), f"rank-s-{m}")
+        frame = build_jobs(lambda: df[["y"]].rank(method=m),
+                           f"rank-f-{m}")
+        assert frame <= series, (m, frame, series)
 
 
 def test_frame_skew_kurt_rows(bl):

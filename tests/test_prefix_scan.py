@@ -6,7 +6,7 @@ schemes must equal the naive single-partition window bit-for-bit
 Covers the round-3 rewiring: with_running / with_lag / with_rank /
 ffill / bfill with NO partition keys, plus asof_join with NO by-keys —
 previously all ScaleWarning'd single-partition fallbacks, now
-with_prefix_aggs / with_last_non_null / with_boundary_shift /
+with_prefix_aggs / with_last_non_null / with_boundary_shifts /
 with_dense_ordinal compositions (plans/ordinal.py).
 """
 
@@ -818,6 +818,9 @@ def test_frame_interpolate_shared_pass(bl):
                 assert g[c].fillna(-9).tolist() == \
                     w[c].fillna(-9).tolist(), (c, ld, lim)
             assert g["s"].tolist() == w["s"].tolist()
+    for frame in (df, pdf[["a", "b"]]):
+        with pytest.raises(ValueError):
+            frame.interpolate(limit=0)
 
 
 def test_grouped_ewm_batched_kernel_holdover(bl):

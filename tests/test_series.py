@@ -281,6 +281,47 @@ def test_rank_leaves_nulls_unranked(bl):
                     assert g is not None and float(g) == w, (method, asc)
 
 
+@pytest.mark.parametrize("method",
+                         ["average", "min", "max", "first", "dense"])
+def test_rank_assigned_back_to_frame_sorted_by_data_column(bl, method):
+    """A Series ranked out of a frame sorted by one of its DATA columns
+    and assigned back: every row gets its own rank (the sort column
+    must survive the rank), for both pct flavors, as float64 like
+    pandas."""
+    import pandas as pd
+    pdf = pd.DataFrame({"k": [3, 1, 2, 0, 5, 4],
+                        "x": [10., 40., 20., 30., 20., np.nan]})
+    for pct in (False, True):
+        df = bl.DataFrame(pdf).sort_values("k")
+        df["r"] = df["x"].rank(method=method, pct=pct)
+        got = df.to_pandas()
+        want = pdf.sort_values("k")
+        want = want.assign(r=want["x"].rank(method=method, pct=pct))
+        assert got["k"].tolist() == want["k"].tolist()
+        np.testing.assert_allclose(
+            got["r"].to_numpy(dtype=float),
+            want["r"].to_numpy(dtype=float), equal_nan=True,
+            err_msg=f"pct={pct}")
+    ranks = bl.Series(np.array([3., 1., 3.])).rank(method=method)
+    assert ranks.to_pandas().dtype == np.float64
+
+
+def test_pct_change_zero_divisor_is_ieee(bl):
+    """pandas divides in IEEE floats: x/0 - 1 is ±inf, 0/0 - 1 is NaN
+    — on the Series face and the frame face alike."""
+    import pandas as pd
+    vals = {"a": [0., 1., 0., 2., -3., 0.], "b": [1., -1., 0., 0., 0., 0.]}
+    pdf = pd.DataFrame(vals)
+    df = bl.DataFrame({k: np.array(v) for k, v in vals.items()})
+    got = df["a"].pct_change().to_pandas().to_numpy(dtype=float)
+    np.testing.assert_array_equal(got, pdf["a"].pct_change().to_numpy())
+    gotf = df.pct_change().to_pandas()
+    for c in vals:
+        np.testing.assert_array_equal(
+            gotf[c].to_numpy(dtype=float),
+            pdf.pct_change()[c].to_numpy(), err_msg=c)
+
+
 def test_rank_average_and_max_match_pandas(bl):
     import math
 

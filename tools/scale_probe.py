@@ -28,7 +28,7 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from pyspark.sql import functions as F
 
-    from baloo_spark.plans.ordinal import with_boundary_shift
+    from baloo_spark.plans.ordinal import with_boundary_shifts
     from baloo_spark.session import get_session
     spark = get_session("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -65,8 +65,8 @@ def main():
         # naive lag-over-global-order plan would collapse to ONE
         # partition and flatline at 16x
         w = replicate(li.select("l_orderkey", "l_extendedprice"), m)
-        return with_boundary_shift(w, "l_extendedprice", 1,
-                                   order_by=None)
+        return with_boundary_shifts(w, {"__shift__": "l_extendedprice"},
+                                    1, order_by=None)
 
     def prefix_sum(m):
         # global running sum through the parallel prefix scan — the
@@ -460,7 +460,7 @@ def main():
               "distributed rows; duplicate-stamp detection is one "
               "limit-1 hash-agg gate_", ""]
 
-    # interpolate: ONE fused layout pass (with_interp_neighbors) —
+    # interpolate: ONE fused layout pass (with_interp_neighbors_multi):
     # construction is partly eager like EWM, so the operator is
     # rebuilt inside the timing loop
     lines += ["## interpolate (fused single-layout neighbor pass)", ""]
