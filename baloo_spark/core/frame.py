@@ -1277,9 +1277,13 @@ class DataFrame:
         ([1, nan, 2].cumsum() -> [1, nan, 3])."""
         from ..plans.ordinal import with_prefix_aggs
         order = order_exprs(self._order or [], self._sdf.columns)
-        specs = {f"__cum_{c}__":
-                 ((F.col(c).cast("double") if kind in ("sum", "prod")
-                   else F.col(c)), kind) for c in cols}
+        integral = {f.name for f in self._sdf.schema.fields
+                    if isinstance(f.dataType, T.IntegralType)}
+        # integer sums stay int64 and wrap like numpy's
+        specs = {f"__cum_{c}__": (
+            F.col(c) if kind in ("min", "max") else F.col(c).cast(
+                "long" if kind == "sum" and c in integral else "double"),
+            kind) for c in cols}
         out = with_prefix_aggs(self._sdf, specs, order or None)
         out = out.withColumns({
             c: F.when(F.col(c).isNotNull(), F.col(f"__cum_{c}__"))
@@ -1720,7 +1724,8 @@ class DataFrame:
         ``partition_by`` keeps the fill per group (one keyed shuffle);
         without it the global carry-forward runs through the
         partition-safe boundary-carry scheme
-        (:func:`~baloo_spark.plans.ordinal.with_last_non_null`) — no
+        (the ``'last'`` kind of
+        :func:`~baloo_spark.plans.ordinal.with_prefix_aggs`) — no
         single-partition collapse either way. ``limit`` caps the fill
         distance in rows (pandas): the carry rides a (position,
         value) struct and donors farther than ``limit`` are
@@ -1882,7 +1887,7 @@ class DataFrame:
         from pyspark.sql import Window
 
         from ..plans.ordinal import (POS_COL, with_dense_ordinal,
-                                     with_last_non_null)
+                                     with_prefix_aggs)
         subset = list(subset) if subset is not None else list(self._data_cols)
         partition_by = ([partition_by] if isinstance(partition_by, str)
                         else list(partition_by or []))
@@ -1901,19 +1906,19 @@ class DataFrame:
             ob = (order_exprs(pairs) if forward
                   else rev_order_exprs(pairs))
             if limit is None:
-                sdf = with_last_non_null(
-                    sdf, {c: F.col(c) for c in subset}, ob)
+                sdf = with_prefix_aggs(
+                    sdf, {c: (F.col(c), "last") for c in subset}, ob)
             else:
                 # bounded fill: carry (fresh dense position, value)
                 # structs — null where the value is null so the carry
                 # skips them — and discard donors beyond `limit` rows
                 sdf = with_dense_ordinal(sdf, order_exprs(pairs),
                                          name="__fp__")
-                sdf = with_last_non_null(sdf, {
-                    f"__lf_{c}__": F.when(
+                sdf = with_prefix_aggs(sdf, {
+                    f"__lf_{c}__": (F.when(
                         F.col(c).isNotNull(),
                         F.struct(F.col("__fp__").alias("p"),
-                                 F.col(c).alias("v")))
+                                 F.col(c).alias("v"))), "last")
                     for c in subset},
                     [F.col("__fp__").asc() if forward
                      else F.col("__fp__").desc()])

@@ -914,13 +914,14 @@ class Series:
         same contract as ``DataFrame.__setitem__``) — then the same
         single aggregate. Rows where either side is NULL are skipped
         by the JVM corr/covar aggregate, matching pandas' pairwise
-        NaN handling."""
+        NaN handling. An undefined statistic (Spark's NULL, e.g. fewer
+        than two valid pairs) is NaN, as in pandas."""
         if not isinstance(other, Series):
             raise TypeError(f"expected Series, got {type(other).__name__}")
         sdf, a, b = self._pair_sdf(other)
         row = sdf.agg(fn(a.cast("double"), b.cast("double"))
                       .alias("v")).first()
-        return row["v"]
+        return float("nan") if row["v"] is None else row["v"]
 
     def _pair_sdf(self, other: "Series"):
         """The aligned (sdf, a_col, b_col) triple behind every

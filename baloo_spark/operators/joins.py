@@ -71,7 +71,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
 
     Scale: with ``by`` keys the carry window partitions on them (one
     shuffle, state per key). With NO ``by`` keys each carry goes
-    through :func:`~baloo_spark.plans.ordinal.with_last_non_null`
+    through the ``'last'`` kind of
+    :func:`~baloo_spark.plans.ordinal.with_prefix_aggs`
     — range-partitioned by time, partition-local carry windows, and a
     one-row-per-partition boundary table prefix-carried on the driver
     — so a global as-of never collapses to a single partition.
@@ -128,8 +129,9 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
             return df.select(
                 "*", *[F.last(e, ignorenulls=True).over(w).alias(name)
                        for name, e in vals.items()])
-        from ..plans.ordinal import with_last_non_null
-        return with_last_non_null(df, vals, ob)
+        from ..plans.ordinal import with_prefix_aggs
+        return with_prefix_aggs(
+            df, {n: (e, "last") for n, e in vals.items()}, ob)
 
     on_type = dict(unioned.dtypes).get(on)
 

@@ -1,28 +1,42 @@
-"""Scale-safe dense row ordinals.
+"""Scale-safe ordered operations: dense row ordinals, global running
+aggregates, shifts, rolling windows and EWM scans.
 
 The reference's arrays are positional (SURVEY.md §1.4): slicing,
-head/tail, iloc and RangeIndex all need a stable 0..n-1 row position.
-A naive Spark translation is ``row_number() OVER (ORDER BY ...)`` —
-which shuffles the entire table into ONE partition and dies at 100 TB.
+head/tail, iloc and RangeIndex all need a stable 0..n-1 row position,
+and cumsum/shift/ffill/rolling/ewm need the global row order. A naive
+Spark translation is ``agg() OVER (ORDER BY ...)`` — which shuffles
+the entire table into ONE partition and dies at 100 TB.
 
-We instead use the classic two-pass partition-offset scheme:
+Every scheme here is instead the same two-pass partition-carry scan:
 
-1. (optional) range-partition + sort within partitions by the order
-   keys, so partition i holds a contiguous, globally ordered slice;
-2. count rows per partition (a tiny job: one long per partition);
-3. ordinal = cumulative offset of the partition + row position within
-   the partition.
+1. ``_range_layout``: (optionally) range-partition + sort within
+   partitions by the order keys, so partition i holds a contiguous,
+   globally ordered slice; stamp row ids (``monotonically_increasing_id``,
+   increasing within each partition) and partition ids, and freeze the
+   layout with a localCheckpoint so both passes see it identically;
+2. pass 1: one collect of each partition's END state — kilobytes at
+   thousands of partitions;
+3. ONE driver fold, ``_pid_fold``: walk the ends in partition-id
+   (= global) order — reversed for lead and backward walks — with the
+   scheme's associative merge; the acc before a partition is its
+   exclusive carry;
+4. pass 2: each partition merges its carry into partition-local work
+   (a pid-partitioned window, or a ``mapInPandas``), so no stage ever
+   collapses to one partition.
 
-Within-partition positions come from ``monotonically_increasing_id``
-(increasing within each partition by construction) so no window
-function is needed at all for the unordered case; for the ordered
-case a window PARTITIONED BY partition id keeps every partition's
-work local (no single-partition collapse).
+The schemes differ only in their end state and merge:
 
-The input is eagerly local-checkpointed so the partition layout is
-identical in both passes (Spark gives no cross-job determinism
-guarantee otherwise); checkpoint blocks free on GC, unlike persist()
-entries which sit in the CacheManager until explicitly unpersisted.
+- ``with_prefix_aggs`` (kinds ``sum``, ``count``, ``prod``, ``min``,
+  ``max`` and ``last``, the newest non-null value): partition totals,
+  merged per kind with None as the identity; ``with_dense_ordinal`` is
+  its exclusive running count of rows;
+- the k-row edge walk (``_edge_runs``) behind ``with_boundary_shifts``,
+  ``with_prefix_aggs_shifted`` and ``with_rolling_locals``: each
+  partition's k donor values nearest its boundary, merged by
+  ``(acc + vals)[-k:]``;
+- ``with_interp_neighbors_multi``: row counts plus the nearest non-null
+  (position, value) from each side;
+- the EWM families, on ``_carry_scan``.
 
 Every table built on the driver between the passes (partition
 offsets, boundary carries, prefix carries, the iloc gather list) goes
@@ -31,21 +45,19 @@ to Spark through ``local_table``: one Arrow table that plans as a
 ``createDataFrame`` would run ``parallelize`` plus a pickled
 PythonRDD stage for a table of a few rows.
 
-Recurrences that are not prefix sums — the EWM families — run on ONE
-carry-scan driver, ``_carry_scan``:
+Recurrences that are not prefix sums — the EWM families — run both
+passes as ``mapInPandas`` on ONE carry-scan driver, ``_carry_scan``:
 
 1. freeze one range layout (``_range_layout``) over the input plus the
    family's helper columns;
-2. pass 1, a ``mapInPandas``: each partition folds its non-empty
-   batches into ``fresh()`` with ``scan(batch, state, False)`` and
-   emits its end state as one row with its partition id;
-3. collect those n_partitions rows (kilobytes at thousands of
-   partitions) and fold them on the driver in partition-id (= global)
-   order, ``acc = combine(acc, end)`` from ``acc = fresh()``; the acc
-   before a partition is that partition's carry;
-4. pass 2, a ``mapInPandas``: each partition seeds its state with its
-   carry on its first batch and appends the columns that
-   ``scan(batch, state, True)`` returns; helper columns are dropped.
+2. pass 1: each partition folds its non-empty batches into ``fresh()``
+   with ``scan(batch, state, False)`` and emits its end state as one
+   row with its partition id;
+3. collect those n_partitions rows and fold them with
+   ``_pid_fold(ends, combine, fresh())``;
+4. pass 2: each partition seeds its state with its carry on its first
+   batch and appends the columns that ``scan(batch, state, True)``
+   returns; helper columns are dropped.
 
 A family supplies only ``fresh`` (a flat list of floats: the
 zero-carry state, which is also the exported end tuple), the batch
@@ -97,6 +109,73 @@ def local_table(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema=schema)
 
 
+def _pid_fold(ends: dict, merge, acc, reverse: bool = False):
+    """The driver fold under every two-pass scheme: visit each
+    partition's end state ``ends[pid]`` in partition-id (= global)
+    order, descending with ``reverse`` (the lead and backward walks),
+    folding ``acc = merge(acc, end)`` from the given ``acc``. Returns
+    ({pid: the partition's exclusive carry, i.e. the acc before it},
+    the acc after the last partition)."""
+    carries = {}
+    for pid in sorted(ends, reverse=reverse):
+        carries[pid] = acc
+        acc = merge(acc, ends[pid])
+    return carries, acc
+
+
+def _skip_nulls(merges: list):
+    """A merge of end tuples, ``merges[i]`` at position i, where None
+    is every merge's identity: an empty or all-null partition
+    contributes nothing."""
+    return lambda acc, end: tuple(
+        a if e is None else e if a is None else m(a, e)
+        for m, a, e in zip(merges, acc, end))
+
+
+def _edge_runs(runs: dict, k: int, reverse: bool = False) -> dict:
+    """The k-row edge walk: ``runs[pid]`` lists a partition's donor
+    values nearest-its-boundary LAST in walk order (its last rows for
+    a forward walk; its first rows, reversed, for a ``reverse`` one).
+    Returns pid -> the at most k values just beyond the partition's
+    boundary, in the same order. Every carried value is within k rows
+    of its own partition's edge, so k donors per partition suffice,
+    even when partitions hold fewer than k rows."""
+    return _pid_fold(runs, lambda acc, vals: (acc + vals)[-k:], [],
+                     reverse)[0]
+
+
+def _donor_runs(rows: list, rn: str, k: int, names: list) -> dict:
+    """pid -> the ``names`` tuples of the collected donor ``rows``
+    whose boundary rank ``rn`` is at most k, farthest from the
+    boundary first (the order :func:`_edge_runs` takes)."""
+    runs: dict = {}
+    for r in sorted(rows, key=lambda r: -r[rn]):
+        if r[rn] <= k:
+            runs.setdefault(r["__pid__"], []).append(
+                tuple(r[n] for n in names))
+    return runs
+
+
+def _edge_carry(sdf: DataFrame, runs: dict, k: int, reverse: bool,
+                edge_w, types: dict) -> DataFrame:
+    """``sdf`` plus ``__ern__`` (row_number over ``edge_w``: the rank
+    from the boundary the carry crosses) and the carry columns
+    ``types`` (name -> type), set on the k edge rows: the r-th edge
+    row takes the value k-r+1 rows beyond the boundary. The carry is
+    a ``local_table`` of at most n_partitions x k rows, broadcast."""
+    from pyspark.sql import types as T
+
+    rows = [(int(pid), r, *run[len(run) - k + r - 1])
+            for pid, run in _edge_runs(runs, k, reverse).items()
+            for r in range(max(1, k - len(run) + 1), k + 1)]
+    carry = local_table(sdf.sparkSession, rows, T.StructType(
+        [T.StructField("__pid__", T.IntegerType()),
+         T.StructField("__ern__", T.IntegerType())]
+        + [T.StructField(n, t) for n, t in types.items()]))
+    return (sdf.withColumn("__ern__", F.row_number().over(edge_w))
+            .join(F.broadcast(carry), ["__pid__", "__ern__"], "left"))
+
+
 def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
                          order_by: list | None = None) -> DataFrame:
     """Partition-safe global shift of SEVERAL columns by the same
@@ -106,12 +185,12 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
     collapses the table into one partition. Here the window is
     partitioned by physical partition id (all work stays local) and
     only the |periods| rows at each partition boundary take their
-    value from a *carry list* collected on the driver: every
-    partition's |periods| edge rows — n_partitions x |periods| rows by
-    construction, kilobytes even at thousands of partitions — then
-    shipped back as a ``local_table`` and broadcast-joined. Two jobs,
-    no data-sized shuffle beyond the (optional) range layout, no
-    Python worker, identical results to the global window.
+    value from a *carry list* built on the driver by the k-row edge
+    walk (:func:`_edge_carry`) from every partition's |periods| edge
+    rows — n_partitions x |periods| rows by construction, kilobytes
+    even at thousands of partitions. Two jobs, no data-sized shuffle
+    beyond the (optional) range layout, no Python worker, identical
+    results to the global window.
     All columns share the layout, the donor collect, and the carry
     join — callers shifting N columns (e.g. the global rolling
     window's prefix pair) pay ONE pass, not N.
@@ -120,8 +199,6 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
     keeps the current layout order (ingest order), mirroring
     :func:`with_dense_ordinal`.
     """
-    from pyspark.sql import types as T
-
     prepared = {o: _as_col(c) for o, c in cols.items()}
     if periods == 0:
         out = sdf
@@ -129,127 +206,60 @@ def with_boundary_shifts(sdf: DataFrame, cols: dict, periods: int,
             out = out.withColumn(o, c)
         return out
     k = abs(periods)
-    sdf = _range_layout(sdf.select("*", *[c.alias(f"__sv_{o}__")
+    sv = {o: f"__sv_{o}__" for o in prepared}
+    sdf = _range_layout(sdf.select("*", *[c.alias(sv[o])
                                           for o, c in prepared.items()]),
                         order_by)
 
     fwd = periods > 0
     w_in = Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
-    # rows whose donor lives in another partition: the first k rows of
-    # each partition for lag, the last k for lead
-    edge_w = w_in if fwd else Window.partitionBy("__pid__") \
-        .orderBy(F.col("__mid__").desc())
-    edge_rn = F.row_number().over(edge_w)
-    # donor rows: the k rows nearest the *other* boundary
-    donor_w = Window.partitionBy("__pid__").orderBy(
-        F.col("__mid__").desc() if fwd else F.col("__mid__").asc())
+    w_out = Window.partitionBy("__pid__").orderBy(F.col("__mid__").desc())
+    # edge rows (donor in another partition): the first k rows of each
+    # partition for lag, the last k for lead; donors: the k rows
+    # nearest the *other* boundary
+    edge_w, donor_w = (w_in, w_out) if fwd else (w_out, w_in)
     donors = (sdf.withColumn("__drn__", F.row_number().over(donor_w))
               .where(F.col("__drn__") <= k)
-              .select("__pid__", "__drn__",
-                      *[f"__sv_{o}__" for o in prepared]).collect())
-    by_pid: dict = {}
-    for r in donors:
-        by_pid.setdefault(r["__pid__"], {})[r["__drn__"]] = tuple(
-            r[f"__sv_{o}__"] for o in prepared)
-
-    # walk partitions in global order, carrying the k value-tuples
-    # adjacent to each boundary; every carried tuple is within k rows
-    # of its own partition's edge, so the collected donors always
-    # suffice (even when partitions hold fewer than k rows)
-    carry_rows = []
-    run: list = []  # the k tuples just before (lag) / after (lead) the
-    #                 partition being visited, nearest-boundary-LAST
-    pid_iter = sorted(by_pid) if fwd else sorted(by_pid, reverse=True)
-    for pid in pid_iter:
-        m = len(run)
-        for r in range(1, k + 1):
-            i = m - (k - r + 1)  # r-th edge row needs the value
-            #                      k-r+1 positions beyond the boundary
-            if i >= 0:
-                carry_rows.append((int(pid), r, *run[i]))
-        part = by_pid[pid]
-        # donor_rn=1 is the row nearest the boundary; run keeps
-        # nearest-boundary-last ordering
-        vals = [part[d] for d in sorted(part, reverse=True)]
-        run = (run + vals)[-k:]
-
-    carry_schema = T.StructType(
-        [T.StructField("__pid__", T.IntegerType()),
-         T.StructField("__ern__", T.IntegerType())]
-        + [T.StructField(f"__cv_{o}__", sdf.schema[f"__sv_{o}__"].dataType)
-           for o in prepared])
-    carry_df = local_table(sdf.sparkSession, carry_rows, carry_schema)
-
-    out = (sdf.withColumn("__ern__", edge_rn)
-           .join(F.broadcast(carry_df), ["__pid__", "__ern__"], "left"))
+              .select("__pid__", "__drn__", *sv.values()).collect())
+    out = _edge_carry(
+        sdf, _donor_runs(donors, "__drn__", k, list(sv.values())), k,
+        not fwd, edge_w,
+        {f"__cv_{o}__": sdf.schema[sv[o]].dataType for o in prepared})
     for o in prepared:
-        local = (F.lag(f"__sv_{o}__", periods).over(w_in) if fwd
-                 else F.lead(f"__sv_{o}__", -periods).over(w_in))
+        local = (F.lag(sv[o], periods).over(w_in) if fwd
+                 else F.lead(sv[o], -periods).over(w_in))
         out = out.withColumn(
             o, F.when(F.col("__ern__") <= k, F.col(f"__cv_{o}__"))
             .otherwise(local))
     return out.drop("__pid__", "__mid__", "__ern__",
-                    *[f"__cv_{o}__" for o in prepared],
-                    *[f"__sv_{o}__" for o in prepared])
+                    *[f"__cv_{o}__" for o in prepared], *sv.values())
 
 
 def with_dense_ordinal(sdf: DataFrame, order_by: list | None = None,
                        name: str = ORD_COL) -> DataFrame:
-    """Return ``sdf`` with a dense 0..n-1 long column ``name``.
+    """Return ``sdf`` with a dense 0..n-1 long column ``name``: the
+    exclusive running row count in the global order.
 
     ``order_by``: list of pyspark Columns (or column names) defining
     the global order; None = current ingest/partition order.
     """
-    if order_by:
-        # AQE-coalescible range layout (see _range_layout)
-        sdf = sdf.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-
-    sdf = sdf.withColumn("__mid__", F.monotonically_increasing_id())
-    sdf = sdf.withColumn("__pid__", F.spark_partition_id())
-    # localCheckpoint freezes the partition layout both passes must
-    # agree on, WITHOUT registering a CacheManager entry: persist()
-    # here leaked one cached plan per positional op for the session's
-    # lifetime (never unpersisted), while checkpoint blocks are freed by
-    # the ContextCleaner when the DataFrame is garbage-collected. Not
-    # fault-tolerant to executor loss — an ephemeral positional op
-    # re-runs from source on failure, which is the right trade.
-    # eager=False (r12): pass 1's count-collect below is the first
-    # consumer and materializes the blocks inside its own job — same
-    # frozen layout, one fewer eager job/pass per ordinal
-    sdf = sdf.localCheckpoint(eager=False)
-
-    # Pass 1: per-partition counts -> cumulative offsets (tiny driver-side list).
-    rows = sdf.groupBy("__pid__").count().collect()
-    counts = {r["__pid__"]: r["count"] for r in rows}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    off_df = local_table(
-        sdf.sparkSession, [(int(p), int(o)) for p, o in offsets.items()],
-        "__pid__ INT, __off__ LONG")
-
-    # Pass 2: broadcast-join the offsets (a local_table: an Arrow
-    # LocalRelation, no Python worker); position within partition via
-    # a pid-local window ordered by the monotonic id (mid order == row
-    # order within a partition).
-    w = Window.partitionBy("__pid__").orderBy("__mid__")
-    out = (
-        sdf.join(F.broadcast(off_df), "__pid__")
-        .withColumn(name, F.col("__off__") + F.row_number().over(w) - 1)
-        .drop("__pid__", "__mid__", "__off__")
-    )
-    return out
+    return with_prefix_aggs(sdf, {name: (F.lit(1), "count")}, order_by,
+                            inclusive=False)
 
 
 def _range_layout(sdf: DataFrame, order_by: list | None) -> DataFrame:
     """Shared first pass of every two-pass scheme: (optionally)
     range-partition + sort by the order keys so partition i holds a
     contiguous globally-ordered slice, stamp row/partition ids, and
-    freeze the layout with an eager localCheckpoint (both passes must
-    see identical partitioning; see with_dense_ordinal's note on
-    checkpoint-vs-persist)."""
+    freeze the layout both passes must agree on (Spark gives no
+    cross-job determinism guarantee otherwise).
+
+    The freeze is a localCheckpoint, not persist(): persist() leaked
+    one cached plan per positional op for the session's lifetime
+    (never unpersisted), while checkpoint blocks are freed by the
+    ContextCleaner when the DataFrame is garbage-collected. Not
+    fault-tolerant to executor loss — an ephemeral positional op
+    re-runs from source on failure, which is the right trade."""
     if order_by:
         # no explicit partition count (r11): REPARTITION_BY_COL is
         # AQE-coalescible, so a kilobyte-sized input lands in one
@@ -268,26 +278,46 @@ def _range_layout(sdf: DataFrame, order_by: list | None) -> DataFrame:
             .localCheckpoint(eager=False))
 
 
-# associative merge for driver-side prefix combining; identity is None
-# (empty/all-null partitions contribute nothing)
-_PREFIX_MERGE = {
-    "sum": lambda a, b: a + b,
-    "count": lambda a, b: a + b,
-    "prod": lambda a, b: a * b,
-    "min": min,
-    "max": max,
-}
+def _add(a, b):
+    """The JVM's non-ANSI ``+``: integers wrap at 64 bits, as numpy's
+    int64 cumsum does."""
+    s = a + b
+    return (s + 2 ** 63) % 2 ** 64 - 2 ** 63 if isinstance(s, int) else s
+
+
+def _nullsafe(op):
+    return lambda loc, pre: F.when(pre.isNull(), loc).otherwise(
+        F.when(loc.isNull(), pre).otherwise(op(loc, pre)))
+
+
+# per prefix kind: the partition-local running aggregate, the driver
+# merge of two non-null partition ends (None is every kind's
+# identity), and pass 2's merge of the local running value with the
+# partition's carry
 _PREFIX_LOCAL = {
     "sum": F.sum, "count": F.count, "prod": F.product,
     "min": F.min, "max": F.max,
+    "last": lambda c: F.last(c, ignorenulls=True),
+}
+_PREFIX_MERGE = {
+    "sum": _add, "count": _add, "prod": lambda a, b: a * b,
+    "min": min, "max": max, "last": lambda a, b: b,
 }
 _PREFIX_COMBINE = {
-    "sum": lambda loc, pre: loc + pre,
-    "count": lambda loc, pre: loc + pre,
-    "prod": lambda loc, pre: loc * pre,
-    "min": F.least,
-    "max": F.greatest,
+    "sum": _nullsafe(lambda loc, pre: loc + pre),
+    "count": lambda loc, pre: loc + F.coalesce(pre, F.lit(0)),
+    "prod": _nullsafe(lambda loc, pre: loc * pre),
+    "min": F.least, "max": F.greatest, "last": F.coalesce,
 }
+
+
+def _prefix_merged(o: str, kind: str, w):
+    """Pass 2 of the prefix schemes: the running ``kind`` aggregate of
+    ``__v_{o}__`` over the partition-local window ``w``, merged with
+    the partition's carry ``__p_{o}__``."""
+    return _PREFIX_COMBINE[kind](
+        _PREFIX_LOCAL[kind](F.col(f"__v_{o}__")).over(w),
+        F.col(f"__p_{o}__"))
 
 
 def with_prefix_aggs(sdf: DataFrame, specs: dict, order_by: list | None,
@@ -296,11 +326,14 @@ def with_prefix_aggs(sdf: DataFrame, specs: dict, order_by: list | None,
     """Partition-safe GLOBAL running aggregates (parallel prefix scan).
 
     ``specs``: {out_name: (value Column/name, kind)} with kind in
-    {'sum','count','prod','min','max'} — the associative aggregates;
-    running mean/var/std compose from these (sum/sum² /count are all
-    prefix sums). For each spec the output column holds the running
-    aggregate over all rows up to (and, if ``inclusive``, including)
-    the current row in the global ``order_by`` order.
+    {'sum','count','prod','min','max','last'} — the associative
+    aggregates; 'last' is the most recent non-null value (the
+    carry-forward behind global as-of joins and un-keyed ffill), and
+    running mean/var/std compose from the others (sum/sum² /count are
+    all prefix sums). For each spec the output column holds the
+    running aggregate over all rows up to (and, if ``inclusive``,
+    including) the current row in the global ``order_by`` order.
+    Integer sums wrap at 64 bits, as the JVM's and numpy's do.
 
     The naive plan — ``agg OVER (ORDER BY ...)`` with no partition —
     collapses to ONE partition. Here: (1) partition-local running
@@ -314,61 +347,44 @@ def with_prefix_aggs(sdf: DataFrame, specs: dict, order_by: list | None,
     """
     from pyspark.sql import types as T
 
-    prepared = {}
-    for out, (col, kind) in specs.items():
-        prepared[out] = (_as_col(col), kind)
-
+    prepared = {o: (_as_col(c), kind) for o, (c, kind) in specs.items()}
     sdf = _range_layout(
         sdf.select("*", *[c.alias(f"__v_{o}__")
                           for o, (c, _) in prepared.items()]),
         order_by)
 
+    def total(o, kind):
+        v = F.col(f"__v_{o}__")
+        # 'last': the non-null value at the partition's largest row id
+        # (deterministic, unlike a groupBy last)
+        return (F.max_by(v, F.when(v.isNotNull(), F.col("__mid__")))
+                if kind == "last" else _PREFIX_LOCAL[kind](v))
+
+    totals = sdf.groupBy("__pid__").agg(*[
+        total(o, kind).alias(f"__p_{o}__")
+        for o, (_, kind) in prepared.items()])
+    carries, acc = _pid_fold(
+        {r[0]: tuple(r[1:]) for r in totals.collect()},
+        _skip_nulls([_PREFIX_MERGE[k] for _, k in prepared.values()]),
+        (None,) * len(prepared))
+    pre_df = local_table(
+        sdf.sparkSession, [(int(p), *c) for p, c in carries.items()],
+        T.StructType([T.StructField(f.name, f.dataType)
+                      for f in totals.schema]))
+
     w = (Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
          .rowsBetween(Window.unboundedPreceding,
                       0 if inclusive else -1))
-    totals = sdf.groupBy("__pid__").agg(*[
-        _PREFIX_LOCAL[kind](F.col(f"__v_{o}__")).alias(f"__t_{o}__")
-        for o, (_, kind) in prepared.items()])
-    trows = {r["__pid__"]: r for r in totals.collect()}
-
-    # exclusive prefix per partition, combined in global (range) order
-    prefix_rows, acc = [], {o: None for o in prepared}
-    for pid in sorted(trows):
-        prefix_rows.append((int(pid), *[acc[o] for o in prepared]))
-        for o, (_, kind) in prepared.items():
-            t = trows[pid][f"__t_{o}__"]
-            if t is not None:
-                acc[o] = t if acc[o] is None else \
-                    _PREFIX_MERGE[kind](acc[o], t)
-
-    fields = [T.StructField("__pid__", T.IntegerType())]
-    for o, (_, kind) in prepared.items():
-        dt = (T.LongType() if kind == "count"
-              else sdf.schema[f"__v_{o}__"].dataType)
-        fields.append(T.StructField(f"__p_{o}__", dt))
-    pre_df = local_table(sdf.sparkSession, prefix_rows,
-                         T.StructType(fields))
-
-    out = sdf.join(F.broadcast(pre_df), "__pid__")
-    for o, (_, kind) in prepared.items():
-        loc = _PREFIX_LOCAL[kind](F.col(f"__v_{o}__")).over(w)
-        pre = F.col(f"__p_{o}__")
-        if kind == "count":
-            loc = loc.cast("long")
-            merged = loc + F.coalesce(pre, F.lit(0))
-        else:
-            merged = F.when(pre.isNull(), loc).otherwise(
-                F.when(loc.isNull(), pre)
-                .otherwise(_PREFIX_COMBINE[kind](loc, pre)))
-        out = out.withColumn(o, merged)
-    drop = ["__pid__", "__mid__"] + [f"__v_{o}__" for o in prepared] \
-        + [f"__p_{o}__" for o in prepared]
-    out = out.drop(*drop)
+    out = sdf.join(F.broadcast(pre_df), "__pid__").withColumns({
+        o: _prefix_merged(o, kind, w) for o, (_, kind) in prepared.items()})
+    out = out.drop("__pid__", "__mid__",
+                   *[f"__v_{o}__" for o in prepared],
+                   *[f"__p_{o}__" for o in prepared])
     if return_stats:
-        # after the merge loop `acc` holds each spec's GLOBAL total
-        # — pass-1 already paid for it, so callers get e.g. the row
-        # count (a 'count' spec's total) for free, with no extra job
-        return out, dict(acc)
+        # the fold's final acc holds each spec's GLOBAL total — pass 1
+        # already paid for it, so callers get e.g. the row count (a
+        # 'count' spec's total) for free, with no extra job
+        return out, dict(zip(prepared, acc))
     return out
 
 
@@ -392,10 +408,10 @@ def with_prefix_aggs_shifted(sdf: DataFrame, specs: dict, window: int,
     One collect serves both passes: the donor query evaluates the
     partition-LOCAL prefix windows for the last ``window`` rows of
     every partition; the drn==1 row's local prefix IS the partition
-    total, so the driver derives the cross-partition offsets from the
-    same rows, merges donors to GLOBAL prefixes with the identical
-    null rules pass 2 uses (IEEE double adds match the JVM's), and
-    walks the boundary carry exactly like with_boundary_shifts.
+    total, so the driver folds the cross-partition offsets from the
+    same rows, merges donors to GLOBAL prefixes with the same merge
+    (IEEE double adds match the JVM's), and walks the boundary carry
+    exactly like with_boundary_shifts.
     """
     from pyspark.sql import types as T
 
@@ -415,173 +431,47 @@ def with_prefix_aggs_shifted(sdf: DataFrame, specs: dict, window: int,
                           for o, (c, _) in prepared.items()]),
         order_by)
 
-    w = (Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-
-    def _loc(o):
-        loc = _PREFIX_LOCAL[prepared[o][1]](F.col(f"__v_{o}__")).over(w)
-        return loc.cast("long") if prepared[o][1] == "count" else loc
-
-    # ONE collect: local prefixes at each partition's last `window`
-    # rows (drn==1 == the partition total)
+    w = Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
+    run = w.rowsBetween(Window.unboundedPreceding, 0)
     desc_w = Window.partitionBy("__pid__").orderBy(
         F.col("__mid__").desc())
-    donors = (sdf.select("__pid__", "__mid__",
-                         *[_loc(o).alias(f"__lp_{o}__")
-                           for o in prepared])
-              .withColumn("__drn__", F.row_number().over(desc_w))
-              .where(F.col("__drn__") <= window)
-              .select("__pid__", "__drn__",
-                      *[f"__lp_{o}__" for o in prepared]).collect())
-    tail_by_pid: dict = {}
-    for r in donors:
-        tail_by_pid.setdefault(r["__pid__"], {})[r["__drn__"]] = tuple(
-            r[f"__lp_{o}__"] for o in prepared)
-
-    # offsets: exclusive prefix-combine of the partition totals
-    # (= each pid's drn==1 local prefix), same None-skip rule as
-    # with_prefix_aggs
-    offsets, acc = {}, {o: None for o in prepared}
-    for pid in sorted(tail_by_pid):
-        offsets[pid] = dict(acc)
-        for i, (o, (_, kind)) in enumerate(prepared.items()):
-            t = tail_by_pid[pid][1][i]
-            if t is not None:
-                acc[o] = t if acc[o] is None else \
-                    _PREFIX_MERGE[kind](acc[o], t)
-
-    def _merge_py(kind, off, lp):
-        """Driver replica of pass 2's merge expression."""
-        if kind == "count":
-            return int(lp or 0) + int(off or 0)
-        if off is None:
-            return lp
-        if lp is None:
-            return off
-        return lp + off  # IEEE double add == the JVM's
-
-    # carry walk (with_boundary_shifts' fwd scheme, k = window):
-    # donor value for the r-th edge row of pid = merged global
-    # prefix window-r+1 positions before the partition start
-    carry_rows = []
-    run: list = []
-    for pid in sorted(tail_by_pid):
-        m = len(run)
-        for r in range(1, window + 1):
-            i = m - (window - r + 1)
-            if i >= 0:
-                carry_rows.append((int(pid), r, *run[i]))
-        part = tail_by_pid[pid]
-        off = offsets[pid]
-        vals = [tuple(_merge_py(prepared[o][1], off[o], part[d][i])
-                      for i, o in enumerate(prepared))
-                for d in sorted(part, reverse=True)]
-        run = (run + vals)[-window:]
-
-    def _dt(o):
-        return (T.LongType() if prepared[o][1] == "count"
-                else sdf.schema[f"__v_{o}__"].dataType)
+    # ONE collect: local prefixes at each partition's last `window`
+    # rows (drn==1 == the partition total)
+    names = [f"__p_{o}__" for o in prepared]
+    donors = (sdf.select("__pid__", "__mid__", *[
+        _PREFIX_LOCAL[kind](F.col(f"__v_{o}__")).over(run).alias(n)
+        for n, (o, (_, kind)) in zip(names, prepared.items())])
+        .withColumn("__drn__", F.row_number().over(desc_w))
+        .where(F.col("__drn__") <= window)
+        .select("__pid__", "__drn__", *names))
+    types = {n: donors.schema[n].dataType for n in names}
+    tails = _donor_runs(donors.collect(), "__drn__", window, names)
+    merge = _skip_nulls([_PREFIX_MERGE[k] for _, k in prepared.values()])
+    offsets, _ = _pid_fold({p: r[-1] for p, r in tails.items()}, merge,
+                           (None,) * len(prepared))
 
     off_df = local_table(
-        sdf.sparkSession,
-        [(int(p), *[v[o] for o in prepared])
-         for p, v in offsets.items()],
+        sdf.sparkSession, [(int(p), *c) for p, c in offsets.items()],
         T.StructType([T.StructField("__pid__", T.IntegerType())]
-                     + [T.StructField(f"__p_{o}__", _dt(o))
-                        for o in prepared]))
-    carry_df = local_table(
-        sdf.sparkSession, carry_rows,
-        T.StructType([T.StructField("__pid__", T.IntegerType()),
-                      T.StructField("__ern__", T.IntegerType())]
-                     + [T.StructField(f"__cv_{o}__", _dt(o))
-                        for o in prepared]))
-
-    w_asc = Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
-    out = (sdf.withColumn("__ern__", F.row_number().over(w_asc))
-           .join(F.broadcast(off_df), "__pid__", "left")
-           .join(F.broadcast(carry_df), ["__pid__", "__ern__"], "left"))
+                     + [T.StructField(n, t) for n, t in types.items()]))
+    # the edge walk carries the donors' GLOBAL prefixes (pass 2's merge)
+    out = _edge_carry(
+        sdf, {p: [merge(offsets[p], v) for v in r]
+              for p, r in tails.items()},
+        window, False, w,
+        {f"__cv_{o}__": types[n] for o, n in zip(prepared, names)}) \
+        .join(F.broadcast(off_df), "__pid__", "left")
     # merged prefixes first (a later select may lag a plain column,
     # never a window expression)
-    merged_sel = ["*"]
-    for o, (_, kind) in prepared.items():
-        loc = _loc(o)
-        pre = F.col(f"__p_{o}__")
-        if kind == "count":
-            merged = loc + F.coalesce(pre, F.lit(0))
-        else:
-            merged = F.when(pre.isNull(), loc).otherwise(
-                F.when(loc.isNull(), pre)
-                .otherwise(_PREFIX_COMBINE[kind](loc, pre)))
-        merged_sel.append(merged.alias(o))
-    out = out.select(*merged_sel)
-    for o in prepared:
-        local_lag = F.lag(F.col(o), window).over(w_asc)
-        out = out.withColumn(
-            o[:-2] + "w__",
-            F.when(F.col("__ern__") <= window, F.col(f"__cv_{o}__"))
-            .otherwise(local_lag))
-    drop = (["__pid__", "__mid__", "__ern__"]
-            + [f"__v_{o}__" for o in prepared]
-            + [f"__p_{o}__" for o in prepared]
-            + [f"__cv_{o}__" for o in prepared])
-    return out.drop(*drop)
-
-
-def with_last_non_null(sdf: DataFrame, exprs: dict,
-                       order_by: list | None) -> DataFrame:
-    """Partition-safe GLOBAL carry-forward: for each {out_name: expr},
-    add the most recent non-null value of ``expr`` at or before the
-    current row in the global ``order_by`` order (the engine behind
-    global as-of joins and un-keyed ffill).
-
-    Scheme: partition-local ``last(..., ignorenulls)`` windows, plus a
-    per-partition "last non-null in this partition" table (one row per
-    partition) prefix-carried on the driver and broadcast back as a
-    ``local_table`` for rows whose partition holds no earlier
-    non-null.
-    """
-    from pyspark.sql import types as T
-
-    prepared = {o: _as_col(c) for o, c in exprs.items()}
-    sdf = _range_layout(
-        sdf.select("*", *[c.alias(f"__v_{o}__")
-                          for o, c in prepared.items()]),
-        order_by)
-
-    w = (Window.partitionBy("__pid__").orderBy(F.col("__mid__").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-
-    # per partition: value at the max row id among non-null rows
-    lasts = sdf.groupBy("__pid__").agg(*[
-        F.max(F.when(F.col(f"__v_{o}__").isNotNull(),
-                     F.struct(F.col("__mid__").alias("m"),
-                              F.col(f"__v_{o}__").alias("v"))))
-        .alias(f"__l_{o}__")
-        for o in prepared])
-    lrows = {r["__pid__"]: r for r in lasts.collect()}
-
-    prefix_rows, acc = [], {o: None for o in prepared}
-    for pid in sorted(lrows):
-        prefix_rows.append((int(pid), *[acc[o] for o in prepared]))
-        for o in prepared:
-            s = lrows[pid][f"__l_{o}__"]
-            if s is not None and s["v"] is not None:
-                acc[o] = s["v"]
-
-    fields = [T.StructField("__pid__", T.IntegerType())]
-    for o in prepared:
-        fields.append(T.StructField(
-            f"__p_{o}__", sdf.schema[f"__v_{o}__"].dataType))
-    pre_df = local_table(sdf.sparkSession, prefix_rows,
-                         T.StructType(fields))
-
-    out = sdf.join(F.broadcast(pre_df), "__pid__")
-    for o in prepared:
-        local = F.last(F.col(f"__v_{o}__"), ignorenulls=True).over(w)
-        out = out.withColumn(o, F.coalesce(local, F.col(f"__p_{o}__")))
-    drop = ["__pid__", "__mid__"] + [f"__v_{o}__" for o in prepared] \
-        + [f"__p_{o}__" for o in prepared]
-    return out.drop(*drop)
+    out = out.select("*", *[_prefix_merged(o, kind, run).alias(o)
+                            for o, (_, kind) in prepared.items()])
+    out = out.withColumns({
+        o[:-2] + "w__": F.when(F.col("__ern__") <= window,
+                               F.col(f"__cv_{o}__"))
+        .otherwise(F.lag(F.col(o), window).over(w)) for o in prepared})
+    return out.drop("__pid__", "__mid__", "__ern__", *names,
+                    *[f"__v_{o}__" for o in prepared],
+                    *[f"__cv_{o}__" for o in prepared])
 
 
 def _geo(k: int, rr: float):
@@ -631,10 +521,7 @@ def _carry_scan(sdf: DataFrame, order_by: list | None, inputs: dict,
     ends = {int(r[0]): [nan if v is None else v for v in r[1:]]
             for r in sdf.select("__pid__", *inputs)
             .mapInPandas(_ends, ends_schema).collect()}
-    carries, acc = {}, fresh()
-    for pid in sorted(ends):
-        carries[pid] = acc
-        acc = combine(acc, ends[pid])
+    carries, _ = _pid_fold(ends, combine, fresh())
 
     def _emit(it):
         state = None
@@ -1158,17 +1045,6 @@ def with_ewm_noadjust_stats(sdf: DataFrame, specs: dict, alpha: float,
                         for s in sts])
 
 
-def with_ewm_mean_times(sdf: DataFrame, value_col, time_col,
-                        halflife_us: float,
-                        order_by: list | None, min_periods: int = 0,
-                        name: str = "__ewm__") -> DataFrame:
-    """Single-column face of :func:`with_ewm_mean_times_multi`."""
-    out = with_ewm_mean_times_multi(
-        sdf, {"v": value_col}, time_col, halflife_us, order_by,
-        min_periods)
-    return out.withColumnRenamed("__ewmt_v__", name)
-
-
 def with_ewm_mean_times_multi(sdf: DataFrame, values: dict,
                               time_col, halflife_us: float,
                               order_by: list | None,
@@ -1342,7 +1218,7 @@ def with_interp_neighbors_multi(sdf: DataFrame, values: dict,
     non-null (position, value) structs).
 
     Design (and why): the naive composition — with_dense_ordinal +
-    with_last_non_null forward + backward, PER COLUMN — pays three
+    a 'last' prefix scan forward + backward, PER COLUMN — pays three
     range layouts (repartition+sort+checkpoint each) and three
     driver round-trips per column; measured 30s at 16x sf0.1 where
     this fused pass is one layout, one Window stage, ONE
@@ -1387,37 +1263,28 @@ def with_interp_neighbors_multi(sdf: DataFrame, values: dict,
     for t in tags:
         aggs += [F.max(nn(t)).alias(f"l_{t}"),
                  F.min(nn(t)).alias(f"f_{t}")]
-    stats = lay.groupBy("__pid__").agg(*aggs).collect()
-    by_pid = {r["__pid__"]: r for r in stats}
-    offsets, acc = {}, 0
-    for pid in sorted(by_pid):
-        offsets[pid] = acc
-        acc += by_pid[pid]["n"]
-    pre = {t: {} for t in tags}
-    suf = {t: {} for t in tags}
-    for t in tags:
-        carry = None
-        for pid in sorted(by_pid):
-            pre[t][pid] = carry
-            l = by_pid[pid][f"l_{t}"]
-            if l is not None and l["v"] is not None:
-                carry = (offsets[pid] + l["p"] - 1, float(l["v"]))
-        carry = None
-        for pid in sorted(by_pid, reverse=True):
-            suf[t][pid] = carry
-            f = by_pid[pid][f"f_{t}"]
-            if f is not None and f["v"] is not None:
-                carry = (offsets[pid] + f["p"] - 1, float(f["v"]))
+    by_pid = {r["__pid__"]: r
+              for r in lay.groupBy("__pid__").agg(*aggs).collect()}
+    offsets, _ = _pid_fold({p: r["n"] for p, r in by_pid.items()}, _add, 0)
+
+    def ends(side):
+        # pid -> per tag the (global position, value) donor, or None
+        def donor(p, s):
+            return None if s is None else (offsets[p] + s["p"] - 1,
+                                           float(s["v"]))
+        return {p: tuple(donor(p, r[f"{side}_{t}"]) for t in tags)
+                for p, r in by_pid.items()}
+
+    newer = _skip_nulls([_PREFIX_MERGE["last"]] * len(tags))
+    pre, _ = _pid_fold(ends("l"), newer, (None,) * len(tags))
+    suf, _ = _pid_fold(ends("f"), newer, (None,) * len(tags), True)
+    rows = [(int(p), int(offsets[p]),
+             *[v for a, b in zip(pre[p], suf[p])
+               for v in (*(a or (None, None)), *(b or (None, None)))])
+            for p in by_pid]
 
     spark = lay.sparkSession
     schema = ["__pid__ INT", "__off__ LONG"]
-    rows = []
-    for pid in sorted(by_pid):
-        row = [int(pid), int(offsets[pid])]
-        for t in tags:
-            row += list(pre[t][pid] or (None, None))
-            row += list(suf[t][pid] or (None, None))
-        rows.append(tuple(row))
     for t in tags:
         schema += [f"__pp_{t}__ LONG", f"__pv_{t}__ DOUBLE",
                    f"__np_{t}__ LONG", f"__nv_{t}__ DOUBLE"]
@@ -1523,6 +1390,7 @@ def with_rolling_locals(sdf: DataFrame, cols: dict, window: int,
     mp = window if min_periods is None else min_periods
     outs = list(cols)
     vnames = {o: f"__rl_{i}__" for i, o in enumerate(outs)}
+    vlist = list(vnames.values())
     sel = [_as_col(c).cast("double")
            .alias(vnames[o]) for o, c in cols.items()]
     lay = _range_layout(sdf.select("*", *sel), order_by)
@@ -1556,37 +1424,16 @@ def with_rolling_locals(sdf: DataFrame, cols: dict, window: int,
         else:
             cond = F.col("__drn__") <= h1
             keep = ["__pid__", "__drn__"]
-        donors = (sel_rn.where(cond)
-                  .select(*keep, *[vnames[o] for o in outs]).collect())
-        tail_by_pid: dict = {}
-        head_by_pid: dict = {}
-        for r in donors:
-            val = tuple(r[vnames[o]] for o in outs)
-            if h1 > 0 and r["__drn__"] <= h1:
-                tail_by_pid.setdefault(r["__pid__"], {})[
-                    r["__drn__"]] = val
-            if h2 > 0 and r["__arn__"] <= h2:
-                head_by_pid.setdefault(r["__pid__"], {})[
-                    r["__arn__"]] = val
-        pids = sorted({int(r["__pid__"]) for r in donors})
-        if h1 > 0:
-            run: list = []     # last h1 value-tuples seen, global order
-            for pid in pids:
-                if run:
-                    carry_pre[pid] = list(run)
-                part = tail_by_pid.get(pid, {})
-                vals = [part[d] for d in sorted(part, reverse=True)]
-                run = (run + vals)[-h1:]
+        donors = sel_rn.where(cond).select(*keep, *vlist).collect()
+        # the h1 values before each partition and (the reverse walk,
+        # read back in global order) the h2 values after it
+        carry_pre = _edge_runs(_donor_runs(donors, "__drn__", h1, vlist),
+                               h1)
         if h2 > 0:
-            post: list = []    # next h2 value-tuples, global order
-            for pid in reversed(pids):
-                if post:
-                    carry_post[pid] = list(post)
-                part = head_by_pid.get(pid, {})
-                vals = [part[a] for a in sorted(part)]
-                post = (vals + post)[:h2]
+            carry_post = {p: r[::-1] for p, r in _edge_runs(
+                _donor_runs(donors, "__arn__", h2, vlist), h2,
+                True).items()}
 
-    vlist = [vnames[o] for o in outs]
     out_schema = T.StructType(
         list(lay.schema)
         + [T.StructField(o, T.DoubleType()) for o in outs])

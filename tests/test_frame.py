@@ -366,6 +366,23 @@ def test_series_corr_cross_frame_aligns(bl):
     assert abs(got_v - pd.Series(x).cov(pd.Series(y))) < 1e-12
 
 
+def test_series_pairwise_undefined_is_nan(bl):
+    """corr/cov/autocorr with fewer than two valid pairs are NaN, as
+    in pandas — Spark's aggregate is NULL there."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+    x = np.array([1., np.nan, 4., 8.])
+    assert math.isnan(pd.Series(x).autocorr())
+    assert math.isnan(bl.DataFrame({"v": x})["v"].autocorr())
+    a, b = [1., np.nan, 3.], [2., 5., np.nan]
+    df = bl.DataFrame({"a": np.array(a), "b": np.array(b)})
+    for stat in ("corr", "cov"):
+        assert math.isnan(getattr(pd.Series(a), stat)(pd.Series(b)))
+        assert math.isnan(getattr(df["a"], stat)(df["b"])), stat
+
+
 def test_frame_corr_matrix_matches_pandas(bl):
     import numpy as np
     import pandas as pd

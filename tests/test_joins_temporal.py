@@ -359,7 +359,7 @@ def test_asof_join_backward_matches_pandas_too(spark):
 
 def test_asof_join_global_forward_no_by(spark):
     """Forward direction through the partition-safe global carry
-    (with_last_non_null over descending time)."""
+    (the 'last' prefix scan over descending time)."""
     from baloo_spark.operators.joins import asof_join
     base = dt.datetime(2024, 1, 1)
     left = spark.createDataFrame(

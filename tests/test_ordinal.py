@@ -160,3 +160,100 @@ def test_carry_tables_never_take_the_row_list_path(bl, spark,
         assert calls, "no driver table went through local_table"
         npt.assert_allclose(got, want.to_numpy(dtype=float),
                             rtol=1e-9, equal_nan=True)
+
+
+# rows per partition of the fold layout: two empty partitions, an
+# all-null one (the 3 rows of partition 3) and partitions shorter
+# than the k = 3 edge walk
+_FOLD_PARTS = [5, 0, 2, 3, 1, 4, 0, 2, 6, 1]
+
+
+def test_unified_fold_matches_pandas(spark):
+    """Every scheme on the driver fold equals pandas over the fixed
+    10-partition layout above (order_by None keeps it) and over an
+    AQE-uncoalesced range layout: each prefix kind inclusive and
+    exclusive (an int64 sum whose carries wrap past 2^63, 'last' over
+    a double, a string and a timestamp column), the dense ordinal,
+    and the k = +-3 boundary shifts."""
+    import datetime as dt
+
+    import numpy.testing as npt
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from baloo_spark.plans.ordinal import (with_boundary_shifts,
+                                           with_dense_ordinal,
+                                           with_prefix_aggs)
+
+    rng = np.random.RandomState(11)
+    n = sum(_FOLD_PARTS)
+    x = rng.choice([-1.5, -0.5, 0.5, 2.0, 3.0], n)
+    x[rng.rand(n) < 0.3] = np.nan
+    t0 = dt.datetime(2024, 1, 1)
+    pdf = pd.DataFrame({
+        "i": np.arange(n), "x": x,
+        "s": [f"s{j}" if rng.rand() < 0.7 else None for j in range(n)],
+        "ts": [t0 + dt.timedelta(hours=j) if rng.rand() < 0.7 else None
+               for j in range(n)],
+        "big": rng.randint(2 ** 61, 2 ** 62, n, dtype=np.int64)})
+    pdf.loc[7:9, ["x", "s", "ts"]] = None
+    rows = [tuple(None if pd.isna(v) else v.to_pydatetime()
+                  if isinstance(v, pd.Timestamp) else
+                  v.item() if isinstance(v, np.generic) else v
+                  for v in r)
+            for r in pdf.astype(object).itertuples(index=False)]
+    cuts = np.cumsum([0] + _FOLD_PARTS)
+    parts = [rows[a:b] for a, b in zip(cuts[:-1], cuts[1:])]
+    fixed = spark.createDataFrame(
+        spark.sparkContext.parallelize(range(len(parts)), len(parts))
+        .flatMap(lambda p: parts[p]),
+        "i LONG, x DOUBLE, s STRING, ts TIMESTAMP, big LONG")
+    assert fixed.rdd.glom().map(len).collect() == _FOLD_PARTS
+
+    def nulls(s):
+        return [None if pd.isna(v) else v for v in s.astype(object)]
+
+    xs = pdf["x"].expanding(min_periods=1)
+    incl = {"sum": xs.sum(), "count": pdf["x"].expanding(0).count(),
+            "prod": xs.apply(np.nanprod, raw=True), "min": xs.min(),
+            "max": xs.max(), "last": pdf["x"].ffill()}
+    objs = {"big": ("sum", pdf["big"].cumsum()),
+            "s": ("last", pdf["s"].ffill()),
+            "ts": ("last", pd.Series(nulls(pdf["ts"].ffill())))}
+
+    aqe = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        for sdf, order in ((fixed, None),
+                           (fixed.repartition(3), [F.col("i").asc()])):
+            for inclusive in (True, False):
+                specs = {f"{k}_x": ("x", k) for k in incl}
+                specs.update({f"{k}_{c}": (c, k)
+                              for c, (k, _) in objs.items()})
+                got = (with_prefix_aggs(sdf, specs, order, inclusive)
+                       .toPandas().sort_values("i"))
+                for kind, want in incl.items():
+                    if not inclusive:
+                        want = want.shift(1, fill_value=(
+                            0 if kind == "count" else np.nan))
+                    npt.assert_allclose(
+                        got[f"{kind}_x"].to_numpy(dtype=float),
+                        want.to_numpy(dtype=float), rtol=1e-12,
+                        equal_nan=True, err_msg=(kind, inclusive))
+                for c, (kind, want) in objs.items():
+                    want = nulls(want if inclusive else want.shift(1))
+                    assert nulls(got[f"{kind}_{c}"]) == want, \
+                        (c, inclusive)
+            got = with_dense_ordinal(sdf, order, name="o").toPandas()
+            assert got.sort_values("i")["o"].tolist() == list(range(n))
+            for k in (3, -3):
+                got = (with_boundary_shifts(sdf, {"sx": "x", "ss": "s"},
+                                            k, order)
+                       .toPandas().sort_values("i"))
+                npt.assert_allclose(got["sx"].to_numpy(dtype=float),
+                                    pdf["x"].shift(k).to_numpy(),
+                                    equal_nan=True, err_msg=k)
+                assert nulls(got["ss"]) == nulls(pdf["s"].shift(k)), k
+    finally:
+        spark.conf.set(aqe, old)

@@ -6,7 +6,7 @@ schemes must equal the naive single-partition window bit-for-bit
 Covers the round-3 rewiring: with_running / with_lag / with_rank /
 ffill / bfill with NO partition keys, plus asof_join with NO by-keys —
 previously all ScaleWarning'd single-partition fallbacks, now
-with_prefix_aggs / with_last_non_null / with_boundary_shifts /
+with_prefix_aggs (its 'last' kind too) / with_boundary_shifts /
 with_dense_ordinal compositions (plans/ordinal.py).
 """
 
@@ -162,15 +162,14 @@ def test_no_scale_warnings_on_global_paths(bl, frame):
 
 def test_edge_cases(spark):
     from baloo_spark.operators.joins import asof_join
-    from baloo_spark.plans.ordinal import (with_last_non_null,
-                                           with_prefix_aggs)
+    from baloo_spark.plans.ordinal import with_prefix_aggs
 
     # empty input -> empty output, no crash in the driver combine
     e = spark.createDataFrame([], "t LONG, v DOUBLE")
     assert with_prefix_aggs(e, {"r": ("v", "sum")},
                             [F.col("t").asc()]).count() == 0
-    assert with_last_non_null(e, {"c": F.col("v")},
-                              [F.col("t").asc()]).count() == 0
+    assert with_prefix_aggs(e, {"c": (F.col("v"), "last")},
+                            [F.col("t").asc()]).count() == 0
 
     # single row
     s = spark.createDataFrame([(1, 2.0)], "t LONG, v DOUBLE")
@@ -272,6 +271,30 @@ def test_series_cumsum_layout_independent(spark):
         base.to_spark(include_index=True).repartition(8)).sort_values("k")
     assert base["x"].cumsum().to_pandas().tolist() == \
         pytest.approx(wide["x"].cumsum().to_pandas().tolist())
+
+
+def test_integer_cumsum_keeps_int64_and_wraps(spark):
+    """Integer cumsum stays int64 and wraps like numpy's, on the
+    Series and the DataFrame face. One row per partition, so the
+    running sum crosses 2^63 in the driver's carry fold as well as
+    inside the JVM's merge."""
+    import numpy as np
+    import pandas as pd
+
+    import baloo_spark as bl
+    big = 2 ** 62
+    v = np.array([big, big, big - 1, 7, -3, big, big, big], dtype=np.int64)
+    pdf = pd.DataFrame({"k": np.arange(len(v), dtype=np.int64), "v": v})
+    rows = [(int(k), int(x)) for k, x in zip(pdf["k"], v)]
+    df = bl.DataFrame.from_spark(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, len(rows)),
+        "k LONG, v LONG"))
+    got = df["v"].cumsum().to_pandas()
+    assert got.dtype == np.int64
+    assert got.tolist() == pdf["v"].cumsum().tolist()
+    frame = df.cumsum().to_pandas()
+    assert dict(frame.dtypes) == dict(pdf.cumsum().dtypes)
+    assert frame.to_numpy().tolist() == pdf.cumsum().to_numpy().tolist()
 
 
 def test_series_pct_change_and_rank(spark):
@@ -1142,7 +1165,7 @@ def test_frame_time_offset_rolling_matches_pandas(bl):
 def test_time_decay_ewm_matches_pandas(bl):
     """ewm(halflife='30min') over a datetime index (pandas
     times=...): weights decay with actual stamp distance. Rides the
-    segmented-anchor two-pass carry (with_ewm_mean_times): within a
+    segmented-anchor two-pass carry (with_ewm_mean_times_multi): within a
     segment spanning < 50 halflives the anchored cumsum is exact to
     double precision; segments, partitions, and the driver combine
     all chain through the analytic 2^(-dt/hl) decay fold. The 10s

@@ -368,7 +368,7 @@ def main():
     # r8: the time-DECAY ewm (segmented-anchor scan) — same events
     # replication; the segment count scales with span/halflife, the
     # carry stays three scalars per partition
-    from baloo_spark.plans.ordinal import with_ewm_mean_times
+    from baloo_spark.plans.ordinal import with_ewm_mean_times_multi
     lines += ["## time-decay ewm mean (halflife=30min over "
               "events.ts; segmented-anchor scan)", ""]
     ev_td = spark.read.parquet(f"{sf}/events.parquet")
@@ -379,8 +379,8 @@ def main():
         dt = float("inf")
         for _ in range(3):
             t0 = time.perf_counter()
-            out = with_ewm_mean_times(
-                base, "value", "ts", 30 * 60 * 1e6,
+            out = with_ewm_mean_times_multi(
+                base, {"v": "value"}, "ts", 30 * 60 * 1e6,
                 [F.col("ts").asc()])
             out.write.format("noop").mode("overwrite").save()
             dt = min(dt, time.perf_counter() - t0)
