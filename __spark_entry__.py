@@ -2248,15 +2248,11 @@ def _ewm_parity_mismatches(spark, sf) -> int:
     # overhead. The batched mapInPandas kernel (the same shape as
     # groupby.ewm, core/groupby.py) is bounded by per-row C-kernel
     # work instead — sub-second on the same input.
-    from baloo_spark.core.groupby import _batched_group_gen
-    ev = load_events(spark, sf)
-    n_shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    src = (ev.select("user_id", "ts", "event_id", "value")
-           .repartition(n_shuf, F.col("user_id"))
-           .sortWithinPartitions("user_id", "ts", "event_id"))
-    batch = src.mapInPandas(
-        _batched_group_gen(["user_id"], run),
-        "user_id LONG, bn LONG, bm DOUBLE, bv DOUBLE")
+    from baloo_spark.core.groupby import _grouped_batches
+    ev = load_events(spark, sf).select("user_id", "ts", "event_id",
+                                       "value")
+    batch = _grouped_batches(ev, ["user_id"], ["ts", "event_id"], run,
+                             "user_id LONG, bn LONG, bm DOUBLE, bv DOUBLE")
     j = finals.join(batch, "user_id", "full_outer")
     close_m = (F.col("sm").eqNullSafe(F.col("bm"))
                | (F.abs(F.col("sm") - F.col("bm"))

@@ -79,20 +79,11 @@ class DataFrameGroupBy:
         divergence: a RANGE frame includes ALL rows sharing the
         current stamp (pandas adds a positional j <= i rule for
         duplicate stamps)."""
-        import datetime as _dt
-        if isinstance(window, str) or isinstance(
-                window, _dt.timedelta) or type(window).__name__ in (
-                "Timedelta",):
+        from .window import _offset_us
+        us = _offset_us(window)
+        if us is not None:
             if center:
                 raise ValueError("offset windows have no center=")
-            if isinstance(window, str):
-                from .datetimes import freq_to_us
-                us = freq_to_us(window)
-            else:
-                us = int(window.total_seconds() * 1_000_000)
-            if us <= 0:
-                raise ValueError(
-                    f"window offset must be positive, got {window!r}")
             return _GroupRolling(
                 self, None, 1 if min_periods is None else min_periods,
                 time_us=us)
@@ -116,10 +107,8 @@ class DataFrameGroupBy:
         from .ordering import order_exprs, rev_order_exprs
         sdf = self._df._sdf
         fn = rev_order_exprs if rev else order_exprs
-        order = fn(self._df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).desc() if rev
-                     else F.col(ORD_COL).asc()]
+        order = (fn(self._df._order or [], sdf.columns)
+                 or fn([(ORD_COL, True)], sdf.columns))
         if not order:
             raise ValueError(
                 "groupby window ops need a defined row order; "
@@ -128,22 +117,6 @@ class DataFrameGroupBy:
 
     def _all_value_cols(self):
         return [c for c in self._df._data_cols if c not in self._by]
-
-    @staticmethod
-    def _cluster_for_python(sdf, by):
-        """Explicitly hash-repartition on the group keys before a
-        grouped-PYTHON stage (applyInPandas). AQE coalesces the
-        pre-apply exchange by BYTES, but grouped-Python cost is
-        GROUP-COUNT-bound (per-group Arrow + pandas-object overhead
-        runs ~ms), so byte-sized coalescing serializes high-
-        cardinality groupings onto a few tasks — measured 53.6s ->
-        15.9s at 147k tiny groups (SCALING.md). An explicit
-        repartition(N, keys) is exempt from AQE coalescing and
-        already satisfies the apply's clustering requirement, so no
-        second exchange appears."""
-        n = int(sdf.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        return sdf.repartition(n, *[F.col(b) for b in by])
 
     def _transform_frame(self, sdf, cols, mk):
         """Rebuild the frame with ``cols`` replaced by mk(col) — the
@@ -383,47 +356,27 @@ class DataFrameGroupBy:
     def ewm(self, alpha: float | None = None, span: float | None = None,
             ignore_na: bool = False, adjust: bool = True,
             com: float | None = None, halflife=None,
-            times: str | None = None):
+            times: str | None = None, min_periods: int = 0):
         """Per-group exponentially-weighted windows (pandas
-        ``groupby().ewm()``): groups stream through ``applyInPandas``
-        and pandas' own C ewm kernel runs per group — the honest path
-        for a per-row recursion that is neither a prefix sum nor a
-        bounded window. State is one group per task (the same
-        bounded-group contract as apply/filter); the GLOBAL
-        decayed-carry scan (plans/ordinal.py:with_ewm_stats_multi)
-        remains the un-grouped face."""
-        import math
-        if times is not None:
-            # TIME-decay flavor (pandas ewm(times=...)): halflife is
-            # a Timedelta/str, decay follows actual stamp distances;
-            # pandas only defines adjust=True mean here, and the
-            # grouped kernel computes it per bounded group
-            import pandas as pd
-            if halflife is None or any(
-                    v is not None for v in (alpha, span, com)):
-                raise ValueError(
-                    "ewm(times=...) takes halflife (a Timedelta or "
-                    "offset string) and no other decay spelling")
-            if not adjust:
-                raise NotImplementedError(
-                    "ewm(times=..., adjust=False) is not supported "
-                    "(pandas refuses it too)")
-            if times not in self._df._sdf.columns:
-                raise KeyError(times)
-            return _GroupEwm(self, None, ignore_na, True,
-                             halflife=pd.Timedelta(halflife),
-                             times=times)
-        if sum(v is not None
-               for v in (alpha, span, com, halflife)) != 1:
+        ``groupby().ewm()``): pandas' own grouped C ewm kernel runs
+        over whole batches of key-contiguous rows in the shared
+        batched ``mapInPandas`` pass (:func:`_window_pass`) — the
+        honest path for a per-row recursion that is neither a prefix
+        sum nor a bounded window. State is bounded per group; the
+        GLOBAL decayed-carry scan (plans/ordinal.py:
+        with_ewm_stats_multi) remains the un-grouped face. With
+        ``times`` (a column name) the decay follows the stamp
+        distances (pandas defines only the adjust=True mean there)."""
+        from .window import _ewm_decay
+        alpha, hl = _ewm_decay(com, span, halflife, alpha, adjust, times)
+        if times is None and hl is not None:
             raise ValueError(
-                "pass exactly one of com, span, halflife, alpha")
-        if span is not None:
-            alpha = 2.0 / (span + 1.0)
-        elif com is not None:
-            alpha = 1.0 / (1.0 + com)
-        elif halflife is not None:
-            alpha = 1.0 - math.exp(-math.log(2.0) / halflife)
-        return _GroupEwm(self, float(alpha), ignore_na, bool(adjust))
+                "a Timedelta/offset halflife needs times= (pandas "
+                "refuses it too)")
+        if times is not None and times not in self._df._sdf.columns:
+            raise KeyError(times)
+        return _GroupEwm(self, alpha, ignore_na, bool(adjust), hl, times,
+                         min_periods)
 
     def aggregate(self, *a, **k):
         return self.agg(*a, **k)
@@ -809,10 +762,7 @@ class DataFrameGroupBy:
             [sdf.schema[b] for b in by]
             + [T.StructField("level_1", T.StringType())]
             + [T.StructField(c, T.DoubleType()) for c in cols])
-        gen = _batched_group_gen(by, _run)
-        src = (self._cluster_for_python(sdf.select(*by, *cols), by)
-               .sortWithinPartitions(*[F.col(b) for b in by]))
-        out = src.mapInPandas(gen, schema)
+        out = _grouped_batches(sdf.select(*by, *cols), by, [], _run, schema)
         return DataFrame._make(out, [*by, "level_1"], list(cols),
                                [(k, True) for k in (*by, "level_1")])
 
@@ -1050,7 +1000,7 @@ class DataFrameGroupBy:
         expressible declaratively; this is the escape hatch.
         """
         from .frame import DataFrame
-        src = self._cluster_for_python(self._df._sdf, self._by)
+        src = _cluster_for_python(self._df._sdf, self._by)
         out = src.groupBy(*self._by).applyInPandas(func, schema)
         return DataFrame.from_spark(out)
 
@@ -1084,7 +1034,7 @@ class DataFrameGroupBy:
             return pdf if predicate(pdf) else pdf.iloc[0:0]
 
         ddl = schema or sdf.schema
-        src = self._cluster_for_python(sdf, self._by)
+        src = _cluster_for_python(sdf, self._by)
         out = src.groupBy(*self._by).applyInPandas(_flt, ddl)
         return DataFrame._make(out, self._df._index_cols,
                                self._df._data_cols, self._df._order)
@@ -1164,12 +1114,75 @@ class DataFrameGroupBy:
         return self._aggregate(aggregations)
 
 
-class _GroupRolling:
+class _GroupWindow:
+    """The pandas ``.agg`` binding of the grouped window faces
+    (:class:`_GroupRolling`, :class:`_GroupEwm`), written once: a str
+    delegates; a dict {col: stat} column-binds one statistic per named
+    value column (flat names, the bound columns replace the value
+    columns); a list emits flat stat names for a single value column
+    (pandas' Series-face shape) or ``str((col, stat))`` col-major for
+    several. Unbound value columns drop out. A face supplies
+    ``_STATS`` and ``_bound(items)``, which runs every requested
+    statistic in ONE pass."""
+
+    _drop = ()
+    _HINT = ""
+
+    def agg(self, func):
+        if isinstance(func, str):
+            return getattr(self, func)()
+        vcols = [c for c in self._gb._value_cols() if c not in self._drop]
+        if isinstance(func, dict):
+            items = []
+            for c, st in func.items():
+                if not isinstance(st, str):
+                    raise ValueError(
+                        f"grouped {self._WHAT} .agg dict values must be "
+                        "single statistic names (a list per column "
+                        "would need MultiIndex columns); got "
+                        f"{st!r} for {c!r}")
+                if c not in vcols:
+                    raise KeyError(c)
+                items.append((str(c), c, st))
+        else:
+            stats = list(func)
+            if len(vcols) == 1:
+                items = [(str(st), vcols[0], st) for st in stats]
+            else:
+                items = [(str((c, st)), c, st)
+                         for c in vcols for st in stats]
+        if not items:
+            raise ValueError("no results")
+        names = [n for n, _, _ in items]
+        if len(set(names)) < len(items):
+            raise ValueError(
+                "duplicate output names in .agg; engine columns "
+                "are uniquely named — use a dict to alias each "
+                "statistic")
+        for _, _, st in items:
+            if not isinstance(st, str) or st not in self._STATS:
+                raise ValueError(
+                    f"unknown grouped {self._WHAT} statistic {st!r}; "
+                    f"expected one of {sorted(self._STATS)}"
+                    + self._HINT)
+        _kept(self._gb._df, vcols, names)
+        return self._bound(items)
+
+    aggregate = agg
+
+
+class _GroupRolling(_GroupWindow):
     """Per-group trailing-window aggregations (see
     :meth:`DataFrameGroupBy.rolling`). Returns the original frame
     with value columns replaced by their rolled statistics, aligned
     row-for-row — join-free. pandas min_periods semantics: count()
     gates on window fullness, the rest on non-null observations."""
+
+    _JVM_STATS = ("sum", "mean", "count", "min", "max", "var",
+                  "std")
+    _STATS = _JVM_STATS + ("median", "skew", "kurt", "sem", "rank")
+    _WHAT = "window"
+    _HINT = " (quantile needs q= — call it directly)"
 
     def __init__(self, gb: DataFrameGroupBy, window: int | None,
                  min_periods: int | None, center: bool = False,
@@ -1194,6 +1207,21 @@ class _GroupRolling:
             min_periods = 1 if window is None else window
         self._mp = min_periods
 
+    def _time_col(self):
+        """The datetime column the frame is sorted by: the time axis
+        of a time-offset window, for the JVM RANGE frame and the
+        pandas pass alike."""
+        df = self._gb._df
+        sch = {f.name: f.dataType.typeName() for f in df._sdf.schema.fields}
+        tcol = next((c for c, _ in (df._order or [])
+                     if sch.get(c) in ("timestamp", "timestamp_ntz",
+                                       "date")), None)
+        if tcol is None:
+            raise TypeError(
+                "a time-offset grouped rolling needs the frame "
+                "sorted by a datetime column (sort_values first)")
+        return tcol
+
     def _wspec(self):
         """The shared per-group Window spec (rows / range / time
         frame) — ONE spec serves every statistic of a fused
@@ -1201,33 +1229,14 @@ class _GroupRolling:
         Window node: one group-key shuffle + one sort regardless of
         statistic count."""
         from pyspark.sql import Window
-
-        from ..plans.ordinal import ORD_COL
-        from .ordering import order_exprs
         gb = self._gb
-        sdf = gb._df._sdf
-        order = order_exprs(gb._df._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        if not order:
-            raise ValueError(
-                "groupby rolling needs a defined row order; "
-                "sort_values/sort_index first")
+        _, order = gb._gorder()
         if self._time_us is not None:
             # time-offset frame: (t - offset, t] over the order
             # column's microseconds — integer micros make the open
             # left bound exact as -(offset - 1)
-            sch = {f.name: f.dataType.typeName()
-                   for f in sdf.schema.fields}
-            tcol = next(
-                (c for c, _ in (gb._df._order or [])
-                 if sch.get(c) in ("timestamp", "timestamp_ntz",
-                                   "date")), None)
-            if tcol is None:
-                raise TypeError(
-                    "a time-offset grouped rolling needs the frame "
-                    "sorted by a datetime column (sort_values first)")
-            micros = F.unix_micros(F.col(tcol).cast("timestamp"))
+            micros = F.unix_micros(F.col(self._time_col())
+                                   .cast("timestamp"))
             return (Window.partitionBy(*gb._by).orderBy(micros)
                     .rangeBetween(-(self._time_us - 1), 0))
         if self._window is None:
@@ -1257,17 +1266,23 @@ class _GroupRolling:
         return _gated(_AGG_FNS[name](v).over(w), n,
                       self._mp).cast("double")
 
-    def _agg(self, name: str):
+    def _select(self, outs: dict, data=None):
+        """The kept columns plus the JVM window expressions ``outs``
+        {name: expr} in ONE select; ``data`` overrides the result's
+        data columns (default: kept ones, then ``outs``)."""
         from .frame import DataFrame
-        gb = self._gb
-        sdf = gb._df._sdf
+        df = self._gb._df
+        kept, kept_data = _kept(df, self._gb._value_cols(), outs)
+        return DataFrame._make(
+            df._sdf.select(*kept, *[e.alias(n) for n, e in outs.items()]),
+            df._index_cols, kept_data + list(outs) if data is None else data,
+            df._order)
+
+    def _agg(self, name: str):
         w = self._wspec()
-        cols = gb._value_cols()
-        sel = [F.col(cc) for cc in sdf.columns if cc not in cols] + \
-            [self._jvm_expr(name, c, w).alias(c) for c in cols]
-        out = sdf.select(*sel)
-        return DataFrame._make(out, gb._df._index_cols,
-                               gb._df._data_cols, gb._df._order)
+        return self._select({c: self._jvm_expr(name, c, w)
+                             for c in self._gb._value_cols()},
+                            self._gb._df._data_cols)
 
     def sum(self): return self._agg("sum")
     def mean(self): return self._agg("mean")
@@ -1277,264 +1292,64 @@ class _GroupRolling:
     def var(self): return self._agg("var")
     def std(self): return self._agg("std")
 
-    def _local(self, stat: str, **kw):
-        """Per-group rolling/expanding order statistics (median/
-        quantile/skew/kurt/sem/rank): Spark refuses median/percentile
-        over a row-framed window (INVALID_WINDOW_SPEC_FOR_AGGREGATION
-        _FUNC), so these ride the batched mapInPandas kernel — many
-        groups per Python call via _batched_group_gen, pandas'
-        grouped rolling C kernels inside, same shape as _GroupEwm.
-        Groups are bounded per key, so even the EXPANDING flavor
-        needs no cross-partition carry."""
-        import pandas as pd  # noqa: F401
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        from .frame import DataFrame
-        gb = self._gb
-        if self._time_us is not None and self._center:
-            raise ValueError(
-                "time-offset grouped rolling has no center=")
-        sdf, order = gb._gorder()
-        vcols = gb._value_cols()
-        by = list(gb._by)
-        ocols = [c for c, _ in (gb._df._order or [])
-                 if c in sdf.columns]
-        if not ocols and ORD_COL in sdf.columns:
-            ocols = [ORD_COL]
-        asc = [a for c, a in (gb._df._order or [(ORD_COL, True)])
-               if c in sdf.columns] or [True]
-        schema = T.StructType([
-            T.StructField(f.name, T.DoubleType() if f.name in vcols
-                          else f.dataType, True)
-            for f in sdf.schema.fields])
+    def _pass(self, what, **kw):
+        """Order statistics (median/quantile/skew/kurt/sem/rank), alone
+        or in an ``.agg``: Spark refuses median/percentile over a
+        row-framed window (INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC),
+        so these run pandas' grouped rolling C kernels in the shared
+        batched pass (:func:`_window_pass`). Groups are bounded per
+        key, so the EXPANDING flavor needs no cross-partition carry
+        and the time-offset flavor no budget (unlike the global
+        face); pandas' own time kernel supplies the positional
+        duplicate-stamp rule, so these match pandas exactly where the
+        JVM RANGE aggregates document their same-stamp-peers
+        divergence."""
+        import pandas as pd
         window, mp, center = self._window, self._mp, self._center
-        time_us = self._time_us
-        tcol = None
-        if time_us is not None:
-            # r9: time-offset grouped ORDER stats ride the same
-            # batched kernel (groups are bounded per key, so no
-            # budget is needed — unlike the global face). The frame
-            # must be time-sorted (same contract as the JVM-agg
-            # face); pandas' own kernel supplies the positional
-            # duplicate-stamp rule, so these match pandas exactly
-            # where the JVM RANGE aggregates document their
-            # same-stamp-peers divergence.
-            sch = {f.name: f.dataType.typeName()
-                   for f in sdf.schema.fields}
-            tcol = next(
-                (c for c, _ in (gb._df._order or [])
-                 if sch.get(c) in ("timestamp", "timestamp_ntz",
-                                   "date")), None)
-            if tcol is None:
-                raise TypeError(
-                    "a time-offset grouped rolling needs the frame "
-                    "sorted by a datetime column (sort_values "
-                    "first)")
+        index = None
+        if self._time_us is not None:
+            index, td = self._time_col(), pd.Timedelta(self._time_us,
+                                                       unit="us")
 
-        def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.copy()
-            fv = pdf[vcols].astype("float64")
-            fv[by] = pdf[by]
-            if time_us is not None:
-                fv.index = pd.DatetimeIndex(
-                    pd.to_datetime(pdf[tcol]))
-            g = fv.groupby(by, sort=False, dropna=False)[vcols]
-            if time_us is not None:
-                roll = g.rolling(pd.Timedelta(time_us, unit="us"),
-                                 min_periods=mp)
-            elif window is not None:
-                roll = g.rolling(window, min_periods=mp,
-                                 center=center)
-            else:
-                roll = g.expanding(mp)
-            pdf[vcols] = getattr(roll, stat)(**kw).to_numpy()
-            return pdf
+            def window_of(g, pdf):
+                return g.rolling(td, min_periods=mp)
+        elif window is not None:
+            def window_of(g, pdf):
+                return g.rolling(window, min_periods=mp, center=center)
+        else:
+            def window_of(g, pdf):
+                return g.expanding(mp)
+        return _window_pass(self._gb, what, window_of, kw, index)
 
-        gen = _batched_group_gen(by, _run)
-        oexprs = [F.col(c).asc() if a else F.col(c).desc()
-                  for c, a in zip(ocols, asc)]
-        src = (gb._cluster_for_python(sdf, by)
-               .sortWithinPartitions(*[F.col(b) for b in by], *oexprs))
-        out = src.mapInPandas(gen, schema)
-        return DataFrame._make(out, gb._df._index_cols,
-                               gb._df._data_cols, gb._df._order)
-
-    def median(self): return self._local("median")
+    def median(self): return self._pass("median")
 
     def quantile(self, q: float = 0.5, interpolation: str = "linear"):
-        return self._local("quantile", q=q, interpolation=interpolation)
+        return self._pass("quantile", q=q, interpolation=interpolation)
 
-    def skew(self): return self._local("skew")
-    def kurt(self): return self._local("kurt")
+    def skew(self): return self._pass("skew")
+    def kurt(self): return self._pass("kurt")
 
     def sem(self, ddof: int = 1):
-        return self._local("sem", ddof=ddof)
+        return self._pass("sem", ddof=ddof)
 
     def rank(self, method: str = "average", pct: bool = False):
-        return self._local("rank", method=method, pct=pct)
+        return self._pass("rank", method=method, pct=pct)
 
-    _JVM_STATS = ("sum", "mean", "count", "min", "max", "var",
-                  "std")
-    _ORDER_STATS = ("median", "skew", "kurt", "sem", "rank")
-
-    def agg(self, func):
-        """pandas ``.agg`` on the grouped window faces (r11 — the
-        last missing window ``.agg``): a str delegates; a dict
-        {col: stat} column-binds one statistic per named value
-        column (flat names, the bound columns replace the value
-        columns); a list emits flat stat names for a single value
-        column (pandas' Series-face shape) or ``str((col, stat))``
-        col-major for several. When every requested statistic is
-        JVM-frameable (sum/mean/count/min/max/var/std) the WHOLE
-        request is one select over ONE shared Window spec — a
-        single Window node, so one group-key shuffle + one sort
-        regardless of statistic count (the grouped fusion shape; at
-        scale each extra statistic is a free expression, not an
+    def _bound(self, items):
+        """A bound ``.agg``: when every statistic is JVM-frameable
+        (sum/mean/count/min/max/var/std) the WHOLE request is one
+        select over ONE shared Window spec — a single Window node, so
+        one group-key shuffle + one sort regardless of statistic
+        count (each extra statistic is a free expression, not an
         extra scan). Any order statistic routes the whole request
-        through ONE batched mapInPandas pass — pandas' own grouped
-        kernels compute every column per row, positionally aligned
-        by construction. ``quantile`` needs its ``q`` — call it
-        directly, like pandas' own ``.agg(['quantile'])`` refusal."""
-        if isinstance(func, str):
-            return getattr(self, func)()
-        gb = self._gb
-        vcols = gb._value_cols()
-        if isinstance(func, dict):
-            items = []
-            for c, st in func.items():
-                if not isinstance(st, str):
-                    raise ValueError(
-                        "grouped window .agg dict values must be "
-                        "single statistic names (a list per column "
-                        "would need MultiIndex columns); got "
-                        f"{st!r} for {c!r}")
-                if c not in vcols:
-                    raise KeyError(c)
-                items.append((str(c), c, st))
-        else:
-            stats = list(func)
-            if len(vcols) == 1:
-                items = [(str(st), vcols[0], st) for st in stats]
-            else:
-                items = [(str((c, st)), c, st)
-                         for c in vcols for st in stats]
-        if not items:
-            raise ValueError("no results")
-        names = [n for n, _, _ in items]
-        if len(set(names)) < len(items):
-            raise ValueError(
-                "duplicate output names in .agg; engine columns "
-                "are uniquely named — use a dict to alias each "
-                "statistic")
-        allowed = set(self._JVM_STATS) | set(self._ORDER_STATS)
-        for _, _, st in items:
-            if not isinstance(st, str) or st not in allowed:
-                raise ValueError(
-                    f"unknown grouped window statistic {st!r}; "
-                    f"expected one of {sorted(allowed)} (quantile "
-                    "needs q= — call it directly)")
-        sdf = gb._df._sdf
-        kept_sdf = [c for c in sdf.columns if c not in vcols]
-        for n in names:
-            if n in kept_sdf:
-                raise ValueError(
-                    f"output {n!r} collides with a kept column")
-        kept_data = [c for c in gb._df._data_cols
-                     if c not in vcols]
+        through ONE pandas pass. ``quantile`` needs its ``q`` — call
+        it directly, like pandas' own ``.agg(['quantile'])``
+        refusal."""
         if all(st in self._JVM_STATS for _, _, st in items):
             w = self._wspec()
-            sel = [F.col(cc) for cc in kept_sdf] + \
-                [self._jvm_expr(st, c, w).alias(n)
-                 for n, c, st in items]
-            from .frame import DataFrame
-            return DataFrame._make(sdf.select(*sel),
-                                   gb._df._index_cols,
-                                   kept_data + names,
-                                   gb._df._order)
-        return self._local_agg(items, kept_sdf, kept_data)
-
-    aggregate = agg
-
-    def _local_agg(self, items, kept_sdf, kept_data):
-        """Order-stat (or mixed) grouped ``.agg``: ONE batched
-        mapInPandas pass computes every requested column — one
-        pandas kernel call per DISTINCT statistic inside the batch,
-        rows already group-contiguous and order-sorted so the
-        grouped outputs align positionally."""
-        import pandas as pd  # noqa: F401
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        from .frame import DataFrame
-        gb = self._gb
-        if self._time_us is not None and self._center:
-            raise ValueError(
-                "time-offset grouped rolling has no center=")
-        sdf, _ = gb._gorder()
-        vcols = gb._value_cols()
-        by = list(gb._by)
-        ocols = [c for c, _ in (gb._df._order or [])
-                 if c in sdf.columns]
-        if not ocols and ORD_COL in sdf.columns:
-            ocols = [ORD_COL]
-        asc = [a for c, a in (gb._df._order or [(ORD_COL, True)])
-               if c in sdf.columns] or [True]
-        src_fields = {f.name: f for f in sdf.schema.fields}
-        names = [n for n, _, _ in items]
-        schema = T.StructType(
-            [src_fields[c] for c in kept_sdf]
-            + [T.StructField(n, T.DoubleType(), True)
-               for n in names])
-        window, mp, center = self._window, self._mp, self._center
-        time_us = self._time_us
-        tcol = None
-        if time_us is not None:
-            sch = {f.name: f.dataType.typeName()
-                   for f in sdf.schema.fields}
-            tcol = next(
-                (c for c, _ in (gb._df._order or [])
-                 if sch.get(c) in ("timestamp", "timestamp_ntz",
-                                   "date")), None)
-            if tcol is None:
-                raise TypeError(
-                    "a time-offset grouped rolling needs the frame "
-                    "sorted by a datetime column (sort_values "
-                    "first)")
-        out_cols = list(kept_sdf)
-        req = list(items)
-
-        def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            fv = pdf[vcols].astype("float64")
-            fv[by] = pdf[by]
-            if time_us is not None:
-                fv.index = pd.DatetimeIndex(
-                    pd.to_datetime(pdf[tcol]))
-            g = fv.groupby(by, sort=False, dropna=False)[vcols]
-            if time_us is not None:
-                roll = g.rolling(pd.Timedelta(time_us, unit="us"),
-                                 min_periods=mp)
-            elif window is not None:
-                roll = g.rolling(window, min_periods=mp,
-                                 center=center)
-            else:
-                roll = g.expanding(mp)
-            res = {st: getattr(roll, st)()
-                   for st in {st for _, _, st in req}}
-            out = pdf[[c for c in out_cols]].copy()
-            for n, c, st in req:
-                out[n] = res[st][c].to_numpy()
-            return out
-
-        gen = _batched_group_gen(by, _run)
-        oexprs = [F.col(c).asc() if a else F.col(c).desc()
-                  for c, a in zip(ocols, asc)]
-        src = (gb._cluster_for_python(sdf, by)
-               .sortWithinPartitions(*[F.col(b) for b in by],
-                                     *oexprs))
-        out = src.mapInPandas(gen, schema)
-        return DataFrame._make(out, gb._df._index_cols,
-                               kept_data + names, gb._df._order)
+            return self._select({n: self._jvm_expr(st, c, w)
+                                 for n, c, st in items})
+        return self._pass(items)
 
     def agg_pairs(self, specs: dict, ddof: int = 1):
         """ENGINE EXTENSION — the GROUPED face of the window engine's
@@ -1552,15 +1367,12 @@ class _GroupRolling:
 
         ``specs``: {out_name: ('sum'|'mean'|'count', col)
                     | ('cov'|'corr', xcol, ycol)}."""
-        from .frame import DataFrame
         from .window import _gated, _pair_expr
-        gb = self._gb
-        df = gb._df
-        sdf = df._sdf
+        df = self._gb._df
         if self._center:
             raise ValueError("agg_pairs has no center= face")
         w = self._wspec()
-        outs = []
+        outs = {}
         for out, spec in specs.items():
             kind = spec[0]
             if kind in ("sum", "mean", "count"):
@@ -1583,18 +1395,8 @@ class _GroupRolling:
                 raise ValueError(
                     f"unknown statistic {kind!r}; pass "
                     "'sum'/'mean'/'count' or 'cov'/'corr'")
-            outs.append(e.cast("double").alias(out))
-        vcols = set(gb._value_cols())
-        kept_sdf = [c for c in sdf.columns if c not in vcols]
-        for out in specs:
-            if out in kept_sdf:
-                raise ValueError(
-                    f"output {out!r} collides with a kept column")
-        kept_data = [c for c in df._data_cols if c not in vcols]
-        sel = [F.col(cc) for cc in kept_sdf] + outs
-        return DataFrame._make(sdf.select(*sel), df._index_cols,
-                               kept_data + list(specs),
-                               df._order)
+            outs[out] = e.cast("double")
+        return self._select(outs)
 
 
 class _NoIndexGroupBy:
@@ -1624,6 +1426,102 @@ class _NoIndexGroupBy:
                 return out.reset_index()
             return out
         return wrapped
+
+
+def _kept(df, vcols, names=()):
+    """(sdf columns, data columns) a grouped window result keeps
+    beside its outputs — every non-value column; an output name in
+    ``names`` must not collide with them."""
+    kept = [c for c in df._sdf.columns if c not in vcols]
+    for n in names:
+        if n in kept:
+            raise ValueError(f"output {n!r} collides with a kept column")
+    return kept, [c for c in df._data_cols if c not in vcols]
+
+
+def _cluster_for_python(sdf, by):
+    """Explicitly hash-repartition on the group keys before a
+    grouped-PYTHON stage (applyInPandas, or the batched mapInPandas
+    pass of :func:`_grouped_batches`). AQE coalesces the pre-Python
+    exchange by BYTES, but grouped-Python cost is GROUP-COUNT-bound
+    (per-group Arrow + pandas-object overhead runs ~ms), so
+    byte-sized coalescing serializes high-cardinality groupings onto
+    a few tasks — measured 53.6s -> 15.9s at 147k tiny groups
+    (SCALING.md). An explicit repartition(N, keys) is exempt from AQE
+    coalescing and already satisfies the apply's clustering
+    requirement, so no second exchange appears."""
+    n = int(sdf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return sdf.repartition(n, *[F.col(b) for b in by])
+
+
+def _grouped_batches(sdf, by, order, run, schema):
+    """How a grouped pandas kernel sees its rows, decided in ONE place:
+    cluster on the keys (:func:`_cluster_for_python`), sort within
+    partitions by the keys plus ``order``, then ``run`` over whole
+    Arrow batches of key-contiguous rows (:func:`_batched_group_gen`)
+    under ``schema``. The window faces pass the frame's own order
+    (``DataFrameGroupBy._gorder``, pandas' NaN-last placement); faces
+    whose kernel ignores row order within a group pass ``[]``. MANY
+    groups per Python call, not one: per-group applyInPandas pays ~ms
+    of Arrow + pandas object overhead per GROUP, which dominates at
+    high group cardinality (147k four-row groups: 13.8s via
+    applyInPandas, ~2s of single-threaded kernel work here,
+    parallelized)."""
+    return (_cluster_for_python(sdf, by)
+            .sortWithinPartitions(*[F.col(b) for b in by], *order)
+            .mapInPandas(_batched_group_gen(by, run), schema))
+
+
+def _window_pass(gb, what, window_of, kw=None, index=None, drop=()):
+    """ONE batched pandas pass under every grouped window statistic
+    that runs pandas' kernels: the rolling/expanding order statistics,
+    every grouped ewm statistic and any ``.agg`` naming them. Per
+    batch, ``window_of(grouped, pdf)`` opens pandas' window over the
+    grouped float value columns (indexed by the datetime column
+    ``index`` when given) and each DISTINCT statistic runs once with
+    ``kw``; rows arrive group-contiguous in the frame's own order, so
+    the grouped outputs align positionally. ``what`` is a statistic
+    name — every value column but ``drop``, projected back to the
+    source column order (a projection, no job) — or ``.agg`` items
+    ``(out name, column, stat)``, returned after the kept columns."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from .frame import DataFrame
+    df = gb._df
+    sdf, order = gb._gorder()
+    by = list(gb._by)
+    vcols = [c for c in gb._value_cols() if c not in drop]
+    items = ([(c, c, what) for c in vcols] if isinstance(what, str)
+             else list(what))
+    kept, kept_data = _kept(df, vcols)
+    used = {c for _, c, _ in items}
+    cols = [c for c in vcols if c in used]
+    stats = list(dict.fromkeys(st for _, _, st in items))
+    kw = kw or {}
+    schema = T.StructType(
+        [T.StructField(c, sdf.schema[c].dataType, True) for c in kept]
+        + [T.StructField(n, T.DoubleType(), True) for n, _, _ in items])
+
+    def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        fv = pdf[cols].astype("float64")
+        fv[by] = pdf[by]
+        if index is not None:
+            fv.index = pd.DatetimeIndex(pd.to_datetime(pdf[index]))
+        win = window_of(fv.groupby(by, sort=False, dropna=False)[cols],
+                        pdf)
+        res = {st: getattr(win, st)(**kw) for st in stats}
+        out = pdf[kept].copy()
+        for n, c, st in items:
+            out[n] = res[st][c].to_numpy()
+        return out
+
+    out = _grouped_batches(sdf, by, order, _run, schema)
+    if isinstance(what, str):
+        return DataFrame._make(out.select(*sdf.columns), df._index_cols,
+                               df._data_cols, df._order)
+    return DataFrame._make(out, df._index_cols,
+                           kept_data + [n for n, _, _ in items], df._order)
 
 
 def _batched_group_gen(by, run):
@@ -1667,227 +1565,66 @@ def _batched_group_gen(by, run):
     return gen
 
 
-class _GroupEwm:
-    """Per-group EWM face (see :meth:`DataFrameGroupBy.ewm`)."""
+class _GroupEwm(_GroupWindow):
+    """Per-group EWM face (see :meth:`DataFrameGroupBy.ewm`): every
+    statistic, alone or in an ``.agg``, is one run of pandas' grouped
+    ewm kernel in the shared batched pass (:func:`_window_pass`)."""
+
+    _STATS = ("mean", "sum", "var", "std")
+    _WHAT = "ewm"
 
     def __init__(self, gb: DataFrameGroupBy, alpha: float | None,
                  ignore_na: bool, adjust: bool = True,
-                 halflife=None, times: str | None = None):
+                 halflife=None, times: str | None = None,
+                 min_periods: int = 0):
         self._gb, self._alpha, self._ignore_na = gb, alpha, ignore_na
-        self._adjust = adjust
+        self._adjust, self._mp = adjust, min_periods
         self._halflife, self._times = halflife, times
+        self._drop = () if times is None else (times,)
 
-    def _stat(self, stat: str):
-        from .frame import DataFrame
-        gb = self._gb
-        sdf, order = gb._gorder()
-        vcols = gb._value_cols()
-        alpha, ignore_na = self._alpha, self._ignore_na
-        adjust = self._adjust
-        if stat == "sum" and not adjust:
-            # pandas itself refuses this combination
-            raise NotImplementedError(
-                "ewm(adjust=False).sum() is not supported (pandas "
-                "refuses it too); use adjust=True")
-        # order columns must ride into the pandas kernel; expressions
-        # in _order were materialized by sort_values already
-        ocols = [c for c, _ in (gb._df._order or [])
-                 if c in sdf.columns]
-        from ..plans.ordinal import ORD_COL
-        if not ocols and ORD_COL in sdf.columns:
-            ocols = [ORD_COL]
-        asc = [a for c, a in (gb._df._order or [(ORD_COL, True)])
-               if c in sdf.columns] or [True]
-
-        from pyspark.sql import types as T
-        schema = T.StructType([
-            T.StructField(f.name, T.DoubleType() if f.name in vcols
-                          else f.dataType, True)
-            for f in sdf.schema.fields])
-
-        # MANY groups per Python call, not one: sort within the
-        # keyed partitions so groups are contiguous, then run
-        # pandas' own Cython GROUPED ewm kernel over whole Arrow
-        # batches inside mapInPandas. Per-group applyInPandas pays
-        # ~ms of Arrow+pandas object overhead per GROUP, which
-        # dominates at high group cardinality (147k four-row groups:
-        # 13.8s via applyInPandas, ~2s of single-threaded kernel
-        # work here, parallelized). A group that straddles an Arrow
-        # batch boundary is held over and prepended to the next
-        # batch — partitions are key-hashed so no group straddles a
-        # partition, and mapInPandas batches arrive in order.
-        import numpy as np
+    def _pass(self, what):
         import pandas as pd
-        by = list(gb._by)
-        times, halflife = self._times, self._halflife
-        if times is not None:
-            if stat != "mean":
-                raise NotImplementedError(
-                    f"ewm(times=...).{stat}() is not supported "
-                    "(pandas only defines mean)")
-            vcols = [c for c in vcols if c != times]
-            kw = dict(halflife=halflife, ignore_na=ignore_na,
-                      adjust=True)
-        else:
-            kw = dict(alpha=alpha, ignore_na=ignore_na,
-                      adjust=adjust)
-
-        def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.copy()
-            fv = pdf[vcols].astype("float64")
-            fv[by] = pdf[by]
-            k = dict(kw)
-            if times is not None:
-                # pandas' ewm requires an ns-precision datetime64
-                # ARRAY (a string name resolves against the
-                # vcols-restricted selection and fails; Arrow hands
-                # Spark timestamps over as [us])
-                k["times"] = pd.to_datetime(pdf[times]) \
-                    .astype("datetime64[ns]").to_numpy()
-            res = getattr(
-                fv.groupby(by, sort=False, dropna=False)[vcols]
-                .ewm(**k), stat)()
-            pdf[vcols] = res.to_numpy()
-            return pdf
-
-        gen = _batched_group_gen(by, _run)
-
-        by_cols = [F.col(b) for b in by]
-        oexprs = [F.col(c).asc() if a else F.col(c).desc()
-                  for c, a in zip(ocols, asc)]
-        src = (gb._cluster_for_python(sdf, by)
-               .sortWithinPartitions(*by_cols, *oexprs))
-        out = src.mapInPandas(gen, schema)
-        return DataFrame._make(out, gb._df._index_cols,
-                               gb._df._data_cols, gb._df._order)
-
-    def mean(self):
-        return self._stat("mean")
-
-    def sum(self):
-        return self._stat("sum")
-
-    def var(self):
-        return self._stat("var")
-
-    def std(self):
-        return self._stat("std")
-
-    _EWM_STATS = ("mean", "sum", "var", "std")
-
-    def agg(self, func):
-        """pandas ``.agg`` on the grouped ewm face (r11): same
-        naming rules as :meth:`_GroupRolling.agg` (str delegates;
-        dict {col: stat} flat; list → flat stat names for one value
-        column, ``str((col, stat))`` col-major for several). ONE
-        batched mapInPandas pass runs every requested statistic —
-        one pandas grouped-ewm kernel call per DISTINCT statistic
-        inside each batch, one shuffle total."""
-        if isinstance(func, str):
-            return getattr(self, func)()
-        gb = self._gb
-        vcols = gb._value_cols()
-        if self._times is not None:
-            vcols = [c for c in vcols if c != self._times]
-        if isinstance(func, dict):
-            items = []
-            for c, st in func.items():
-                if not isinstance(st, str):
-                    raise ValueError(
-                        "grouped ewm .agg dict values must be "
-                        "single statistic names; got "
-                        f"{st!r} for {c!r}")
-                if c not in vcols:
-                    raise KeyError(c)
-                items.append((str(c), c, st))
-        elif len(vcols) == 1:
-            items = [(str(st), vcols[0], st) for st in func]
-        else:
-            items = [(str((c, st)), c, st)
-                     for c in vcols for st in func]
-        if not items:
-            raise ValueError("no results")
-        names = [n for n, _, _ in items]
-        if len(set(names)) < len(items):
-            raise ValueError(
-                "duplicate output names in .agg; engine columns "
-                "are uniquely named — use a dict to alias each "
-                "statistic")
-        for _, _, st in items:
-            if not isinstance(st, str) or st not in self._EWM_STATS:
-                raise ValueError(
-                    f"unknown grouped ewm statistic {st!r}; "
-                    f"expected one of {list(self._EWM_STATS)}")
-            if self._times is not None and st != "mean":
+        times = self._times
+        for st in ([what] if isinstance(what, str)
+                   else [st for _, _, st in what]):
+            if times is not None and st != "mean":
                 raise NotImplementedError(
                     f"ewm(times=...).{st}() is not supported "
                     "(pandas only defines mean)")
             if st == "sum" and not self._adjust:
+                # pandas itself refuses this combination
                 raise NotImplementedError(
                     "ewm(adjust=False).sum() is not supported "
                     "(pandas refuses it too); use adjust=True")
-        import pandas as pd  # noqa: F401
-        from pyspark.sql import types as T
-
-        from ..plans.ordinal import ORD_COL
-        from .frame import DataFrame
-        sdf, _ = gb._gorder()
-        by = list(gb._by)
-        ocols = [c for c, _ in (gb._df._order or [])
-                 if c in sdf.columns]
-        if not ocols and ORD_COL in sdf.columns:
-            ocols = [ORD_COL]
-        asc = [a for c, a in (gb._df._order or [(ORD_COL, True)])
-               if c in sdf.columns] or [True]
-        kept_sdf = [c for c in sdf.columns if c not in vcols]
-        for n in names:
-            if n in kept_sdf:
-                raise ValueError(
-                    f"output {n!r} collides with a kept column")
-        src_fields = {f.name: f for f in sdf.schema.fields}
-        schema = T.StructType(
-            [src_fields[c] for c in kept_sdf]
-            + [T.StructField(n, T.DoubleType(), True)
-               for n in names])
-        times, halflife = self._times, self._halflife
-        if times is not None:
-            kw = dict(halflife=halflife,
-                      ignore_na=self._ignore_na, adjust=True)
+        kw = dict(ignore_na=self._ignore_na, min_periods=self._mp)
+        if times is None:
+            kw.update(alpha=self._alpha, adjust=self._adjust)
         else:
-            kw = dict(alpha=self._alpha,
-                      ignore_na=self._ignore_na,
-                      adjust=self._adjust)
-        req, out_cols = list(items), list(kept_sdf)
+            kw.update(halflife=self._halflife, adjust=True)
 
-        def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            fv = pdf[vcols].astype("float64")
-            fv[by] = pdf[by]
-            k = dict(kw)
-            if times is not None:
-                k["times"] = pd.to_datetime(pdf[times]) \
-                    .astype("datetime64[ns]").to_numpy()
-            ew = fv.groupby(by, sort=False,
-                            dropna=False)[vcols].ewm(**k)
-            res = {st: getattr(ew, st)()
-                   for st in {st for _, _, st in req}}
-            out = pdf[out_cols].copy()
-            for n, c, st in req:
-                out[n] = res[st][c].to_numpy()
-            return out
+        def window_of(g, pdf):
+            if times is None:
+                return g.ewm(**kw)
+            # pandas' ewm requires an ns-precision datetime64 ARRAY (a
+            # string name resolves against the value-column selection
+            # and fails; Arrow hands Spark timestamps over as [us])
+            return g.ewm(times=pd.to_datetime(pdf[times])
+                         .astype("datetime64[ns]").to_numpy(), **kw)
+        return _window_pass(self._gb, what, window_of, drop=self._drop)
 
-        gen = _batched_group_gen(by, _run)
-        oexprs = [F.col(c).asc() if a else F.col(c).desc()
-                  for c, a in zip(ocols, asc)]
-        src = (gb._cluster_for_python(sdf, by)
-               .sortWithinPartitions(*[F.col(b) for b in by],
-                                     *oexprs))
-        out = src.mapInPandas(gen, schema)
-        kept_data = [c for c in gb._df._data_cols
-                     if c not in vcols]
-        return DataFrame._make(out, gb._df._index_cols,
-                               kept_data + names, gb._df._order)
+    _bound = _pass
 
-    aggregate = agg
+    def mean(self):
+        return self._pass("mean")
+
+    def sum(self):
+        return self._pass("sum")
+
+    def var(self):
+        return self._pass("var")
+
+    def std(self):
+        return self._pass("std")
 
 
 class _GroupResampler:
@@ -1930,9 +1667,8 @@ class _GroupResampler:
                 else "float64")
             return r[by + [on] + vcols]
 
-        src = (gb._cluster_for_python(sdf.select(*by, on, *vcols), by)
-               .sortWithinPartitions(*[F.col(b) for b in by]))
-        out = src.mapInPandas(_batched_group_gen(by, _run), schema)
+        out = _grouped_batches(sdf.select(*by, on, *vcols), by, [], _run,
+                               schema)
         return DataFrame._make(out, [*by, on], vcols,
                                [(k, True) for k in (*by, on)])
 

@@ -162,6 +162,41 @@ def _offset_us(window):
     return us
 
 
+def _ewm_decay(com, span, halflife, alpha, adjust: bool, times):
+    """pandas' EWM decay spellings -> ``(alpha, None)``, or
+    ``(None, halflife Timedelta)`` for the time-decay flavor (``times``
+    given or a Timedelta/offset ``halflife``): exactly one of com/span/
+    halflife/alpha, alpha = 1/(1+com) = 2/(span+1) =
+    1-exp(-ln2/halflife). Shared by the frame and grouped faces."""
+    import datetime as _dt
+    import math
+
+    import pandas as pd
+    if times is not None or isinstance(
+            halflife, (str, _dt.timedelta, pd.Timedelta)):
+        # pandas defines only the adjust=True mean here
+        if halflife is None or any(
+                v is not None for v in (com, span, alpha)):
+            raise ValueError(
+                "ewm(times=...) takes halflife (a Timedelta or "
+                "offset string) and no other decay spelling")
+        if not adjust:
+            raise NotImplementedError(
+                "ewm(times=..., adjust=False) is not supported "
+                "(pandas refuses it too)")
+        return None, pd.Timedelta(halflife)
+    if sum(v is not None for v in (com, span, halflife, alpha)) != 1:
+        raise ValueError(
+            "pass exactly one of com, span, halflife, alpha")
+    if com is not None:
+        alpha = 1.0 / (1.0 + com)
+    elif span is not None:
+        alpha = 2.0 / (span + 1.0)
+    elif halflife is not None:
+        alpha = 1.0 - math.exp(-math.log(2.0) / halflife)
+    return float(alpha), None
+
+
 # ------------------------------------------------------ prefix sources
 
 
@@ -1031,41 +1066,15 @@ class Ewm:
     def __init__(self, df, cols, com=None, span=None, halflife=None,
                  alpha=None, min_periods: int = 0, adjust: bool = True,
                  ignore_na: bool = False, times=None):
-        import datetime as _dt
-        import math
-
-        import pandas as pd
         self._df = df
         self._cols = list(cols)
         self._mp = min_periods
         self._ignore_na = ignore_na
         self._adjust = bool(adjust)
         self._times = times
-        self._hl_us = None
-        if times is not None or isinstance(
-                halflife, (str, _dt.timedelta, pd.Timedelta)):
-            # pandas defines only the adjust=True mean here
-            if halflife is None or any(
-                    v is not None for v in (com, span, alpha)):
-                raise ValueError(
-                    "ewm(times=...) takes halflife (a Timedelta or "
-                    "offset string) and no other decay spelling")
-            if not adjust:
-                raise NotImplementedError(
-                    "ewm(times=..., adjust=False) is not supported "
-                    "(pandas refuses it too)")
-            self._hl_us = pd.Timedelta(halflife).value / 1000.0
-            return
-        if sum(v is not None for v in (com, span, halflife, alpha)) != 1:
-            raise ValueError(
-                "pass exactly one of com, span, halflife, alpha")
-        if com is not None:
-            alpha = 1.0 / (1.0 + com)
-        elif span is not None:
-            alpha = 2.0 / (span + 1.0)
-        elif halflife is not None:
-            alpha = 1.0 - math.exp(-math.log(2.0) / halflife)
-        self._alpha = float(alpha)
+        self._alpha, hl = _ewm_decay(com, span, halflife, alpha, adjust,
+                                     times)
+        self._hl_us = None if hl is None else hl.value / 1000.0
 
     def _scan(self, pairs: dict, stat: str, bias: bool = False):
         """One stat for every tag -> (x, y) pair through ONE fused

@@ -436,8 +436,9 @@ def test_sem_all_surfaces(bl):
 
 
 def test_groupby_ewm_and_callable_agg(bl):
-    """groupby().ewm().mean() via applyInPandas (pandas C kernel per
-    group); dict agg resolves callables like pandas (np.sum)."""
+    """groupby().ewm().mean() via the shared batched mapInPandas pass
+    (pandas' grouped C kernel over whole batches); dict agg resolves
+    callables like pandas (np.sum)."""
     import numpy as np
     import pandas as pd
     pdf = pd.DataFrame({"k": ["a", "b", "a", "b", "a"],
@@ -456,6 +457,8 @@ def test_groupby_ewm_and_callable_agg(bl):
     import pytest
     with pytest.raises(ValueError, match="exactly one of"):
         df.groupby("k").ewm()
+    with pytest.raises(ValueError, match="times="):
+        df.groupby("k").ewm(halflife="1h")
     # com/halflife spellings share Series.ewm's conversions
     got = df.groupby("k").ewm(com=2.0).mean().to_pandas() \
         .sort_values(["k", "t"])["v"].tolist()
@@ -463,6 +466,15 @@ def test_groupby_ewm_and_callable_agg(bl):
         .reset_index().sort_values(["k", "t"])["v"].tolist()
     for g, w in zip(got, want):
         assert (g != g and w != w) or abs(g - w) < 1e-12
+    # min_periods goes straight to pandas' grouped kernel
+    p3 = pd.DataFrame({"k": list("abababab"),
+                       "v": [1., 2., np.nan, 4., 5., 6., 7., np.nan]})
+    got = bl.DataFrame({c: p3[c].to_numpy() for c in p3}) \
+        .groupby("k").ewm(alpha=0.5, min_periods=3).mean() \
+        .to_pandas()["v"].to_numpy()
+    want = p3.groupby("k")["v"].transform(
+        lambda s: s.ewm(alpha=0.5, min_periods=3).mean()).to_numpy()
+    np.testing.assert_allclose(got, want, atol=1e-12, equal_nan=True)
     # sum/var/std moments share the per-group pandas kernel
     # restrict to ["v"] so the numeric t column (which the grouped
     # transform would also rewrite, like pandas) keeps the row order
@@ -605,7 +617,8 @@ def test_groupby_rolling_order_stats_match_pandas(bl):
     """Per-group rolling/expanding ORDER statistics (median/quantile/
     skew/sem/rank): Spark refuses median/percentile over a row-framed
     window, so these ride the batched mapInPandas kernel
-    (_GroupRolling._local) — many groups per Python call, pandas'
+    (the shared grouped window pass, _window_pass) — many groups per
+    Python call, pandas'
     grouped rolling C kernels inside. Expanding flavors need no
     carry (groups are local per key)."""
     import numpy as np
@@ -898,3 +911,80 @@ def test_grouped_window_agg_faces_r11(bl):
         d.groupby("g").rolling(3).agg({"zz": "sum"})
     with pytest.raises(ValueError, match="cov"):
         d.groupby("g").rolling(3).agg_pairs({"o": ("mad", "v")})
+
+
+def test_grouped_pandas_faces_order_nat_last(bl):
+    """The grouped faces that run pandas' kernels feed each group's
+    rows in the frame's own order, NaT-keyed rows LAST like pandas'
+    sort. A frame sorted by a datetime column with NaT in two groups,
+    value by value in frame order; the JVM rolling sum is the
+    control (its Window spec always used the frame's order)."""
+    import pandas as pd
+    t = pd.to_datetime(
+        ["2024-01-01 05:00", "NaT", "2024-01-01 01:00",
+         "2024-01-01 02:00", "NaT", "2024-01-01 03:00",
+         "2024-01-01 04:00", "2024-01-01 00:00", "NaT",
+         "2024-01-01 06:00", "2024-01-01 07:00", "2024-01-01 08:00"])
+    pdf = pd.DataFrame({"g": list("abababababab"), "t": t,
+                        "i": [f"r{k:02d}" for k in range(12)],
+                        "v": [3., 100., 1., 7., 50., 2., 9., 4., -20.,
+                              5., 8., 6.]})
+    # "i" breaks the NaT ties, so the frame order is total
+    ps = pdf.sort_values(["t", "i"]).reset_index(drop=True)
+    d = bl.DataFrame({c: pdf[c].to_numpy() for c in pdf}) \
+        .sort_values(["t", "i"])
+    cases = [
+        ("rolling sum", ["v"],
+         lambda w: w.rolling(3, min_periods=1).sum()),
+        ("rolling median", ["v"],
+         lambda w: w.rolling(3, min_periods=1).median()),
+        ("rolling rank", ["v"],
+         lambda w: w.rolling(3, min_periods=1).rank()),
+        ("expanding skew", ["v"], lambda w: w.expanding(2).skew()),
+        ("rolling agg", ["mean", "median"],
+         lambda w: w.rolling(3, min_periods=1).agg(["mean", "median"])),
+        ("ewm mean", ["v"], lambda w: w.ewm(alpha=.5).mean()),
+        ("ewm agg", ["mean", "var"],
+         lambda w: w.ewm(alpha=.5).agg(["mean", "var"])),
+    ]
+    for name, cols, face in cases:
+        got = face(d.groupby("g")).to_pandas()[cols].to_numpy()
+        want = face(ps.groupby("g")["v"]) \
+            .reset_index(level=0, drop=True).sort_index().to_numpy()
+        np.testing.assert_allclose(got, want.reshape(len(ps), -1),
+                                   atol=1e-12, equal_nan=True,
+                                   err_msg=name)
+
+
+def test_grouped_pandas_faces_plan_one_pass(bl):
+    """Plan pin: every grouped face that runs a pandas kernel (window
+    order statistics, ewm, spearman corr, resample) plans exactly ONE
+    batched MapInPandas behind the group-key exchange — the sorted
+    frame's broadcast layout join is the second Exchange."""
+    import pandas as pd
+    rng = np.random.default_rng(17)
+    n = 400
+    t = pd.to_datetime("2024-01-01") + pd.to_timedelta(
+        np.sort(rng.choice(np.arange(n * 50), n, replace=False)), "s")
+    d = bl.DataFrame({"g": rng.integers(0, 8, n).astype(str),
+                      "t": t.to_numpy(), "v": rng.normal(size=n),
+                      "u": rng.normal(size=n)}).sort_values("t")
+    faces = {
+        "rolling median": lambda gb: gb.rolling(5).median(),
+        "rolling agg": lambda gb: gb.rolling(5).agg(["mean", "median"]),
+        "time rolling quantile":
+            lambda gb: gb.rolling("2h").quantile(.3),
+        "expanding skew": lambda gb: gb.expanding(2).skew(),
+        "ewm mean": lambda gb: gb.ewm(alpha=.3).mean(),
+        "ewm agg": lambda gb: gb.ewm(alpha=.3).agg(["mean", "var"]),
+        "time ewm mean":
+            lambda gb: gb.ewm(halflife="1h", times="t").mean(),
+        "spearman corr": lambda gb: gb.corr(method="spearman"),
+        "resample median":
+            lambda gb: gb.resample("1D", on="t").median(),
+    }
+    for name, face in faces.items():
+        plan = face(d.groupby("g")).to_spark()._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, (name, plan)
+        assert plan.count("Exchange ") == 2, (name, plan)
