@@ -32,6 +32,9 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def _conf(spark: SparkSession) -> None:
     """Pin runtime confs the engine depends on (the driver's session
     may not have been built by baloo_spark.session.get_session)."""
+    # Only runtime SQL confs: a session handed in keeps its own core
+    # confs, e.g. Spark's default Python daemon rather than
+    # baloo_spark._pydaemon (a daemon is fixed when the context starts).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -19,13 +19,29 @@ Scale notes (local[32] test box vs 1000-executor cluster):
   optimizer injects a bloom_filter_agg on the dim side and prunes the
   fact scan before the shuffle. Pinned by tests/test_plans.py::
   test_runtime_bloom_filter_join_pruning.
+- Python workers run under ``baloo_spark._pydaemon``
+  (``spark.python.daemon.module``): Spark's own daemon, except that a
+  reused worker stops re-reading ``pyspark.zip``'s directory at the
+  start of every ``mapInPandas`` / ``pandas_udf`` task (a fixed
+  per-task cost on Python 3.11; see that module). ``_daemon_conf``
+  keeps Spark's default daemon where workers could not import it: a
+  master other than ``local``/``local[...]`` (executors run elsewhere),
+  a driver whose cwd, ``PYTHONPATH`` and site-packages do not lead to
+  this copy of ``baloo_spark`` first, or a caller that set
+  ``spark.python.daemon.module`` itself.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import site
 
 from pyspark.sql import SparkSession
+
+_DAEMON_KEY = "spark.python.daemon.module"
+# the directory that holds this baloo_spark package
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -79,6 +95,35 @@ def get_session(app_name: str = "baloo_spark", master: str | None = None,
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    conf.update(_daemon_conf(master, conf, _worker_roots(), _PKG_ROOT))
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _daemon_conf(master: str, conf: dict, worker_roots: list[str],
+                 pkg_root: str) -> dict:
+    """The ``spark.python.daemon.module`` entry to add to ``conf``:
+    ``baloo_spark._pydaemon`` when a local master's workers import this
+    package (``worker_roots``, the directories on their ``sys.path``
+    that hold a ``baloo_spark`` package, in import order, start with
+    ``pkg_root``) and ``conf`` names no daemon of its own, else
+    nothing (Spark's default daemon)."""
+    if (_DAEMON_KEY in conf
+            or not re.fullmatch(r"local(\[.+\])?", master)
+            or not worker_roots or worker_roots[0] != pkg_root):
+        return {}
+    return {_DAEMON_KEY: "baloo_spark._pydaemon"}
+
+
+def _worker_roots() -> list[str]:
+    """Directories on a local Python worker's ``sys.path`` that hold a
+    ``baloo_spark`` package, in import order: Spark starts the daemon
+    with ``python -m`` in the driver's cwd, then come ``PYTHONPATH`` and
+    site-packages (no cwd under ``PYTHONSAFEPATH``)."""
+    cwd = [] if os.environ.get("PYTHONSAFEPATH") else [os.getcwd()]
+    search = [*cwd,
+              *filter(None, os.environ.get("PYTHONPATH", "").split(os.pathsep)),
+              *site.getsitepackages(), site.getusersitepackages()]
+    return [os.path.realpath(p) for p in search
+            if os.path.isfile(os.path.join(p, "baloo_spark", "__init__.py"))]
