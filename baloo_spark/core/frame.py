@@ -155,6 +155,15 @@ def _eval_to_sql(src: str, local_dict=None, columns=None,
     return emit(_ast.parse(src, mode="eval").body)
 
 
+def _per_column(row_df, cols, name) -> Series:
+    """The one-row aggregate ``row_df`` (one column per name in
+    ``cols``) as a Series named ``name`` indexed by column name."""
+    pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
+    out = row_df.select(F.expr(
+        f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
+    return Series._make(out, F.col("__agg__"), [_IDX], name, None)
+
+
 class DataFrame:
     """Columnar frame with pandas-flavored API, Spark execution.
 
@@ -1336,10 +1345,7 @@ class DataFrame:
         row_df = self._sdf.agg(*[
             F.coalesce(F.max(self._truthy(c)), F.lit(False)).alias(c)
             for c in cols])
-        pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-        out = row_df.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
-        return Series._make(out, F.col("__agg__"), [_IDX], "any", None)
+        return _per_column(row_df, cols, "any")
 
     def all(self, axis: int = 0) -> Series:
         """Per-column all (pandas skipna flavor: NULLs ignored,
@@ -1351,10 +1357,7 @@ class DataFrame:
         row_df = self._sdf.agg(*[
             F.coalesce(F.min(self._truthy(c)), F.lit(True)).alias(c)
             for c in cols])
-        pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-        out = row_df.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
-        return Series._make(out, F.col("__agg__"), [_IDX], "all", None)
+        return _per_column(row_df, cols, "all")
 
     def idxmax(self) -> Series:
         """Per-column index label of the maximum (pandas
@@ -1395,11 +1398,8 @@ class DataFrame:
                 (-F.col(POS_COL)).alias("np")))
             aggs.append(F.max_by(label, key).cast(stack_t).alias(c))
         row_df = sdf.agg(*aggs)
-        pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-        out = row_df.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
-        return Series._make(out, F.col("__agg__"), [_IDX],
-                            "idxmin" if ascending else "idxmax", None)
+        return _per_column(row_df, cols,
+                           "idxmin" if ascending else "idxmax")
 
     # ------------------------------------------------------ positional ops
 
@@ -1784,19 +1784,21 @@ class DataFrame:
 
     def unstack(self, level: int = -1, max_columns: int = 10000,
                 verify_integrity: bool = True) -> "DataFrame":
-        """pandas ``DataFrame.unstack``. One data column delegates
-        to :meth:`Series.unstack` (flat level-value column names).
-        Multiple data columns pivot in ONE pass — one hash-agg
-        shuffle carries every column's F.first — and the MultiIndex
-        columns pandas produces ((col, level-value) pairs) flatten
-        to their pandas string spelling ``str((col, value))``, in
-        pandas' col-major order; the engine's column model is flat.
-        Same ``max_columns`` collect guard and duplicate-pair
-        ``verify_integrity`` job as the Series face."""
-        if len(self._data_cols) == 1:
-            return self[self._data_cols[0]].unstack(
-                level=level, max_columns=max_columns,
-                verify_integrity=verify_integrity)
+        """pandas ``DataFrame.unstack`` (and the Series face): pivot
+        one index level into columns. Needs >= 2 index levels; the
+        level's distinct values are collected once (guarded by
+        ``max_columns`` — the unstacked width must be driver-sized by
+        definition) and passed explicitly to ``groupBy().pivot(...)``
+        so the plan has no hidden distinct job and the column order is
+        deterministic (sorted, like pandas). ONE hash-agg shuffle
+        carries every column's F.first. One data column keeps the flat
+        level-value column names; several flatten pandas' MultiIndex
+        columns ((col, level-value) pairs) to their string spelling
+        ``str((col, value))``, in pandas' col-major order — the
+        engine's column model is flat. ``verify_integrity`` pays one
+        hash-agg job to raise on duplicate (index, level) pairs like
+        pandas (F.first would silently pick one); pass False to skip
+        it when uniqueness is guaranteed upstream."""
         idx = [c for c in self._index_cols if c in self._sdf.columns
                and c != ORD_COL]
         if len(idx) < 2:
@@ -1827,17 +1829,16 @@ class DataFrame:
         out = (sdf.groupBy(*remaining).pivot(lvl, pvals)
                .agg(*[F.first(c).alias(f"__u_{c}__")
                       for c in cols]))
-        # Spark names multi-agg pivot outputs value-major
-        # ("<pval>___u_<col>__", in (pvals x aggs) order) — rename
-        # positionally, then reorder to pandas' col-major layout
-        names = list(remaining) + [str((c, p))
-                                   for p in pvals for c in cols]
-        out = out.toDF(*names)
-        ordered = list(remaining) + [str((c, p))
-                                     for c in cols for p in pvals]
-        out = out.select(*ordered)
+        if len(cols) > 1:
+            # Spark names multi-agg pivot outputs value-major
+            # ("<pval>___u_<col>__", in (pvals x aggs) order) — rename
+            # positionally, then reorder to pandas' col-major layout
+            out = out.toDF(*remaining, *[str((c, p))
+                                         for p in pvals for c in cols])
+            out = out.select(*remaining, *[str((c, p))
+                                           for c in cols for p in pvals])
         return DataFrame._make(
-            out, remaining, [c for c in ordered
+            out, remaining, [c for c in out.columns
                              if c not in remaining],
             [(c, True) for c in remaining])
 
@@ -2008,10 +2009,7 @@ class DataFrame:
                  .cast("double").alias(c)
                  for c in cols]
         row_df = self._sdf.agg(*exprs)
-        pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-        out = row_df.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
-        return Series._make(out, F.col("__agg__"), [_IDX], name, None)
+        return _per_column(row_df, cols, name)
 
     def _agg_axis1(self, name: str) -> Series:
         """Row-wise aggregate across the numeric columns (pandas
@@ -2071,40 +2069,68 @@ class DataFrame:
     def std(self): return self._agg_row("std")
 
     def quantile(self, q=0.5, approx: bool = False,
-                 accuracy: int = 10000):
-        """Per-column quantile(s) — ONE aggregate job with a single
-        array-percentile buffer per column (the describe scheme).
-        Scalar ``q`` returns a Series indexed by column name; a list
-        returns a DataFrame with one row per quantile. ``approx=True``
-        is the GK-sketch 100 TB face (exact percentiles buffer the
-        value multiset)."""
+                 accuracy: int = 10000, interpolation: str = "linear"):
+        """Per-column quantile(s) from ONE aggregate row
+        (:meth:`_quantile_row`). Scalar ``q`` returns a Series indexed
+        by column name; a list returns a DataFrame with one row per
+        quantile. ``approx=True`` is the GK-sketch 100 TB face (exact
+        percentiles buffer the value multiset)."""
         scalar = isinstance(q, (int, float))
         ps = [float(q)] if scalar else [float(p) for p in q]
         for p in ps:
             if not 0 <= p <= 1:
                 raise ValueError(f"quantile {p} outside [0, 1]")
         cols = self._numeric_cols()
-        qarr = F.expr("array(" + ",".join(f"{p!r}D" for p in ps) + ")")
-        exprs = []
-        for c in cols:
-            d = F.col(c).cast("double")
-            e = (F.percentile_approx(d, qarr, F.lit(accuracy))
-                 if approx else F.percentile(d, qarr))
-            exprs.append(e.alias(c))
-        row = self._sdf.agg(*exprs).first()
-        import numpy as np
+        row = self._quantile_row(cols, ps, approx, accuracy,
+                                 interpolation)
         if scalar:
-            return DataFrame(
-                {"column": np.array(cols, dtype=object),
-                 "q": np.array([row[c][0] if row[c] is not None
-                                else np.nan for c in cols])}) \
-                .set_index("column")["q"]
-        data = {"q": np.array(ps)}
-        for c in cols:
-            vals = row[c] or [None] * len(ps)
-            data[c] = np.array([v if v is not None else np.nan
-                                for v in vals])
-        return DataFrame(data).set_index("q")
+            first = [F.element_at(F.col(c), 1).alias(c) for c in cols]
+            return _per_column(row.select(*first), cols, "q")
+        groups = ", ".join(
+            f"{p!r}D, " + ", ".join(f"element_at(`{c}`, {i + 1})"
+                                    for c in cols)
+            for i, p in enumerate(ps))
+        names = ", ".join(["`q`"] + [f"`{c}`" for c in cols])
+        out = row.select(F.expr(f"stack({len(ps)}, {groups}) as ({names})"))
+        return DataFrame._make(out, ["q"], cols, None)
+
+    def _quantile_row(self, cols, ps, approx, accuracy, interpolation):
+        """ONE row holding, for each column in ``cols``, the array of
+        its quantiles at ``ps`` (as doubles; NULL where the column has
+        no values) — the body under both quantile faces.
+        ``approx=True`` is Spark's Greenwald-Khanna sketch
+        (percentile_approx: mergeable, bounded memory ~``accuracy``
+        entries, rank error <= 1/accuracy, returns a data element;
+        ``interpolation`` is ignored there). Default exact
+        ``'linear'`` is ANSI percentile_cont (DuckDB quantile_cont).
+        Both are ONE lazy aggregate with an array of percentages: per-p
+        expressions would each buffer/sketch every row. The exact
+        lower/higher/nearest/midpoint interpolations pick pandas' rank
+        values (:func:`_rank_values`, two small jobs) into a literal
+        row."""
+        if approx or interpolation == "linear":
+            qarr = F.expr("array(" + ",".join(f"{p!r}D" for p in ps) + ")")
+            aggs = []
+            for c in cols:
+                d = F.col(c).cast("double")
+                aggs.append((F.percentile_approx(d, qarr, F.lit(accuracy))
+                             if approx else F.percentile(d, qarr)).alias(c))
+            return self._sdf.agg(*aggs)
+        import math
+        pick = {"lower": lambda h, a, b: a,
+                "higher": lambda h, a, b: b,
+                "midpoint": lambda h, a, b: (a + b) / 2,
+                # numpy's half-to-even rounding of the virtual index
+                "nearest": lambda h, a, b: (a if round(h) == math.floor(h)
+                                            else b)}
+        if interpolation not in pick:
+            raise ValueError(f"unknown interpolation {interpolation!r}")
+        ranks = _rank_values(self._sdf, cols, ps)
+        return self._sdf.sparkSession.range(1).select(*[
+            F.array(*[F.lit(None if a is None
+                            else pick[interpolation](h, a, b))
+                      .cast("double") for h, a, b in ranks[c]]).alias(c)
+            for c in cols])
 
     def median(self, approx: bool = False):
         return self.quantile(0.5, approx=approx)
@@ -2114,7 +2140,7 @@ class DataFrame:
         Series (same shape as :meth:`_agg_row`); the correction is
         column arithmetic over Spark's population g1/g2 + count, so
         all columns still share ONE aggregate job."""
-        cols = self._numeric_cols()
+        cols = self._numeric_cols(include_bool=True)
         exprs = []
         for c in cols:
             v = F.col(c).cast("double")
@@ -2128,10 +2154,7 @@ class DataFrame:
                 e = F.when(n >= 4, F.coalesce(corr, F.lit(0.0)))
             exprs.append(e.cast("double").alias(c))
         row_df = self._sdf.agg(*exprs)
-        pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-        out = row_df.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
-        return Series._make(out, F.col("__agg__"), [_IDX], kind, None)
+        return _per_column(row_df, cols, kind)
 
     def skew(self): return self._moment_row("skew")
     def kurt(self): return self._moment_row("kurt")
@@ -2140,17 +2163,12 @@ class DataFrame:
     def sem(self, ddof: int = 1) -> Series:
         """Column-wise standard error of the mean — ONE aggregate job
         (std and count per column share the scan)."""
-        cols = self._numeric_cols()
+        cols = self._numeric_cols(include_bool=True)
         sfn = F.stddev_samp if ddof == 1 else F.stddev_pop
-        row = self._sdf.agg(*[
+        return _per_column(self._sdf.agg(*[
             (sfn(F.col(c).cast("double"))
              / F.sqrt(F.count(F.col(c)))).alias(c)
-            for c in cols]).first()
-        return DataFrame(
-            {"column": np.array(cols, dtype=object),
-             "sem": np.array([row[c] if row[c] is not None else np.nan
-                              for c in cols])}) \
-            .set_index("column")["sem"]
+            for c in cols]), cols, "sem")
 
     # ------------------------------------------------------------- groupby
 
@@ -2444,23 +2462,37 @@ class DataFrame:
     def _n_by(self, n, columns, ascending, keep):
         cols = [columns] if isinstance(columns, str) else list(columns)
         self._check_cols(cols)
-        ob = [order_expr(c, ascending) for c in cols]
+        order = [(c, ascending) for c in cols]
         if ORD_COL in self._sdf.columns:
-            ob.append(F.col(ORD_COL).asc() if keep == "first"
-                      else F.col(ORD_COL).desc())
-        sdf = self._sdf.orderBy(*ob).limit(n)
+            order.append((ORD_COL, keep == "first"))
+        sdf = self._sdf.orderBy(*order_exprs(order)).limit(n)
         return DataFrame._make(sdf, self._index_cols, self._data_cols,
-                               [(c, ascending) for c in cols])
+                               order)
 
     def replace(self, to_replace, value=None) -> "DataFrame":
-        """Whole-frame value substitution (pandas scalar and
-        ``{old: new}`` dict forms). Applied per data column as a pure
-        CASE projection — zero shuffles; columns whose Spark type
-        cannot hold the replacement are left untouched (pandas
-        likewise only replaces where values can match)."""
+        """Whole-frame value substitution (pandas scalar→scalar,
+        ``{old: new}`` dict, list→scalar and list→list forms).
+        Applied per data column as a pure CASE projection — zero
+        shuffles; NaN keys match NULL (the sentinel codec equates
+        them). Columns whose Spark type cannot hold the replacement
+        are left untouched (pandas likewise only replaces where
+        values can match); a numeric replacement of another numeric
+        type upcasts like pandas."""
         from pyspark.sql import types as T
-        mapping = (dict(to_replace) if isinstance(to_replace, dict)
-                   and value is None else {to_replace: value})
+        if isinstance(to_replace, dict):
+            if value is not None:
+                raise TypeError("dict to_replace does not take a value=")
+            pairs = list(to_replace.items())
+        elif isinstance(to_replace, (list, tuple)):
+            if isinstance(value, (list, tuple)):
+                if len(value) != len(to_replace):
+                    raise ValueError(
+                        f"{len(to_replace)} keys but {len(value)} values")
+                pairs = list(zip(to_replace, value))
+            else:
+                pairs = [(o, value) for o in to_replace]
+        else:
+            pairs = [(to_replace, value)]
 
         def compat(dt, v):
             if v is None:
@@ -2475,21 +2507,21 @@ class DataFrame:
 
         def _k(v):
             # NaN keys/values mean NULL under the engine's codec
-            # (same as the Series face; r11 — a raw NaN literal
-            # would poison downstream JVM aggregates)
+            # (r11 — a raw NaN literal would poison downstream JVM
+            # aggregates)
             return None if isinstance(v, float) and v != v else v
 
         sch = {f.name: f.dataType for f in self._sdf.schema.fields}
         out = self._sdf
         for c in self._data_cols:
-            pairs = [(_k(o), _k(v)) for o, v in mapping.items()
-                     if compat(sch[c], o) and compat(sch[c], v)]
-            if not pairs:
-                continue
-            col, expr = F.col(c), F.col(c)
+            col, expr = F.col(c), None
             for o, v in pairs:
-                expr = F.when(col.eqNullSafe(F.lit(o)), F.lit(v))                     .otherwise(expr)
-            out = out.withColumn(c, expr.cast(sch[c]))
+                if compat(sch[c], o) and compat(sch[c], v):
+                    expr = F.when(col.eqNullSafe(F.lit(_k(o))),
+                                  F.lit(_k(v))).otherwise(
+                        col if expr is None else expr)
+            if expr is not None:
+                out = out.withColumn(c, expr)
         return self._replace_sdf(out)
 
     def duplicated(self, subset=None, keep="first") -> "Series":
@@ -2522,21 +2554,20 @@ class DataFrame:
         return Series._make(out, F.col("__dup__"), self._index_cols,
                             None, self._order)
 
-    def nunique(self, approx: bool = False) -> "Series":
+    def nunique(self, approx: bool = False,
+                dropna: bool = True) -> "Series":
         """Distinct count per column as a Series indexed by column
-        name. ``approx=True`` uses HyperLogLog sketches
+        name; ``dropna=False`` counts NULL as one more value, like
+        pandas. ``approx=True`` uses HyperLogLog sketches
         (approx_count_distinct) — the 100 TB path: mergeable, one pass,
         no per-column shuffle of distinct values."""
-        from .series import _IDX
         cols = list(self._data_cols)
         fn = F.approx_count_distinct if approx else F.countDistinct
-        exprs = [fn(F.col(c)).cast("long").alias(c) for c in cols]
+        exprs = [(fn(F.col(c)) if dropna else
+                  fn(F.col(c)) + F.max(F.col(c).isNull()).cast("long"))
+                 .cast("long").alias(c) for c in cols]
         row = self._sdf.agg(*exprs)
-        pairs = ", ".join(f"'{c}', `{c}`" for c in cols)
-        out = row.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (`{_IDX}`, `__agg__`)"))
-        from .series import Series as _S
-        return _S._make(out, F.col("__agg__"), [_IDX], "nunique", None)
+        return _per_column(row, cols, "nunique")
 
     def describe(self, approx: bool = False,
                  accuracy: int = 10000,
@@ -2607,24 +2638,32 @@ class DataFrame:
         """Dedup on ``subset``; non-key columns merged with
         ``keep in {'+','*','min','max'}`` (reference dictmerger,
         weld_ops.py:572-655; order NOT maintained, frame.py:986).
-        Extensions: keep='first'/'last' (pandas-style, needs order) and
-        keep='any' (arbitrary representative, cheapest at scale)."""
+        Extensions: keep='first'/'last'/False (pandas-style: the kept
+        rows stay in row order) and keep='any' (arbitrary
+        representative, cheapest at scale)."""
         subset = list(subset) if subset is not None else list(self._data_cols)
         self._check_cols(subset)
         others = [c for c in self._data_cols if c not in subset]
         idx_extra = [c for c in self._index_cols
                      if c in self._sdf.columns and c not in (ORD_COL,)
                      and c not in subset and c not in others]
-        if keep in ("first", "last"):
+        if keep in ("first", "last", False):
             from pyspark.sql import Window
-
-            from ..plans.ordinal import POS_COL
-            sdf = self._ordered_sdf()
-            w = Window.partitionBy(*subset).orderBy(
-                F.col(POS_COL).asc() if keep == "first" else F.col(POS_COL).desc())
-            out = (sdf.withColumn("__rn__", F.row_number().over(w))
-                   .filter(F.col("__rn__") == 1).drop("__rn__", POS_COL))
-            return DataFrame._make(out, self._index_cols, self._data_cols, None)
+            w = Window.partitionBy(*subset)
+            if keep is False:
+                out = (self._sdf.withColumn("__n__", F.count(F.lit(1)).over(w))
+                       .filter(F.col("__n__") == 1).drop("__n__"))
+            else:
+                from ..plans.ordinal import POS_COL
+                w = w.orderBy(F.col(POS_COL).asc() if keep == "first"
+                              else F.col(POS_COL).desc())
+                out = (self._ordered_sdf()
+                       .withColumn("__rn__", F.row_number().over(w))
+                       .filter(F.col("__rn__") == 1).drop("__rn__", POS_COL))
+            return DataFrame._make(
+                out, self._index_cols, self._data_cols,
+                self._order or ([(ORD_COL, True)]
+                                if ORD_COL in out.columns else None))
         if keep == "any":
             out = self._sdf.select(*subset, *others, *idx_extra).dropDuplicates(subset)
             return DataFrame._make(out, self._index_cols, self._data_cols, None)
@@ -3356,33 +3395,62 @@ class DataFrame:
         return DataFrame._make(self._sdf, list(self._index_cols),
                                list(self._data_cols), self._order)
 
+    def _align_join(self, other: "DataFrame", how: str):
+        """ONE join of this frame's and ``other``'s data columns by
+        index label (pandas alignment), shared by combine,
+        combine_first, align and the Series faces over them. The
+        materialized index columns pair up level by level (``other``'s
+        take this frame's names; a carried RangeIndex ``__ord__`` is a
+        label column like any other); two frames with no index column
+        align on fresh dense positions — the implicit RangeIndex —
+        exported as ``__ord__``. Data columns come out as
+        ``__l_<c>__`` / ``__r_<c>__``, with ``__l_has__`` /
+        ``__r_has__`` marking which side held the label. Returns
+        ``(sdf, keys)``."""
+        idx = [c for c in self._index_cols if c in self._sdf.columns]
+        oidx = [c for c in other._index_cols if c in other._sdf.columns]
+        if len(idx) != len(oidx):
+            raise ValueError(
+                "alignment needs the same index on both frames (got "
+                f"{idx!r} vs {oidx!r}); set_index first")
+
+        def side(df, pref, keys):
+            return keys + [F.col(c).alias(f"__{pref}_{c}__")
+                           for c in df._data_cols] + [
+                F.lit(True).alias(f"__{pref}_has__")]
+
+        if idx:
+            left = self._sdf.select(*side(self, "l", idx))
+            right = other._sdf.select(*side(other, "r", [
+                F.col(o).alias(c) for o, c in zip(oidx, idx)]))
+            keys = idx
+        else:
+            from ..plans.ordinal import POS_COL
+            pos = [F.col(POS_COL).alias(ORD_COL)]
+            left = self._ordered_sdf().select(*side(self, "l", pos))
+            right = other._ordered_sdf().select(*side(other, "r", pos))
+            keys = [ORD_COL]
+        return left.join(right, keys, how), keys
+
     def combine_first(self, other: "DataFrame") -> "DataFrame":
         """Patch NULLs with ``other``'s values at the same index
-        labels (pandas ``combine_first``): full-outer join on the
-        index columns, per-column coalesce(self, other) — columns
-        only one side has pass through. Both frames must carry the
-        same index (a materialized default ``__index__`` counts — it
-        is a real label column; purely positional scan-backed frames
-        would need a count-based alignment; set_index first)."""
-        idx = [c for c in self._index_cols
-               if c in self._sdf.columns and c != ORD_COL]
-        oidx = [c for c in other._index_cols
-                if c in other._sdf.columns and c != ORD_COL]
-        if not idx or idx != oidx:
-            raise ValueError(
-                "combine_first needs the same index on both "
-                f"frames (got {idx!r} vs {oidx!r}); set_index first")
-        l = self._sdf.select(*idx, *self._data_cols)
-        r = other._sdf.select(*oidx, *other._data_cols)
-        shared = [c for c in self._data_cols if c in other._data_cols]
-        for c in shared:
-            r = r.withColumnRenamed(c, f"__cf_{c}__")
-        joined = l.join(r, idx, "full_outer")
-        for c in shared:
-            joined = joined.withColumn(
-                c, F.coalesce(F.col(c), F.col(f"__cf_{c}__")))                 .drop(f"__cf_{c}__")
-        data = [c for c in joined.columns if c not in idx]
-        return DataFrame._make(joined, idx, data, None)
+        labels (pandas ``combine_first``): one full-outer
+        :meth:`_align_join`, per-column coalesce(self, other) —
+        columns only one side has pass through; rows come out in
+        label order (pandas sorts the index union). Duplicate labels
+        on ONE side multiply rows exactly like pandas; labels
+        duplicated on BOTH sides produce the join's per-label cross
+        (pandas pairs them positionally — a known divergence)."""
+        j, keys = self._align_join(other, "full_outer")
+        cols = list(dict.fromkeys(
+            list(self._data_cols) + list(other._data_cols)))
+        mine, theirs = set(self._data_cols), set(other._data_cols)
+        out = j.select(*keys, *[
+            (F.coalesce(F.col(f"__l_{c}__"), F.col(f"__r_{c}__"))
+             if c in mine and c in theirs
+             else F.col(f"__{'l' if c in mine else 'r'}_{c}__")).alias(c)
+            for c in cols])
+        return DataFrame._make(out, keys, cols, [(k, True) for k in keys])
 
     def melt(self, id_vars=None, value_vars=None,
              var_name: str = "variable",
@@ -3405,15 +3473,15 @@ class DataFrame:
         a list column, the other columns repeated; empty or NULL
         arrays yield one row with NULL in ``column`` (explode_outer —
         matching pandas' NaN row). A narrow generator, no shuffle;
-        positional row labels do not survive the fan-out (pandas
-        duplicates index labels; call ``reset_index`` semantics apply
-        here implicitly)."""
+        each element row repeats its source row's index label, like
+        pandas (a carried RangeIndex exports its source labels)."""
         self._check_cols([column])
         if not isinstance(self._sdf.schema[column].dataType,
                           T.ArrayType):
             # pandas passes non-list values through unchanged
             return self
         others = [c for c in self._sdf.columns if c != column]
+        idx = list(self._index_cols)
         if ORD_COL in self._sdf.columns:
             # posexplode + composite ordinal: the pre-explode ORD_COL
             # alone would tie every element of one source row, making
@@ -3426,6 +3494,10 @@ class DataFrame:
             out = self._sdf.select(
                 *others,
                 F.posexplode_outer(F.col(column)).alias("__epos__", column))
+            if ORD_COL in idx:
+                # the pre-pack ordinal is the source row label
+                out = out.withColumn(_IDX, F.col(ORD_COL))
+                idx = [_IDX if c == ORD_COL else c for c in idx]
             out = out.withColumn(
                 ORD_COL,
                 F.shiftleft(F.col(ORD_COL), 21)
@@ -3433,9 +3505,10 @@ class DataFrame:
         else:
             out = self._sdf.select(
                 *others, F.explode_outer(F.col(column)).alias(column))
-        idx = [c for c in self._index_cols
-               if c in out.columns and c != ORD_COL]
-        return DataFrame._make(out, idx, list(self._data_cols), None)
+        idx = [c for c in idx if c in out.columns and c != ORD_COL]
+        return DataFrame._make(out, idx, list(self._data_cols),
+                               [(ORD_COL, True)]
+                               if ORD_COL in out.columns else None)
 
     def stack(self, dropna: bool = True, var_name: str = "variable") -> Series:
         """pandas ``DataFrame.stack``: fold the data columns into one
@@ -3525,11 +3598,9 @@ class DataFrame:
         through the join, so they raise like pandas; pass
         ``verify_integrity=False`` to skip that one-hash-agg check
         when uniqueness is guaranteed upstream."""
-        idx = [c for c in self._index_cols
-               if c in self._sdf.columns and c != ORD_COL]
-        oidx = [c for c in other._index_cols
-                if c in other._sdf.columns and c != ORD_COL]
-        if not idx or idx != oidx:
+        idx = [c for c in self._index_cols if c in self._sdf.columns]
+        oidx = [c for c in other._index_cols if c in other._sdf.columns]
+        if not idx or len(idx) != len(oidx):
             raise ValueError(
                 "update needs the same materialized index on both "
                 f"frames (got {idx!r} vs {oidx!r}); set_index first")
@@ -3544,8 +3615,10 @@ class DataFrame:
                     "drop_duplicates first or pass "
                     "verify_integrity=False")
         shared = [c for c in self._data_cols if c in other._data_cols]
+        # labels pair up level by level, like every index alignment
         r = other._sdf.select(
-            *oidx, *[F.col(c).alias(f"__up_{c}__") for c in shared])
+            *[F.col(o).alias(c) for o, c in zip(oidx, idx)],
+            *[F.col(c).alias(f"__up_{c}__") for c in shared])
         joined = self._sdf.join(r, idx, "left")
         sel = []
         for c in self._sdf.columns:
@@ -3717,21 +3790,27 @@ class DataFrame:
         return self._valid_index_probe(reverse=True)
 
     def _valid_index_probe(self, reverse: bool):
-        from ..core.ordering import order_exprs as _oe, \
-            rev_order_exprs as _roe
-        if not self._index_cols:
-            return None
+        from ..plans.ordinal import POS_COL
+        idx = [c for c in self._index_cols if c in self._sdf.columns]
         cond = None
         for c in self._data_cols:
             n = F.col(c).isNotNull()
             cond = n if cond is None else (cond | n)
-        sdf = self._sdf.where(cond if cond is not None else F.lit(True))
-        order = self._order or ([(ORD_COL, True)]
-                                if ORD_COL in sdf.columns else [])
-        ob = (_roe if reverse else _oe)(order, sdf.columns)
+        # without an index column the label is the row's position (the
+        # implicit RangeIndex)
+        sdf = (self._sdf if idx else self._ordered_sdf()).where(
+            cond if cond is not None else F.lit(True))
+        if idx:
+            order = self._order or ([(ORD_COL, True)]
+                                    if ORD_COL in sdf.columns else [])
+            ob = (rev_order_exprs if reverse else order_exprs)(
+                order, sdf.columns)
+        else:
+            ob = [F.col(POS_COL).desc() if reverse
+                  else F.col(POS_COL).asc()]
         if ob:
             sdf = sdf.orderBy(*ob)
-        rows = sdf.select(self._index_cols[0]).limit(1).collect()
+        rows = sdf.select(idx[0] if idx else POS_COL).limit(1).collect()
         return rows[0][0] if rows else None
 
     def truncate(self, before=None, after=None) -> "DataFrame":
@@ -3852,9 +3931,11 @@ class DataFrame:
     def asof(self, where):
         """Latest row without any NaN at or before label(s) ``where``
         (pandas ``DataFrame.asof``). A scalar pays one ordered
-        limit-1 probe (returns a pandas Series row); a label list
-        rides the engine's as-of join over the all-columns-valid row
-        subset (returns a frame, no per-label loop)."""
+        limit-1 probe (returns a pandas Series row; a miss on an empty
+        frame raises IndexError like pandas); a label list rides the
+        engine's as-of join over the all-columns-valid row subset
+        (returns a frame indexed by ``where`` in request order, no
+        per-label loop)."""
         import pandas as pd
         if not self._index_cols:
             raise ValueError("asof needs an index")
@@ -3866,9 +3947,9 @@ class DataFrame:
             allv = n if allv is None else (allv & n)
         if not isinstance(where, (list, tuple, np.ndarray)):
             # duplicate index labels at the as-of stamp: pandas takes
-            # the LAST row in original order — positional tiebreak,
-            # mirroring the Series.asof scalar face (order by a value
-            # column alone is layout-dependent under ties)
+            # the LAST row in original order — positional tiebreak
+            # (order by a value column alone is layout-dependent under
+            # ties)
             sdf = self._sdf
             tie = ([F.col(ORD_COL).desc()] if ORD_COL in sdf.columns
                    else [])
@@ -3884,6 +3965,10 @@ class DataFrame:
                     .select(*data).limit(1).collect())
             if rows:
                 return pd.Series(rows[0].asDict(), name=where)
+            if not sdf.limit(1).count():
+                # pandas raises on an empty frame (IndexError from its
+                # index[0] probe) — mirror it
+                raise IndexError("asof on an empty frame")
             return pd.Series({c: np.nan for c in data}, name=where)
         from ..operators.joins import asof_join
         spark = self._sdf.sparkSession
@@ -3895,10 +3980,10 @@ class DataFrame:
         out = asof_join(left, right, on=k, direction="backward")
         cols = [c if c in out.columns else f"{c}_right"
                 for c in data]
-        out = out.orderBy("__wpos__").select(
-            F.col(k), *[F.col(c).alias(d)
-                        for c, d in zip(cols, data)])
-        return DataFrame._make(out, [k], data, [(k, True)])
+        out = out.select(
+            F.col("__wpos__"), F.col(k), *[F.col(c).alias(d)
+                                          for c, d in zip(cols, data)])
+        return DataFrame._make(out, [k], data, [("__wpos__", True)])
 
     def dot(self, other):
         """Matrix product (pandas ``DataFrame.dot``): ``other`` is
@@ -4066,25 +4151,15 @@ class DataFrame:
     def combine(self, other: "DataFrame", func,
                 fill_value=None) -> "DataFrame":
         """pandas ``DataFrame.combine``: column-wise ``func(s1, s2)``
-        over the index-aligned pair. Engine flavor: ``func``
-        receives ENGINE Series (lazy Column expressions over the
-        joined plan) and must return one — compositions of Series
-        ops stay whole-stage codegen'd, one join total. Columns
-        present on one side only come through as NULL (or
-        ``fill_value``)."""
-        if not self._index_cols or not other._index_cols:
-            raise ValueError("combine needs an index on both sides")
+        over the index-aligned pair (one full-outer
+        :meth:`_align_join`). Engine flavor: ``func`` receives ENGINE
+        Series (lazy Column expressions over the joined plan) and
+        must return one — compositions of Series ops stay whole-stage
+        codegen'd, one join total. Columns present on one side only
+        come through as NULL (or ``fill_value``)."""
         from .series import Series
-        k = self._index_cols[0]
-        ok_ = other._index_cols[0]
-        lsdf = self._sdf.select(
-            F.col(k), *[F.col(c).alias(f"__l_{c}__")
-                        for c in self._data_cols])
-        rsdf = other._sdf.select(
-            F.col(ok_).alias(k),
-            *[F.col(c).alias(f"__r_{c}__")
-              for c in other._data_cols])
-        j = lsdf.join(rsdf, k, "full_outer")
+        j, keys = self._align_join(other, "full_outer")
+        order = [(k, True) for k in keys]
         cols = list(dict.fromkeys(
             list(self._data_cols) + list(other._data_cols)))
         fv = F.lit(fill_value) if fill_value is not None else None
@@ -4098,46 +4173,35 @@ class DataFrame:
         exprs = []
         for c in cols:
             s1 = Series._make(j, side("l", c, c in self._data_cols),
-                              [k], c, [(k, True)])
+                              keys, c, order)
             s2 = Series._make(j, side("r", c, c in other._data_cols),
-                              [k], c, [(k, True)])
+                              keys, c, order)
             res = func(s1, s2)
             col = res._colexpr if isinstance(res, Series) else res
             exprs.append(col.alias(c))
-        out = j.select(F.col(k), *exprs)
-        return DataFrame._make(out, [k], cols, [(k, True)])
+        out = j.select(*keys, *exprs)
+        return DataFrame._make(out, keys, cols, order)
 
     def align(self, other: "DataFrame", join: str = "outer"):
         """Pair of index-aligned frames (pandas ``DataFrame.align``,
-        row axis): ONE join by the index, both results reading the
+        row axis): ONE :meth:`_align_join`, both results reading the
         same joined plan; the column sets align to their union with
         NULL columns for the missing side."""
         if join not in ("outer", "inner", "left", "right"):
             raise ValueError(f"bad join {join!r}")
-        if not self._index_cols or not other._index_cols:
-            raise ValueError("align needs an index on both sides")
         how = {"outer": "full_outer", "inner": "inner",
                "left": "left", "right": "right"}[join]
-        k = self._index_cols[0]
-        ok_ = other._index_cols[0]
-        lsdf = self._sdf.select(
-            F.col(k), *[F.col(c).alias(f"__l_{c}__")
-                        for c in self._data_cols])
-        rsdf = other._sdf.select(
-            F.col(ok_).alias(k),
-            *[F.col(c).alias(f"__r_{c}__")
-              for c in other._data_cols])
-        j = lsdf.join(rsdf, k, how)
+        j, keys = self._align_join(other, how)
         cols = list(dict.fromkeys(
             list(self._data_cols) + list(other._data_cols)))
 
         def face(pref, have):
-            sel = [F.col(k)] + [
+            sel = [F.col(k) for k in keys] + [
                 (F.col(f"__{pref}_{c}__") if c in have
                  else F.lit(None).cast("double")).alias(c)
                 for c in cols]
-            return DataFrame._make(j.select(*sel), [k], cols,
-                                   [(k, True)])
+            return DataFrame._make(j.select(*sel), keys, cols,
+                                   [(k, True) for k in keys])
 
         return (face("l", set(self._data_cols)),
                 face("r", set(other._data_cols)))
@@ -4584,6 +4648,35 @@ class _Resampler:
         return out
 
     aggregate = apply = agg
+
+
+def _rank_values(sdf, cols, ps):
+    """pandas' exact-quantile ranks of each column of ``sdf`` (cast to
+    double, NULLs skipped): for every p, the virtual index
+    h = (n-1)·p — through np.percentile's p·100/100 round trip, which
+    moves h by an ulp — and the values at ranks floor(h) and ceil(h).
+    One COUNT job, then ONE percentile_disc job for every (column,
+    rank) pair: (k+0.5)/n targets 1-indexed rank k+1 robustly
+    (percentile_disc picks the first value whose cumulative fraction
+    reaches p, immune to float-rank drift). Returns
+    ``{c: [(h, lo, hi) per p]}``, all None for a column without
+    values."""
+    import math
+    v = {c: f"__rv{i}__" for i, c in enumerate(cols)}
+    sdf = sdf.select(*[F.col(c).cast("double").alias(v[c]) for c in cols])
+    ns = sdf.agg(*[F.count(v[c]).alias(v[c]) for c in cols]).first()
+    hs = {c: [(ns[v[c]] - 1) * ((p * 100) / 100) for p in ps]
+          for c in cols if ns[v[c]]}
+    need = {(c, k) for c, hh in hs.items() for h in hh
+            for k in (math.floor(h), math.ceil(h))}
+    row = sdf.agg(*[
+        F.expr(f"percentile_disc({(k + 0.5) / ns[v[c]]!r}D) "
+               f"WITHIN GROUP (ORDER BY {v[c]})").alias(f"{v[c]}{k}")
+        for c, k in sorted(need)]).first() if need else None
+    return {c: ([(h, row[f"{v[c]}{math.floor(h)}"],
+                  row[f"{v[c]}{math.ceil(h)}"]) for h in hs[c]]
+                if c in hs else [(None, None, None)] * len(ps))
+            for c in cols}
 
 
 def _loc_label_series(df: "DataFrame", labels):

@@ -26,8 +26,8 @@ from .dtypes import np_dtype_of, spark_type_of
 _VAL = "__val__"
 _IDX = "__index__"
 # the value column of a Series lifted into a one-column DataFrame
-# (Series._as_frame): the frame faces' ordered transforms and windows
-# run over it, and Series._unwrap reads the result back out of it
+# (Series._as_frame / Series._frame): the frame faces run over it, and
+# Series._unwrap reads the result back out of it
 _LIFT = "__lift__"
 # isin value-list budget: literal IN-set below, broadcast-join above
 _ISIN_LITERAL_MAX = 1024
@@ -190,19 +190,25 @@ class Series:
         """This Series as a one-column DataFrame, by projection only:
         ``_sdf.withColumn(_LIFT, _colexpr)`` with the Series' index and
         order — no dense ordinal, no job. Every source column survives
-        next to the value column."""
+        next to the value column, which the DataFrame.__setitem__ adopt
+        fast path needs: the lift of the ROW-PRESERVING faces (ordered
+        transforms, windows, replace, update). Every other face lifts
+        through the narrow :meth:`_frame`."""
         from .frame import DataFrame
         return DataFrame._make(self._sdf.withColumn(_LIFT, self._colexpr),
                                self._index_cols, [_LIFT], self._order)
 
-    def _unwrap(self, res) -> "Series":
+    def _unwrap(self, res, same_rows: bool = False) -> "Series":
         """The ``_LIFT`` column of the frame result ``res`` as a Series
-        named like this one, tagged for the DataFrame.__setitem__ adopt
-        fast path when ``res`` kept this Series' order."""
+        named like this one. ``same_rows`` marks a row-preserving op
+        (one output row per input row, each computed for that row):
+        such a result in this Series' order is tagged for the
+        DataFrame.__setitem__ adopt fast path. A face that filters,
+        reorders or fans out rows must not be tagged."""
         out = Series._make(res._sdf, F.col(_LIFT), res._index_cols,
                            self.name, res._order)
-        return (out._tag_rowpar(self._sdf) if res._order == self._order
-                else out)
+        return (out._tag_rowpar(self._sdf)
+                if same_rows and res._order == self._order else out)
 
     def _select(self, alias=None):
         """Project index cols + the value expression as a Spark DF."""
@@ -758,66 +764,20 @@ class Series:
         return self[mask]
 
     def _ordered_sdf(self, alias=None):
-        """sdf with a FRESH dense positional column ``__pos__``.
-
-        ORD_COL values are row LABELS (RangeIndex) — after a filter
-        they are sparse, so positions must be recomputed over the
-        current row set, ordered by the logical order (or by the
-        labels for ingest order).
-        """
-        from ..plans.ordinal import POS_COL
-        alias = alias or self.name or _VAL
-        # project index cols AND order cols (the logical order must
-        # survive the projection for the fresh positions to be right)
-        keep = [c for c in dict.fromkeys(
-                    list(self._index_cols)
-                    + [c for c, _ in (self._order or [])])
-                if c in self._sdf.columns and c != alias]
-        sdf = self._sdf.select(*[F.col(c) for c in keep],
-                               self._colexpr.alias(alias))
-        order = order_exprs(self._order or [], sdf.columns)
-        if not order and ORD_COL in sdf.columns:
-            order = [F.col(ORD_COL).asc()]
-        return with_dense_ordinal(sdf, order or None, name=POS_COL), alias
+        """``(sdf, alias)``: the one-column frame of the index, order and
+        value columns (value named ``alias``) with the frame's FRESH
+        dense position ``__pos__`` (:meth:`DataFrame._ordered_sdf`)."""
+        fr = self._frame(alias)
+        return fr._ordered_sdf(), fr._data_cols[0]
 
     def _slice(self, key: slice) -> "Series":
-        from ..plans.ordinal import POS_COL
-        if (key.step or 1) < 0:
-            raise ValueError("negative slice steps are not supported")
-        if ((key.start or 0) < 0) or (key.stop is not None
-                                      and key.stop < 0):
-            # pandas negative positions: one count job normalizes them
-            key = slice(*key.indices(len(self)))
-        start = key.start or 0
-        stop = key.stop
-        step = key.step or 1
-        sdf, alias = self._ordered_sdf()
-        cond = F.col(POS_COL) >= start
-        if stop is not None:
-            cond = cond & (F.col(POS_COL) < stop)
-        if step != 1:
-            cond = cond & ((F.col(POS_COL) - start) % step == 0)
-        out = sdf.filter(cond).drop(POS_COL)
-        return Series._make(out, F.col(alias), self._index_cols, self.name,
-                            self._order or ([(ORD_COL, True)]
-                                            if ORD_COL in out.columns else None))
+        return self._unwrap(self._frame(_LIFT)._slice(key))
 
     def head(self, n: int = 5) -> "Series":
-        if n < 0:
-            # pandas head(-n): all but the last n rows
-            return self._slice(slice(0, max(len(self) + n, 0)))
-        sdf, alias = self._select()
-        if self._order:
-            sdf = sdf.orderBy(*order_exprs(self._order))
-        out = sdf.limit(n)
-        return Series._make(out, F.col(alias), self._index_cols, self.name,
-                            self._order)
+        return self._unwrap(self._frame(_LIFT).head(n))
 
     def tail(self, n: int = 5) -> "Series":
-        if n < 0:
-            # pandas tail(-n): all but the first n rows
-            return self._slice(slice(-n, None))
-        return self._slice(slice(max(len(self) - n, 0), None))
+        return self._unwrap(self._frame(_LIFT).tail(n))
 
     @property
     def iloc(self):
@@ -860,48 +820,21 @@ class Series:
     def std(self): return self._agg_scalar("std")
 
     def sem(self, ddof: int = 1):
-        """Standard error of the mean (pandas ``Series.sem``):
-        std/sqrt(count), one JVM aggregate for both pieces."""
-        col = self._colexpr.cast("double")
-        row = self._sdf.agg(
-            (F.stddev_samp(col) if ddof == 1
-             else F.stddev_pop(col)).alias("s"),
-            F.count(col).alias("n")).first()
-        if not row["n"] or row["s"] is None:
-            return float("nan")
-        import math
-        return row["s"] / math.sqrt(row["n"])
+        """Standard error of the mean (pandas ``Series.sem``) — the
+        one-column face of :meth:`DataFrame.sem`."""
+        return _nan_if_none(self._frame(_LIFT).sem(ddof).item())
 
     def skew(self):
-        """Bias-corrected sample skewness (pandas ``Series.skew``):
-        Spark's ``skewness`` is the POPULATION g1 = m3/m2^1.5 —
-        silently different; pandas applies the Fisher-Pearson
-        adjustment g1 * sqrt(n(n-1))/(n-2), NaN for n < 3. One JVM
-        aggregate either way (engine extension)."""
-        col = self._colexpr.cast("double")
-        row = self._sdf.agg(F.skewness(col).alias("g1"),
-                            F.count(col).alias("n")).first()
-        n = row["n"]
-        if n < 3:
-            return float("nan")
-        if row["g1"] is None:
-            return 0.0      # zero variance: pandas says 0, Spark NULL
-        import math
-        return row["g1"] * math.sqrt(n * (n - 1)) / (n - 2)
+        """Bias-corrected sample skewness (pandas ``Series.skew``;
+        Spark's ``skewness`` is the population g1) — the one-column
+        face of :meth:`DataFrame.skew`, NaN for n < 3."""
+        return _nan_if_none(self._frame(_LIFT).skew().item())
 
     def kurt(self):
-        """Bias-corrected excess kurtosis (pandas ``Series.kurt``):
-        Spark's ``kurtosis`` is the population excess g2; pandas
-        corrects by ((n+1)g2 + 6)(n-1)/((n-2)(n-3)), NaN for n < 4."""
-        col = self._colexpr.cast("double")
-        row = self._sdf.agg(F.kurtosis(col).alias("g2"),
-                            F.count(col).alias("n")).first()
-        n = row["n"]
-        if n < 4:
-            return float("nan")
-        if row["g2"] is None:
-            return 0.0      # zero variance: pandas says 0, Spark NULL
-        return ((n + 1) * row["g2"] + 6) * (n - 1) / ((n - 2) * (n - 3))
+        """Bias-corrected excess kurtosis (pandas ``Series.kurt``) —
+        the one-column face of :meth:`DataFrame.kurt`, NaN for
+        n < 4."""
+        return _nan_if_none(self._frame(_LIFT).kurt().item())
 
     kurtosis = kurt
 
@@ -919,9 +852,8 @@ class Series:
         if not isinstance(other, Series):
             raise TypeError(f"expected Series, got {type(other).__name__}")
         sdf, a, b = self._pair_sdf(other)
-        row = sdf.agg(fn(a.cast("double"), b.cast("double"))
-                      .alias("v")).first()
-        return float("nan") if row["v"] is None else row["v"]
+        return _nan_if_none(sdf.agg(fn(a.cast("double"), b.cast("double"))
+                                    .alias("v")).first()["v"])
 
     def _pair_sdf(self, other: "Series"):
         """The aligned (sdf, a_col, b_col) triple behind every
@@ -944,38 +876,14 @@ class Series:
 
     def combine_first(self, other: "Series") -> "Series":
         """Patch NULLs with ``other``'s values at the same labels
-        (pandas ``Series.combine_first``): the pairwise alignment
-        every two-Series statistic uses, but FULL OUTER (pandas keeps
-        the union of the two indexes, sorted), then one coalesce.
-        Same-frame columns collapse to a pure projection.
-
-        Duplicate labels on ONE side multiply rows exactly like
-        pandas (the join is the alignment — no dedupe, which would
-        pick a nondeterministic survivor). Known divergence: labels
-        duplicated on BOTH sides produce the join's per-label cross
-        (pandas pairs dups positionally within the label instead)."""
+        (pandas ``Series.combine_first``) — the one-column face of
+        :meth:`DataFrame.combine_first`. Two columns of one plan need
+        no alignment: one coalesce projection."""
         if other._sdf is self._sdf:
             return self._with_col(
                 F.coalesce(self._colexpr, other._colexpr))
-        on = [c for c in self._index_cols if c in other._index_cols]
-        if on:
-            left, la = self._select("__ca__")
-            right, rb = other._select("__cb__")
-            sdf = left.select(*on, la).join(
-                right.select(*on, rb), on, "full_outer")
-            keys = on
-        else:
-            from ..plans.ordinal import POS_COL
-            lo, la = self._ordered_sdf("__ca__")
-            ro, rb = other._ordered_sdf("__cb__")
-            sdf = lo.select(POS_COL, la).join(
-                ro.select(POS_COL, rb), POS_COL, "full_outer")
-            keys = [POS_COL]
-        out = sdf.withColumn(
-            "__cf__", F.coalesce(F.col("__ca__"), F.col("__cb__"))) \
-            .drop("__ca__", "__cb__")
-        return Series._make(out, F.col("__cf__"), keys, self.name,
-                            [(k, True) for k in keys])
+        return self._unwrap(self._frame(_LIFT).combine_first(
+            other._frame(_LIFT)))
 
     def transform(self, func, **kwargs):
         """pandas ``Series.transform`` — elementwise, shape-
@@ -1065,27 +973,9 @@ class Series:
         return DataFrame._make(out, [], new_idx + [a], order)
 
     def truncate(self, before=None, after=None) -> "Series":
-        """Rows with index label in ``[before, after]`` (pandas
-        ``truncate``; assumes a sorted index like pandas) — a pure
-        index-range filter, pushdown-friendly."""
-        if not self._index_cols:
-            raise ValueError("truncate needs an index")
-        if before is not None and after is not None:
-            try:
-                inverted = before > after
-            except TypeError:
-                inverted = False
-            if inverted:
-                raise ValueError(
-                    f"Truncate: {after!r} must be after {before!r}")
-        key = F.col(self._index_cols[0])
-        cond = F.lit(True)
-        if before is not None:
-            cond = cond & (key >= F.lit(before))
-        if after is not None:
-            cond = cond & (key <= F.lit(after))
-        return Series._make(self._sdf.where(cond), self._colexpr,
-                            self._index_cols, self.name, self._order)
+        """Rows with index label in ``[before, after]`` — the
+        one-column face of :meth:`DataFrame.truncate`."""
+        return self._unwrap(self._frame(_LIFT).truncate(before, after))
 
     def squeeze(self):
         """Scalar when the Series has exactly one row, else self
@@ -1157,30 +1047,11 @@ class Series:
                                [(k, True) for k in keys])
 
     def align(self, other: "Series", join: str = "outer"):
-        """Pair of index-aligned Series (pandas ``Series.align``):
-        ONE join by the shared index (outer/inner/left/right), both
-        results reading the same joined plan."""
-        if join not in ("outer", "inner", "left", "right"):
-            raise ValueError(f"bad join {join!r}")
-        how = {"outer": "full_outer", "inner": "inner",
-               "left": "left", "right": "right"}[join]
-        on = [c for c in self._index_cols if c in other._index_cols]
-        if on:
-            left, la = self._select("__aa__")
-            right, rb = other._select("__ab__")
-            sdf = left.select(*on, la).join(
-                right.select(*on, rb), on, how)
-            keys = on
-        else:
-            from ..plans.ordinal import POS_COL
-            lo, la = self._ordered_sdf("__aa__")
-            ro, rb = other._ordered_sdf("__ab__")
-            sdf = lo.select(POS_COL, la).join(
-                ro.select(POS_COL, rb), POS_COL, how)
-            keys = [POS_COL]
-        mk = lambda col, nm: Series._make(
-            sdf, F.col(col), keys, nm, [(k, True) for k in keys])
-        return mk("__aa__", self.name), mk("__ab__", other.name)
+        """Pair of index-aligned Series (pandas ``Series.align``) —
+        the one-column face of :meth:`DataFrame.align`: ONE join,
+        both results reading the same joined plan."""
+        a, b = self._frame(_LIFT).align(other._frame(_LIFT), join=join)
+        return self._unwrap(a), other._unwrap(b)
 
     def groupby(self, by, dropna: bool = True):
         """pandas ``Series.groupby``: group this Series by another
@@ -1211,86 +1082,42 @@ class Series:
         return fr.groupby(kname, dropna=dropna)[vname]
 
     def reindex(self, index, fill_value=None) -> "Series":
-        """Conform to new labels (pandas ``Series.reindex``):
-        delegates to the frame reindex — the driver-sized label list
-        becomes a tiny position-tagged table, ONE keyed join, fills
-        only introduced cells."""
-        from .frame import DataFrame
-        if not self._index_cols:
-            raise ValueError("reindex needs an index")
-        vname = self.name or _VAL
-        sdf, a = self._select(vname)
-        fr = DataFrame._make(sdf, list(self._index_cols), [a],
-                             self._order)
-        return fr.reindex(index=index, fill_value=fill_value)[a]
+        """Conform to new labels (pandas ``Series.reindex``) — the
+        one-column face of :meth:`DataFrame.reindex`: the driver-sized
+        label list becomes a tiny position-tagged table, ONE keyed
+        join, fills only introduced cells."""
+        return self._unwrap(self._frame(_LIFT).reindex(
+            index=index, fill_value=fill_value))
 
     def asof(self, where):
         """Last non-null value at or before label(s) ``where``
-        (pandas ``Series.asof``). A scalar pays one ordered limit-1
-        probe; a list rides the engine's as-of join (union + keyed
-        carry, one shuffle — no per-label loop)."""
-        if not self._index_cols:
-            raise ValueError("asof needs an index")
-        k = self._index_cols[0]
-        if not isinstance(where, (list, tuple, np.ndarray)):
-            from ..plans.ordinal import POS_COL
-            sdf, alias = self._ordered_sdf("__asof_v__")
-            rows = (sdf
-                    .where((F.col(k) <= F.lit(where))
-                           & F.col(alias).isNotNull())
-                    .orderBy(F.col(k).desc(), F.col(POS_COL).desc())
-                    .select(F.col(alias).alias("v"))
-                    .limit(1).collect())
-            if rows:
-                return rows[0]["v"]
-            if not self._sdf.limit(1).count():
-                # pandas raises on an empty series (IndexError from
-                # its index[0] probe) — mirror it
-                raise IndexError("asof on an empty Series")
-            return None
-        from ..operators.joins import asof_join
-        spark = self._sdf.sparkSession
-        vname = self.name or _VAL
-        left = spark.createDataFrame(
-            [(i, w) for i, w in enumerate(where)], ["__wpos__", k])
-        right = (self._sdf.where(self._colexpr.isNotNull())
-                 .select(F.col(k), self._colexpr.alias(vname)))
-        out = asof_join(left, right, on=k, direction="backward")
-        vcol = vname if vname in out.columns else f"{vname}_right"
-        rows = out.orderBy("__wpos__").select(vcol).collect()
-        # dtype from ALL collected values, not rows[0]: a None first
-        # hit over string values must not force a float array (that
-        # raises), and any non-numeric value anywhere means object
-        vals = [r[vcol] for r in rows]
-        if any(isinstance(v, str) for v in vals):
-            dt = object            # non-numeric anywhere => object
-        elif (vals and all(v is not None for v in vals)
-              and isinstance(self.spark_type, T.IntegralType)):
-            dt = np.int64          # pandas keeps int64 when no miss
-        else:
-            dt = float             # misses become NaN
-        return Series(np.array(vals, dtype=dt), name=self.name)
+        (pandas ``Series.asof``) — the one-column face of
+        :meth:`DataFrame.asof`. A scalar miss is None (the engine's
+        NULL spelling of pandas' NaN); a label list returns a Series
+        indexed by ``where``."""
+        res = self._frame(_LIFT).asof(where)
+        if isinstance(where, (list, tuple, np.ndarray)):
+            return self._unwrap(res)
+        v = res[_LIFT]
+        return None if isinstance(v, float) and v != v else v
 
     def at_time(self, time) -> "Series":
-        """pandas ``Series.at_time`` — frame delegation (one exact
-        integer time-of-day filter)."""
-        fr = self._to_frame_for_io().at_time(time)
-        return fr[fr._data_cols[0]]
+        """pandas ``Series.at_time`` — the one-column face of
+        :meth:`DataFrame.at_time`."""
+        return self._unwrap(self._frame(_LIFT).at_time(time))
 
     def between_time(self, start_time, end_time,
                      inclusive: str = "both") -> "Series":
         """pandas ``Series.between_time`` — frame delegation."""
-        fr = self._to_frame_for_io().between_time(
-            start_time, end_time, inclusive=inclusive)
-        return fr[fr._data_cols[0]]
+        return self._unwrap(self._frame(_LIFT).between_time(
+            start_time, end_time, inclusive=inclusive))
 
     def asfreq(self, freq: str, method: str | None = None,
                fill_value=None) -> "Series":
         """pandas ``Series.asfreq`` — frame delegation (distributed
         date_range grid + one equi/as-of join)."""
-        fr = self._to_frame_for_io().asfreq(
-            freq, method=method, fill_value=fill_value)
-        return fr[fr._data_cols[0]]
+        return self._unwrap(self._frame(_LIFT).asfreq(
+            freq, method=method, fill_value=fill_value))
 
     def factorize(self, sort: bool = False):
         """pandas ``Series.factorize`` — delegates to the top-level
@@ -1319,76 +1146,40 @@ class Series:
 
     def reindex_like(self, other: "Series",
                      fill_value=None) -> "Series":
-        """Conform to ``other``'s index (pandas ``reindex_like``),
-        fully DISTRIBUTED: other's index column left-joins this
-        Series — no driver-side label collect, unlike the
-        list-driven :meth:`reindex`."""
-        if not self._index_cols or not other._index_cols:
-            raise ValueError("reindex_like needs an index on both")
-        from ..plans.ordinal import POS_COL
-        k = self._index_cols[0]
-        ok_ = other._index_cols[0]
-        vname = self.name or _VAL
-        sdf, a = self._select(vname)
-        # keep other's labels AS-IS (duplicates included — pandas
-        # returns one row per duplicate target label) tagged with
-        # their positions so the result follows other's order
-        osdf, _ = other._ordered_sdf()
-        labels = osdf.select(F.col(ok_).alias(k), F.col(POS_COL))
-        out = labels.join(sdf, k, "left")
-        if fill_value is not None:
-            # cells introduced by reindexing fill; matched NULLs stay
-            marked = sdf.withColumn("__had__", F.lit(True))
-            out = labels.join(marked, k, "left").withColumn(
-                a, F.when(F.col("__had__").isNull(),
-                          F.lit(fill_value)).otherwise(F.col(a)))                 .drop("__had__")
-        return Series._make(out, F.col(a), [k], self.name,
-                            [(POS_COL, True)])
+        """Conform to ``other``'s index (pandas ``reindex_like``) —
+        the one-column face of :meth:`DataFrame.reindex_like`."""
+        return self._unwrap(self._frame(_LIFT).reindex_like(
+            other._frame(_LIFT), fill_value=fill_value))
 
     def combine(self, other: "Series", func,
                 fill_value=None) -> "Series":
         """pandas ``Series.combine``: elementwise ``func(a, b)`` over
         the aligned pair — the UNION of the two indexes (sorted, like
-        pandas), labels present on one side only see ``fill_value``
-        (or NaN) on the other. An arbitrary python scalar function is
-        the honest slow path — Arrow-batched (one pandas_udf over the
-        zipped pair), never a driver loop."""
+        pandas; the full-outer :meth:`DataFrame._align_join`), labels
+        present on one side only see ``fill_value`` (or NaN) on the
+        other. An arbitrary python scalar function is the honest slow
+        path — Arrow-batched (one pandas_udf over the zipped pair),
+        never a driver loop."""
         from ..functions._udf import scalar_pandas_udf
-        from ..plans.ordinal import POS_COL
         import pandas as pd
         if other._sdf is self._sdf:
-            sdf = self._sdf.withColumn("__ha__", F.lit(True)) \
-                .withColumn("__hb__", F.lit(True))
-            a, b = self._colexpr, other._colexpr
-            keys = list(self._index_cols)
+            # two columns of one plan need no alignment
+            sdf = self._sdf.withColumns({
+                f"__l_{_LIFT}__": self._colexpr,
+                f"__r_{_LIFT}__": other._colexpr,
+                "__l_has__": F.lit(True), "__r_has__": F.lit(True)})
+            keys = [c for c in self._index_cols if c in sdf.columns]
         else:
-            keys = [c for c in self._index_cols
-                    if c in other._index_cols]
-            if keys:
-                left, la = self._select("__pa__")
-                right, rb = other._select("__pb__")
-                sdf = left.select(*keys, la,
-                                  F.lit(True).alias("__ha__")).join(
-                    right.select(*keys, rb,
-                                 F.lit(True).alias("__hb__")),
-                    keys, "full_outer")
-            else:
-                lo, la = self._ordered_sdf("__pa__")
-                ro, rb = other._ordered_sdf("__pb__")
-                sdf = lo.select(POS_COL, la,
-                                F.lit(True).alias("__ha__")).join(
-                    ro.select(POS_COL, rb,
-                              F.lit(True).alias("__hb__")),
-                    POS_COL, "full_outer")
-                keys = [POS_COL]
-            a, b = F.col("__pa__"), F.col("__pb__")
+            sdf, keys = self._frame(_LIFT)._align_join(other._frame(_LIFT),
+                                                     "full_outer")
+        a, b = F.col(f"__l_{_LIFT}__"), F.col(f"__r_{_LIFT}__")
         fv = fill_value
 
         def batch(cols) -> pd.Series:
             # struct inputs arrive as a pandas DataFrame with the
             # field names as columns (Arrow struct batching);
             # fill_value substitutes ONLY for labels missing from a
-            # side's index (the __ha__/__hb__ presence markers) —
+            # side's index (the __l_has__/__r_has__ presence markers) —
             # a NaN VALUE at a present label passes through as NaN,
             # exactly pandas
             import numpy as _np
@@ -1428,11 +1219,9 @@ class Series:
                  else self.spark_type)
         udf = scalar_pandas_udf(batch, ret_t)
         pair = F.struct(a.alias("a"), b.alias("b"),
-                        F.col("__ha__").alias("ha"),
-                        F.col("__hb__").alias("hb"))
-        keys = [kk for kk in keys if kk in sdf.columns]
-        out = sdf.withColumn("__cmb__", udf(pair)) \
-            .drop("__ha__", "__hb__")
+                        F.col("__l_has__").alias("ha"),
+                        F.col("__r_has__").alias("hb"))
+        out = sdf.select(*keys, udf(pair).alias("__cmb__"))
         return Series._make(out, F.col("__cmb__"), keys, self.name,
                             [(kk, True) for kk in keys])
 
@@ -1446,96 +1235,61 @@ class Series:
 
     def update(self, other: "Series") -> "Series":
         """pandas ``Series.update`` (returning a NEW Series — the
-        engine is immutable, same contract as
-        :meth:`DataFrame.update`): overwrite values with ``other``'s
-        non-null values at matching index labels; self's row set
-        never changes (one left join). Duplicate labels in ``other``
-        raise like the frame face."""
-        from .frame import DataFrame
-        if not self._index_cols or not other._index_cols:
-            raise ValueError("update needs an index on both sides")
-        k = self._index_cols[0]
-        vname = self.name or _VAL
-        fr = self._to_frame_for_io()
-        ok_ = other._index_cols[0]
-        osdf, oa = other._select("__updv__")
-        osdf = osdf.select(F.col(ok_).alias(k),
-                           F.col(oa).alias(vname))
-        ofr = DataFrame._make(osdf, [k], [vname], None)
-        return fr.update(ofr)[vname]
+        engine is immutable): the one-column face of
+        :meth:`DataFrame.update`. Row-preserving, so assigning the
+        result back to its frame adopts it by projection."""
+        return self._unwrap(self._as_frame().update(other._frame(_LIFT)),
+                            same_rows=True)
 
     def to_csv(self, filepath: str, **kw):
         """CSV sink — the one-column frame delegation of
         :meth:`DataFrame.to_csv` (same single_file= contract)."""
-        return self._to_frame_for_io().to_csv(filepath, **kw)
+        return self._frame().to_csv(filepath, **kw)
 
     def to_json(self, filepath: str, **kw):
         """JSON sink — delegates to :meth:`DataFrame.to_json`."""
-        return self._to_frame_for_io().to_json(filepath, **kw)
+        return self._frame().to_json(filepath, **kw)
 
     def to_latex(self, **kw) -> str:
         """Driver-side LaTeX rendering — delegates to
         :meth:`DataFrame.to_latex` on the one-column frame."""
-        return self._to_frame_for_io().to_latex(**kw)
+        return self._frame().to_latex(**kw)
 
     def swaplevel(self, i=0, j=1) -> "Series":
         """Swap two index levels (metadata only, like the frame
-        face) — delegates through the one-column frame."""
-        fr = self._to_frame_for_io().swaplevel(i, j)
-        return fr[self.name or _VAL]
+        face)."""
+        return self._unwrap(self._frame(_LIFT).swaplevel(i, j))
 
     def droplevel(self, level) -> "Series":
-        """Remove one index level — delegates through the
-        one-column frame (metadata + column drop, no job)."""
-        fr = self._to_frame_for_io().droplevel(level)
-        return fr[self.name or _VAL]
+        """Remove one index level (metadata + column drop, no job)."""
+        return self._unwrap(self._frame(_LIFT).droplevel(level))
 
     def reorder_levels(self, order) -> "Series":
-        """Rearrange index levels (metadata only) — delegates
-        through the one-column frame."""
-        fr = self._to_frame_for_io().reorder_levels(order)
-        return fr[self.name or _VAL]
+        """Rearrange index levels (metadata only)."""
+        return self._unwrap(self._frame(_LIFT).reorder_levels(order))
 
     def xs(self, key, level=None, drop_level: bool = True):
-        """Cross-section at index label ``key`` (pandas
-        ``Series.xs``). Without ``level`` on a flat index: the
-        matching VALUE, an explicit driver-side fetch like ``iloc``
-        scalars; duplicate labels return a Series (``drop_level``
-        is a no-op here — pandas parity, probed r11). Without
-        ``level`` on a MultiIndex: the first ``len(key)`` levels
-        are consumed, ``drop_level`` honored — a distributed
-        filter. With ``level=``: a distributed filter on that index
-        level with the level dropped — always a Series (pandas
-        shape). Delegates to :meth:`DataFrame.xs`."""
-        vname = self.name or _VAL
-        if level is not None:
-            fr = self._to_frame_ordered().xs(key, level=level,
-                                             drop_level=drop_level)
-            return fr[vname]
-        got = self._to_frame_for_io().xs(key,
-                                         drop_level=drop_level)
-        if isinstance(got, Series):  # pragma: no cover - defensive
-            return got
-        from .frame import DataFrame
-        if isinstance(got, DataFrame):
-            return got[vname]
-        return got[vname]            # pandas row Series -> scalar
+        """Cross-section at index label ``key`` (pandas ``Series.xs``)
+        — the one-column face of :meth:`DataFrame.xs`: a flat-index
+        hit is the VALUE (duplicate labels return a Series), a
+        MultiIndex key or ``level=`` a distributed filter."""
+        got = self._frame(_LIFT).xs(key, level=level,
+                                  drop_level=drop_level)
+        if hasattr(got, "_sdf"):
+            return self._unwrap(got)
+        return got[_LIFT]            # pandas row Series -> scalar
 
-    def _to_frame_for_io(self):
+    def _frame(self, alias=None):
+        """This Series as a one-column frame whose value column is
+        named ``alias`` (default: the Series name), by projection of
+        the index, order and value columns only — the lift of every
+        face that filters, reorders, aligns or fans out rows (as
+        ``_frame(_LIFT)``, read back by :meth:`_unwrap`): a
+        dense-ordinal layout under it checkpoints just these columns,
+        and the order survives for the faces whose row order
+        matters."""
         from .frame import DataFrame
-        vname = self.name or _VAL
-        sdf, a = self._select(vname)
-        return DataFrame._make(sdf, list(self._index_cols), [a],
-                               self._order)
-
-    def _to_frame_ordered(self):
-        """Like :meth:`_to_frame_for_io` but the ORDER columns
-        survive the projection (``_select`` keeps only index cols +
-        value, so the logical order dies with it) — for frame-face
-        delegations whose result row order matters (loc masks,
-        xs(level=))."""
-        from .frame import DataFrame
-        vname = self.name or _VAL
+        vname = alias or self.name or _VAL
         keep = [c for c in dict.fromkeys(
                     list(self._index_cols)
                     + [c for c, _ in (self._order or [])])
@@ -1548,40 +1302,24 @@ class Series:
     def corr(self, other: "Series", method: str = "pearson"):
         """Correlation with another Series (pandas ``Series.corr``;
         engine extension — single JVM ``corr`` aggregate).
-        ``method='spearman'`` ranks both sides first (average ties,
-        NULLs unranked — the pandas recipe: per-column ranks, then
-        Pearson over pairwise-complete rows); each rank is a
-        partition-safe sort+window, so spearman costs two ordered
-        passes on top of the aggregate."""
-        if method == "spearman":
-            if not isinstance(other, Series):
-                raise TypeError(
-                    f"expected Series, got {type(other).__name__}")
-            from pyspark.sql import Window
-
-            from ..plans.ordinal import with_dense_ordinal
-            sdf, a, b = self._pair_sdf(other)
-            pair = sdf.select(a.cast("double").alias("__pa__"),
-                              b.cast("double").alias("__pb__")) \
-                .filter(F.col("__pa__").isNotNull()
-                        & F.col("__pb__").isNotNull())
-            out = with_dense_ordinal(pair, [F.col("__pa__").asc()],
-                                     name="__rna__")
-            out = with_dense_ordinal(out, [F.col("__pb__").asc()],
-                                     name="__rnb__")
-            # average-rank = mean ordinal of the tie group; the tie
-            # windows partition BY VALUE (state per group, not per
-            # table), and corr is shift-invariant so no +1
-            out = out.select(
-                F.avg("__rna__").over(Window.partitionBy("__pa__"))
-                .alias("__ra__"),
-                F.avg("__rnb__").over(Window.partitionBy("__pb__"))
-                .alias("__rb__"))
-            return out.agg(F.corr("__ra__", "__rb__")
-                           .alias("v")).first()["v"]
-        if method != "pearson":
+        ``method='spearman'`` is pandas' recipe: average ranks of the
+        pairwise-complete rows (the frame's rank body,
+        :meth:`DataFrame._rank`), then Pearson over them."""
+        if method == "pearson":
+            return self._pairwise(other, F.corr)
+        if method != "spearman":
             raise ValueError(f"unsupported method {method!r}")
-        return self._pairwise(other, F.corr)
+        if not isinstance(other, Series):
+            raise TypeError(f"expected Series, got {type(other).__name__}")
+        from .frame import DataFrame
+        sdf, a, b = self._pair_sdf(other)
+        cols = ["__pa__", "__pb__"]
+        pair = sdf.select(a.cast("double").alias(cols[0]),
+                          b.cast("double").alias(cols[1])).dropna()
+        ranked = DataFrame._make(pair, [], cols)._rank(
+            cols, "average", True, False)
+        return _nan_if_none(ranked._sdf.agg(F.corr(*cols).alias("v"))
+                            .first()["v"])
 
     def cov(self, other: "Series"):
         """Sample covariance with another column of the same frame
@@ -1603,36 +1341,11 @@ class Series:
                             [(c, ascending) for c in idx])
 
     def replace(self, to_replace, value=None) -> "Series":
-        """pandas ``Series.replace``: scalar→scalar, ``{old: new}``
-        dict, and list→scalar / list→list forms. A pure CASE
-        projection — zero shuffles, stays in codegen. NaN keys match
-        NULL (the sentinel codec equates them); replacements must fit
-        the column's Spark type (pandas' cross-dtype upcasting is
-        not replicated — mismatches raise at analysis)."""
-        if isinstance(to_replace, dict):
-            if value is not None:
-                raise TypeError(
-                    "dict to_replace does not take a value=")
-            pairs = list(to_replace.items())
-        elif isinstance(to_replace, (list, tuple)):
-            if isinstance(value, (list, tuple)):
-                if len(value) != len(to_replace):
-                    raise ValueError(
-                        f"{len(to_replace)} keys but {len(value)} values")
-                pairs = list(zip(to_replace, value))
-            else:
-                pairs = [(o, value) for o in to_replace]
-        else:
-            pairs = [(to_replace, value)]
-
-        def _k(v):  # NaN keys/values mean NULL under the codec
-            return None if isinstance(v, float) and v != v else v
-
-        expr = self._colexpr
-        for o, v in pairs:
-            expr = F.when(self._colexpr.eqNullSafe(F.lit(_k(o))),
-                          F.lit(_k(v))).otherwise(expr)
-        return self._with_col(expr, self.name)
+        """pandas ``Series.replace`` — the one-column face of
+        :meth:`DataFrame.replace` (scalar, dict and list forms; one
+        CASE projection)."""
+        return self._unwrap(self._as_frame().replace(to_replace, value),
+                            same_rows=True)
 
     def map(self, mapping: dict, default=None) -> "Series":
         """Value substitution from a dict (pandas ``Series.map``:
@@ -1685,17 +1398,14 @@ class Series:
 
     def any(self) -> bool:
         """True if any non-null value is truthy (pandas skipna
-        flavor; empty/all-null ⇒ False). One JVM aggregate."""
-        v = self._sdf.agg(F.max(self._colexpr.cast("boolean"))
-                          .alias("v")).first()["v"]
-        return False if v is None else bool(v)
+        flavor; empty/all-null ⇒ False) — the one-column face of
+        :meth:`DataFrame.any`, one JVM aggregate."""
+        return bool(self._frame(_LIFT).any().item())
 
     def all(self) -> bool:
         """True if every non-null value is truthy (pandas skipna
-        flavor; empty/all-null ⇒ True). One JVM aggregate."""
-        v = self._sdf.agg(F.min(self._colexpr.cast("boolean"))
-                          .alias("v")).first()["v"]
-        return True if v is None else bool(v)
+        flavor; empty/all-null ⇒ True)."""
+        return bool(self._frame(_LIFT).all().item())
 
     def clip(self, lower=None, upper=None) -> "Series":
         """Bound values to [lower, upper] (pandas ``Series.clip``).
@@ -1725,51 +1435,25 @@ class Series:
     def value_counts(self, ascending: bool = False,
                      normalize: bool = False,
                      dropna: bool = True, bins=None) -> "Series":
-        """Distinct values with occurrence counts, ordered by count
-        (one hash-agg shuffle; values become the index).
-        ``normalize=True`` returns fractions of total instead —
-        computed with a scalar subtotal, not a second pass.
-        ``dropna=True`` (pandas default) excludes the NULL value;
-        pass False to count NULLs as their own row. ``bins=n``
+        """Distinct values with occurrence counts, ordered by count —
+        the one-column face of :meth:`DataFrame.value_counts` (one
+        hash-agg shuffle; values become the index). ``bins=n``
         composes :meth:`cut` (pandas edge math, interval-string
         labels) before counting."""
-        if bins is not None:
-            return self.cut(bins).value_counts(
-                ascending=ascending, normalize=normalize,
-                dropna=dropna)
-        sdf, alias = self._select()
-        if dropna:
-            sdf = sdf.filter(F.col(alias).isNotNull())
-        cnt = F.count(F.lit(1))
-        if normalize:
-            # subtotal as a ONE-ROW aggregate broadcast-cross-joined
-            # back in — never a global (unpartitioned) window over the
-            # distinct-values table, whose cardinality can approach
-            # the row count (ids), single-partitioning the plan
-            counts = sdf.groupBy(alias).agg(cnt.alias("__n__"))
-            tot = counts.agg(
-                F.sum("__n__").cast("double").alias("__tot__"))
-            out = (counts.crossJoin(F.broadcast(tot))
-                   .withColumn("__cnt__", F.col("__n__") / F.col("__tot__"))
-                   .drop("__n__", "__tot__"))
-        else:
-            out = sdf.groupBy(alias).agg(cnt.cast("long").alias("__cnt__"))
-        out = out.orderBy(F.col("__cnt__").asc() if ascending
-                          else F.col("__cnt__").desc())
-        name = "proportion" if normalize else "count"
-        return Series._make(out, F.col("__cnt__"), [alias], name,
-                            [("__cnt__", ascending)])
+        src = self if bins is None else self.cut(bins)
+        return src._frame(src.name or _IDX).value_counts(
+            normalize=normalize, ascending=ascending, dropna=dropna)
 
     def ffill(self, limit: int | None = None) -> "Series":
         """Forward-fill (pandas ``Series.ffill``; ``pad`` is its
         alias) — the frame's partition-safe carry machinery on this
         one column."""
         return self._unwrap(self._as_frame()._directional_fill(
-            [_LIFT], None, True, limit))
+            [_LIFT], None, True, limit), same_rows=True)
 
     def bfill(self, limit: int | None = None) -> "Series":
         return self._unwrap(self._as_frame()._directional_fill(
-            [_LIFT], None, False, limit))
+            [_LIFT], None, False, limit), same_rows=True)
 
     pad = ffill
     backfill = bfill
@@ -1846,38 +1530,14 @@ class Series:
         return self.to_pandas().to_markdown(**kw)
 
     def rename_axis(self, name) -> "Series":
-        """Rename the INDEX (pandas ``rename_axis``) — a column
-        rename in the plan, no job."""
-        if not self._index_cols:
-            raise ValueError("rename_axis needs an index")
-        old = self._index_cols[0]
-        sdf = self._sdf.withColumnRenamed(old, name)
-        order = [(name if c == old else c, a) for c, a in
-                 (self._order or [])]
-        return Series._make(sdf, self._colexpr, [name], self.name,
-                            order)
+        """Rename the INDEX (pandas ``rename_axis``) — the one-column
+        face of :meth:`DataFrame.rename_axis`, no job."""
+        return self._unwrap(self._frame(_LIFT).rename_axis(name))
 
     def set_axis(self, labels) -> "Series":
         """Replace the index with ``labels`` (pandas ``set_axis``) —
-        a position-keyed join of the new label table, the reindex
-        machinery's shape."""
-        labels = list(labels)
-        n = len(self)
-        if len(labels) != n:
-            raise ValueError(
-                f"Length mismatch: expected {n} elements, got "
-                f"{len(labels)}")
-        from ..plans.ordinal import POS_COL
-        sdf, alias = self._ordered_sdf()
-        spark = sdf.sparkSession
-        lut = spark.createDataFrame(
-            [(i, l) for i, l in enumerate(labels)],
-            [POS_COL, _IDX])
-        keep = [c for c in sdf.columns
-                if c not in self._index_cols]
-        out = sdf.select(*keep).join(F.broadcast(lut), POS_COL)
-        return Series._make(out, F.col(alias), [_IDX],
-                            self.name, [(POS_COL, True)])
+        the one-column face of :meth:`DataFrame.set_axis`."""
+        return self._unwrap(self._frame(_LIFT).set_axis(labels))
 
     def interpolate(self, method: str = "linear", limit: int | None = None,
                     limit_direction: str | None = None) -> "Series":
@@ -1886,7 +1546,7 @@ class Series:
         :meth:`DataFrame.interpolate`, with its pandas edge, ``limit``
         and ``limit_direction`` semantics (one fused layout pass)."""
         return self._unwrap(self._as_frame()._interpolate(
-            [_LIFT], method, limit, limit_direction))
+            [_LIFT], method, limit, limit_direction), same_rows=True)
 
     def repeat(self, repeats: int) -> "Series":
         """Each value repeated ``repeats`` times consecutively
@@ -1908,11 +1568,7 @@ class Series:
 
     def to_frame(self, name=None) -> "DataFrame":
         """One-column DataFrame view (pandas ``to_frame``)."""
-        from .frame import DataFrame
-        alias = name or self.name or "0"
-        sdf, a = self._select(alias)
-        return DataFrame._make(sdf, self._index_cols, [alias],
-                               self._order)
+        return self._frame(name or self.name or "0")
 
     def rename(self, name) -> "Series":
         out = self._with_col(self._colexpr)
@@ -2016,51 +1672,28 @@ class Series:
                frac=None, random_state=None) -> "Series":
         """Per-partition Bernoulli sample / exact-n hash top-n — the
         frame machinery on this one column."""
-        f = self.to_frame("__s__").sample(
+        return self._unwrap(self._frame(_LIFT).sample(
             fraction=fraction, seed=seed, n=n, frac=frac,
-            random_state=random_state)
-        return Series._make(f._sdf, F.col("__s__"), f._index_cols,
-                            self.name, f._order)
+            random_state=random_state))
 
     def describe(self, approx: bool = False, percentiles=None) -> "Series":
         """count/mean/std/min/quantiles/max as a Series (pandas
         Series.describe) — the frame's ONE-job describe on this
         column."""
-        f = self.to_frame("__d__").describe(approx=approx,
-                                            percentiles=percentiles)
-        return Series._make(f._sdf, F.col("__d__"), f._index_cols,
-                            self.name, f._order)
+        return self._unwrap(self._frame(_LIFT).describe(
+            approx=approx, percentiles=percentiles))
 
-    def drop_duplicates(self, keep: str = "first") -> "Series":
-        """Distinct VALUES keeping the first/last occurrence's label
-        (pandas flavor) — one hash agg on the value with a positional
-        min/max tiebreak."""
-        from ..plans.ordinal import with_dense_ordinal
-        sdf, a = self._select("__v__")
-        pairs = [(c, x) for c, x in (self._order or [])
-                 if c in sdf.columns]
-        sdf = with_dense_ordinal(sdf, order_exprs(pairs) or None,
-                                 name="__dp__")
-        agg = (F.min if keep == "first" else F.max)(F.col("__dp__"))
-        keep_pos = (sdf.groupBy("__v__")
-                    .agg(agg.alias("__dp__"))
-                    .withColumnRenamed("__v__", "__kv__")
-                    .withColumnRenamed("__dp__", "__kp__"))
-        # null-SAFE value match: pandas keeps one NaN row; a
-        # null-unsafe semi join would drop every NULL
-        out = sdf.join(
-            keep_pos,
-            F.col("__v__").eqNullSafe(F.col("__kv__"))
-            & (F.col("__dp__") == F.col("__kp__")), "left_semi")
-        return Series._make(out, F.col("__v__"),
-                            self._index_cols, self.name,
-                            [("__dp__", True)])
+    def drop_duplicates(self, keep="first") -> "Series":
+        """Distinct VALUES keeping the first/last occurrence's row, in
+        row order (pandas flavor) — the one-column face of
+        :meth:`DataFrame.drop_duplicates`."""
+        return self._unwrap(self._frame(_LIFT).drop_duplicates(
+            [_LIFT], keep=keep))
 
     def duplicated(self, keep: str = "first") -> "Series":
         """Boolean mask of repeated values (pandas flavor) — the
-        frame machinery on this one column."""
-        f = self.to_frame("__d__")
-        return f.duplicated(subset=["__d__"], keep=keep)
+        one-column face of :meth:`DataFrame.duplicated`."""
+        return self._frame(_LIFT).duplicated(keep=keep)
 
     def equals(self, other: "Series") -> bool:
         return self.to_frame("__e__").equals(other.to_frame("__e__"))
@@ -2079,51 +1712,19 @@ class Series:
         return func(self, *args, **kwargs)
 
     def first_valid_index(self):
-        """Label of the first non-null value (pandas flavor): ONE
-        ``min_by`` aggregate over the ordered position — no sort, no
-        collect beyond one row."""
-        return self._valid_index(first=True)
+        """Label of the first non-null value (pandas flavor) — the
+        frame's ordered limit-1 probe."""
+        return self._frame(_LIFT).first_valid_index()
 
     def last_valid_index(self):
-        return self._valid_index(first=False)
-
-    def _valid_index(self, first: bool):
-        from ..plans.ordinal import POS_COL, with_dense_ordinal
-        sdf = self._sdf.withColumn("__fv__", self._colexpr)
-        pairs = [(c, a) for c, a in (self._order or [])
-                 if c in sdf.columns]
-        sdf = with_dense_ordinal(sdf, order_exprs(pairs) or None,
-                                 name="__fvp__")
-        label = None
-        for c in self._index_cols:
-            if c in sdf.columns and c != ORD_COL:
-                label = F.col(c)
-                break
-        if label is None:
-            label = F.col(ORD_COL) if ORD_COL in sdf.columns \
-                else F.col("__fvp__")
-        agg = (F.min_by if first else F.max_by)(
-            label, F.when(F.col("__fv__").isNotNull(),
-                          F.col("__fvp__")))
-        return sdf.agg(agg.alias("v")).first()["v"]
+        return self._frame(_LIFT).last_valid_index()
 
     def dot(self, other: "Series") -> float:
         """Inner product with another Series (pandas ``Series.dot``):
-        positional alignment, then ONE sum-of-products aggregate."""
-        pair = self._pairwise_sdf(other)
-        row = pair.agg(F.sum(F.col("__x__") * F.col("__y__"))
-                       .alias("v")).first()
-        return row["v"]
-
-    def _pairwise_sdf(self, other: "Series"):
-        """Positionally aligned (__x__, __y__) projection of two
-        Series — shared by dot (same machinery class as corr)."""
-        from ..plans.ordinal import with_dense_ordinal
-        a, aa = self._select("__x__")
-        b, bb = other._select("__y__")
-        la = with_dense_ordinal(a.select("__x__"), name="__dp__")
-        lb = with_dense_ordinal(b.select("__y__"), name="__dp__")
-        return la.join(lb, "__dp__", "inner")
+        the pairwise alignment every two-Series statistic uses
+        (:meth:`_pair_sdf`), then ONE sum-of-products aggregate."""
+        sdf, a, b = self._pair_sdf(other)
+        return sdf.agg(F.sum(a * b).alias("v")).first()["v"]
 
     def autocorr(self, lag: int = 1):
         """Lag-N self-correlation (pandas ``Series.autocorr``):
@@ -2145,21 +1746,10 @@ class Series:
         return sh._with_col(F.col("__cur__")), sh
 
     def nunique(self, dropna: bool = True, approx: bool = False):
-        """Distinct-value count (eager scalar, pandas flavor).
-        ``approx=True`` uses HyperLogLog++ (approx_count_distinct) —
-        the sketch path for extreme-cardinality columns where the
-        exact distinct shuffle is the bottleneck."""
-        c = self._colexpr
-        if approx:
-            expr = F.approx_count_distinct(c)
-        else:
-            expr = F.count_distinct(c)
-        row = self._sdf.agg(expr.alias("n")).first()
-        n = int(row["n"])
-        if not dropna:
-            has_null = self._sdf.where(c.isNull()).limit(1).count() > 0
-            n += int(has_null)
-        return n
+        """Distinct-value count (eager scalar, pandas flavor) — the
+        one-column face of :meth:`DataFrame.nunique`."""
+        return int(self._frame(_LIFT).nunique(
+            dropna=dropna, approx=approx).item())
 
     def mode(self) -> "Series":
         """Most frequent value(s) — ALL ties returned, sorted
@@ -2181,20 +1771,13 @@ class Series:
                             [(alias, True)])
 
     def nlargest(self, n: int = 5) -> "Series":
-        """Top-n values: distributed TakeOrdered, never a full sort.
-        NaN sorts LAST in both directions like pandas (Spark's asc
-        order would otherwise surface NULLs first in ``nsmallest``);
-        it only appears when n exceeds the non-null count."""
-        sdf, alias = self._select()
-        out = sdf.orderBy(F.col(alias).desc_nulls_last()).limit(n)
-        return Series._make(out, F.col(alias), self._index_cols, self.name,
-                            [(alias, False)])
+        """Top-n values: distributed TakeOrdered, never a full sort —
+        the one-column face of :meth:`DataFrame.nlargest` (NaN last,
+        ties keep the earlier row like pandas)."""
+        return self._unwrap(self._frame(_LIFT).nlargest(n, _LIFT))
 
     def nsmallest(self, n: int = 5) -> "Series":
-        sdf, alias = self._select()
-        out = sdf.orderBy(F.col(alias).asc_nulls_last()).limit(n)
-        return Series._make(out, F.col(alias), self._index_cols, self.name,
-                            [(alias, True)])
+        return self._unwrap(self._frame(_LIFT).nsmallest(n, _LIFT))
 
     def idxmax(self):
         """Index label of the maximum (eager scalar, pandas flavor;
@@ -2229,12 +1812,12 @@ class Series:
         (sort_values/sort_index) upstream; an unordered scan shifts in
         the current layout order."""
         return self._unwrap(self._as_frame()._shift_combine(
-            [_LIFT], periods, "shift", fill_value))
+            [_LIFT], periods, "shift", fill_value), same_rows=True)
 
     def diff(self, periods: int = 1) -> "Series":
         """self - self.shift(periods) in one boundary-carry pass."""
         return self._unwrap(self._as_frame()._shift_combine(
-            [_LIFT], periods, "diff"))
+            [_LIFT], periods, "diff"), same_rows=True)
 
     def cumsum(self) -> "Series":
         """Cumulative sum along the logical order (pandas flavor;
@@ -2249,16 +1832,20 @@ class Series:
         >>> df.sort_values("k")["x"].cumsum().to_pandas().tolist()
         [1.0, 3.0, 6.0]
         """
-        return self._unwrap(self._as_frame()._cumulative([_LIFT], "sum"))
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "sum"),
+                            same_rows=True)
 
     def cumprod(self) -> "Series":
-        return self._unwrap(self._as_frame()._cumulative([_LIFT], "prod"))
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "prod"),
+                            same_rows=True)
 
     def cummin(self) -> "Series":
-        return self._unwrap(self._as_frame()._cumulative([_LIFT], "min"))
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "min"),
+                            same_rows=True)
 
     def cummax(self) -> "Series":
-        return self._unwrap(self._as_frame()._cumulative([_LIFT], "max"))
+        return self._unwrap(self._as_frame()._cumulative([_LIFT], "max"),
+                            same_rows=True)
 
     def pct_change(self, periods: int = 1) -> "Series":
         """Fractional change vs the value ``periods`` back along the
@@ -2266,7 +1853,7 @@ class Series:
         (x/0 -> ±inf), in one boundary-carry pass (pandas flavor;
         engine extension)."""
         return self._unwrap(self._as_frame()._shift_combine(
-            [_LIFT], periods, "pct_change"))
+            [_LIFT], periods, "pct_change"), same_rows=True)
 
     def rolling(self, window, min_periods: int | None = None,
                 center: bool = False):
@@ -2315,91 +1902,33 @@ class Series:
         :meth:`DataFrame.rank`. NULLs are left unranked
         (na_option='keep'); 'first' breaks ties by logical position."""
         return self._unwrap(self._as_frame()._rank(
-            [_LIFT], method, ascending, pct))
+            [_LIFT], method, ascending, pct), same_rows=True)
 
     def quantile(self, q, approx: bool = False,
                  accuracy: int = 10000,
                  interpolation: str = "linear"):
-        """Quantiles (engine extension). A scalar ``q`` returns a
-        Python float (pandas flavor); a list returns a Series indexed
-        by quantile. Default is EXACT linear-interpolated (ANSI
-        percentile_cont / DuckDB quantile_cont) — correct locally,
-        but the exact aggregate buffers the value multiset per
-        partition, so at 100 TB use ``approx=True``: Spark's
-        Greenwald-Khanna sketch (percentile_approx) — mergeable,
-        bounded memory (~``accuracy`` entries), rank error <=
-        1/accuracy, returns an actual data element (discrete;
-        ``interpolation`` is ignored on that face). Non-linear exact
-        interpolations (lower/higher/nearest/midpoint) resolve exact
-        ranks driver-side from one COUNT, then fetch the rank values
-        with percentile_disc — still a value-buffering exact
-        aggregate; prefer ``approx=True`` at scale."""
+        """Quantiles — the one-column face of
+        :meth:`DataFrame.quantile` (its ``_quantile_row`` body: exact
+        linear by default, ``approx=True`` for the GK sketch at scale,
+        lower/higher/nearest/midpoint from exact ranks). A scalar ``q``
+        returns a Python float (pandas flavor); a list returns a
+        Series indexed by the quantiles' string spellings."""
         scalar = isinstance(q, (int, float))
         qs = [q] if scalar else list(q)
-        d = self._colexpr.cast("double")
-        if approx or interpolation == "linear":
-            # ONE aggregate with an array of percentages: per-p
-            # percentile expressions would each buffer/sketch every
-            # row independently
-            qarr = F.expr(
-                "array(" + ",".join(f"{float(p)!r}D" for p in qs) + ")")
-            agg = (F.percentile_approx(d, qarr, F.lit(accuracy))
-                   if approx else F.percentile(d, qarr))
-            row_df = self._sdf.agg(agg.alias("__qs__")).select(*[
-                F.element_at(F.col("__qs__"), F.lit(i + 1)).alias(f"q{p}")
-                for i, p in enumerate(qs)])
-        else:
-            if interpolation not in ("lower", "higher", "nearest",
-                                     "midpoint"):
-                raise ValueError(
-                    f"unknown interpolation {interpolation!r}")
-            import math
-            n = self._sdf.agg(F.count(d).alias("n")).first()["n"]
-            spark = self._sdf.sparkSession
-            if n == 0:
-                vals = [None] * len(qs)
-            else:
-                # pandas' np.percentile roundtrip (see qcut)
-                hs = [(n - 1) * ((float(p) * 100) / 100) for p in qs]
-                needed = sorted({k for h in hs
-                                 for k in (math.floor(h), math.ceil(h))})
-                tmp = self._sdf.select(d.alias("__pd_v__"))
-                # (k+0.5)/n targets 1-indexed rank k+1 robustly:
-                # percentile_disc picks the first value with cum
-                # fraction >= p, immune to float-rank drift
-                row = tmp.agg(*[
-                    F.expr(f"percentile_disc({(k + 0.5) / n!r}D) "
-                           "WITHIN GROUP (ORDER BY __pd_v__)")
-                    .alias(f"r{k}") for k in needed]).first()
-                at = {k: row[f"r{k}"] for k in needed}
-                vals = []
-                for h in hs:
-                    a, b = at[math.floor(h)], at[math.ceil(h)]
-                    if interpolation == "lower":
-                        vals.append(a)
-                    elif interpolation == "higher":
-                        vals.append(b)
-                    elif interpolation == "midpoint":
-                        vals.append(None if a is None else (a + b) / 2)
-                    else:  # nearest: numpy half-to-even on the rank
-                        vals.append(at[round(h)])
-            row_df = spark.range(1).select(*[
-                F.lit(v).cast("double").alias(f"q{p}")
-                for p, v in zip(qs, vals)])
+        row = self._frame(_LIFT)._quantile_row(
+            [_LIFT], [float(p) for p in qs], approx, accuracy,
+            interpolation)
         if scalar:
-            v = row_df.first()[f"q{qs[0]}"]
-            return float("nan") if v is None else float(v)
-        pairs = ", ".join(f"'{p}', `q{p}`" for p in qs)
-        out = row_df.select(F.expr(
+            return float(_nan_if_none(
+                row.select(F.element_at(F.col(_LIFT), 1)).first()[0]))
+        pairs = ", ".join(f"'{p}', element_at(`{_LIFT}`, {i + 1})"
+                          for i, p in enumerate(qs))
+        out = row.select(F.expr(
             f"stack({len(qs)}, {pairs}) as (`{_IDX}`, `__q__`)"))
         return Series._make(out, F.col("__q__"), [_IDX], self.name, None)
 
     def median(self, approx: bool = False, accuracy: int = 10000):
-        fn = (F.percentile_approx(self._colexpr.cast("double"),
-                                  F.lit(0.5), F.lit(accuracy))
-              if approx else
-              F.percentile(self._colexpr.cast("double"), F.lit(0.5)))
-        return self._sdf.agg(fn.alias("m")).first()["m"]
+        return self.quantile(0.5, approx=approx, accuracy=accuracy)
 
     def cut(self, bins, labels=None, right: bool = True) -> "Series":
         """Bin values into explicit intervals (pandas ``pd.cut``:
@@ -2498,36 +2027,19 @@ class Series:
             # puts the edges — Spark's percentile_cont formula differs
             # in the last ulp (a+(b-a)*t vs lowerVal*(hi-pos)+
             # higherVal*(pos-lo)), which flips edge-valued rows
-            # between bins. Resolve exact ranks driver-side from one
-            # COUNT, fetch the rank values with percentile_disc
-            # ((k+0.5)/n targets 1-indexed rank k+1 robustly), and
-            # replay numpy's branchy lerp bit-for-bit. Two tiny jobs;
-            # both are mergeable aggregates (percentile_disc buffers
-            # the multiset like any exact percentile — approx=True is
-            # the 100 TB path either way).
+            # between bins. Take pandas' exact rank values (two tiny
+            # mergeable jobs — approx=True is the 100 TB path either
+            # way) and replay numpy's branchy lerp bit-for-bit.
             import math
-            n = self._sdf.agg(F.count(d).alias("n")).first()["n"]
-            if n == 0:
-                edges = [None]
-            else:
-                # pandas routes quantiles through np.percentile:
-                # the q*100 -> /100 roundtrip perturbs p by an ulp,
-                # moving the virtual index — replay it for parity
-                hs = [(n - 1) * ((float(p) * 100) / 100) for p in ps]
-                needed = sorted({k for h in hs
-                                 for k in (math.floor(h), math.ceil(h))})
-                tmp = self._sdf.select(d.alias("__pd_v__"))
-                row = tmp.agg(*[
-                    F.expr(f"percentile_disc({(k + 0.5) / n!r}D) "
-                           "WITHIN GROUP (ORDER BY __pd_v__)")
-                    .alias(f"r{k}") for k in needed]).first()
-                at = {k: row[f"r{k}"] for k in needed}
-                edges = []
-                for h in hs:
-                    a, b = at[math.floor(h)], at[math.ceil(h)]
-                    t = h - math.floor(h)
-                    edges.append((b - (b - a) * (1 - t)) if t >= 0.5
-                                 else (a + (b - a) * t))
+
+            from .frame import _rank_values
+            edges = []
+            for h, a, b in _rank_values(
+                    self._sdf.select(d.alias("v")), ["v"], ps)["v"]:
+                t = None if h is None else h - math.floor(h)
+                edges.append(None if a is None
+                             else (b - (b - a) * (1 - t)) if t >= 0.5
+                             else (a + (b - a) * t))
         if edges and edges[0] is None:  # empty/all-null input
             out = self._with_col(
                 F.lit(None).cast("double" if labels is False
@@ -2605,83 +2117,19 @@ class Series:
     def unstack(self, level: int = -1, max_columns: int = 10000,
                 verify_integrity: bool = True) -> "DataFrame":
         """pandas ``Series.unstack``: pivot one index level into
-        columns. Needs >= 2 index levels; the chosen level's distinct
-        values are collected once (guarded by ``max_columns`` — the
-        unstacked width must be driver-sized by definition) and passed
-        explicitly to ``groupBy().pivot(...)`` so the plan has no
-        hidden distinct job and the column order is deterministic
-        (sorted, like pandas). One hash-agg shuffle."""
-        from .frame import DataFrame
-        idx = [c for c in self._index_cols if c in self._sdf.columns
-               and c != ORD_COL]
-        if len(idx) < 2:
-            raise ValueError(
-                "unstack needs a MultiIndex (>= 2 index levels); "
-                f"this Series has {idx!r}")
-        lvl = idx[level]
-        remaining = [c for c in idx if c != lvl]
-        sdf, alias = self._select()
-        pvals = [r[0] for r in
-                 (sdf.select(lvl).where(F.col(lvl).isNotNull())
-                  .distinct().limit(max_columns + 1).collect())]
-        if len(pvals) > max_columns:
-            raise ValueError(
-                f"unstack level {lvl!r} has more than {max_columns} "
-                "distinct values; raise max_columns= only if you "
-                "mean a table that wide")
-        pvals.sort()
-        if verify_integrity:
-            # pandas raises on duplicate (index, level) pairs; F.first
-            # would otherwise pick one silently — a wrong answer. One
-            # extra hash-agg job, same cost class as the pivot itself;
-            # pass verify_integrity=False to skip at scale when
-            # uniqueness is guaranteed upstream.
-            dup = (sdf.groupBy(*idx)
-                   .agg(F.count(F.lit(1)).alias("__n__"))
-                   .filter(F.col("__n__") > 1).limit(1).count())
-            if dup:
-                raise ValueError(
-                    "Index contains duplicate entries, cannot reshape")
-        out = (sdf.groupBy(*remaining).pivot(lvl, pvals)
-               .agg(F.first(alias)))
-        return DataFrame._make(
-            out, remaining, [c for c in out.columns
-                             if c not in remaining],
-            [(c, True) for c in remaining])
+        columns — the one-column face of :meth:`DataFrame.unstack`
+        (flat level-value column names, one hash-agg shuffle)."""
+        return self._frame(_LIFT).unstack(
+            level=level, max_columns=max_columns,
+            verify_integrity=verify_integrity)
 
     def explode(self) -> "Series":
         """pandas ``Series.explode``: one output row per array
         element, index labels repeated; NULL/empty arrays yield one
-        NULL row (explode_outer). A narrow generator, no shuffle.
-        Intra-row element order stays deterministic through the same
-        composite (source ordinal, element position) packing the
-        frame's explode uses."""
-        from pyspark.sql import types as T
-        sdf, alias = self._select()
-        if not isinstance(sdf.schema[alias].dataType, T.ArrayType):
-            # pandas passes non-list values through unchanged
-            return self
-        others = [c for c in sdf.columns if c != alias]
-        idx = list(self._index_cols)
-        if ORD_COL in sdf.columns:
-            out = sdf.select(
-                *[c for c in others if c != ORD_COL], F.col(ORD_COL),
-                F.posexplode_outer(F.col(alias)).alias("__epos__", alias))
-            if ORD_COL in idx:
-                # pandas repeats the SOURCE index label per element —
-                # export the pre-pack ordinal as the row label; the
-                # packed (source ord, element pos) composite orders
-                out = out.withColumn("__erow__", F.col(ORD_COL))
-                idx = [c if c != ORD_COL else "__erow__" for c in idx]
-            out = out.withColumn(
-                ORD_COL,
-                F.shiftleft(F.col(ORD_COL), 21)
-                + F.coalesce(F.col("__epos__"), F.lit(0))).drop("__epos__")
-            return Series._make(out, F.col(alias), idx, self.name,
-                                [(ORD_COL, True)])
-        out = sdf.select(
-            *others, F.explode_outer(F.col(alias)).alias(alias))
-        return Series._make(out, F.col(alias), idx, self.name, None)
+        NULL row — the one-column face of :meth:`DataFrame.explode`
+        (a narrow generator; element order survives positional ops).
+        Non-list values pass through unchanged."""
+        return self._unwrap(self._frame(_LIFT).explode(_LIFT))
 
     def apply(self, func, mapping: dict | None = None, new_dtype=None, **kwargs):
         """UDF surface (series.py:441-548). Modes:
@@ -2798,6 +2246,11 @@ class Series:
         return s
 
 
+def _nan_if_none(v):
+    """An undefined statistic (Spark's NULL) is NaN, as in pandas."""
+    return float("nan") if v is None else v
+
+
 def _norm_pos(i: int, n: int) -> int:
     """pandas negative position -> absolute (IndexError past front)."""
     if i < 0:
@@ -2826,34 +2279,19 @@ class _SeriesILoc:
         self._sr = sr
 
     def __getitem__(self, key):
-        from ..plans.ordinal import POS_COL, local_table
+        from ..plans.ordinal import POS_COL
+        sr = self._sr
         if isinstance(key, (int, np.integer)):
             key = int(key)
             if key < 0:
-                key = _norm_pos(key, len(self._sr))
-        if isinstance(key, int):
-            sdf, alias = self._sr._ordered_sdf()
+                key = _norm_pos(key, len(sr))
+            sdf, alias = sr._ordered_sdf()
             row = sdf.filter(F.col(POS_COL) == key).select(alias).first()
             if row is None:
                 raise IndexError(f"iloc index {key} out of range")
             return row[alias]
-        if isinstance(key, slice):
-            return self._sr._slice(key)
-        if isinstance(key, (list, np.ndarray)):
-            if any(int(i) < 0 for i in key):
-                n = len(self._sr)
-                key = [_norm_pos(int(i), n) for i in key]
-            # gather by ordinal list via broadcast join (weld_ops.py:333-367)
-            sdf, alias = self._sr._ordered_sdf()
-            want = local_table(
-                sdf.sparkSession,
-                [(int(i), int(p)) for p, i in enumerate(key)],
-                f"{POS_COL} LONG, __gather__ LONG")
-            sdf = sdf.drop(ORD_COL) if ORD_COL in sdf.columns else sdf
-            out = (sdf.join(F.broadcast(want), POS_COL)
-                   .drop(POS_COL).withColumnRenamed("__gather__", ORD_COL))
-            return Series._make(out, F.col(alias), self._sr._index_cols,
-                                self._sr.name, [(ORD_COL, True)])
+        if isinstance(key, (slice, list, np.ndarray)):
+            return sr._unwrap(sr._frame(_LIFT).iloc[key])
         raise TypeError(f"unsupported iloc key: {type(key)}")
 
     def __setitem__(self, key, value):
@@ -2864,7 +2302,7 @@ class _SeriesILoc:
         write-back)."""
         sr = self._sr
         vname = sr.name or _VAL
-        fr = sr._to_frame_ordered()
+        fr = sr._frame()
         fr.iloc[key, 0] = value
         sr._swap_in(fr[vname])
 
@@ -2895,57 +2333,11 @@ class _SeriesLoc:
                     and key._sdf is sr._sdf):
                 return sr[key]
             from .frame import _loc_bool_series
-            fr = sr._to_frame_ordered()
-            return _loc_bool_series(fr, key)[sr.name or _VAL]
-        if not sr._index_cols:
-            raise ValueError("loc needs an index")
-        k = sr._index_cols[0]
+            return sr._unwrap(_loc_bool_series(sr._frame(_LIFT), key))
         if isinstance(key, (list, tuple, np.ndarray)):
-            labels = list(key)
-            # a BOOLEAN list/array is a positional MASK in pandas
-            # (length-checked IndexError), not labels
-            if labels and all(isinstance(v, (bool, np.bool_))
-                              for v in labels):
-                n = len(sr)
-                if len(labels) != n:
-                    raise IndexError(
-                        f"Boolean index has wrong length: "
-                        f"{len(labels)} instead of {n}")
-                return sr.iloc[[i for i, b in enumerate(labels)
-                                if b]]
-            # pandas returns rows in the REQUESTED label order with
-            # repeated labels duplicated (s.loc[['a','a']] has two
-            # rows) — a position-tagged lookup join, the reindex
-            # shape, not an isin filter (which kept original order
-            # and deduped). One tiny probe job raises KeyError on
-            # any miss; the lookup table is driver-sized, so the
-            # broadcast is bounded.
-            from ..plans.ordinal import POS_COL
-            vname = sr.name or _VAL
-            sdf, a = sr._ordered_sdf(vname)
-            spark = sdf.sparkSession
-            want = spark.createDataFrame(
-                [(int(p), lbl) for p, lbl in enumerate(labels)],
-                ["__wpos__", "__wlbl__"])
-            # KeyError gate: one tiny job counts HIT labels (semi
-            # join, small side broadcast). After it passes every
-            # requested label matches, so the gather itself is an
-            # INNER join — the broadcastable shape (a row-preserving
-            # outer join cannot broadcast its preserved side).
-            uniq = want.select("__wlbl__").distinct()
-            hit = (sdf.join(F.broadcast(uniq),
-                            F.col("__wlbl__").eqNullSafe(F.col(k)),
-                            "left_semi")
-                   .select(k).distinct().count())
-            if hit < len(set(labels)):
-                raise KeyError(f"{labels!r} not all in index")
-            out = (sdf.join(F.broadcast(want),
-                            F.col("__wlbl__").eqNullSafe(F.col(k)),
-                            "inner")
-                   .drop("__wlbl__"))
-            return Series._make(out, F.col(a), sr._index_cols,
-                                sr.name, [("__wpos__", True),
-                                          (POS_COL, True)])
+            # label lists (requested order, repeats duplicated,
+            # KeyError on a miss) and boolean masks: the frame loc face
+            return sr._unwrap(sr._frame(_LIFT).loc[list(key)])
         sentinel = object()
         got = sr.get(key, sentinel)
         if got is sentinel:
@@ -2970,6 +2362,6 @@ class _SeriesLoc:
                 "df.loc[labels, col] = value on the owning frame")
         sr = self._sr
         vname = sr.name or _VAL
-        fr = sr._to_frame_ordered()
+        fr = sr._frame()
         fr.loc[key, vname] = value
         sr._swap_in(fr[vname])

@@ -67,8 +67,23 @@ def spark_df_from_pandas(spark, pdf):
     """createDataFrame that also accepts EMPTY pandas frames: Spark's
     schema inference needs rows, so for zero rows the schema is
     derived from the numpy dtypes instead (float->double/float,
-    int->long/int, bool, datetime64->timestamp, object->string)."""
+    int->long/int, bool, datetime64->timestamp, object->string).
+
+    Datetime columns (naive or tz-aware) are floored to whole
+    microseconds first: Spark timestamps hold microseconds, Arrow
+    refuses the lossy ns->us cast, and createDataFrame would then
+    fall back to its row-at-a-time path — which drops the sub-µs
+    digits all the same."""
     if len(pdf):
+        sub_us = [c for c in pdf.columns if pdf[c].dtype.kind == "M"]
+        if sub_us:
+            import pandas as pd
+            pdf = pdf.copy()
+            for c in sub_us:
+                # subtracting the nanosecond field floors on the epoch
+                # axis (pre-1970 too) without wall-clock ambiguity
+                pdf[c] = pdf[c] - pd.to_timedelta(pdf[c].dt.nanosecond,
+                                                  unit="ns")
         return spark.createDataFrame(pdf)
     from pyspark.sql import types as T
 

@@ -1199,7 +1199,8 @@ class SeriesWindow:
         if name.startswith("_"):
             raise AttributeError(name)
         stat = getattr(self._win, name)
-        return lambda *args, **kw: self._sr._unwrap(stat(*args, **kw))
+        return lambda *args, **kw: self._sr._unwrap(stat(*args, **kw),
+                                                 same_rows=True)
 
     def agg(self, func):
         """pandas ``.agg``: a str delegates to the named statistic; a
