@@ -965,7 +965,7 @@ class Series:
         from .frame import DataFrame
         sdf, a = self._select(self.name or "0")
         idx = [c for c in self._index_cols if c in sdf.columns]
-        ren = {c: "index" for c in idx if c in (ORD_COL, "__idx__")}
+        ren = {c: "index" for c in idx if c in (ORD_COL, _IDX)}
         out = sdf.withColumnsRenamed(ren) if ren else sdf
         new_idx = [ren.get(c, c) for c in idx]
         order = [(ren.get(c, c), asc) for c, asc in (self._order or [])

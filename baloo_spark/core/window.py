@@ -19,8 +19,9 @@ A rolling window's kind picks two things only:
   expanding -> ``with_prefix_aggs``, time offset ->
   :func:`_time_roll_multi` (a prefix pass plus an as-of lookup);
 - its **fallback for order statistics**: the bounded local-carry pass
-  (``with_rolling_locals``) for a fixed window (it also serves the
-  fixed-window sem and every centered moment), the budgeted
+  (``with_rolling_locals``) for a fixed window (it also serves every
+  centered moment, and the fixed-window sem, which costs one action
+  job fewer there than on the prefix source), the budgeted
   single-partition pandas pass (:meth:`Rolling._pandas_pass`) for
   expanding and time windows. Expanding min/max are prefix aggregates
   and expanding skew/kurt are prefix sums of centered powers.
@@ -686,9 +687,9 @@ class Rolling:
     def _moment(self, stat: str, ddof: int = 1):
         if self._center or (stat == "sem" and self._kind == "fixed"):
             # centered moments and the fixed-window sem: pandas' own
-            # kernels on the local pass (for sem it costs fewer jobs
-            # than the prefix source: its emit pass re-shuffles
-            # nothing)
+            # kernels on the local pass (for sem it costs one action
+            # job fewer than the prefix source, whose emit pass
+            # broadcasts its offsets table in a job of its own)
             return self._order_stat(
                 stat, **({"ddof": ddof} if stat in _NEED_SQ else {}))
         out, exprs = self._fused([(c, stat, c, None) for c in self._cols],

@@ -13,7 +13,13 @@ Every scheme here is instead the same two-pass partition-carry scan:
    partitions by the order keys, so partition i holds a contiguous,
    globally ordered slice; stamp row ids (``monotonically_increasing_id``,
    increasing within each partition) and partition ids, and freeze the
-   layout with a localCheckpoint so both passes see it identically;
+   layout with a localCheckpoint so both passes see it identically.
+   A range-partitioned layout then declares what it is —
+   ``RangePartitioning([__pid__ ASC], n)`` and the ordering
+   ``[__pid__ ASC, __mid__ ASC]`` — so the ``partitionBy("__pid__")``
+   windows and ``groupBy("__pid__")`` totals of both passes plan no
+   exchange and no sort (a checkpoint alone reports
+   ``UnknownPartitioning`` under AQE);
 2. pass 1: one collect of each partition's END state — kilobytes at
    thousands of partitions;
 3. ONE driver fold, ``_pid_fold``: walk the ends in partition-id
@@ -68,6 +74,8 @@ one emit pass, for any number of columns.
 """
 
 from __future__ import annotations
+
+import warnings
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -259,7 +267,19 @@ def _range_layout(sdf: DataFrame, order_by: list | None) -> DataFrame:
     (never unpersisted), while checkpoint blocks are freed by the
     ContextCleaner when the DataFrame is garbage-collected. Not
     fault-tolerant to executor loss — an ephemeral positional op
-    re-runs from source on failure, which is the right trade."""
+    re-runs from source on failure, which is the right trade.
+
+    With ``order_by``, :func:`_declared_layout` re-wraps the checkpoint
+    to declare its partitioning by ``__pid__`` and its ``(__pid__,
+    __mid__)`` ordering, so later pid-partitioned windows and
+    aggregates shuffle and sort nothing; the stamps ran after the
+    range exchange, in the checkpoint RDD's own partitions, so the
+    claim holds. Without ``order_by`` the plain checkpoint is
+    returned: over a pandas-built frame (a ``LocalRelation``) the
+    optimizer's ``ConvertToLocalRelation`` evaluates the stamps on the
+    driver as partition 0 while the scan spreads the rows over several
+    partitions. If the re-wrap fails, the plain checkpoint is returned
+    and the first failure warns."""
     if order_by:
         # no explicit partition count (r11): REPARTITION_BY_COL is
         # AQE-coalescible, so a kilobyte-sized input lands in one
@@ -273,9 +293,54 @@ def _range_layout(sdf: DataFrame, order_by: list | None) -> DataFrame:
     # collect) is the first consumer and materializes the blocks in
     # its own job — same frozen layout for both passes, one fewer
     # eager job/pass per scheme
-    return (sdf.withColumn("__mid__", F.monotonically_increasing_id())
-            .withColumn("__pid__", F.spark_partition_id())
-            .localCheckpoint(eager=False))
+    ck = (sdf.withColumn("__mid__", F.monotonically_increasing_id())
+          .withColumn("__pid__", F.spark_partition_id())
+          .localCheckpoint(eager=False))
+    if not order_by:
+        return ck
+    try:
+        return _declared_layout(ck)
+    except Exception as exc:  # internal JVM API: any failure falls back
+        global _UNDECLARED_WARNED
+        if not _UNDECLARED_WARNED:
+            _UNDECLARED_WARNED = True
+            warnings.warn(
+                f"range layouts cannot declare their partitioning on "
+                f"this Spark ({type(exc).__name__}: {exc}); ordered ops "
+                f"re-shuffle each layout by __pid__", RuntimeWarning,
+                stacklevel=3)
+        return ck
+
+
+# set once the first failed re-wrap has warned
+_UNDECLARED_WARNED = False
+
+
+def _declared_layout(ck: DataFrame) -> DataFrame:
+    """``ck`` (a localCheckpoint whose partition i holds exactly the
+    rows with ``__pid__ = i``, in ascending ``__mid__``) re-wrapped in
+    a ``LogicalRDD`` that declares ``RangePartitioning([__pid__ ASC],
+    n)`` and the ordering ``[__pid__ ASC, __mid__ ASC]``. Range, never
+    hash: a shuffled join does not take a range partitioning of more
+    than one partition as co-partitioned with its other side, so it
+    still exchanges both, while a declared hash partitioning would
+    claim a hash placement the rows do not have. ``LogicalRDD`` and
+    ``classic.Dataset.ofRows`` are internal APIs; any failure here
+    raises to :func:`_range_layout`."""
+    jvm = ck.sparkSession._jvm
+    jsession = ck.sparkSession._jsparkSession
+    lp = ck._jdf.queryExecution().analyzed()
+    order = ck.sortWithinPartitions("__pid__", "__mid__") \
+        ._jdf.queryExecution().analyzed().order()
+    part = jvm.org.apache.spark.sql.catalyst.plans.physical \
+        .RangePartitioning(order.take(1), lp.rdd().getNumPartitions())
+    opt = jvm.scala.Option
+    lrdd = jvm.org.apache.spark.sql.execution.LogicalRDD(
+        lp.output(), lp.rdd(), part, order, False, opt.apply(None),
+        jsession, opt.apply(lp.stats()), opt.apply(None))
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(jsession, lrdd),
+        ck.sparkSession)
 
 
 def _add(a, b):

@@ -155,6 +155,18 @@ def test_series_conveniences(bl):
     assert ri["v"].tolist() == [7., 8., 9.]
 
 
+def test_series_reset_index_exports_constructor_index(bl):
+    """A Series built on an explicit index exports it as pandas'
+    ``index`` column, not as the internal index column's name."""
+    ps = pd.Series([1., 2., 3.], index=pd.Index([10, 20, 30]), name="v")
+    bs = bl.Series(ps.to_numpy(), index=bl.Index([10, 20, 30]), name="v")
+    got = bs.reset_index().to_pandas()
+    want = ps.reset_index()
+    assert list(got.columns) == list(want.columns) == ["index", "v"]
+    assert got["index"].tolist() == want["index"].tolist()
+    assert got["v"].tolist() == want["v"].tolist()
+
+
 def test_series_argsort_compare_align(bl):
     # argsort: pandas' FUTURE contract (NA last), not the deprecated
     # -1 sentinel flavor

@@ -406,3 +406,144 @@ def test_fixed_window_fused_single_layout(spark, bl, monkeypatch):
                 equal_nan=True, err_msg=label)
     finally:
         spark.conf.set(aqe, old)
+
+
+def _sorted_ordered_ops(bl):
+    """A 2000-row frame sorted by a shuffled key, its pandas twin, and
+    the four ordered Series ops whose emit windows partition by
+    ``__pid__``: (label, baloo op, pandas answer)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    n = 2000
+    k = rng.permutation(n)
+    x = rng.normal(size=n)
+    x[rng.random(n) < 0.05] = np.nan
+    df = bl.DataFrame({"k": k, "x": x}).sort_values("k")
+    ps = pd.Series(x[np.argsort(k)])
+    return [
+        ("rolling(50).std", lambda: df["x"].rolling(50).std(),
+         ps.rolling(50).std()),
+        ("expanding().mean", lambda: df["x"].expanding().mean(),
+         ps.expanding().mean()),
+        ("cumsum", lambda: df["x"].cumsum(), ps.cumsum()),
+        ("shift(5)", lambda: df["x"].shift(5), ps.shift(5)),
+    ]
+
+
+def test_sorted_ordered_ops_plan_no_pid_exchange(spark, bl):
+    """A sorted frame's range layout declares its partitioning by
+    ``__pid__`` (plans/ordinal._declared_layout), so the emit pass of
+    rolling, expanding, cumsum and shift re-shuffles nothing: no
+    ``Exchange hashpartitioning(__pid__`` in the executed plan, with
+    AQE coalescing on and off (several layout partitions), and the
+    answers match pandas."""
+    import numpy as np
+
+    aqe = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(aqe)
+    try:
+        for coalesce in ("true", "false"):
+            spark.conf.set(aqe, coalesce)
+            for label, run, want in _sorted_ordered_ops(bl):
+                got = run()
+                assert "Exchange hashpartitioning(__pid__" \
+                    not in plan_of(got._sdf), (label, coalesce)
+                np.testing.assert_allclose(
+                    got.to_pandas().to_numpy(dtype=float),
+                    want.to_numpy(dtype=float), rtol=1e-9, atol=1e-9,
+                    equal_nan=True, err_msg=f"{label} {coalesce}")
+    finally:
+        spark.conf.set(aqe, old)
+
+
+def test_declared_layouts_are_truthful(spark):
+    """Every layout that declares a partitioning holds what it says:
+    partition i holds exactly the rows with ``__pid__ = i``, in the
+    row order their ``__mid__`` stamps give (re-stamping the frozen
+    rows reproduces every ``__mid__``). Range layouts over a parquet
+    scan and over a pandas-built frame declare; the ingest layout
+    (no order) of a 5-row pandas frame must not, since the optimizer
+    folds its stamps into the local relation as partition 0."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from baloo_spark.core.utils import spark_df_from_pandas
+    from baloo_spark.plans import ordinal
+
+    def declared(lay):
+        part = lay._jdf.queryExecution().analyzed().outputPartitioning()
+        return part.getClass().getSimpleName() == "RangePartitioning"
+
+    def violations(lay):
+        return lay.where(
+            (F.spark_partition_id() != F.col("__pid__"))
+            | (F.monotonically_increasing_id() != F.col("__mid__"))
+        ).count()
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet") \
+        .select("l_orderkey", "l_linenumber", "l_extendedprice")
+    pdf = pd.DataFrame({"k": [5, 3, 9, 1, 7, 2, 8], "x": [1.0] * 7})
+    tiny = pd.DataFrame({"x": [1.0, 2.0, 3.0, 4.0, 5.0]})
+    aqe = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(aqe)
+    try:
+        for coalesce in ("true", "false"):
+            spark.conf.set(aqe, coalesce)
+            layouts = [
+                ("parquet by key", li,
+                 [F.col("l_extendedprice"), F.col("l_orderkey")]),
+                ("pandas by key", spark_df_from_pandas(spark, pdf),
+                 [F.col("k")]),
+                ("pandas ingest", spark_df_from_pandas(spark, tiny), None),
+            ]
+            for label, sdf, order_by in layouts:
+                lay = ordinal._range_layout(sdf, order_by)
+                assert declared(lay) == (order_by is not None), \
+                    (label, coalesce)
+                if declared(lay):
+                    assert violations(lay) == 0, (label, coalesce)
+    finally:
+        spark.conf.set(aqe, old)
+
+
+def test_undeclared_layout_fallback(spark, bl, monkeypatch):
+    """If the JVM re-wrap fails, the layout falls back to the plain
+    checkpoint with ONE warning for any number of layouts, and every
+    answer is identical to the declared path's."""
+    import warnings
+
+    import numpy as np
+
+    from baloo_spark.plans import ordinal
+
+    aqe = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        ops = _sorted_ordered_ops(bl)
+        want = {label: run().to_pandas().to_numpy(dtype=float)
+                for label, run, _ in ops}
+
+        def broken(ck):
+            raise RuntimeError("no LogicalRDD here")
+
+        monkeypatch.setattr(ordinal, "_declared_layout", broken)
+        monkeypatch.setattr(ordinal, "_UNDECLARED_WARNED", False)
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.simplefilter("always")
+            got = {}
+            for label, run, _ in ops:
+                res = run()
+                assert "Exchange hashpartitioning(__pid__" \
+                    in plan_of(res._sdf), label
+                got[label] = res.to_pandas().to_numpy(dtype=float)
+        ours = [w for w in seen if "declare their partitioning"
+                in str(w.message)]
+        assert len(ours) == 1, [str(w.message) for w in ours]
+        for label in want:
+            np.testing.assert_array_equal(got[label], want[label],
+                                          err_msg=label)
+    finally:
+        spark.conf.set(aqe, old)
