@@ -20,7 +20,8 @@ from pyspark.sql import types as T
 from ..plans.ordinal import ORD_COL, with_dense_ordinal
 from .ordering import order_expr, order_exprs, rev_order_exprs
 from .dtypes import np_dtype_of, spark_type_of
-from .series import _AGG_FNS, _IDX, Series, _is_numeric
+from .reduce import identity, reduce_expr, reduce_source, with_identity
+from .series import _IDX, Series, _is_numeric
 
 _RESERVED = {ORD_COL, "__pos__", "__pid__", "__mid__"}
 # how DataFrame._shift_combine joins a column's current value with its
@@ -153,6 +154,15 @@ def _eval_to_sql(src: str, local_dict=None, columns=None,
             f"unsupported eval syntax: {_ast.dump(n)[:80]}")
 
     return emit(_ast.parse(src, mode="eval").body)
+
+
+def _fill_gaps(sdf, name: str, cols):
+    """``sdf`` with the NULLs that the empty (gap) buckets of a
+    resample grid leave in ``cols`` read as reduction ``name``'s
+    identity, as pandas fills them."""
+    if identity(name) is None:
+        return sdf
+    return sdf.withColumns({c: with_identity(name, F.col(c)) for c in cols})
 
 
 def _per_column(row_df, cols, name) -> Series:
@@ -1961,33 +1971,19 @@ class DataFrame:
 
     # -------------------------------------------------------- aggregations
 
-    @staticmethod
-    def _agg_identity(name, e):
-        """All-NULL columns keep pandas' empty-agg identities
-        (sum -> 0, prod -> 1, min_count=0 — the Series faces and
-        the reference's merger already do; r11 closes the frame
-        column-agg row)."""
-        if name == "sum":
-            return F.coalesce(e, F.lit(0.0))
-        if name == "prod":
-            return F.coalesce(e, F.lit(1.0))
-        return e
-
-    def _agg_exprs(self, aggregations, cols):
-        exprs = []
-        for a in aggregations:
-            for c in cols:
-                e = _AGG_FNS[a](F.col(c).cast("double") if a != "count" else F.col(c))
-                exprs.append(self._agg_identity(a, e)
-                             .cast("double").alias(f"{a}__{c}"))
-        return exprs
+    def _reduce(self, name: str, c: str, ddof: int = 1, over=None):
+        """Reduction ``name`` of column ``c`` (:func:`reduce_expr`)."""
+        return reduce_expr(name, F.col(c), self._sdf.schema[c].dataType,
+                           ddof, over)
 
     def agg(self, aggregations: list) -> "DataFrame":
         """Column-wise multi-agg; result indexed by aggregation name
         (frame.py:641-666). One Spark job for all (agg, col) pairs —
         Catalyst shares the scan."""
-        cols = self._numeric_cols()
-        row_df = self._sdf.agg(*self._agg_exprs(aggregations, cols))
+        cols = self._numeric_cols(include_bool=True)
+        row_df = self._sdf.agg(*[
+            self._reduce(a, c).cast("double").alias(f"{a}__{c}")
+            for a in aggregations for c in cols])
         groups = ", ".join(
             "'{a}', {vals}".format(
                 a=a, vals=", ".join(f"`{a}__{c}`" for c in cols))
@@ -1998,17 +1994,13 @@ class DataFrame:
             f"stack({len(aggregations)}, {groups}) as ({names})"))
         return DataFrame._make(out, ["Aggregation"], cols, None)
 
-    def _agg_row(self, name: str) -> Series:
+    def _agg_row(self, name: str, ddof: int = 1) -> Series:
         """Per-column scalar agg combined into one Series indexed by
-        column name (frame.py:594-639 / weld_combine_scalars)."""
+        column name (frame.py:594-639 / weld_combine_scalars); every
+        column shares ONE aggregate job."""
         cols = self._numeric_cols(include_bool=True)
-        exprs = [self._agg_identity(
-                     name,
-                     _AGG_FNS[name](F.col(c).cast("double")
-                                    if name != "count" else F.col(c)))
-                 .cast("double").alias(c)
-                 for c in cols]
-        row_df = self._sdf.agg(*exprs)
+        row_df = self._sdf.agg(*[self._reduce(name, c, ddof).alias(c)
+                                 for c in cols])
         return _per_column(row_df, cols, name)
 
     def _agg_axis1(self, name: str) -> Series:
@@ -2135,40 +2127,13 @@ class DataFrame:
     def median(self, approx: bool = False):
         return self.quantile(0.5, approx=approx)
 
-    def _moment_row(self, kind: str) -> Series:
-        """Per-column bias-corrected skew/kurt combined into one
-        Series (same shape as :meth:`_agg_row`); the correction is
-        column arithmetic over Spark's population g1/g2 + count, so
-        all columns still share ONE aggregate job."""
-        cols = self._numeric_cols(include_bool=True)
-        exprs = []
-        for c in cols:
-            v = F.col(c).cast("double")
-            n = F.count(v)
-            if kind == "skew":
-                corr = (F.skewness(v) * F.sqrt(n * (n - 1)) / (n - 2))
-                e = F.when(n >= 3, F.coalesce(corr, F.lit(0.0)))
-            else:
-                corr = (((n + 1) * F.kurtosis(v) + 6) * (n - 1)
-                        / ((n - 2) * (n - 3)))
-                e = F.when(n >= 4, F.coalesce(corr, F.lit(0.0)))
-            exprs.append(e.cast("double").alias(c))
-        row_df = self._sdf.agg(*exprs)
-        return _per_column(row_df, cols, kind)
-
-    def skew(self): return self._moment_row("skew")
-    def kurt(self): return self._moment_row("kurt")
+    def skew(self): return self._agg_row("skew")
+    def kurt(self): return self._agg_row("kurt")
     kurtosis = kurt
 
     def sem(self, ddof: int = 1) -> Series:
-        """Column-wise standard error of the mean — ONE aggregate job
-        (std and count per column share the scan)."""
-        cols = self._numeric_cols(include_bool=True)
-        sfn = F.stddev_samp if ddof == 1 else F.stddev_pop
-        return _per_column(self._sdf.agg(*[
-            (sfn(F.col(c).cast("double"))
-             / F.sqrt(F.count(F.col(c)))).alias(c)
-            for c in cols]), cols, "sem")
+        """Column-wise standard error of the mean — ONE aggregate job."""
+        return self._agg_row("sem", ddof)
 
     # ------------------------------------------------------------- groupby
 
@@ -2234,8 +2199,7 @@ class DataFrame:
         """groupBy(index).pivot(columns).agg — one shuffle; the pivot
         column's distinct values become output columns."""
         out = (self._sdf.groupBy(index).pivot(columns)
-               .agg(_AGG_FNS[agg](F.col(values).cast("double")
-                                  if agg != "count" else F.col(values))))
+               .agg(self._reduce(agg, values)))
         return DataFrame._make(out, [index],
                                [c for c in out.columns if c != index], None)
 
@@ -2297,10 +2261,7 @@ class DataFrame:
             exprs = []
             for v in values:
                 for a in aggs:
-                    src = (F.col(v) if a == "count"
-                           else F.col(v).cast("double"))
-                    e = _AGG_FNS[a](src).cast(
-                        "long" if a == "count" else "double")
+                    e = self._reduce(a, v)
                     if single:
                         e = e.alias(tag_prefix) if tag_prefix else e
                     else:
@@ -2372,13 +2333,9 @@ class DataFrame:
                                [c for c in out.columns if c not in by], None)
 
     def _multi_agg_exprs(self, aggregations: dict):
-        exprs = []
-        for c, aggs in aggregations.items():
-            for a in ([aggs] if isinstance(aggs, str) else aggs):
-                src = F.col(c).cast("double") if a != "count" else F.col(c)
-                out_t = "long" if a == "count" else "double"
-                exprs.append(_AGG_FNS[a](src).cast(out_t).alias(f"{c}_{a}"))
-        return exprs
+        return [self._reduce(a, c).alias(f"{c}_{a}")
+                for c, aggs in aggregations.items()
+                for a in ([aggs] if isinstance(aggs, str) else aggs)]
 
     def sample(self, fraction: float | None = None, seed: int = 42,
                with_replacement: bool = False, frac: float | None = None,
@@ -2599,14 +2556,9 @@ class DataFrame:
             d = F.col(c).cast("double")
             q3 = (F.percentile_approx(d, qarr, F.lit(accuracy)) if approx
                   else F.percentile(d, qarr))
-            exprs += [
-                F.count(c).cast("double").alias(f"count__{c}"),
-                F.avg(d).alias(f"mean__{c}"),
-                F.stddev_samp(d).alias(f"std__{c}"),
-                F.min(d).alias(f"min__{c}"),
-                F.max(d).alias(f"max__{c}"),
-                q3.alias(f"__q3__{c}"),
-            ]
+            exprs += [self._reduce(s, c).cast("double").alias(f"{s}__{c}")
+                      for s in ("count", "mean", "std", "min", "max")]
+            exprs.append(q3.alias(f"__q3__{c}"))
         row = self._sdf.agg(*exprs)
         row = row.select(
             "*",
@@ -2914,8 +2866,8 @@ class DataFrame:
         name = name or f"running_{agg}"
         if not partition_by:
             from ..plans.ordinal import with_prefix_aggs
-            v = (F.col(col) if agg == "count"
-                 else F.col(col).cast("double"))
+            v = reduce_source(agg, F.col(col),
+                              self._sdf.schema[col].dataType)
             if agg in ("sum", "prod", "min", "max", "count"):
                 specs = {name: (v, agg)}
                 out = with_prefix_aggs(self._sdf, specs, order_by)
@@ -2939,10 +2891,12 @@ class DataFrame:
                                    self._data_cols + [name], self._order)
         w = Window.partitionBy(*partition_by)
         w = w.orderBy(*order_by).rowsBetween(Window.unboundedPreceding, 0)
-        fn = _AGG_FNS[agg]
-        out = self._sdf.withColumn(
-            name, fn(F.col(col).cast("double") if agg != "count"
-                     else F.col(col)).over(w))
+        expr = self._reduce(agg, col, over=w)
+        if agg != "count":
+            # NULL until the group's first value, like the prefix scan
+            # above (a running sum is not an empty-input sum)
+            expr = F.when(F.count(F.col(col)).over(w) > 0, expr)
+        out = self._sdf.withColumn(name, expr)
         return DataFrame._make(out, self._index_cols,
                                self._data_cols + [name], self._order)
 
@@ -2978,10 +2932,8 @@ class DataFrame:
         if partition_by:
             w = (Window.partitionBy(*partition_by).orderBy(*order_by)
                  .rowsBetween(-(window - 1), 0))
-            fn = _AGG_FNS[agg]
-            v = F.col(col) if agg == "count" else F.col(col).cast("double")
             expr = F.when(F.count(F.col(col)).over(w) >= mp,
-                          fn(v).over(w))
+                          self._reduce(agg, col, over=w))
             out = self._sdf.withColumn(name, expr)
             return DataFrame._make(out, self._index_cols,
                                    self._data_cols + [name], self._order)
@@ -4322,7 +4274,7 @@ class _Resampler:
             # one count of the bucket's rows (all-null rows too) —
             # no value columns needed, so a frame with none still
             # sizes (pandas Resampler.size needs none either)
-            return [F.count(F.lit(1)).cast("long")
+            return [reduce_expr("size", F.lit(1), None)
                     .alias("__size__")], ["__size__"]
         if name == "ohlc":
             if len(num) != 1:
@@ -4342,25 +4294,12 @@ class _Resampler:
             if name in ("first", "last"):
                 aggs.append(fl(c, name == "last").alias(c))
                 continue
-            v = (F.col(c).cast("double")
-                 if name not in ("count", "size", "nunique")
-                 else F.col(c))
-            if name == "median":
-                e = F.median(v)
-            elif name.startswith("quantile:"):
-                e = F.percentile(v, F.lit(float(name.split(":")[1])))
-            elif name == "sem":
-                e = (F.stddev_samp(v)
-                     / F.sqrt(F.count(v)))   # groupby.sem convention
-            elif name == "size":
-                e = F.count(F.lit(1))
-            elif name == "nunique":
-                e = F.count_distinct(v)
+            if name.startswith("quantile:"):
+                e = F.percentile(F.col(c).cast("double"),
+                                 F.lit(float(name.split(":")[1])))
             else:
-                e = _AGG_FNS[name](v)
-            aggs.append(e.cast(
-                "long" if name in ("count", "size", "nunique")
-                else "double").alias(c))
+                e = self._df._reduce(name, c)
+            aggs.append(e.alias(c))
         return aggs, num
 
     def _agg_calendar(self, name: str):
@@ -4406,14 +4345,7 @@ class _Resampler:
                              (F.col("id") * step).cast("int"))
                 .cast("timestamp").alias("__bkt__"))
             aggd = grid.join(aggd, "__bkt__", "left")
-            if name in ("sum", "count", "size", "nunique", "prod"):
-                fillv = 1 if name == "prod" else 0
-                for c in num:
-                    aggd = aggd.withColumn(c, F.coalesce(
-                        F.col(c), F.lit(fillv).cast(
-                            "long" if name in ("count", "size",
-                                               "nunique")
-                            else "double")))
+            aggd = _fill_gaps(aggd, name, num)
         label = (F.last_day(F.col("__bkt__")).cast("timestamp")
                  if kind in ("ME", "YE") else F.col("__bkt__"))
         if kind == "YE":
@@ -4479,14 +4411,7 @@ class _Resampler:
                 .select(F.timestamp_micros(F.col("__gus__"))
                         .alias("__bkt__")))
         out = grid.join(aggd, "__bkt__", "left")
-        if name in ("sum", "count", "size", "nunique", "prod"):
-            # pandas fills these gap buckets with the agg identity
-            fillv = 1 if name == "prod" else 0
-            for c in num:
-                out = out.withColumn(c, F.coalesce(
-                    F.col(c), F.lit(fillv).cast(
-                        "long" if name in ("count", "size", "nunique")
-                        else "double")))
+        out = _fill_gaps(out, name, num)
         out = out.withColumnRenamed("__bkt__", on).orderBy(on)
         return DataFrame._make(out, [on], num, [(on, True)])
 

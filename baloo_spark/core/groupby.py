@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .series import _AGG_FNS, _is_numeric
+from .series import _is_numeric
 
 
 class DataFrameGroupBy:
@@ -133,15 +133,16 @@ class DataFrameGroupBy:
         sdf, order = self._gorder()
         w = (Window.partitionBy(*self._by).orderBy(*order)
              .rowsBetween(Window.unboundedPreceding, 0))
-        fns = {"sum": F.sum, "prod": F.product,
-               "min": F.min, "max": F.max}
 
         def mk(c):
-            v = (F.col(c).cast("double") if kind in ("sum", "prod")
-                 else F.col(c))
             # pandas: missing positions stay missing, the accumulator
-            # skips them (same gate as Series/DataFrame cum*)
-            return F.when(F.col(c).isNotNull(), fns[kind](v).over(w))
+            # skips them (same gate as Series/DataFrame cum*). A running
+            # extreme is one of the group's own values, so it keeps the
+            # source type like DataFrame._cumulative's prefix scan.
+            e = (self._df._reduce(kind, c, over=w)
+                 if kind in ("sum", "prod")
+                 else (F.min if kind == "min" else F.max)(c).over(w))
+            return F.when(F.col(c).isNotNull(), e)
         return self._transform_frame(sdf, self._value_cols(), mk)
 
     def cumsum(self):
@@ -305,31 +306,22 @@ class DataFrameGroupBy:
                                self._df._data_cols, self._df._order)
 
     def _aggregate(self, names: list | str):
-        from .frame import DataFrame
         single = isinstance(names, str)
         names = [names] if single else list(names)
-        cols = self._value_cols(include_bool=True)
-        exprs = []
-        for c in cols:
-            for a in names:
-                # reference casts grouped numeric aggs to f64 (weld_group.py);
-                # count stays integral (it is a length, weld_aggs.py:6-29)
-                src = F.col(c).cast("double") if a != "count" else F.col(c)
-                alias = c if single else f"{c}_{a}"
-                out_t = "long" if a == "count" else "double"
-                expr = _AGG_FNS[a](src)
-                # pandas min_count=0 identity for all-null groups
-                # (Series-level sum/prod already return 0/1 there;
-                # Spark's sum/product return NULL)
-                if a == "sum":
-                    expr = F.coalesce(expr, F.lit(0.0))
-                elif a == "prod":
-                    expr = F.coalesce(expr, F.lit(1.0))
-                exprs.append(expr.cast(out_t).alias(alias))
+        return self._agg_frame([
+            self._df._reduce(a, c).alias(c if single else f"{c}_{a}")
+            for c in self._value_cols(include_bool=True) for a in names])
+
+    def _agg_frame(self, exprs, key_order: bool = False):
+        """One grouped aggregate of ``exprs``; the grouping keys become
+        the index (groupby.py:56-80) and, with ``key_order``, the row
+        order."""
+        from .frame import DataFrame
         out = self._df._sdf.groupBy(*self._by).agg(*exprs)
         data = [e for e in out.columns if e not in self._by]
-        # grouping keys become the index (groupby.py:56-80)
-        return DataFrame._make(out, list(self._by), data, None)
+        return DataFrame._make(out, list(self._by), data,
+                               [(c, True) for c in self._by]
+                               if key_order else None)
 
     def min(self): return self._aggregate("min")
     def max(self): return self._aggregate("max")
@@ -342,16 +334,14 @@ class DataFrameGroupBy:
 
     def skew(self):
         """Per-group bias-corrected sample skewness (pandas
-        ``groupby().skew()``): Spark's ``skewness`` is the population
-        g1; the Fisher-Pearson adjustment is pure column arithmetic
-        over (g1, count), so the whole thing stays ONE map-side
-        partial hash-agg shuffle. n<3 -> NULL, zero variance -> 0."""
-        return self._moment("skew")
+        ``groupby().skew()``) — ONE map-side partial hash-agg
+        shuffle. n<3 -> NULL, zero variance -> 0."""
+        return self._aggregate("skew")
 
     def kurt(self):
         """Per-group bias-corrected excess kurtosis (pandas
         ``groupby().kurt()``); n<4 -> NULL, zero variance -> 0."""
-        return self._moment("kurt")
+        return self._aggregate("kurt")
 
     def ewm(self, alpha: float | None = None, span: float | None = None,
             ignore_na: bool = False, adjust: bool = True,
@@ -470,28 +460,20 @@ class DataFrameGroupBy:
         column — ONE shuffle, one array-percentile buffer per column
         (the frame describe scheme, grouped). Output is wide:
         ``{col}_{stat}`` columns, one row per group."""
-        from .frame import DataFrame
         qarr = F.expr("array(0.25D, 0.5D, 0.75D)")
         exprs = []
         for c in self._value_cols():
             d = F.col(c).cast("double")
             q = (F.percentile_approx(d, qarr, F.lit(accuracy))
                  if approx else F.percentile(d, qarr))
-            exprs += [
-                F.count(c).cast("double").alias(f"{c}_count"),
-                F.avg(d).alias(f"{c}_mean"),
-                F.stddev_samp(d).alias(f"{c}_std"),
-                F.min(d).alias(f"{c}_min"),
-                F.element_at(q, 1).alias(f"{c}_25%"),
-                F.element_at(q, 2).alias(f"{c}_50%"),
-                F.element_at(q, 3).alias(f"{c}_75%"),
-                F.max(d).alias(f"{c}_max"),
-            ]
-        out = self._df._sdf.groupBy(*self._by).agg(*exprs)
-        return DataFrame._make(
-            out, list(self._by),
-            [c for c in out.columns if c not in self._by],
-            [(c, True) for c in self._by])
+            st = {s: self._df._reduce(s, c).cast("double")
+                  for s in ("count", "mean", "std", "min", "max")}
+            st.update({p: F.element_at(q, i + 1)
+                       for i, p in enumerate(("25%", "50%", "75%"))})
+            exprs += [st[s].alias(f"{c}_{s}") for s in
+                      ("count", "mean", "std", "min", "25%", "50%", "75%",
+                       "max")]
+        return self._agg_frame(exprs, True)
 
     def ohlc(self):
         """Per-group open/high/low/close (pandas ``groupby().ohlc()``)
@@ -538,39 +520,10 @@ class DataFrameGroupBy:
 
     def sem(self, ddof: int = 1):
         """Per-group standard error of the mean (pandas
-        ``groupby().sem()``): std/sqrt(count) as pure column
-        arithmetic — ONE map-side partial hash-agg shuffle."""
-        from .frame import DataFrame
-        exprs = []
-        for c in self._value_cols():
-            v = F.col(c).cast("double")
-            s = F.stddev_samp(v) if ddof == 1 else F.stddev_pop(v)
-            exprs.append((s / F.sqrt(F.count(v))).alias(c))
-        out = self._df._sdf.groupBy(*self._by).agg(*exprs)
-        return DataFrame._make(
-            out, list(self._by),
-            [c for c in out.columns if c not in self._by],
-            [(c, True) for c in self._by])
-
-    def _moment(self, kind: str):
-        from .frame import DataFrame
-        exprs = []
-        for c in self._value_cols():
-            v = F.col(c).cast("double")
-            n = F.count(v)
-            if kind == "skew":
-                g = F.skewness(v)
-                corr = g * F.sqrt(n * (n - 1)) / (n - 2)
-                expr = F.when(n >= 3, F.coalesce(corr, F.lit(0.0)))
-            else:
-                g = F.kurtosis(v)
-                corr = (((n + 1) * g + 6) * (n - 1)
-                        / ((n - 2) * (n - 3)))
-                expr = F.when(n >= 4, F.coalesce(corr, F.lit(0.0)))
-            exprs.append(expr.cast("double").alias(c))
-        out = self._df._sdf.groupBy(*self._by).agg(*exprs)
-        data = [e for e in out.columns if e not in self._by]
-        return DataFrame._make(out, list(self._by), data, None)
+        ``groupby().sem()``) — ONE map-side partial hash-agg
+        shuffle."""
+        return self._agg_frame([self._df._reduce("sem", c, ddof).alias(c)
+                                for c in self._value_cols()], True)
 
     def size(self):
         from .frame import DataFrame
@@ -582,14 +535,10 @@ class DataFrameGroupBy:
         """Distinct values per group and column (pandas
         ``groupby().nunique``; NULLs excluded like pandas
         dropna=True). One exact count_distinct shuffle."""
-        from .frame import DataFrame
         cols = ([cols] if isinstance(cols, str)
                 else list(cols or self._value_cols()))
-        out = self._df._sdf.groupBy(*self._by).agg(
-            *[F.count_distinct(F.col(c)).cast("long").alias(c)
-              for c in cols])
-        data = [e for e in out.columns if e not in self._by]
-        return DataFrame._make(out, list(self._by), data, None)
+        return self._agg_frame([self._df._reduce("nunique", c).alias(c)
+                                for c in cols])
 
     def fillna(self, value=None, method: str | None = None):
         """Per-group fillna (pandas ``groupby().fillna``): a scalar
@@ -1055,11 +1004,8 @@ class DataFrameGroupBy:
         sdf = self._df._sdf
         added = []
         for c in cols:
-            src = F.col(c).cast("double") if agg != "count" else F.col(c)
-            out_t = "long" if agg == "count" else "double"
             name = f"{c}_{agg}"
-            sdf = sdf.withColumn(name,
-                                 _AGG_FNS[agg](src).over(w).cast(out_t))
+            sdf = sdf.withColumn(name, self._df._reduce(agg, c, over=w))
             added.append(name)
         return DataFrame._make(sdf, self._df._index_cols,
                                self._df._data_cols + added,
@@ -1076,7 +1022,6 @@ class DataFrameGroupBy:
             if aggregations is not None:
                 raise ValueError(
                     "pass positional aggregations OR named ones")
-            from .frame import DataFrame
             exprs = []
             for out_name, spec in named.items():
                 if not (isinstance(spec, tuple) and len(spec) == 2):
@@ -1088,16 +1033,9 @@ class DataFrameGroupBy:
                     a = a.__name__
                 if c not in self._df._data_cols:
                     raise KeyError(c)
-                src = (F.col(c).cast("double") if a != "count"
-                       else F.col(c))
-                out_t = "long" if a == "count" else "double"
-                exprs.append(_AGG_FNS[a](src).cast(out_t)
-                             .alias(out_name))
-            out = self._df._sdf.groupBy(*self._by).agg(*exprs)
-            data = [e for e in out.columns if e not in self._by]
-            return DataFrame._make(out, list(self._by), data, None)
+                exprs.append(self._df._reduce(a, c).alias(out_name))
+            return self._agg_frame(exprs)
         if isinstance(aggregations, dict):
-            from .frame import DataFrame
             exprs = []
             for c, aggs in aggregations.items():
                 aggs = ([aggs] if isinstance(aggs, str)
@@ -1105,12 +1043,8 @@ class DataFrameGroupBy:
                 for a in aggs:
                     if callable(a):
                         a = a.__name__  # np.sum etc., like pandas
-                    src = F.col(c).cast("double") if a != "count" else F.col(c)
-                    out_t = "long" if a == "count" else "double"
-                    exprs.append(_AGG_FNS[a](src).cast(out_t).alias(f"{c}_{a}"))
-            out = self._df._sdf.groupBy(*self._by).agg(*exprs)
-            data = [e for e in out.columns if e not in self._by]
-            return DataFrame._make(out, list(self._by), data, None)
+                    exprs.append(self._df._reduce(a, c).alias(f"{c}_{a}"))
+            return self._agg_frame(exprs)
         return self._aggregate(aggregations)
 
 
@@ -1263,7 +1197,7 @@ class _GroupRolling(_GroupWindow):
             base = build(F.sum(v).over(w), n, F.sum(v * v).over(w), 1)
             rows = F.count(F.lit(1)).over(w) if gate == "rows" else n
             return _gated(base, rows, floor(self._mp, 1)).cast("double")
-        return _gated(_AGG_FNS[name](v).over(w), n,
+        return _gated(self._gb._df._reduce(name, c, over=w), n,
                       self._mp).cast("double")
 
     def _select(self, outs: dict, data=None):

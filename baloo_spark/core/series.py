@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from ..plans.ordinal import ORD_COL, with_dense_ordinal
 from .ordering import order_expr, order_exprs
 from .dtypes import np_dtype_of, spark_type_of
+from .reduce import reduce_expr
 
 _VAL = "__val__"
 _IDX = "__index__"
@@ -36,22 +37,6 @@ _ISIN_LITERAL_MAX = 1024
 # rows the per-distinct-stamp prefix table broadcasts (a few doubles
 # per stamp — ~10 MB at the cap)
 _TR_BROADCAST_MAX_ROWS = 200_000
-
-# aggregations: reference casts numeric aggs to f64 (weld_aggs.py:3,42-49)
-_AGG_FNS = {
-    "min": F.min,
-    "max": F.max,
-    "sum": F.sum,
-    "prod": F.product,
-    "mean": F.avg,
-    "var": F.var_samp,      # sample variance (weld_aggs.py:113-151)
-    "std": F.stddev_samp,   # sqrt of sample var (weld_aggs.py:154-182)
-    "count": F.count,
-    # exact interpolated median (engine extension; ANSI
-    # percentile_cont(0.5) — same definition as DuckDB median())
-    "median": F.median,
-}
-
 
 def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, T.NumericType)
@@ -125,7 +110,7 @@ class Series:
             if name is None:
                 name = data.name
             if index is None:
-                index = data.index.to_numpy()
+                index = data.index
             data = data.to_numpy()
         arr = np.asarray(data)
         if dtype is not None:
@@ -134,9 +119,12 @@ class Series:
         pdf = pd.DataFrame({_VAL: arr})
         index_cols = []
         if index is not None:
-            idx_arr = np.asarray(getattr(index, "values", index))
-            pdf[_IDX] = idx_arr
-            index_cols = [_IDX]
+            # a named index keeps its name as its column (Series.index
+            # reads any column but _IDX back as the index name)
+            iname = getattr(index, "name", None)
+            icol = iname if isinstance(iname, str) and iname != _VAL else _IDX
+            pdf[icol] = np.asarray(getattr(index, "values", index))
+            index_cols = [icol]
         sdf = spark_df_from_pandas(spark, pdf)
         sdf = with_dense_ordinal(sdf)
         self._sdf = sdf
@@ -785,29 +773,9 @@ class Series:
 
     # -------------------------------------------------------- aggregations
 
-    def _agg_expr(self, name: str) -> Column:
-        if name not in _AGG_FNS:
-            raise ValueError(f"unsupported aggregation: {name}")
-        col = self._colexpr
-        dt = self.spark_type
-        if name == "count":
-            return _AGG_FNS[name](col).cast("long")
-        if dt.typeName() == "boolean" and name not in ("min", "max"):
-            # pandas treats bool series as 0/1 in numeric aggs —
-            # .isna().sum() is the canonical null count
-            col = col.cast("double")
-        if _is_numeric(dt):
-            # reference casts all numeric aggs to f64 (weld_aggs.py:3)
-            col = col.cast("double")
-        out = _AGG_FNS[name](col)
-        if name in ("sum", "prod"):
-            # empty input -> merger identity (0 / 1), not NULL, matching
-            # the reference's Weld merger semantics (weld_aggs.py:32-78)
-            out = F.coalesce(out, F.lit(0.0 if name == "sum" else 1.0))
-        return out
-
-    def _agg_scalar(self, name: str):
-        row = self._sdf.agg(self._agg_expr(name).alias("v")).first()
+    def _agg_scalar(self, name: str, ddof: int = 1):
+        row = self._sdf.agg(reduce_expr(name, self._colexpr, self.spark_type,
+                                        ddof).alias("v")).first()
         return row["v"]
 
     def min(self): return self._agg_scalar("min")
@@ -820,21 +788,18 @@ class Series:
     def std(self): return self._agg_scalar("std")
 
     def sem(self, ddof: int = 1):
-        """Standard error of the mean (pandas ``Series.sem``) — the
-        one-column face of :meth:`DataFrame.sem`."""
-        return _nan_if_none(self._frame(_LIFT).sem(ddof).item())
+        """Standard error of the mean (pandas ``Series.sem``)."""
+        return _nan_if_none(self._agg_scalar("sem", ddof))
 
     def skew(self):
-        """Bias-corrected sample skewness (pandas ``Series.skew``;
-        Spark's ``skewness`` is the population g1) — the one-column
-        face of :meth:`DataFrame.skew`, NaN for n < 3."""
-        return _nan_if_none(self._frame(_LIFT).skew().item())
+        """Bias-corrected sample skewness (pandas ``Series.skew``),
+        NaN for n < 3."""
+        return _nan_if_none(self._agg_scalar("skew"))
 
     def kurt(self):
-        """Bias-corrected excess kurtosis (pandas ``Series.kurt``) —
-        the one-column face of :meth:`DataFrame.kurt`, NaN for
-        n < 4."""
-        return _nan_if_none(self._frame(_LIFT).kurt().item())
+        """Bias-corrected excess kurtosis (pandas ``Series.kurt``),
+        NaN for n < 4."""
+        return _nan_if_none(self._agg_scalar("kurt"))
 
     kurtosis = kurt
 
@@ -2084,7 +2049,9 @@ class Series:
         """Multiple aggregations in ONE Spark job (the reference computes
         a shared dependency closure, weld_aggs.py:185-268; Catalyst CSE
         gives us the same for free)."""
-        exprs = [self._agg_expr(a).cast("double").alias(a) for a in aggregations]
+        dt = self.spark_type
+        exprs = [reduce_expr(a, self._colexpr, dt).cast("double").alias(a)
+                 for a in aggregations]
         row_df = self._sdf.agg(*exprs)
         pairs = ", ".join(f"'{a}', `{a}`" for a in aggregations)
         out = row_df.select(
